@@ -168,9 +168,8 @@ object AnnIndex {
   def appendRebuildBaseline(spark: SparkSession, dir: String, batch: DataFrame,
       spill: Int = 1,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val centroids = readCentroids(spark, dir)
-    val books = readBooks(spark, dir)
-    encodeAssign(batch, books, centroids, spill, idCol, vecCol)
+    val qz = flatQuantizer(spark, dir)
+    encodeAssign(batch, qz.books, qz.centroids, spill, idCol, vecCol)
       .hint("rebalance", col("cell"))
       .write.mode("append").partitionBy("cell")
       .parquet(s"$dir/codes.parquet")
@@ -178,27 +177,61 @@ object AnnIndex {
 
   /** The quantizer, read back (bounded: nCentroids rows). */
   def readCentroids(spark: SparkSession, dir: String): Seq[(Int, Seq[Double])] =
-    parseCentroids(spark.read.parquet(s"$dir/centroids.parquet"))
+    flatQuantizer(spark, dir).centroids
 
   /** The PQ codebooks, read back (bounded: m×k rows). */
   def readBooks(spark: SparkSession,
       dir: String): IndexedSeq[IndexedSeq[IndexedSeq[Double]]] =
-    parseBooks(spark.read.parquet(s"$dir/books.parquet"))
+    flatQuantizer(spark, dir).books
 
-  private def parseCentroids(df: DataFrame): Seq[(Int, Seq[Double])] =
-    df.select(col("cell"), col("centroid")).orderBy(col("cell"))
-      .collect()
-      .toIndexedSeq
-      .map(r => (r.getInt(0), r.getSeq[Double](1)))
+  /** A stored index's frozen quantizer: the coarse centroids (cell order),
+    * the PQ codebooks (sub, then code order) and the build's `spill`
+    * (1 for a flat index, which has no params table; its append takes
+    * spill from the caller).
+    */
+  private final case class Quantizer(centroids: Seq[(Int, Seq[Double])],
+      books: IndexedSeq[IndexedSeq[IndexedSeq[Double]]], spill: Int)
 
-  private def parseBooks(df: DataFrame): IndexedSeq[IndexedSeq[IndexedSeq[Double]]] = {
-    val rows = df.select(col("sub"), col("code"), col("centroid"))
-      .orderBy(col("sub"), col("code"))
+  /** The one quantizer reader: centroids, codebooks and (bundle only)
+    * params ride ONE tagged-union collect — all three are bounded
+    * (nCentroids + m×k + 1 rows), so one action replaces three, each of
+    * which is fixed planning and job overhead.
+    */
+  private def readQuantizer(centroids: DataFrame, books: DataFrame,
+      params: Option[DataFrame]): Quantizer = {
+    val tagged = centroids
+      .select(lit(0).as("t"), col("cell").as("a"), lit(0).as("b"), col("centroid").as("v"))
+      .unionByName(books
+        .select(lit(1).as("t"), col("sub").as("a"), col("code").as("b"), col("centroid").as("v")))
+    val rows = params.fold(tagged)(p => tagged.unionByName(p.select(lit(2).as("t"),
+        col("spill").as("a"), lit(0).as("b"), lit(null).cast("array<double>").as("v"))))
       .collect()
-    rows.groupBy(_.getInt(0)).toIndexedSeq.sortBy(_._1).map { case (_, rs) =>
-      rs.sortBy(_.getInt(1)).map(_.getSeq[Double](2).toIndexedSeq).toIndexedSeq
-    }
+    def tag(t: Int) = rows.filter(_.getInt(0) == t)
+    Quantizer(
+      tag(0).sortBy(_.getInt(1)).map(r => (r.getInt(1), r.getSeq[Double](3))).toIndexedSeq,
+      tag(1).groupBy(_.getInt(1)).toIndexedSeq.sortBy(_._1).map { case (_, rs) =>
+        rs.sortBy(_.getInt(2)).map(_.getSeq[Double](3).toIndexedSeq).toIndexedSeq
+      },
+      tag(2).headOption.fold(1)(_.getInt(1)))
   }
+
+  /** The flat index's quantizer — uncached: a rebuild baseline rewrites
+    * its directory in place.
+    */
+  private def flatQuantizer(spark: SparkSession, dir: String): Quantizer =
+    readQuantizer(spark.read.parquet(s"$dir/centroids.parquet"),
+      spark.read.parquet(s"$dir/books.parquet"), None)
+
+  /** The bundle index's quantizer at a committed version, memoized under
+    * that version ([[graft.sources.Catalog.memoAt]]): the serve and the
+    * append both read it here, once per version.
+    */
+  private def bundleQuantizer(spark: SparkSession, root: String, name: String,
+      version: Long): Quantizer =
+    Catalog.memoAtBundle(spark, root, name, version, "annindex.quantizer") {
+      def member(ref: String) = Catalog.readBundleTable(spark, root, name, ref, Some(version))
+      readQuantizer(member("centroids"), member("books"), Some(member("params")))
+    }
 
   /** Training-free serve from a stored index: probe cells planned on the
     * driver, codes read partition-pruned, ADC shortlist, exact re-rank
@@ -218,7 +251,7 @@ object AnnIndex {
       within: Option[DataFrame] = None,
       withinPairs: Option[DataFrame] = None,
       materialize: Boolean = true): DataFrame =
-    serveCore(spark, readCentroids(spark, dir), readBooks(spark, dir),
+    serveCore(spark, flatQuantizer(spark, dir),
       spark.read.parquet(s"$dir/codes.parquet"), corpus, queries, k,
       rerank, nProbe, idCol, vecCol, within, withinPairs, materialize)
 
@@ -229,9 +262,7 @@ object AnnIndex {
     * re-rank. The codes SOURCE is the only thing that differs between
     * the two stores, so their serves cannot drift.
     */
-  private def serveCore(spark: SparkSession,
-      centroids: Seq[(Int, Seq[Double])],
-      books: IndexedSeq[IndexedSeq[IndexedSeq[Double]]],
+  private def serveCore(spark: SparkSession, qz: Quantizer,
       codesAll: DataFrame, corpus: DataFrame,
       queries: DataFrame, k: Int, rerank: Int, nProbe: Int,
       idCol: String, vecCol: String,
@@ -243,7 +274,7 @@ object AnnIndex {
       .select(col(idCol).as("qid"), asDouble(col(vecCol)).as("qvec"))
       .withColumn("qn", sqrt(Similarity.dot(col("qvec"), col("qvec"))))
       .withColumn("cell", explode(slice(graft.functions.Staging.pin(
-        Similarity.centroidRanksIn(spark)(col("qvec"), centroids)), 1, nProbe)))
+        Similarity.centroidRanksIn(spark)(col("qvec"), qz.centroids)), 1, nProbe)))
     // the probe list is driver-planned (bounded by nCentroids): an IN on
     // the partition column makes the codes scan read ONLY those cells
     val probeCells = probed.select(col("cell")).distinct()
@@ -255,7 +286,7 @@ object AnnIndex {
       pruned.join(ids, pruned(idCol) === ids("__within_id"), "left_semi")
     }
     val decoded = kept
-      .withColumn("cvec", asDouble(Embeddings.pqDecode(col("pq"), books)))
+      .withColumn("cvec", asDouble(Embeddings.pqDecode(col("pq"), qz.books)))
       .select(col(idCol).as("nid"), col("cell"), col("cvec"),
         sqrt(Similarity.dot(col("cvec"), col("cvec"))).as("cn"))
     // a spill-built index holds a vector in several cells: overlapping
@@ -395,14 +426,10 @@ object AnnIndex {
     val v = version.orElse(Catalog.latestBundleVersion(spark, root, name))
       .getOrElse(sys.error(s"AnnIndex.appendBundle: no committed " +
         s"versions for '$name' under $root"))
-    val centroids = parseCentroids(
-      Catalog.readBundleTable(spark, root, name, "centroids", Some(v)))
-    val books = parseBooks(
-      Catalog.readBundleTable(spark, root, name, "books", Some(v)))
-    val spill = Catalog.readBundleTable(spark, root, name, "params", Some(v))
-      .select(col("spill")).collect()(0).getInt(0)
+    val qz = bundleQuantizer(spark, root, name, v)
     Catalog.appendBundle(
-      Seq("codes" -> encodeAssign(batch, books, centroids, spill, idCol, vecCol)),
+      Seq("codes" -> encodeAssign(batch, qz.books, qz.centroids, qz.spill,
+        idCol, vecCol)),
       root, name, batchId,
       pinned = Some((v, Seq("centroids", "books", "params"))))
   }
@@ -428,9 +455,7 @@ object AnnIndex {
     val v = version.orElse(Catalog.latestBundleVersion(spark, root, name))
       .getOrElse(sys.error(s"AnnIndex.knnBundle: no committed versions " +
         s"for '$name' under $root"))
-    serveCore(spark,
-      parseCentroids(Catalog.readBundleTable(spark, root, name, "centroids", Some(v))),
-      parseBooks(Catalog.readBundleTable(spark, root, name, "books", Some(v))),
+    serveCore(spark, bundleQuantizer(spark, root, name, v),
       Catalog.readBundleTable(spark, root, name, "codes", Some(v)),
       corpus, queries, k, rerank, nProbe, idCol, vecCol, within,
       withinPairs, materialize)

@@ -497,16 +497,18 @@ object TextIndex {
   /** Corpus stats off the bundle AT a resolved version: the meta
     * member's delta rows summed — bounded at one row per ingested batch
     * (compaction collapses the file sets; the rows still sum
-    * identically).
+    * identically). Memoized under the version
+    * ([[graft.sources.Catalog.memoAt]]): one collect per version.
     */
   private def bundleStats(spark: SparkSession, root: String,
-      name: String, version: Long): (Long, Long) = {
-    val r = Catalog.readBundleTable(spark, root, name, "meta", Some(version))
-      .agg(coalesce(sum(col("n_docs")), lit(0L)),
-        coalesce(sum(col("sum_dl")), lit(0L)))
-      .collect()(0)
-    (r.getLong(0), r.getLong(1))
-  }
+      name: String, version: Long): (Long, Long) =
+    Catalog.memoAtBundle(spark, root, name, version, "textindex.stats") {
+      val r = Catalog.readBundleTable(spark, root, name, "meta", Some(version))
+        .agg(coalesce(sum(col("n_docs")), lit(0L)),
+          coalesce(sum(col("sum_dl")), lit(0L)))
+        .collect()(0)
+      (r.getLong(0), r.getLong(1))
+    }
 
   /** Conjunctive match off the BUNDLE-backed index — same core plan as
     * [[booleanSearch]], postings resolved through one committed

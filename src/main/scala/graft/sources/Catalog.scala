@@ -23,6 +23,25 @@ import org.apache.spark.sql.types.StructType
   *     filter + projection into the scan (PushedFilters/ReadSchema).
   *   - sinks are plain `df.write` with append/overwrite — at cluster scale
   *     these parallelize per-partition; nothing is collected to the driver.
+  *
+  * Committed-version memo ([[memoAt]]): values derived from a COMMITTED
+  * version — bundle manifests, member DataFrames (file listing + schema
+  * inference), deployment pin sets, BM25 corpus stats, ANN quantizers —
+  * are kept in one bounded, process-wide LRU. The key is (commit-marker
+  * path, the marker's modification time, artifact name), plus the session
+  * for DataFrames. Safe because the store never mutates a committed
+  * version: every commit, append, compaction, takedown or restore lands a
+  * NEW numbered directory whose marker (`_manifest` for bundles,
+  * `_SUCCESS` for versioned tables) appears with it in one rename. Each
+  * lookup stats the marker: a pruned or never-committed version has none,
+  * so the value is recomputed and fails exactly as an uncached read does;
+  * a store deleted and rebuilt at the same path writes a new marker with a
+  * new modification time, hence a new key. Resolving WHICH version to
+  * read is never cached — `_latest` pointers (bundle latest, the current
+  * deployment) are re-read on every call, so a flip or rollback is seen
+  * by the next serve. Flat index directories (`AnnIndex.knn`,
+  * `TextIndex.bm25Search`) are NOT cached: their rebuild baselines
+  * rewrite the same directory in place, with no marker to key on.
   */
 object Catalog {
 
@@ -53,6 +72,48 @@ object Catalog {
     */
   private[graft] def fsFor(spark: SparkSession, p: HPath): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Entries the committed-version memo holds; least recently used first
+    * out. Per served version it holds a manifest, a few member frames and
+    * one or two small derived values.
+    */
+  private val MemoCapacity = 256
+
+  private val memo = new java.util.LinkedHashMap[Any, Any](64, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[Any, Any]): Boolean =
+      size > MemoCapacity
+  }
+
+  /** `compute`, memoized under the committed version whose commit marker
+    * is `marker` (see the memo contract above). `perSession` keys the
+    * value by `spark` too — required for DataFrames, which belong to
+    * their session. A missing marker bypasses the memo: `compute` runs
+    * and refuses the version exactly as it does uncached. Racing callers
+    * may both compute on a miss; the values are equal by immutability.
+    */
+  private[graft] def memoAt[T](spark: SparkSession, marker: HPath,
+      artifact: String, perSession: Boolean = false)(compute: => T): T = {
+    val st = try Some(fsFor(spark, marker).getFileStatus(marker))
+      catch { case _: java.io.FileNotFoundException => None }
+    st.fold(compute) { s =>
+      val key = (s.getPath.toString, s.getModificationTime, artifact,
+        if (perSession) Some(spark) else None)
+      memo.synchronized(Option(memo.get(key))) match {
+        case Some(v) => v.asInstanceOf[T]
+        case None =>
+          val v = compute
+          memo.synchronized(memo.put(key, v))
+          v
+      }
+    }
+  }
+
+  /** [[memoAt]] keyed by a committed bundle version's `_manifest`. */
+  private[graft] def memoAtBundle[T](spark: SparkSession, root: String,
+      bundle: String, version: Long, artifact: String,
+      perSession: Boolean = false)(compute: => T): T =
+    memoAt(spark, new HPath(s"${bundleDir(root, bundle)}/$version/_manifest"),
+      artifact, perSession)(compute)
 
   /** Does the table exist on its filesystem? */
   def tableExists(spark: SparkSession, root: String, ref: String): Boolean = {
@@ -547,13 +608,22 @@ object Catalog {
   def readDeployment(spark: SparkSession, root: String, name: String,
       version: Option[Long] = None): Map[String, Long] = {
     import org.apache.spark.sql.functions.col
-    val rows = readVersion(spark, root, deploymentRef(name), version)
-      .select(col("artifact"), col("version"))
-      .collect().map(r => r.getString(0) -> r.getLong(1))
-    val m = rows.toMap
-    require(m.size == rows.length,
-      s"readDeployment: duplicate artifact rows in '$name' under $root")
-    m
+    val ref = deploymentRef(name)
+    // the current deployment is resolved on every call (a flip or a
+    // rollback shows on the next serve); only the immutable pin set of
+    // the resolved version is memoized
+    val v = version.orElse(latestVersion(spark, root, ref))
+    def read(): Map[String, Long] = {
+      val rows = readVersion(spark, root, ref, v)
+        .select(col("artifact"), col("version"))
+        .collect().map(r => r.getString(0) -> r.getLong(1))
+      val m = rows.toMap
+      require(m.size == rows.length,
+        s"readDeployment: duplicate artifact rows in '$name' under $root")
+      m
+    }
+    v.fold(read())(n => memoAt(spark,
+      new HPath(s"${versionsDir(root, ref)}/$n/_SUCCESS"), "pins")(read()))
   }
 
   /** Every deployment name with at least one committed pin set under
@@ -945,27 +1015,29 @@ object Catalog {
     val base = bundleDir(root, bundle)
     val v = version.orElse(latestBundleVersion(spark, root, bundle))
       .getOrElse(sys.error(s"bundleManifest: no committed versions under $base"))
-    val manifest = new HPath(s"$base/$v/_manifest")
-    val f = fsFor(spark, manifest)
-    require(f.exists(manifest),
-      s"bundleManifest: version $v at $base is not committed")
-    val in = f.open(manifest)
-    val lines = try
-      scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-    finally in.close()
-    val batches = lines.headOption.filter(_.startsWith("#batches="))
-      .map(_.stripPrefix("#batches=")).filter(_.nonEmpty)
-      .map(_.split(",").toSeq).getOrElse(Seq.empty)
-    val parts = lines.find(_.startsWith("#parts="))
-      .map(_.stripPrefix("#parts=")).filter(_.nonEmpty)
-      .map(_.split(",").toSeq.map { e =>
-        val Array(ref, cols) = e.split(":", 2)
-        ref -> cols.split("\\|").toSeq
-      }.toMap).getOrElse(Map.empty[String, Seq[String]])
-    val dirs = lines.filterNot(_.startsWith("#"))
-      .map { l => val Array(ref, d) = l.split("\t", 2); (ref, d) }
-      .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    BundleManifest(batches, dirs, parts)
+    memoAtBundle(spark, root, bundle, v, "manifest") {
+      val manifest = new HPath(s"$base/$v/_manifest")
+      val f = fsFor(spark, manifest)
+      require(f.exists(manifest),
+        s"bundleManifest: version $v at $base is not committed")
+      val in = f.open(manifest)
+      val lines = try
+        scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
+      finally in.close()
+      val batches = lines.headOption.filter(_.startsWith("#batches="))
+        .map(_.stripPrefix("#batches=")).filter(_.nonEmpty)
+        .map(_.split(",").toSeq).getOrElse(Seq.empty)
+      val parts = lines.find(_.startsWith("#parts="))
+        .map(_.stripPrefix("#parts=")).filter(_.nonEmpty)
+        .map(_.split(",").toSeq.map { e =>
+          val Array(ref, cols) = e.split(":", 2)
+          ref -> cols.split("\\|").toSeq
+        }.toMap).getOrElse(Map.empty[String, Seq[String]])
+      val dirs = lines.filterNot(_.startsWith("#"))
+        .map { l => val Array(ref, d) = l.split("\t", 2); (ref, d) }
+        .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+      BundleManifest(batches, dirs, parts)
+    }
   }
 
   /** One member's staged write, honoring the bundle's declared partition
@@ -1526,18 +1598,24 @@ object Catalog {
   def readBundleTable(spark: SparkSession, root: String, bundle: String,
       ref: String, version: Option[Long] = None): DataFrame = {
     val base = bundleDir(root, bundle)
-    val m = bundleManifest(spark, root, bundle, version)
-    require(m.dirs.contains(ref),
-      s"readBundleTable: '$ref' not in bundle (members: ${m.dirs.keys})")
-    val paths = m.dirs(ref).map(d => s"$base/$d")
-    // A partitioned member's file sets are each a partition-discovery
-    // root; one multi-path read would try to relate them through their
-    // version directories and fail (CONFLICTING_DIRECTORY_STRUCTURES).
-    // Union per-file-set reads instead — a partition predicate still
-    // prunes every branch's directory listing.
-    if (m.parts.get(ref).exists(_.nonEmpty) && paths.size > 1)
-      paths.map(spark.read.parquet(_)).reduce(_ unionByName _)
-    else spark.read.parquet(paths: _*)
+    val v = version.orElse(latestBundleVersion(spark, root, bundle))
+      .getOrElse(sys.error(s"bundleManifest: no committed versions under $base"))
+    // memoized per session: the file listing and schema inference run
+    // once per committed version, not once per serve
+    memoAtBundle(spark, root, bundle, v, s"member:$ref", perSession = true) {
+      val m = bundleManifest(spark, root, bundle, Some(v))
+      require(m.dirs.contains(ref),
+        s"readBundleTable: '$ref' not in bundle (members: ${m.dirs.keys})")
+      val paths = m.dirs(ref).map(d => s"$base/$d")
+      // A partitioned member's file sets are each a partition-discovery
+      // root; one multi-path read would try to relate them through their
+      // version directories and fail (CONFLICTING_DIRECTORY_STRUCTURES).
+      // Union per-file-set reads instead — a partition predicate still
+      // prunes every branch's directory listing.
+      if (m.parts.get(ref).exists(_.nonEmpty) && paths.size > 1)
+        paths.map(spark.read.parquet(_)).reduce(_ unionByName _)
+      else spark.read.parquet(paths: _*)
+    }
   }
 
   /** Replace `dst` with `staged` via rename-out → rename-in → rollback:

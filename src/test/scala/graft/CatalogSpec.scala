@@ -1288,4 +1288,41 @@ class CatalogSpec extends AnyFunSuite {
     }
     spark.catalog.clearCache()
   }
+
+  test("committed-version memo: a flip shows on the next read, a pruned version refuses, a rebuilt bundle reads its new rows") {
+    val root = Files.createTempDirectory("graft-memo").toString
+    def rows(v: Long) = Catalog.readBundleTable(spark, root, "b", "m", Some(v))
+      .as[Long].collect().sorted.toSeq
+    Catalog.commitBundle(Seq("m" -> (1L to 5L).toDF("id")), root, "b") // v1
+    Catalog.commitDeployment(spark, root, "serving", Map("b" -> 1L))
+    // read twice: the second read is answered from the memo
+    assert(rows(1L) == (1L to 5L) && rows(1L) == (1L to 5L))
+    assert(Catalog.readDeployment(spark, root, "serving") == Map("b" -> 1L))
+    Catalog.commitBundle(Seq("m" -> (1L to 8L).toDF("id")), root, "b") // v2
+    Catalog.commitDeployment(spark, root, "serving", Map("b" -> 2L))
+    // the current deployment is re-resolved on every read: the memoized
+    // pin set of the old deployment version is never served for it
+    assert(Catalog.readDeployment(spark, root, "serving") == Map("b" -> 2L))
+    assert(Catalog.readDeployment(spark, root, "serving", Some(1L)) ==
+      Map("b" -> 1L))
+    // v1 was read and memoized; once retention takes it, the read refuses
+    // exactly as an uncached read of a pruned version does
+    Catalog.pruneBundleVersionsDeployed(spark, root, "b", keep = 1)
+    val ex = intercept[IllegalArgumentException](rows(1L))
+    assert(ex.getMessage.contains("version 1") &&
+      ex.getMessage.contains("is not committed"), ex.getMessage)
+    intercept[IllegalArgumentException] {
+      Catalog.bundleManifest(spark, root, "b", Some(1L))
+    }
+    // the store deleted and rebuilt at the same path: version 1 again,
+    // with a new manifest, so the memo keys it apart from the old v1
+    graft.tools.LocalFs.deleteRecursively(new java.io.File(root))
+    Catalog.commitBundle(Seq("m" -> (100L to 102L).toDF("id")), root, "b")
+    Catalog.commitBundle(Seq("m" -> (200L to 201L).toDF("id")), root, "b")
+    assert(rows(1L) == (100L to 102L) && rows(2L) == (200L to 201L))
+    // deployment version 1 again, now pinning b at 2: the old version 1's
+    // memoized pins (b -> 1) must not answer it
+    assert(Catalog.commitDeployment(spark, root, "serving", Map("b" -> 2L)) == 1L)
+    assert(Catalog.readDeployment(spark, root, "serving") == Map("b" -> 2L))
+  }
 }

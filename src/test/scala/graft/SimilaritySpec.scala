@@ -1028,4 +1028,184 @@ class SimilaritySpec extends AnyFunSuite {
       s"wrong failure: ${ex.getMessage}")
     spark.catalog.clearCache()
   }
+
+  // ---- committed-version memo: what a deployed serve may reuse (Catalog.memoAt)
+
+  private object ServeCache {
+    import graft.operators.{AnnIndex, Embeddings, RelOps, TextIndex}
+    import graft.sources.Catalog
+    import org.apache.spark.sql.DataFrame
+
+    lazy val docs = spark.read.parquet(s"${SparkTestSession.sfDir}/documents.parquet")
+    lazy val e = spark.read.parquet(s"${SparkTestSession.sfDir}/embeddings.parquet")
+    lazy val q = e.where(col("vec_id") < 1)
+    val terms = Seq("join", "vector")
+
+    def docsOf(vecs: DataFrame): DataFrame =
+      docs.join(vecs.select(col("vec_id").as("doc_id")), Seq("doc_id"), "left_semi")
+
+    /** Text + ANN bundles over `vecs` and their documents; the new pins. */
+    def build(root: String, vecs: DataFrame): Map[String, Long] = {
+      TextIndex.writeBundle(docsOf(vecs), root, "tix", seedBatchIds = Seq("b0"))
+      AnnIndex.writeBundle(vecs, Embeddings.pqTrain(
+          RelOps.hashSample(vecs, "vec_id", 0.25), m = 8, k = 16, iters = 2),
+        root, "ann", nCentroids = 16, trainIters = 2, spill = 2,
+        seedBatchIds = Seq("b0"))
+      latest(root)
+    }
+
+    def latest(root: String): Map[String, Long] = Seq("tix", "ann")
+      .map(b => b -> Catalog.latestBundleVersion(spark, root, b).get).toMap
+
+    private def rows(df: DataFrame): Seq[(Int, Long, Long)] =
+      df.orderBy(col("rank")).collect()
+        .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
+
+    def pinned(root: String, pins: Map[String, Long]): Seq[(Int, Long, Long)] =
+      try rows(Similarity.threeStageServeBundle(spark, root, "tix", root, "ann",
+        e, terms, q, k = 5, fuseK = 15, poolK = 20, rerank = 60, nProbe = 3,
+        textVersion = Some(pins("tix")), annVersion = Some(pins("ann"))))
+      finally spark.catalog.clearCache()
+
+    def deployed(root: String): Seq[(Int, Long, Long)] =
+      try rows(Similarity.threeStageServeDeployed(spark, root, "serving",
+        root, "tix", root, "ann", e, terms, q, k = 5, fuseK = 15, poolK = 20,
+        rerank = 60, nProbe = 3))
+      finally spark.catalog.clearCache()
+
+    def tmp(prefix: String): String =
+      java.nio.file.Files.createTempDirectory(prefix).toString
+  }
+
+  test("serve cache: a served version pruned afterwards fails its next pinned serve like an uncached read") {
+    import graft.sources.Catalog
+    import ServeCache._
+    val root = tmp("graft-sc-prune")
+    val pins = build(root, e)
+    // served twice: the version's manifest, member frames, stats and
+    // quantizer are all memoized
+    val first = pinned(root, pins)
+    assert(first.size == 5 && pinned(root, pins) == first)
+    // compaction makes a self-contained snapshot; zero-grace retention
+    // then reclaims the served version
+    Seq("tix", "ann").foreach { b =>
+      Catalog.compactBundle(spark, root, b)
+      Catalog.pruneBundleVersions(spark, root, b, keep = 1)
+    }
+    val ex = intercept[IllegalArgumentException](pinned(root, pins))
+    assert(ex.getMessage.contains(s"version ${pins("tix")}") &&
+      ex.getMessage.contains("is not committed"), ex.getMessage)
+    // the snapshot serves the same corpus, so the same answer
+    assert(pinned(root, latest(root)) == first)
+  }
+
+  test("serve cache: after rollbackDeployment the deployed serve answers the rolled-back pins") {
+    import graft.sources.Catalog
+    import ServeCache._
+    val root = tmp("graft-sc-rollback")
+    val d1 = Catalog.commitDeployment(spark, root, "serving", build(root, e))
+    val before = deployed(root)
+    assert(before.size == 5 && deployed(root) == before)
+    val removed = before.filter(_._1 <= 2).map(_._2)
+    Similarity.takedownServingStack(spark, root, "serving", "tix", "ann",
+      removed.toDF("doc_id"))
+    val taken = deployed(root)
+    assert(taken.size == 5 && !taken.exists(r => removed.contains(r._2)),
+      s"the flip must show on the next serve: $taken")
+    Catalog.rollbackDeployment(spark, root, "serving", d1)
+    assert(deployed(root) == before)
+  }
+
+  test("serve cache: a bundle deleted and rebuilt at the same root with different vectors serves the new answer") {
+    import ServeCache._
+    val root = tmp("graft-sc-rebuild")
+    val evens = e.where(col("vec_id") % 2 === 0)
+    val odds = e.where(col("vec_id") % 2 === 1)
+    val pa = build(root, evens)
+    val a = pinned(root, pa)
+    assert(a.size == 5 && a.forall(_._2 % 2 == 0), s"$a")
+    graft.tools.LocalFs.deleteRecursively(new java.io.File(root))
+    val pb = build(root, odds)
+    assert(pb == pa, "the rebuild reuses the version numbers")
+    val b = pinned(root, pb)
+    // the rebuilt store's answer, and exactly what a store that never
+    // served anything (another path) answers for the same build
+    val other = tmp("graft-sc-rebuild-ref")
+    assert(b.forall(_._2 % 2 == 1) && b == pinned(other, build(other, odds)),
+      s"rebuilt store served $b")
+  }
+
+  test("serve cache: cached serves equal uncached serves across an append + commitDeployment cycle") {
+    import graft.operators.{AnnIndex, TextIndex}
+    import graft.sources.Catalog
+    import ServeCache._
+    val root = tmp("graft-sc-cycle")
+    val base = e.where(col("vec_id") % 7 =!= 6)
+    val batch = e.where(col("vec_id") % 7 === 6)
+    val p1 = build(root, base)
+    Catalog.commitDeployment(spark, root, "serving", p1)
+    // an uncached serve of the same bytes: a copy of the store at another
+    // path shares no memo key with the original
+    def uncached(): Seq[(Int, Long, Long)] = {
+      val copy = tmp("graft-sc-copy")
+      val src = new org.apache.hadoop.fs.Path(root)
+      val fs = src.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      assert(org.apache.hadoop.fs.FileUtil.copy(fs, src, fs,
+        new org.apache.hadoop.fs.Path(copy, "s"), false,
+        spark.sparkContext.hadoopConfiguration))
+      deployed(s"$copy/s")
+    }
+    val s1 = deployed(root)
+    assert(s1.size == 5 && deployed(root) == s1 && uncached() == s1)
+    assert(TextIndex.appendBundle(spark, root, "tix", docsOf(batch), "b1"))
+    assert(AnnIndex.appendBundle(spark, root, "ann", batch, "b1"))
+    val p2 = latest(root)
+    Catalog.commitDeployment(spark, root, "serving", p2)
+    val s2 = deployed(root)
+    assert(s2.size == 5 && deployed(root) == s2 && uncached() == s2)
+    // the pre-append pins still answer themselves
+    assert(pinned(root, p1) == s1)
+  }
+
+  test("serve cache guard: a second threeStageServeBundle at the same pins runs at most 3 SQL executions") {
+    import ServeCache._
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val root = tmp("graft-sc-execs")
+    val pins = build(root, e)
+    // executions reach the listener asynchronously: each measurement
+    // ends with a marker query and waits for it, so every execution of
+    // the measured body has been delivered (the bus keeps event order)
+    object Counter extends QueryExecutionListener {
+      @volatile var marker = "no marker yet"
+      @volatile var seen = false
+      val n = new java.util.concurrent.atomic.AtomicInteger
+      private def record(qe: QueryExecution): Unit =
+        if (qe.logical.toString.contains(marker)) seen = true
+        else { n.incrementAndGet(); () }
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = record(qe)
+      override def onFailure(f: String, qe: QueryExecution, x: Exception): Unit = record(qe)
+    }
+    def executions(body: => Unit): Int = {
+      Counter.marker = s"serve-cache-marker-${java.util.UUID.randomUUID()}"
+      body
+      spark.range(1).select(lit(Counter.marker)).collect()
+      val deadline = System.currentTimeMillis() + 60000L
+      while (!Counter.seen && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(Counter.seen, "the listener never received the marker query")
+      Counter.seen = false
+      Counter.n.getAndSet(0)
+    }
+    spark.listenerManager.register(Counter)
+    try {
+      var first, second = Seq.empty[(Int, Long, Long)]
+      val cold = executions { first = pinned(root, pins) }
+      val warm = executions { second = pinned(root, pins) }
+      assert(second == first && first.size == 5)
+      // probe-cell plan, MMR pool collect, the caller's collect; the
+      // BM25 stats and the quantizer come from the memo
+      assert(warm <= 3, s"second serve ran $warm SQL executions (first: $cold)")
+      assert(cold > warm, s"first serve ran $cold, second $warm")
+    } finally spark.listenerManager.unregister(Counter)
+  }
 }
