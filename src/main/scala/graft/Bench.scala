@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: every SparkEntry query on SPARK_GRAFT_SF_DIR.
   *
@@ -15,21 +14,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = Engine.cpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // tolerance, not an assertion: lets TIMESTAMP(NANOS) files arrive as
-      // Long if the testdata unit flips back; inert for TIMESTAMP(MICROS).
-      // Catalog.normalizeTs dispatches on the arrived type either way.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session("graft-bench")
     // SPARK_GRAFT_ONLY=q1_agg,x2_dedup_minhash runs a subset (iteration aid)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     val selected = only match {
@@ -64,7 +49,12 @@ object Bench {
     val times = scala.collection.mutable.Map.empty[String, List[Double]]
       .withDefaultValue(Nil)
     val failed = scala.collection.mutable.Set.empty[String]
+    // generated classes each query compiles over its timed reps: after the
+    // warm-up pass these are misses of the generated-class cache
+    val compiles = scala.collection.mutable.Map.empty[String, Long]
+      .withDefaultValue(0L)
     for (rep <- 1 to reps; (name, fn) <- ordered) {
+      val c0 = Engine.codegenCompiles._1
       val t0 = System.nanoTime()
       try {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -78,6 +68,7 @@ object Bench {
         failed += name
         System.err.println(s"[bench] rep $rep/$reps $name FAILED: ${e.getMessage}")
       }
+      compiles(name) += Engine.codegenCompiles._1 - c0
       // operators that persist intermediates (LSH candidates, CC frontiers)
       // must not leak cached blocks into later queries' memory budget —
       // every rep starts cache-cold
@@ -136,13 +127,17 @@ object Bench {
       .mkString("{", ",", "}")
     val total = results.collect { case (_, v, _) if v >= 0 => v }.sum
     val bestTotal = results.collect { case (_, _, b) if b >= 0 => b }.sum
-    val fullJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","best_total":$bestTotal,"queries":$qs,"queries_best":$qsBest,"serve_only":$serveJson,"sf":"$sfDir","reps":$reps}"""
-    // durable copy holds the FULL per-query detail
+    val fullFields =
+      s""""metric":"total","value":$total,"unit":"sec","best_total":$bestTotal,"queries":$qs,"queries_best":$qsBest,"serve_only":$serveJson,"sf":"$sfDir","reps":$reps"""
+    val fullJson = s"{$fullFields}"
+    // durable copy holds the FULL per-query detail, plus the per-query
+    // compile counts (file only: the stdout lines keep their keys)
+    val compilesJson = ordered.map { case (k, _) => s"\"" + k + "\":" + compiles(k) }
+      .mkString("{", ",", "}")
     val out = new java.io.File("/tmp/graft/bench_last.json")
     out.getParentFile.mkdirs()
     val w = new java.io.PrintWriter(out)
-    try w.println(fullJson) finally w.close()
+    try w.println(s"""{$fullFields,"codegen_compiles":$compilesJson}""") finally w.close()
     // The full contract line ALSO goes to stdout (r17, additions-only): a
     // consumer that reads entire stdout gets the per-query medians map under
     // "queries" (the round-over-round per-query/geomean input the compact

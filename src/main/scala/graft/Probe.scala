@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Measurement aid (optimization rounds): run named declared queries once
@@ -9,24 +8,14 @@ import scala.collection.mutable
   * stages (pqTrain vs writeBundle vs serve vs earned checks) without the UI.
   *
   * Usage: SPARK_GRAFT_SF_DIR=... sbt "runMain graft.Probe x195_deployed_batch_serve"
-  * Prints [probe] lines: total wall, per-call-site job-time sums, and the
-  * driver-side gap (wall minus job time = planning/commit/driver work).
+  * Prints [probe] lines: total wall, per-call-site job-time sums, the
+  * driver-side gap (wall minus job time = planning/commit/driver work), and
+  * the generated classes compiled and their compile time.
   */
 object Probe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = Engine.cpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session("graft-probe")
     val jobs = mutable.ArrayBuffer.empty[(Int, String, Long)]
     val starts = mutable.Map.empty[Int, (String, Long)]
     // SQL executions (AQE runs their stages as future-submitted sub-jobs
@@ -72,9 +61,11 @@ object Probe {
       for (rep <- 1 to reps) {
         jobs.synchronized { jobs.clear(); starts.clear(); execs.clear()
           execStarts.clear(); nJobs = 0 }
+        val (c0, ns0) = Engine.codegenCompiles
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         val total = (System.nanoTime() - t0) / 1e9
+        val (c1, ns1) = Engine.codegenCompiles
         spark.catalog.clearCache()
         // executions + non-SQL jobs run sequentially in these query
         // plans, so their wall sums partition the total; the residual is
@@ -85,7 +76,7 @@ object Probe {
           .map { case (cs, v) => (cs, v.size, v.map(_._2).sum) }
           .toSeq.sortBy(-_._3)
         val accounted = (snapJ.map(_._3).sum + snapE.map(_._2).sum) / 1000.0
-        println(f"[probe] $name rep=$rep total=$total%.2f s sparkjobs=$nj execs=${snapE.size} accounted=$accounted%.2f s gap=${total - accounted}%.2f s")
+        println(f"[probe] $name rep=$rep total=$total%.2f s sparkjobs=$nj execs=${snapE.size} accounted=$accounted%.2f s gap=${total - accounted}%.2f s codegen_compiles=${c1 - c0} compile=${(ns1 - ns0) / 1e6}%.0f ms")
         for ((cs, n, ms) <- agg.take(40))
           println(f"[probe]   ${ms / 1000.0}%8.2f s  n=$n%-4d $cs")
       }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.functions.timestamp_seconds
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipelines.Pipelines
@@ -19,6 +20,24 @@ class PipelinesSpec extends AnyFunSuite {
     val out = Pipelines.weblogMeanDurationByCountry(weblog, ipCountry)
       .orderBy("country").collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
     assert(out === Seq(("France", 195.0), ("Japan", 600.0)))
+  }
+
+  test("pipeline_weblog rounds an exact 3-decimal tie of the mean half-up") {
+    // nation 0: 40 users, 39 sessions of 1 s and one of 2 s, mean exactly
+    // 41 / 40 = 1.025, whose nearest double lies below the tie (rounding the
+    // binary value gives 1.02, as DuckDB's round of a DOUBLE does, so the
+    // oracle SQL rounds the decimal mean); nation 1: one 7 s session, no tie
+    val users = (0 until 40).map(i => (25L * i, if (i == 0) 2L else 1L)) :+ ((1L, 7L))
+    val dir = java.nio.file.Files.createTempDirectory("graft-weblog-tie").toString
+    users.flatMap { case (u, d) => Seq((u, 1000000L), (u, 1000000L + d)) }
+      .toDF("user_id", "epoch_s")
+      .select($"user_id", timestamp_seconds($"epoch_s").as("ts"))
+      .write.parquet(s"$dir/events.parquet")
+    Seq((0, "ALGERIA"), (1, "ARGENTINA")).toDF("n_nationkey", "n_name")
+      .write.parquet(s"$dir/nation.parquet")
+    val out = SparkEntry.queries("pipeline_weblog")(spark, dir).collect()
+      .map(r => (r.getString(0), r.getDouble(1))).toSeq
+    assert(out === Seq(("ALGERIA", 1.03), ("ARGENTINA", 7.0)))
   }
 
   test("F5/F6 NYC neighbourhood counts with enrichment") {

@@ -1208,4 +1208,31 @@ class SimilaritySpec extends AnyFunSuite {
       assert(cold > warm, s"first serve ran $cold, second $warm")
     } finally spark.listenerManager.unregister(Counter)
   }
+
+  test("codegen cache guard: a repeated threeStageServeBundle at the same pins compiles no new classes") {
+    import ServeCache._
+    import org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val root = tmp("graft-sc-codegen")
+    val pins = build(root, e)
+    // the answer, and the classes compiled while serving it
+    def serve(): (Seq[(Int, Long, Long)], Long) = {
+      val c0 = METRIC_COMPILATION_TIME.getCount
+      val rows = pinned(root, pins)
+      (rows, METRIC_COMPILATION_TIME.getCount - c0)
+    }
+    val (first, cold) = serve()
+    assert(first.size == 5)
+    val repeats = (1 to 3).map { _ =>
+      val (again, n) = serve()
+      assert(again == first)
+      n
+    }
+    // the same request generates the same sources, and one serve's classes
+    // fit the generated-class cache (Engine.CodegenCacheEntries). The class
+    // name carries the whole-stage codegen id, which AQE assigns in the
+    // order it plans stages, so now and then a repeat plans a stage under a
+    // new id and compiles it again (6-10 classes): one repeat of three must
+    // compile nothing. Under Spark's default cache every repeat compiles ~90.
+    assert(repeats.min == 0, s"repeat serves compiled $repeats classes (first: $cold)")
+  }
 }

@@ -16,6 +16,8 @@ object SparkTestSession {
       // Catalog.normalizeTs dispatches on the arrived type either way.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
+      // static, fixed by the first session of the JVM: see Engine
+      .config("spark.sql.codegen.cache.maxEntries", Engine.CodegenCacheEntries.toLong)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
