@@ -9,8 +9,9 @@ import scala.collection.mutable
   *
   * Usage: SPARK_GRAFT_SF_DIR=... sbt "runMain graft.Probe x195_deployed_batch_serve"
   * Prints [probe] lines: total wall, per-call-site job-time sums, the
-  * driver-side gap (wall minus job time = planning/commit/driver work), and
-  * the generated classes compiled and their compile time.
+  * driver-side gap (wall minus job time = planning/commit/driver work), the
+  * Spark jobs the rep ran (from a SparkListener), and the generated classes
+  * compiled and their compile time.
   */
 object Probe {
   def main(args: Array[String]): Unit = {
@@ -23,27 +24,46 @@ object Probe {
     // via the start/end events, whose description IS the action call site
     val execs = mutable.ArrayBuffer.empty[(String, Long)]
     val execStarts = mutable.Map.empty[Long, (String, Long)]
+    // a rep's events are the ones the listener bus delivers between its
+    // begin and end marker jobs (the bus keeps event order), so counts
+    // are exact however late the bus delivers them
+    val Marker = "graft-probe-marker"
+    var counting = false
     var nJobs = 0
+    val ended = new java.util.concurrent.Semaphore(0)
+    def marker(tag: String): Unit = {
+      spark.sparkContext.setJobDescription(s"$Marker $tag")
+      spark.sparkContext.parallelize(Seq(1), 1).count()
+      spark.sparkContext.setJobDescription(null)
+    }
     spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = synchronized {
-        nJobs += 1
-        val inSql = Option(js.properties)
-          .exists(p => p.getProperty("spark.sql.execution.id") != null)
-        if (!inSql) {
-          val cs = js.stageInfos.sortBy(_.stageId).lastOption.map(_.name)
-            .getOrElse("?")
-          starts(js.jobId) = (cs, js.time)
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.synchronized {
+        val desc = Option(js.properties).map(_.getProperty("spark.job.description")).orNull
+        if (desc == s"$Marker begin") {
+          jobs.clear(); starts.clear(); execs.clear(); execStarts.clear()
+          nJobs = 0; counting = true
+        } else if (desc == s"$Marker end") { counting = false; ended.release() }
+        else if (counting) {
+          nJobs += 1
+          val inSql = Option(js.properties)
+            .exists(p => p.getProperty("spark.sql.execution.id") != null)
+          if (!inSql) {
+            val cs = js.stageInfos.sortBy(_.stageId).lastOption.map(_.name)
+              .getOrElse("?")
+            starts(js.jobId) = (cs, js.time)
+          }
         }
       }
-      override def onJobEnd(je: SparkListenerJobEnd): Unit = synchronized {
+      override def onJobEnd(je: SparkListenerJobEnd): Unit = jobs.synchronized {
         starts.get(je.jobId).foreach { case (cs, t0) =>
           jobs += ((je.jobId, cs, je.time - t0))
         }
       }
       override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
-        synchronized {
+        jobs.synchronized {
           e match {
-            case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+            case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+                if counting =>
               execStarts(s.executionId) = (s.description, s.time)
             case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd =>
               execStarts.remove(s.executionId).foreach { case (d, t0) =>
@@ -59,14 +79,15 @@ object Probe {
       fn(spark, sfDir).write.format("noop").mode("overwrite").save() // warm-up
       spark.catalog.clearCache()
       for (rep <- 1 to reps) {
-        jobs.synchronized { jobs.clear(); starts.clear(); execs.clear()
-          execStarts.clear(); nJobs = 0 }
+        marker("begin")
         val (c0, ns0) = Engine.codegenCompiles
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         val total = (System.nanoTime() - t0) / 1e9
         val (c1, ns1) = Engine.codegenCompiles
         spark.catalog.clearCache()
+        marker("end")
+        ended.acquire()
         // executions + non-SQL jobs run sequentially in these query
         // plans, so their wall sums partition the total; the residual is
         // driver-side work outside any execution (manifest I/O, commits)
@@ -76,7 +97,7 @@ object Probe {
           .map { case (cs, v) => (cs, v.size, v.map(_._2).sum) }
           .toSeq.sortBy(-_._3)
         val accounted = (snapJ.map(_._3).sum + snapE.map(_._2).sum) / 1000.0
-        println(f"[probe] $name rep=$rep total=$total%.2f s sparkjobs=$nj execs=${snapE.size} accounted=$accounted%.2f s gap=${total - accounted}%.2f s codegen_compiles=${c1 - c0} compile=${(ns1 - ns0) / 1e6}%.0f ms")
+        println(f"[probe] $name rep=$rep total=$total%.2f s execs=${snapE.size} accounted=$accounted%.2f s gap=${total - accounted}%.2f s sparkjobs=$nj codegen_compiles=${c1 - c0} compile=${(ns1 - ns0) / 1e6}%.0f ms")
         for ((cs, n, ms) <- agg.take(40))
           println(f"[probe]   ${ms / 1000.0}%8.2f s  n=$n%-4d $cs")
       }

@@ -3393,9 +3393,8 @@ object SparkEntry {
       val exactVec = Similarity.bruteForceKnn(e, q, k = 50)
         .select(col("nid"), col("rank").as("vrank"))
       val exactPool = Similarity.rrfFuse(lex, exactVec, k = 30)
-      // boundedPool: the pool is rrfFuse's output cut at 30 <= 256
       val exact = Similarity.mmrRerankPool(e, q, exactPool.select(col("nid")),
-        k = 10, boundedPool = true)
+        k = 10)
       val ov = served.select(col("nid"))
         .join(exact.select(col("nid")), Seq("nid"), "left_semi")
         .agg(count(lit(1)).as("__ov"))
@@ -3455,9 +3454,8 @@ object SparkEntry {
       val exactVec = Similarity.bruteForceKnn(e, qvecs, k = 50)
         .select(col("qid"), col("nid"), col("rank").as("vrank"))
       val exactPool = Similarity.rrfFuseBatch(lex, exactVec, k = 30)
-      // boundedPool: per-query pools cut at 30 <= 256, 8 queries << cap
       val exact = Similarity.mmrRerankPoolBatch(e, qvecs,
-        exactPool.select(col("qid"), col("nid")), k = 10, boundedPool = true)
+        exactPool.select(col("qid"), col("nid")), k = 10)
       val perQid = served.select(col("qid"), col("nid"))
         .join(exact.select(col("qid"), col("nid")), Seq("qid", "nid"),
           "left_semi")
@@ -3653,9 +3651,8 @@ object SparkEntry {
           e.join(allowed, Seq("vec_id"), "left_semi"), q, k = 50)
         .select(col("nid"), col("rank").as("vrank"))
       val exactPool = Similarity.rrfFuse(lex, exactVec, k = 30)
-      // boundedPool: the pool is rrfFuse's output cut at 30 <= 256
       val exact = Similarity.mmrRerankPool(e, q, exactPool.select(col("nid")),
-        k = 10, boundedPool = true)
+        k = 10)
       val ov = served.select(col("nid"))
         .join(exact.select(col("nid")), Seq("nid"), "left_semi")
         .agg(count(lit(1)).as("__ov"))
@@ -4273,9 +4270,8 @@ object SparkEntry {
           e.join(allowed, Seq("vec_id"), "left_semi"), qvecs, k = 80)
         .select(col("qid"), col("nid"), col("rank").as("vrank"))
       val exactPool = Similarity.rrfFuseBatch(lex, exactVec, k = 30)
-      // boundedPool: per-query pools cut at 30 <= 256, 8 queries << cap
       val exact = Similarity.mmrRerankPoolBatch(e, qvecs,
-        exactPool.select(col("qid"), col("nid")), k = 10, boundedPool = true)
+        exactPool.select(col("qid"), col("nid")), k = 10)
       val perQid = served.select(col("qid"), col("nid"))
         .join(exact.select(col("qid"), col("nid")), Seq("qid", "nid"),
           "left_semi")

@@ -17,7 +17,10 @@ import graft.functions.Num.roundz
   *
   * Vector math runs through the native codegen'd `vec_dot` expression when
   * the session enables `graft.GraftExtensions` (interpreted higher-order
-  * fallback otherwise) — no UDFs, no driver-side loops.
+  * fallback otherwise) — no UDFs. The one driver-side loop is the MMR
+  * tail: one action fetches a bounded pool's vectors, and its integer
+  * cosines ([[cos4]], Spark's column arithmetic bit for bit) and greedy
+  * run on the driver.
   */
 object Similarity {
 
@@ -268,17 +271,17 @@ object Similarity {
     * step taking the argmax of `relevance − max similarity to an
     * already-selected result`. λ is fixed at 0.5, whose common factor
     * cancels in the argmax, so the step score is the INTEGER
-    * `qsim4 − max psim4` over cosines rounded and scaled to ×10⁴ longs —
-    * fully engine-replayable, ties on ascending id (rank-1 scores pure
-    * relevance: no selected set yet).
+    * `qsim4 − max psim4` over cosines rounded and scaled to ×10⁴ longs
+    * ([[cos4]]) — fully engine-replayable, ties on ascending id (rank-1
+    * scores pure relevance: no selected set yet).
     *
     * Scale posture: the distributed work is the shortlist retrieval
     * (bruteForceKnn — swap in the stored-index serve at scale) and the
-    * poolK² pairwise cosines; the greedy itself runs driver-side over
-    * the COLLECTED pool, bounded by construction at poolK(≤256)² rows of
-    * (id, id, long) — the query's own shortlist; corpus size never
-    * enters. Output: (rank, nid, mmr4) — mmr4 the integer score at
-    * selection time.
+    * fetch of the shortlist's own vectors; the cosines and the greedy run
+    * driver-side over the FETCHED pool, bounded by construction at
+    * poolK(≤256) vectors and poolK² integer cosines — the query's own
+    * shortlist; corpus size never enters. Output: (rank, nid, mmr4) —
+    * mmr4 the integer score at selection time.
     */
   def mmrRerank(vecs: DataFrame, queryVec: DataFrame, k: Int,
       poolK: Int = 30): DataFrame = {
@@ -295,100 +298,187 @@ object Similarity {
     * return fewer than k with no signal) arrives from
     * whatever retrieval stage ran before ([[bruteForceKnn]] for the
     * exact baseline, [[hybridStoredServe]]'s fused list for the
-    * production path in [[threeStageServe]]), relevance is recomputed
-    * here as the ×10⁴-rounded integer cosine of each pool member to the
-    * query (bit-identical to [[bruteForceKnn]]'s scoring expression, so
-    * pool-from-knn replays exactly), and the λ=0.5 greedy runs
-    * driver-side over the collected pool — bounded by construction at
-    * pool² (id, id, long) rows; corpus size never enters.
+    * production path in [[threeStageServe]]). `queryVec` is one row.
+    * ONE action ([[mmrFetch]]) brings back the pool ids, their vectors
+    * and the query vector; relevance is recomputed on the driver as the
+    * ×10⁴-rounded integer cosine of each pool member to the query
+    * ([[cos4]], bit-identical to [[bruteForceKnn]]'s scoring expression,
+    * so pool-from-knn replays exactly), and the λ=0.5 greedy runs over
+    * it. A pool over 256 ids fails before any vector is fetched.
     */
   def mmrRerankPool(vecs: DataFrame, queryVec: DataFrame, pool: DataFrame,
-      k: Int, idCol: String = "vec_id", vecCol: String = "embedding",
-      boundedPool: Boolean = false): DataFrame = {
+      k: Int, idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(k >= 1, s"mmrRerankPool: k=$k")
-    val spark = vecs.sparkSession
-    val d = dotFor(vecs)
-    val ids = pool.select(col("nid")).distinct().persist()
-    val sub = vecs.join(broadcast(ids), vecs(idCol) === ids("nid"), "left_semi")
-      .select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-      .withColumn("n", sqrt(d(col("v"), col("v"))))
-      .persist()
-    try {
-      // `boundedPool = true` is the COMPOSED-serve contract (threeStage*):
-      // the pool is a fused shortlist whose size the caller already
-      // bounded (`fuseK` ≤ 256 required at entry), so pre-collecting its
-      // size to protect the driver from an unbounded pool² is redundant —
-      // the two pre-check actions fold into the one greedy collect below
-      // (a third tagged branch carries the pool ids) and the SAME loud
-      // checks run post-collect. External callers keep the guarded path:
-      // their pool is unproven and must be sized BEFORE pool² rows are
-      // fetched.
-      if (!boundedPool) {
-        val nSub = sub.count()
-        // every pool id must resolve to a vector: a doc-id/vec-id space
-        // mismatch between the retrieval stage and the vector table would
-        // otherwise silently shrink the result below k with no signal
-        val nPool = ids.count()
-        require(nSub == nPool, s"mmrRerankPool: ${nPool - nSub} of $nPool " +
-          s"pool ids have no '$idCol' row in the vector table — id-space " +
-          "mismatch between the retrieval stage and the vectors")
-        require(nSub <= 256,
-          "mmrRerankPool: pool exceeds the 256-candidate driver-greedy bound")
-      }
-      val q = queryVec.select(asDouble(col(vecCol)).as("qv"))
-        .withColumn("qn", sqrt(d(col("qv"), col("qv"))))
-      val qsims = sub.crossJoin(broadcast(q))
-        .select(col("id").as("nid"),
-          round(when(col("n") * col("qn") === 0, lit(0.0d))
-            .otherwise(d(col("qv"), col("v")) / (col("n") * col("qn")))
-            * lit(1e4), 0).cast("long").as("qsim4"))
-      val pa = sub.select(col("id").as("na"), col("v").as("va"), col("n").as("nna"))
-      val pb = sub.select(col("id").as("nb"), col("v").as("vb"), col("n").as("nnb"))
-      val pairSims = pa.crossJoin(broadcast(pb))
-        .where(col("na") =!= col("nb"))
-        .select(col("na"), col("nb"),
-          round(when(col("nna") * col("nnb") === 0, lit(0.0d))
-            .otherwise(d(col("va"), col("vb")) / (col("nna") * col("nnb")))
-            * lit(1e4), 0).cast("long").as("psim4"))
-      // bounded driver greedy: pool candidates, pool² pair rows — both
-      // collected in ONE action (tagged union; `sub` is materialized by
-      // the resolution count on the guarded path, and by the pb broadcast
-      // build on the bounded path, so every branch of the union job reads
-      // cache); separate collects were fixed overhead
-      val base = qsims
-        .select(lit(0).as("__t"), col("nid").as("__a"), lit(0L).as("__b"),
-          col("qsim4").as("__v"))
-        .unionByName(pairSims
-          .select(lit(1).as("__t"), col("na").as("__a"), col("nb").as("__b"),
-            col("psim4").as("__v")))
-      // bounded path: the pool ids (branch 2) and the resolved ids
-      // (branch 3 — from `sub` itself, so the check is independent of the
-      // query frame) ride the same action; the checks need no extra job
-      val merged = (if (boundedPool)
-        base.unionByName(ids.select(lit(2).as("__t"), col("nid").as("__a"),
-            lit(0L).as("__b"), lit(0L).as("__v")))
-          .unionByName(sub.select(lit(3).as("__t"), col("id").as("__a"),
-            lit(0L).as("__b"), lit(0L).as("__v")))
-        else base).collect()
-      val cand = merged.filter(_.getInt(0) == 0)
-        .map(r => r.getLong(1) -> r.getLong(3)).toMap
-      val psim = merged.filter(_.getInt(0) == 1)
-        .map(r => (r.getLong(1), r.getLong(2)) -> r.getLong(3)).toMap
-      if (boundedPool) {
-        val nPool = merged.count(_.getInt(0) == 2).toLong
-        val nSub = merged.count(_.getInt(0) == 3).toLong
-        require(nSub == nPool, s"mmrRerankPool: ${nPool - nSub} of $nPool " +
-          s"pool ids have no '$idCol' row in the vector table — id-space " +
-          "mismatch between the retrieval stage and the vectors")
-        require(nSub <= 256,
-          "mmrRerankPool: pool exceeds the 256-candidate driver-greedy bound")
-      }
-      import spark.implicits._
-      mmrGreedy(cand, psim, k).toDF("rank", "nid", "mmr4")
-    } finally { sub.unpersist(); ids.unpersist(); () }
+    val rows = mmrSelect(mmrFetchPool(vecs, queryVec, pool, idCol, vecCol),
+      k, idCol, "mmrRerankPool", batch = false)
+    import vecs.sparkSession.implicits._
+    rows.map { case (_, rank, nid, mmr4) => (rank, nid, mmr4) }
+      .toDF("rank", "nid", "mmr4")
   }
 
-  /** The λ=0.5 integer MMR greedy over ONE query's collected pool — the
+  /** [[mmrFetch]] for one query: the pool is one global aggregate under
+    * qid 0, and so is the query row.
+    */
+  private[graft] def mmrFetchPool(vecs: DataFrame, queryVec: DataFrame,
+      pool: DataFrame, idCol: String, vecCol: String): MmrFetch = {
+    val n = size(col("ids"))
+    val pools = pool.agg(collect_set(col("nid").cast("long")).as("ids"))
+      .select(array(struct(lit(0L).as("qid"), col("ids"))).as("p"),
+        n.as("mx"), (n.cast("long") * n).as("pr"))
+    mmrFetch(vecs, queryVec.select(lit(0L).as("qid"), col(vecCol)), pools,
+      idCol, vecCol)
+  }
+
+  /** ×10⁴-rounded integer cosine of `a` and `b` given their norms — the
+    * one formula behind every MMR score (relevance qsim4 and pairwise
+    * psim4), and exactly Spark's column arithmetic for
+    * `round(when(na·nb = 0, 0.0).otherwise(vec_dot(a, b) / (na·nb)) × 1e4,
+    * 0).cast(long)`: the same left-to-right dot sum over the shorter
+    * length, 0.0 for a zero denominator, `round` half-up on the double's
+    * decimal value (`BigDecimal.valueOf`, as Spark's `round` does), then
+    * the long. A NaN or infinite score fails, as the ANSI cast does.
+    * SimilaritySpec pins it against the Spark columns.
+    */
+  private def cos4(a: Array[Double], b: Array[Double],
+      na: Double, nb: Double): Long = {
+    val den = na * nb
+    val s = (if (den == 0) 0.0 else dotD(a, b) / den) * 1e4
+    require(!s.isNaN && !s.isInfinite, s"cos4: score $s has no long value")
+    java.math.BigDecimal.valueOf(s)
+      .setScale(0, java.math.RoundingMode.HALF_UP).longValueExact
+  }
+
+  /** `vec_dot` on the driver: left to right over the shorter length. */
+  private def dotD(a: Array[Double], b: Array[Double]): Double = {
+    val n = math.min(a.length, b.length)
+    var acc = 0.0
+    var i = 0
+    while (i < n) { acc += a(i) * b(i); i += 1 }
+    acc
+  }
+
+  /** `sqrt(vec_dot(a, a))` on the driver. */
+  private def normD(a: Array[Double]): Double = math.sqrt(dotD(a, a))
+
+  /** One pool's MMR scores: the relevance qsim4 of every id to the query
+    * `q`, and the psim4 of every ordered pair of distinct ids (each
+    * unordered pair scored once: the formula is symmetric bit for bit).
+    */
+  private[graft] def mmrScores(q: Array[Double], ids: Seq[Long],
+      vectors: Map[Long, Array[Double]]): (Map[Long, Long], Map[(Long, Long), Long]) = {
+    val norms = ids.map(id => id -> normD(vectors(id))).toMap
+    val qn = normD(q)
+    val qsim = ids.map(id => id -> cos4(q, vectors(id), qn, norms(id))).toMap
+    val psim = ids.indices.flatMap { i =>
+      (i + 1 until ids.size).flatMap { j =>
+        val (a, b) = (ids(i), ids(j))
+        val s = cos4(vectors(a), vectors(b), norms(a), norms(b))
+        Seq((a, b) -> s, (b, a) -> s)
+      }
+    }.toMap
+    (qsim, psim)
+  }
+
+  /** What the MMR stage's one action brings back: each qid's pool ids,
+    * the vector of every pool id that resolved, and the query rows.
+    */
+  private[graft] case class MmrFetch(pools: Map[Long, Seq[Long]],
+      vectors: Map[Long, Array[Double]], queries: Seq[(Long, Array[Double])])
+
+  /** The MMR stage's ONE action. `pools` is one row: `p` (array of
+    * (qid, ids) structs), `mx` (the largest pool) and `pr` (Σ pool²);
+    * `queries` is (qid, `vecCol`). The row's keys — (0, nid) per distinct
+    * pool id, (1, qid) per pool, and (2, 0) carrying `p` — are the
+    * broadcast build side of a hash join that the vector table, the query
+    * rows and one marker row stream past as ONE tagged union: a streamed
+    * row costs one hash probe whatever the number of queries, the pool
+    * plan is referenced once (so the retrieval behind it is planned and
+    * run once, inside this job, with nothing persisted), and the pool ids
+    * come back on the marker row even when none resolves. Pools over the
+    * 256-candidate or the pair-row bound emit no (0, nid) keys, so no
+    * vector is fetched for them. The join key is the id alone: a single
+    * long key keeps the broadcast relation as small as its rows (a
+    * two-column key builds a map of one memory page), and the few rows
+    * whose id matches a key of another kind (a query's own vector id is
+    * its qid) are dropped here.
+    */
+  private[graft] def mmrFetch(vecs: DataFrame, queries: DataFrame,
+      pools: DataFrame, idCol: String, vecCol: String): MmrFetch = {
+    def tagged(kind: Int): Column => Column =
+      key => struct(lit(kind).as("kind"), key.as("key"))
+    val fetchable = col("mx") <= 256 && col("pr") <= MaxBatchGreedyPairRows
+    val keys = pools.select(col("p"), explode(concat(
+        transform(when(fetchable, array_distinct(flatten(col("p.ids"))))
+          .otherwise(typedLit(Seq.empty[Long])), tagged(0)),
+        transform(col("p.qid"), tagged(1)),
+        array(tagged(2)(lit(0L))))).as("b"))
+      .select(col("b.kind").as("bkind"), col("b.key").as("bkey"),
+        when(col("b.kind") === 2, col("p")).as("p"))
+    val stream = vecs
+      .select(lit(0).as("kind"), col(idCol).cast("long").as("key"),
+        col(vecCol).as("v"))
+      .unionByName(queries.select(lit(1).as("kind"),
+        col("qid").cast("long").as("key"), col(vecCol).as("v")))
+      .unionByName(vecs.sparkSession.range(0, 1, 1, 1).select(lit(2).as("kind"),
+        lit(0L).as("key"), lit(null).cast(vecs.schema(vecCol).dataType).as("v")))
+    val rows = stream.join(broadcast(keys), col("key") === col("bkey"))
+      .select(col("kind"), col("bkind"), col("key"), col("v"), col("p"))
+      .collect().filter(r => r.getInt(0) == r.getInt(1))
+    def vec(r: org.apache.spark.sql.Row): Array[Double] =
+      r.getSeq[Any](3).map(_.asInstanceOf[Number].doubleValue).toArray
+    MmrFetch(
+      rows.filter(_.getInt(0) == 2).flatMap(_.getSeq[org.apache.spark.sql.Row](4))
+        .map(p => p.getLong(0) -> p.getSeq[Long](1)).toMap,
+      rows.filter(_.getInt(0) == 0).map(r => r.getLong(2) -> vec(r)).toMap,
+      rows.filter(_.getInt(0) == 1).map(r => r.getLong(2) -> vec(r)).toSeq)
+  }
+
+  /** The driver half of the MMR stage: every loud check, then per qid the
+    * integer cosines ([[mmrScores]]) and the greedy ([[mmrGreedy]]).
+    * Returns (qid, rank, nid, mmr4), qids ascending.
+    */
+  private def mmrSelect(f: MmrFetch, k: Int, idCol: String, who: String,
+      batch: Boolean): Seq[(Long, Int, Long, Long)] = {
+    val sizes = f.pools.values.map(_.size.toLong)
+    require(!batch || f.pools.nonEmpty, s"$who: empty pool")
+    val mx = if (sizes.isEmpty) 0L else sizes.max
+    require(mx <= 256,
+      if (batch) s"$who: a per-query pool exceeds the 256-candidate " +
+        s"driver-greedy bound (max $mx)"
+      else s"$who: pool exceeds the 256-candidate driver-greedy bound")
+    val pairRows = sizes.map(n => n * n).sum
+    require(pairRows <= MaxBatchGreedyPairRows,
+      s"$who: ${f.pools.size} pools collect $pairRows pair " +
+        s"rows > $MaxBatchGreedyPairRows — split the query batch")
+    // every pool id must resolve to a vector: a doc-id/vec-id space
+    // mismatch between the retrieval stage and the vector table would
+    // otherwise silently shrink the result below k with no signal
+    val nPool = sizes.sum
+    val nResolved = f.pools.values.map(_.count(f.vectors.contains).toLong).sum
+    require(nResolved == nPool, s"$who: ${nPool - nResolved} of $nPool " +
+      s"pool ids have no '$idCol' row in the vector table — id-space " +
+      "mismatch between the retrieval stage and the vectors")
+    // a pool whose qid has no query row would otherwise silently return
+    // ZERO rows for that query
+    val posed = f.pools.filter(_._2.nonEmpty)
+    val queries = f.queries.groupBy(_._1)
+    val missing = posed.keySet -- queries.keySet
+    require(missing.isEmpty,
+      if (batch) s"$who: qids $missing have a pool but no '$idCol' row in " +
+        "the query-vector table — qid mismatch between the retrieval stage " +
+        "and queryVecs"
+      else s"$who: the query-vector table has no row")
+    val dup = queries.filter(_._2.size > 1).keySet
+    require(dup.isEmpty,
+      if (batch) s"$who: qids $dup have more than one query-vector row"
+      else s"$who: the query-vector table has more than one row")
+    posed.keys.toSeq.sorted.flatMap { qid =>
+      val (qsim, psim) = mmrScores(queries(qid).head._2, posed(qid), f.vectors)
+      mmrGreedy(qsim, psim, k).map { case (rank, nid, mmr4) => (qid, rank, nid, mmr4) }
+    }
+  }
+
+  /** The λ=0.5 integer MMR greedy over ONE query's scored pool — the
     * single driver-side step both [[mmrRerankPool]] and the batched
     * [[mmrRerankPoolBatch]] run, so single and batched serves select
     * identically by construction. Ties break (score desc, id asc);
@@ -410,9 +500,9 @@ object Similarity {
     selected.toSeq
   }
 
-  /** Hard ceiling on the pair rows the batched greedy may collect:
+  /** Hard ceiling on the pair cosines the batched greedy may score:
     * Σ_q pool_q² must fit the driver comfortably — 2²⁰ (id, id, long)
-    * rows ≈ 24 MB. At fuseK=30 that admits ~1100 queries per plan; at
+    * entries ≈ 24 MB. At fuseK=30 that admits ~1100 queries per plan; at
     * the 256-candidate single-query bound, 16. Callers batching more
     * split the query set — an explicit cap, not a silent truncation.
     */
@@ -420,142 +510,33 @@ object Similarity {
 
   /** [[mmrRerankPool]] generalized to N queries in ONE plan: `pool` is
     * (qid, nid) per-query shortlists, `queryVecs` the matching query
-    * vectors, and the greedy runs per qid over the collected pools —
-    * each query's selection is EXACTLY what [[mmrRerankPool]] would
-    * pick alone (shared [[mmrGreedy]], same ×10⁴ integer cosines), so
-    * batching is a throughput decision, never a semantics one. The
-    * distributed work (pool-vector resolution, per-qid relevance and
-    * pairwise cosines) is one plan over Σ pool_q rows and Σ pool_q²
-    * pair rows, capped by [[MaxBatchGreedyPairRows]] and the per-query
-    * 256-candidate bound before anything is collected. Every (qid,
-    * nid) must resolve to a vector row — loud failure, same contract
-    * as the single-query pool. Returns (qid, rank, nid, mmr4).
+    * vectors (qid = their `idCol`), and the greedy runs per qid over the
+    * fetched pools — each query's selection is EXACTLY what
+    * [[mmrRerankPool]] would pick alone (the same [[mmrFetch]] action,
+    * [[cos4]] scores and [[mmrGreedy]]), so batching is a throughput
+    * decision, never a semantics one. The one action fetches Σ pool_q
+    * vectors, capped by the per-query 256-candidate bound and
+    * [[MaxBatchGreedyPairRows]] before any vector is fetched or any pair
+    * scored. Every (qid, nid) must resolve to a vector row and every
+    * pooled qid to one query row — loud failures, same contract as the
+    * single-query pool. Returns (qid, rank, nid, mmr4).
     */
   def mmrRerankPoolBatch(vecs: DataFrame, queryVecs: DataFrame,
       pool: DataFrame, k: Int, idCol: String = "vec_id",
-      vecCol: String = "embedding", boundedPool: Boolean = false): DataFrame = {
+      vecCol: String = "embedding"): DataFrame = {
     require(k >= 1, s"mmrRerankPoolBatch: k=$k")
-    val spark = vecs.sparkSession
-    val d = dotFor(vecs)
-    val ids = pool.select(col("qid"), col("nid")).distinct().persist()
-    try {
-      // `boundedPool = true` is the COMPOSED-serve contract (threeStage
-      // batch paths): per-query pools are fused shortlists already bounded
-      // by fuseK ≤ 256 at entry, and the caller statically capped
-      // |queries|·fuseK² against [[MaxBatchGreedyPairRows]] — so the two
-      // sizing/resolution pre-actions fold into the one greedy collect
-      // (the pool rows ride as a tagged branch) and the SAME loud checks
-      // run post-collect. External callers keep the guarded path: their
-      // pool is unproven and must be sized BEFORE pool² rows are fetched.
-      val sizes: Map[Long, Long] =
-        if (boundedPool) Map.empty
-        else {
-          val s = ids.groupBy(col("qid")).agg(count(lit(1)).as("__n"))
-            .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-          require(s.nonEmpty, "mmrRerankPoolBatch: empty pool")
-          require(s.values.forall(_ <= 256),
-            s"mmrRerankPoolBatch: a per-query pool exceeds the 256-candidate " +
-              s"driver-greedy bound (max ${s.values.max})")
-          val pairRows = s.values.map(n => n * n).sum
-          require(pairRows <= MaxBatchGreedyPairRows,
-            s"mmrRerankPoolBatch: ${s.size} pools collect $pairRows pair " +
-              s"rows > $MaxBatchGreedyPairRows — split the query batch")
-          s
-        }
-      val nids = ids.select(col("nid")).distinct()
-      val sub = vecs
-        .join(broadcast(nids), vecs(idCol) === nids("nid"), "left_semi")
-        .select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-        .withColumn("n", sqrt(d(col("v"), col("v"))))
-      val poolVecs = ids.join(broadcast(sub), ids("nid") === sub("id"))
-        .select(col("qid"), col("nid"), col("v"), col("n"))
-        .persist()
-      try {
-        if (!boundedPool) {
-          val nResolved = poolVecs.count()
-          val nPool = sizes.values.sum
-          require(nResolved == nPool,
-            s"mmrRerankPoolBatch: ${nPool - nResolved} of $nPool pool ids " +
-              s"have no '$idCol' row in the vector table — id-space mismatch " +
-              "between the retrieval stage and the vectors")
-        }
-        val q = queryVecs
-          .select(col(idCol).as("qid"), asDouble(col(vecCol)).as("qv"))
-          .withColumn("qn", sqrt(d(col("qv"), col("qv"))))
-        val qsims = poolVecs.join(broadcast(q), Seq("qid"))
-          .select(col("qid"), col("nid"),
-            round(when(col("n") * col("qn") === 0, lit(0.0d))
-              .otherwise(d(col("qv"), col("v")) / (col("n") * col("qn")))
-              * lit(1e4), 0).cast("long").as("qsim4"))
-        val pa = poolVecs.select(col("qid"), col("nid").as("na"),
-          col("v").as("va"), col("n").as("nna"))
-        val pb = poolVecs.select(col("qid"), col("nid").as("nb"),
-          col("v").as("vb"), col("n").as("nnb"))
-        val pairSims = pa.join(pb, Seq("qid"))
-          .where(col("na") =!= col("nb"))
-          .select(col("qid"), col("na"), col("nb"),
-            round(when(col("nna") * col("nnb") === 0, lit(0.0d))
-              .otherwise(d(col("va"), col("vb")) / (col("nna") * col("nnb")))
-              * lit(1e4), 0).cast("long").as("psim4"))
-        // ONE collect for both bounded sides (tagged union): the
-        // relevance rows and the pair rows are each capped (pre-action on
-        // the guarded path, statically by the caller on the bounded
-        // path), and separate collect actions were pure fixed overhead.
-        // On the bounded path the pool rows (branch 2) and the resolved
-        // pool rows (branch 3) ride the same action for the post-collect
-        // checks.
-        val base = qsims
-          .select(lit(0).as("__t"), col("qid"), col("nid").as("__a"),
-            lit(0L).as("__b"), col("qsim4").as("__v"))
-          .unionByName(pairSims
-            .select(lit(1).as("__t"), col("qid"), col("na").as("__a"),
-              col("nb").as("__b"), col("psim4").as("__v")))
-        val merged = (if (boundedPool)
-          base.unionByName(ids.select(lit(2).as("__t"), col("qid"),
-              col("nid").as("__a"), lit(0L).as("__b"), lit(0L).as("__v")))
-            .unionByName(poolVecs.select(lit(3).as("__t"), col("qid"),
-              col("nid").as("__a"), lit(0L).as("__b"), lit(0L).as("__v")))
-          else base).collect()
-        val poolByQ: Map[Long, Long] =
-          if (boundedPool) merged.filter(_.getInt(0) == 2).groupBy(_.getLong(1))
-            .map { case (qid, rs) => qid -> rs.length.toLong }
-          else sizes
-        if (boundedPool) {
-          require(poolByQ.nonEmpty, "mmrRerankPoolBatch: empty pool")
-          require(poolByQ.values.forall(_ <= 256),
-            s"mmrRerankPoolBatch: a per-query pool exceeds the 256-candidate " +
-              s"driver-greedy bound (max ${poolByQ.values.max})")
-          val nResolved = merged.count(_.getInt(0) == 3).toLong
-          val nPool = poolByQ.values.sum
-          require(nResolved == nPool,
-            s"mmrRerankPoolBatch: ${nPool - nResolved} of $nPool pool ids " +
-              s"have no '$idCol' row in the vector table — id-space mismatch " +
-              "between the retrieval stage and the vectors")
-        }
-        val candByQ = merged.filter(_.getInt(0) == 0)
-          .groupBy(_.getLong(1))
-          .map { case (qid, rs) =>
-            qid -> rs.map(r => r.getLong(2) -> r.getLong(4)).toMap }
-        // a qid whose pool has no row in queryVecs vanishes in the
-        // inner join above — the pool-resolution check can't see it, so
-        // without this the batch would silently return ZERO rows for
-        // that query; same loud-failure contract as the pool check
-        require(candByQ.keySet == poolByQ.keySet,
-          s"mmrRerankPoolBatch: qids ${poolByQ.keySet -- candByQ.keySet} " +
-            s"have a pool but no '$idCol' row in the query-vector table " +
-            "— qid mismatch between the retrieval stage and queryVecs")
-        val psimByQ = merged.filter(_.getInt(0) == 1)
-          .groupBy(_.getLong(1))
-          .map { case (qid, rs) =>
-            qid -> rs.map(r => (r.getLong(2), r.getLong(3)) -> r.getLong(4)).toMap }
-        val rows = candByQ.keys.toSeq.sorted.flatMap { qid =>
-          mmrGreedy(candByQ(qid), psimByQ.getOrElse(qid, Map.empty), k)
-            .map { case (rank, nid, mmr4) => (qid, rank, nid, mmr4) }
-        }
-        import spark.implicits._
-        rows.toDF("qid", "rank", "nid", "mmr4")
-      } finally { poolVecs.unpersist(); () }
-    } finally { ids.unpersist(); () }
+    val n = size(col("ids"))
+    val pools = pool
+      .groupBy(col("qid").cast("long").as("qid"))
+      .agg(collect_set(col("nid").cast("long")).as("ids"))
+      .agg(collect_list(struct(col("qid"), col("ids"))).as("p"),
+        max(n).as("mx"), sum(n.cast("long") * n).as("pr"))
+    val rows = mmrSelect(
+      mmrFetch(vecs, queryVecs.select(col(idCol).as("qid"), col(vecCol)),
+        pools, idCol, vecCol),
+      k, idCol, "mmrRerankPoolBatch", batch = true)
+    import vecs.sparkSession.implicits._
+    rows.toDF("qid", "rank", "nid", "mmr4")
   }
 
   /** [[threeStageServe]] generalized to N queries in ONE plan — the
@@ -564,9 +545,9 @@ object Similarity {
     * ONCE to the union of the queries' term shards
     * ([[TextIndex.bm25SearchBatch]]), the stored ANN serve already
     * carries qid natively ([[AnnIndex.knn]]), fusion is per-qid
-    * ([[rrfFuseBatch]]) and the greedy runs per qid over the collected
+    * ([[rrfFuseBatch]]) and the greedy runs per qid over the fetched
     * fused pools ([[mmrRerankPoolBatch]] — bounded at Σ fuseK² pair
-    * rows with an explicit cap). Per-query results are EXACTLY the
+    * cosines with an explicit cap). Per-query results are EXACTLY the
     * single-query [[threeStageServe]]'s (shared cores end to end).
     * Returns (qid, rank, nid, mmr4).
     *
@@ -596,15 +577,13 @@ object Similarity {
         withinPairs = withinPairs, materialize = false)
       .select(col("qid"), col("nid"), col("rank").as("vrank"))
     val fused = rrfFuseBatch(lex, vec, fuseK, rrfK)
-    // boundedPool: per-query pools are rrfFuseBatch outputs cut at fuseK
-    // (<= 256, required above) and the batch width is capped statically
-    // below - the greedy's sizing/resolution checks fold into its one
-    // collect (see mmrRerankPoolBatch)
+    // per-query pools are rrfFuseBatch outputs cut at fuseK (<= 256,
+    // required above); the batch width is capped here, before planning
     require(queryTerms.size.toLong * fuseK * fuseK <= MaxBatchGreedyPairRows,
       s"threeStageServeBatch: ${queryTerms.size} queries at fuseK=$fuseK " +
         s"exceed $MaxBatchGreedyPairRows greedy pair rows - split the batch")
     mmrRerankPoolBatch(vecs, queryVecs,
-      fused.select(col("qid"), col("nid")), k, boundedPool = true)
+      fused.select(col("qid"), col("nid")), k)
   }
 
   /** [[threeStageServeBatch]] with both retrieval stages on the atomic
@@ -648,13 +627,13 @@ object Similarity {
         version = Some(av), withinPairs = withinPairs, materialize = false)
       .select(col("qid"), col("nid"), col("rank").as("vrank"))
     val fused = rrfFuseBatch(lex, vec, fuseK, rrfK)
-    // boundedPool + static batch cap - see threeStageServeBatch
+    // static batch cap - see threeStageServeBatch
     require(queryTerms.size.toLong * fuseK * fuseK <= MaxBatchGreedyPairRows,
       s"threeStageServeBatchBundle: ${queryTerms.size} queries at " +
         s"fuseK=$fuseK exceed $MaxBatchGreedyPairRows greedy pair rows - " +
         "split the batch")
     mmrRerankPoolBatch(vecs, queryVecs,
-      fused.select(col("qid"), col("nid")), k, boundedPool = true)
+      fused.select(col("qid"), col("nid")), k)
   }
 
   /** The COMPOSED three-stage serving stack — the query a production
@@ -664,11 +643,12 @@ object Similarity {
     * fusion of the two pools ([[rrfFuse]] — the same arithmetic as the
     * exact baseline), (3) maximal-marginal-relevance diversification of
     * the fused shortlist ([[mmrRerankPool]] — the greedy bounded at
-    * `fuseK`² driver-side rows). Nothing in the composition touches
+    * `fuseK`² driver-side cosines). Nothing in the composition touches
     * corpus text or trains: both expensive passes happened once at
     * index build, every serve-time scan is directory-pruned, and the
     * only corpus-sized frame (`vecs`) is read solely to fetch the
-    * shortlist's own vectors through a broadcast semi-join.
+    * shortlist's own vectors through a broadcast hash join, in the
+    * same action that runs the retrieval.
     *
     * ALIGNMENT CONTRACT: the text index must index a subset of the
     * embedded corpus (build it over the docs that have vector rows) —
@@ -690,11 +670,8 @@ object Similarity {
       queryVec, k = fuseK, poolK = poolK, rrfK = rrfK, rerank = rerank,
       nProbe = nProbe, within = within)
     // the MMR pool is the fused shortlist, which is already filtered
-    // when `within` is set — the greedy never reintroduces candidates.
-    // boundedPool: the pool is rrfFuse's output cut at fuseK (<= 256,
-    // required above), so the greedy folds its checks into one collect
-    mmrRerankPool(vecs, queryVec, fused.select(col("nid")), k,
-      boundedPool = true)
+    // when `within` is set — the greedy never reintroduces candidates
+    mmrRerankPool(vecs, queryVec, fused.select(col("nid")), k)
   }
 
   /** [[threeStageServe]] with BOTH retrieval stages resolved through
@@ -743,9 +720,7 @@ object Similarity {
         version = Some(av), materialize = false)
       .select(col("nid"), col("rank").as("vrank"))
     val fused = rrfFuse(lex, vec, fuseK, rrfK)
-    // boundedPool: fused pool cut at fuseK <= 256 (required above)
-    mmrRerankPool(vecs, queryVec, fused.select(col("nid")), k,
-      boundedPool = true)
+    mmrRerankPool(vecs, queryVec, fused.select(col("nid")), k)
   }
 
   /** [[threeStageServeBundle]] with BOTH index versions resolved

@@ -577,22 +577,29 @@ class DedupSpec extends AnyFunSuite {
     // STORE, and its only documents scans are the batch signature pass
     // plus the two semi-join-pruned re-shingles — the self-contained
     // operator pays exactly one more (the corpus signature), the scan
-    // the store exists to delete. Cached subtrees (cands, the returned
-    // persisted pairs) are censused ONCE via their shared cacheBuilder.
+    // the store exists to delete. A scan is named by its relation's root
+    // paths, never by its plan text, which also carries the text of the
+    // store scan's dynamic-pruning subquery. What runs once is censused
+    // once: a cached subtree via its cacheBuilder, and an exchange the
+    // join and that subquery share (one side reaches it as a reuse).
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
     def census(df: org.apache.spark.sql.DataFrame): Seq[String] = {
       val seen = java.util.Collections.newSetFromMap(
         new java.util.IdentityHashMap[AnyRef, java.lang.Boolean]())
       def go(p: SparkPlan): Seq[String] = p match {
-        case s: FileSourceScanExec    => Seq(s.toString)
+        case s: FileSourceScanExec    =>
+          s.relation.location.rootPaths.mkString(",") +: s.subqueries.flatMap(go)
         case ad: AdaptiveSparkPlanExec => go(ad.executedPlan)
         case q: QueryStageExec        => go(q.plan)
+        case r: ReusedExchangeExec    => go(r.child)
+        case e: Exchange              => if (seen.add(e)) e.children.flatMap(go) else Nil
         case m: InMemoryTableScanExec =>
           if (seen.add(m.relation.cacheBuilder)) go(m.relation.cachedPlan)
           else Nil
-        case other                    => other.children.flatMap(go)
+        case other                    => (other.children ++ other.subqueries).flatMap(go)
       }
       go(df.queryExecution.executedPlan)
     }

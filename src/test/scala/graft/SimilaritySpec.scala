@@ -535,7 +535,7 @@ class SimilaritySpec extends AnyFunSuite {
     // scan limited to the query terms' shards, codes scan to the probed
     // cells — end to end, the composed serve touches the two stores
     // nowhere else (the MMR stage reads only the shortlist's own
-    // vectors through a broadcast semi-join on the embeddings table)
+    // vectors through a broadcast hash join on the embeddings table)
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -1029,6 +1029,54 @@ class SimilaritySpec extends AnyFunSuite {
     spark.catalog.clearCache()
   }
 
+  /** The Spark-column ×10⁴ integer cosine the MMR stage computed before
+    * its scores moved to the driver: the reference `Similarity.cos4`
+    * must equal bit for bit.
+    */
+  private def sparkCos4(a: org.apache.spark.sql.Column, na: org.apache.spark.sql.Column,
+      b: org.apache.spark.sql.Column, nb: org.apache.spark.sql.Column) =
+    round(when(na * nb === 0, lit(0.0d))
+      .otherwise(Similarity.dot(a, b) / (na * nb)) * lit(1e4), 0).cast("long")
+
+  test("MMR scores: the driver's qsim4/psim4 equal the Spark-column values bit for bit") {
+    import org.apache.spark.sql.DataFrame
+    // (qsim4 by id, psim4 by ordered pair) from the Spark columns, and the
+    // driver's from the same rows read back as the MMR fetch reads them
+    def both(vecs: DataFrame, qid: Long) = {
+      val v = vecs.select($"vec_id", transform($"embedding", x => x.cast("double")).as("v"))
+        .withColumn("n", sqrt(Similarity.dot($"v", $"v")))
+      val q = v.where($"vec_id" === qid).select($"v".as("qv"), $"n".as("qn"))
+      val qsim = v.crossJoin(q).select($"vec_id", sparkCos4($"qv", $"qn", $"v", $"n"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val a = v.select($"vec_id".as("a"), $"v".as("va"), $"n".as("na"))
+      val b = v.select($"vec_id".as("b"), $"v".as("vb"), $"n".as("nb"))
+      val psim = a.crossJoin(b).where($"a" =!= $"b")
+        .select($"a", $"b", sparkCos4($"va", $"na", $"vb", $"nb"))
+        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+      val raw = vecs.select($"vec_id", $"embedding").collect().map(r =>
+        r.getLong(0) -> r.getSeq[Any](1).map(_.asInstanceOf[Number].doubleValue).toArray).toMap
+      val driver = Similarity.mmrScores(raw(qid), raw.keys.toSeq.sorted, raw)
+      assert(driver._1 == qsim, (driver._1.toSet diff qsim.toSet).take(5))
+      assert(driver._2 == psim, (driver._2.toSet diff psim.toSet).take(5))
+      driver
+    }
+    // every pair of the embeddings table
+    val e = spark.read.parquet(s"${SparkTestSession.sfDir}/embeddings.parquet")
+    val (allQ, allP) = both(e, 0L)
+    assert(allQ.size == 500 && allP.size == 500 * 499)
+    // a zero vector scores 0 against everything, as the query and in the pool
+    val zero = Seq(1L -> Seq(0f, 0f, 0f), 2L -> Seq(1f, 2f, 3f), 3L -> Seq(0f, 0f, 0f),
+      4L -> Seq(-3f, 0.5f, 2f)).toDF("vec_id", "embedding")
+    assert(both(zero, 1L)._1.values.forall(_ == 0L))
+    assert(both(zero, 2L)._2((2L, 3L)) == 0L)
+    // cosine ±1/32 exactly: ×1e4 lands on ±312.5, and half-up rounds it
+    // away from zero (half-even or Math.round would give 312 / -312)
+    val half = Seq(10L -> Seq(1f, 0f, 0f, 0f, 0f), 11L -> Seq(1f, 31f, 7f, 3f, 2f),
+      12L -> Seq(-1f, 0f, 0f, 0f, 0f)).toDF("vec_id", "embedding")
+    val (hq, hp) = both(half, 10L)
+    assert(hq(11L) == 313L && hp((12L, 11L)) == -313L, s"$hq $hp")
+  }
+
   // ---- committed-version memo: what a deployed serve may reuse (Catalog.memoAt)
 
   private object ServeCache {
@@ -1202,8 +1250,9 @@ class SimilaritySpec extends AnyFunSuite {
       val cold = executions { first = pinned(root, pins) }
       val warm = executions { second = pinned(root, pins) }
       assert(second == first && first.size == 5)
-      // probe-cell plan, MMR pool collect, the caller's collect; the
-      // BM25 stats and the quantizer come from the memo
+      // probe-cell plan, the MMR stage's one action (which runs the
+      // retrieval inside it), the caller's collect; the BM25 stats and the
+      // quantizer come from the memo
       assert(warm <= 3, s"second serve ran $warm SQL executions (first: $cold)")
       assert(cold > warm, s"first serve ran $cold, second $warm")
     } finally spark.listenerManager.unregister(Counter)
@@ -1234,5 +1283,98 @@ class SimilaritySpec extends AnyFunSuite {
     // new id and compiles it again (6-10 classes): one repeat of three must
     // compile nothing. Under Spark's default cache every repeat compiles ~90.
     assert(repeats.min == 0, s"repeat serves compiled $repeats classes (first: $cold)")
+  }
+
+  test("MMR loud failures on the composed serve: one pool id unresolved, every one unresolved; a 300-id pool fetches no vector") {
+    import graft.operators.{AnnIndex, TextIndex}
+    import ServeCache._
+    val root = tmp("graft-mmr-loud")
+    val pins = build(root, e)
+    def ids(df: org.apache.spark.sql.DataFrame, c: String): Set[Long] =
+      df.select(col(c)).collect().map(_.getLong(0)).toSet
+    def serve(vecs: org.apache.spark.sql.DataFrame): String =
+      intercept[IllegalArgumentException] {
+        Similarity.threeStageServeBundle(spark, root, "tix", root, "ann", vecs,
+          terms, q, k = 5, fuseK = 15, poolK = 20, rerank = 60, nProbe = 3,
+          textVersion = Some(pins("tix")), annVersion = Some(pins("ann")))
+      }.getMessage
+    // a fused id that only the lexical side retrieved: dropping its vector
+    // leaves the ANN side's top 20, and so the fused pool, unchanged
+    val lex = ids(TextIndex.bm25SearchBundle(spark, root, "tix", terms, k = 20), "doc_id")
+    val ann = ids(AnnIndex.knnBundle(spark, root, "ann", e, q, k = 20, rerank = 60,
+      nProbe = 3, materialize = false), "nid")
+    val fused = ids(Similarity.hybridStoredServeBundle(spark, root, "tix", root, "ann",
+      e, terms, q, k = 15, poolK = 20, rerank = 60, nProbe = 3), "nid")
+    val lexOnly = (fused intersect lex) -- ann
+    assert(lexOnly.nonEmpty, s"fused $fused lex $lex ann $ann")
+    val one = serve(e.where(col("vec_id") =!= lexOnly.min))
+    assert(one.contains("1 of 15 pool ids have no 'vec_id' row") &&
+      one.contains("id-space mismatch"), one)
+    // no vector at all: the ANN side returns nothing, and none of the
+    // fused (lexical) ids resolves
+    val none = serve(e.where(col("vec_id") < 0))
+    assert(""".*: (\d+) of \1 pool ids have no 'vec_id' row.*""".r.matches(none), none)
+    // over the 256-candidate bound: the one action brings back the pool
+    // and the query but no vector, and the serve fails on the bound
+    val wide = e.limit(300).select(col("vec_id").as("nid"))
+    val fetched = Similarity.mmrFetchPool(e, q, wide, "vec_id", "embedding")
+    assert(fetched.pools(0L).size == 300 && fetched.queries.size == 1 &&
+      fetched.vectors.isEmpty, s"${fetched.vectors.size} vectors fetched")
+    val ex = intercept[IllegalArgumentException](Similarity.mmrRerankPool(e, q, wide, 5))
+    assert(ex.getMessage.endsWith(
+      "mmrRerankPool: pool exceeds the 256-candidate driver-greedy bound"), ex.getMessage)
+  }
+
+  test("no-cache guard: no SQL execution of a warm threeStageServeBundle reads a cached relation") {
+    import ServeCache._
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val root = tmp("graft-sc-nocache")
+    val pins = build(root, e)
+    // the executions of `body`: each measurement ends with a marker query
+    // and waits for it, so every execution of the body has been delivered
+    // (the bus keeps event order)
+    object Recorder extends QueryExecutionListener {
+      @volatile var marker = "no marker yet"
+      @volatile var seen = false
+      val qes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+      private def record(qe: QueryExecution): Unit =
+        if (qe.logical.toString.contains(marker)) seen = true else { qes.add(qe); () }
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = record(qe)
+      override def onFailure(f: String, qe: QueryExecution, x: Exception): Unit = record(qe)
+    }
+    def executions(body: => Unit): Seq[QueryExecution] = {
+      Recorder.marker = s"no-cache-marker-${java.util.UUID.randomUUID()}"
+      body
+      spark.range(1).select(lit(Recorder.marker)).collect()
+      val deadline = System.currentTimeMillis() + 60000L
+      while (!Recorder.seen && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(Recorder.seen, "the listener never received the marker query")
+      Recorder.seen = false
+      import scala.jdk.CollectionConverters._
+      try Recorder.qes.asScala.toSeq finally Recorder.qes.clear()
+    }
+    def cachedScan(p: SparkPlan): Boolean = p match {
+      case _: InMemoryTableScanExec => true
+      case a: AdaptiveSparkPlanExec => cachedScan(a.executedPlan)
+      case s: QueryStageExec        => cachedScan(s.plan)
+      case o => o.children.exists(cachedScan) || o.subqueries.exists(cachedScan)
+    }
+    def cached(qe: QueryExecution): Boolean = cachedScan(qe.executedPlan) ||
+      qe.withCachedData.collectWithSubqueries { case r: InMemoryRelation => r }.nonEmpty
+    spark.listenerManager.register(Recorder)
+    try {
+      var first, second = Seq.empty[(Int, Long, Long)]
+      executions { first = pinned(root, pins) }
+      val warm = executions { second = pinned(root, pins) }
+      assert(second == first && first.size == 5 && warm.nonEmpty)
+      // a persisted intermediate turns the retrieval into a nested cache
+      // build inside the MMR action, planned and run apart from it
+      val hits = warm.filter(cached)
+      assert(hits.isEmpty, s"${hits.size} of ${warm.size} warm executions read a " +
+        s"cached relation:\n${hits.map(_.executedPlan.treeString).mkString("\n")}")
+    } finally spark.listenerManager.unregister(Recorder)
   }
 }
