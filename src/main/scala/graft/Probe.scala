@@ -9,20 +9,31 @@ import scala.collection.mutable
   *
   * Usage: SPARK_GRAFT_SF_DIR=... sbt "runMain graft.Probe x195_deployed_batch_serve"
   * Prints [probe] lines: total wall, per-call-site job-time sums, the
-  * driver-side gap (wall minus job time = planning/commit/driver work), the
-  * Spark jobs the rep ran (from a SparkListener), and the generated classes
-  * compiled and their compile time.
+  * accounted time (the union of the SQL-execution and non-SQL job
+  * intervals, so executions overlapped through `Par` count once), the
+  * driver-side gap (wall minus accounted = planning/commit/driver work),
+  * the Spark jobs the rep ran (from a SparkListener), and the generated
+  * classes compiled and their compile time.
   */
 object Probe {
+  /** Milliseconds covered by at least one of the `[start, end]` intervals:
+    * overlapping and nested intervals count their shared time once.
+    */
+  def coveredMs(intervals: Seq[(Long, Long)]): Long =
+    intervals.sortBy(_._1).foldLeft((0L, Long.MinValue)) {
+      case ((sum, reach), (start, end)) =>
+        if (end <= reach) (sum, reach) else (sum + end - math.max(start, reach), end)
+    }._1
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Engine.session("graft-probe")
-    val jobs = mutable.ArrayBuffer.empty[(Int, String, Long)]
+    val jobs = mutable.ArrayBuffer.empty[(String, Long, Long)]
     val starts = mutable.Map.empty[Int, (String, Long)]
     // SQL executions (AQE runs their stages as future-submitted sub-jobs
     // whose stage names are useless) — attribute wall time per execution
     // via the start/end events, whose description IS the action call site
-    val execs = mutable.ArrayBuffer.empty[(String, Long)]
+    val execs = mutable.ArrayBuffer.empty[(String, Long, Long)]
     val execStarts = mutable.Map.empty[Long, (String, Long)]
     // a rep's events are the ones the listener bus delivers between its
     // begin and end marker jobs (the bus keeps event order), so counts
@@ -56,7 +67,7 @@ object Probe {
       }
       override def onJobEnd(je: SparkListenerJobEnd): Unit = jobs.synchronized {
         starts.get(je.jobId).foreach { case (cs, t0) =>
-          jobs += ((je.jobId, cs, je.time - t0))
+          jobs += ((cs, t0, je.time))
         }
       }
       override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
@@ -67,7 +78,7 @@ object Probe {
               execStarts(s.executionId) = (s.description, s.time)
             case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd =>
               execStarts.remove(s.executionId).foreach { case (d, t0) =>
-                execs += ((d, s.time - t0))
+                execs += ((d, t0, s.time))
               }
             case _ =>
           }
@@ -88,16 +99,16 @@ object Probe {
         spark.catalog.clearCache()
         marker("end")
         ended.acquire()
-        // executions + non-SQL jobs run sequentially in these query
-        // plans, so their wall sums partition the total; the residual is
-        // driver-side work outside any execution (manifest I/O, commits)
-        val (snapJ, snapE, nj) = jobs.synchronized { (jobs.toList, execs.toList, nJobs) }
-        val agg = (snapJ.map(j => (j._2, j._3)) ++ snapE)
-          .groupBy(_._1)
-          .map { case (cs, v) => (cs, v.size, v.map(_._2).sum) }
+        // executions and non-SQL jobs overlap (`Par`), so the accounted
+        // time is the union of their intervals; the residual is driver-side
+        // work outside any execution (planning, manifest I/O, commits)
+        val (spans, nExecs, nj) =
+          jobs.synchronized { (jobs.toList ++ execs.toList, execs.size, nJobs) }
+        val agg = spans.groupBy(_._1)
+          .map { case (cs, v) => (cs, v.size, v.map(x => x._3 - x._2).sum) }
           .toSeq.sortBy(-_._3)
-        val accounted = (snapJ.map(_._3).sum + snapE.map(_._2).sum) / 1000.0
-        println(f"[probe] $name rep=$rep total=$total%.2f s execs=${snapE.size} accounted=$accounted%.2f s gap=${total - accounted}%.2f s sparkjobs=$nj codegen_compiles=${c1 - c0} compile=${(ns1 - ns0) / 1e6}%.0f ms")
+        val accounted = coveredMs(spans.map(x => (x._2, x._3))) / 1000.0
+        println(f"[probe] $name rep=$rep total=$total%.2f s execs=$nExecs accounted=$accounted%.2f s gap=${total - accounted}%.2f s sparkjobs=$nj codegen_compiles=${c1 - c0} compile=${(ns1 - ns0) / 1e6}%.0f ms")
         for ((cs, n, ms) <- agg.take(40))
           println(f"[probe]   ${ms / 1000.0}%8.2f s  n=$n%-4d $cs")
       }

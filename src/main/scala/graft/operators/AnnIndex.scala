@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructType}
 
 import graft.sources.Catalog
 
@@ -21,8 +24,10 @@ import graft.sources.Catalog
   *   dir/codes.parquet     — (id, pq array<int>) PARTITIONED BY cell: the
   *     inverted lists ARE the directory layout.
   *
-  * Serving reads centroids+books (bounded: nCentroids + m×k rows), plans
-  * the probe cells on the driver, and scans ONLY those cell directories —
+  * Serving reads centroids+books (bounded: nCentroids + m×k rows), reads
+  * the query rows ONCE (one collect of qid, vector, norm and probe cells:
+  * the driver holds |queries| × dims doubles, serve-sized), plans the
+  * probe cells on the driver, and scans ONLY those cell directories —
   * the `cell IN (probes)` predicate is a static partition filter, so a
   * 16-cell index probed at nProbe=6 reads 6/16 of the codes on disk
   * (PlanSpec-pinned, same mechanism as the s9 date-pruned scan). At
@@ -256,11 +261,17 @@ object AnnIndex {
       rerank, nProbe, idCol, vecCol, within, withinPairs, materialize)
 
   /** The one serve plan both the flat-directory index and the
-    * bundle-backed index ([[knnBundle]]) run: probe cells planned on the
-    * driver, `codesAll` pruned by the probe list (a partition filter —
-    * only the probed cell directories are listed), ADC shortlist, exact
-    * re-rank. The codes SOURCE is the only thing that differs between
-    * the two stores, so their serves cannot drift.
+    * bundle-backed index ([[knnBundle]]) run. Its probe action collects
+    * the query rows (qid, vector as doubles, norm, the nProbe nearest
+    * cells; |queries| × dims doubles on the driver, serve-sized); the
+    * distinct probe list is planned on the driver and prunes `codesAll`
+    * (a partition filter — only the probed cell directories are listed).
+    * The ADC join's probe side and the exact re-rank's query side are
+    * driver-local relations over those rows, so the caller's query frame
+    * is read once per serve. The ADC shortlist ranks and dedupes on one
+    * qid shuffle, then the exact re-rank. The codes SOURCE is the only
+    * thing that differs between the two stores, so their serves cannot
+    * drift.
     */
   private def serveCore(spark: SparkSession, qz: Quantizer,
       codesAll: DataFrame, corpus: DataFrame,
@@ -270,17 +281,25 @@ object AnnIndex {
       withinPairs: Option[DataFrame] = None,
       materialize: Boolean = true): DataFrame = {
     require(rerank > k, s"AnnIndex.knn: rerank=$rerank must exceed k=$k")
-    val probed = queries
+    // the ONE read of the query rows. The plan below reads them from
+    // driver-local relations: no per-request literal reaches its generated
+    // code, and their exact size makes them the broadcast side
+    val read = queries
       .select(col(idCol).as("qid"), asDouble(col(vecCol)).as("qvec"))
       .withColumn("qn", sqrt(Similarity.dot(col("qvec"), col("qvec"))))
-      .withColumn("cell", explode(slice(graft.functions.Staging.pin(
-        Similarity.centroidRanksIn(spark)(col("qvec"), qz.centroids)), 1, nProbe)))
+      .withColumn("cells", slice(
+        Similarity.centroidRanksIn(spark)(col("qvec"), qz.centroids), 1, nProbe))
+    val rows = read.collect().toSeq
+    val qSchema = StructType(read.schema.fields.take(3))
+    def local(rs: Seq[Row], schema: StructType) = spark.createDataFrame(rs.asJava, schema)
+    val probed = local(
+      rows.flatMap(r => r.getSeq[Int](3).map(c => Row(r(0), r(1), r(2), c))),
+      qSchema.add("cell", IntegerType, nullable = false))
     // the probe list is driver-planned (bounded by nCentroids): an IN on
     // the partition column makes the codes scan read ONLY those cells
-    val probeCells = probed.select(col("cell")).distinct()
-      .collect().map(_.getInt(0)).sorted
+    val probeCells = rows.flatMap(_.getSeq[Int](3)).distinct.sorted
     val pruned = codesAll
-      .where(col("cell").isin(probeCells.map(Integer.valueOf).toIndexedSeq: _*))
+      .where(col("cell").isin(probeCells.map(Integer.valueOf): _*))
     val kept = within.fold(pruned) { w =>
       val ids = w.select(col(w.columns.head).as("__within_id"))
       pruned.join(ids, pruned(idCol) === ids("__within_id"), "left_semi")
@@ -289,16 +308,12 @@ object AnnIndex {
       .withColumn("cvec", asDouble(Embeddings.pqDecode(col("pq"), qz.books)))
       .select(col(idCol).as("nid"), col("cell"), col("cvec"),
         sqrt(Similarity.dot(col("cvec"), col("cvec"))).as("cn"))
-    // a spill-built index holds a vector in several cells: overlapping
-    // probes then surface the same (qid, nid) more than once — collapse
-    // before ranking (the duplicates carry identical sims)
     val scoredAll = decoded.join(probed, Seq("cell"))
       .where(col("nid") =!= col("qid"))
       .select(col("qid"), col("nid"),
         when(col("cn") * col("qn") === 0, lit(0.0d))
           .otherwise(Similarity.dot(col("qvec"), col("cvec"))
             / (col("cn") * col("qn"))).as("sim"))
-      .dropDuplicates("qid", "nid")
     // per-QUERY eligibility ((qid, id) rows — a bulk serve's per-request
     // ACL): unlike the shared `within`, this cannot prune the codes scan
     // (a code allowed for one query and not another), so it semi-joins
@@ -309,11 +324,19 @@ object AnnIndex {
       val pairs = wp.select(col(cs(0)).as("qid"), col(cs(1)).as("nid"))
       scoredAll.join(pairs, Seq("qid", "nid"), "left_semi")
     }
+    // a spill-built index holds a vector in several cells: overlapping
+    // probes then surface the same (qid, nid) more than once, with the
+    // same codes and so the same sim. dense_rank gives the copies one
+    // rank, so ranks <= rerank are the top `rerank` distinct candidates,
+    // and the dedupe after it reuses the window's qid partitioning: one
+    // shuffle ranks and dedupes
     val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid"))
-    val shortlist = scored.withColumn("rank", row_number().over(w))
+    val shortlist = scored.withColumn("rank", dense_rank().over(w))
       .where(col("rank") <= rerank)
-      .select(col("qid"), col("nid"))
-    val exact = Similarity.rerankExact(shortlist, corpus, queries, k, idCol, vecCol)
+      .select(col("qid"), col("nid")).distinct()
+    val exact = Similarity.rerankExact(shortlist, corpus,
+      local(rows.map(r => Row(r(0), r(1), r(2))), qSchema)
+        .select(col("qid").as(idCol), col("qvec").as(vecCol)), k, idCol, vecCol)
     // `materialize = false` is the COMPOSED-serve shape (threeStage*):
     // the caller's own MMR stage collects the fused pool within the same
     // call — before anything can mutate the store — so the eager

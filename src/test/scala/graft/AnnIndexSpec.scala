@@ -282,4 +282,131 @@ class AnnIndexSpec extends AnyFunSuite {
       .contains(2L), "crashed slot not reclaimed")
     spark.catalog.clearCache()
   }
+
+  /** A spill-2 bundle index over the first 200 vectors, 4 trained cells:
+    * most vectors sit in two cells, so a serve probing 2 cells meets
+    * each of them twice.
+    */
+  private lazy val spillRoot = {
+    val root = java.nio.file.Files.createTempDirectory("graft-annspill").toString
+    AnnIndex.writeBundle(embeddings.where(col("vec_id") < 200), trainedBooks, root,
+      "ann", nCentroids = 4, trainIters = 2, spill = 2, seedBatchIds = Seq("b0"))
+    root
+  }
+
+  /** (qid, nid, sim, rank) rows, qid then rank order; a null sim is None. */
+  private def served(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Option[Double], Int)] =
+    try df.orderBy(col("qid"), col("rank")).collect().map(r => (r.getLong(0), r.getLong(1),
+      Option.when(!r.isNullAt(2))(r.getDouble(2)), r.getInt(3))).toSeq
+    finally spark.catalog.clearCache()
+
+  test("serve guard: the shortlist execution reads no query-frame scan and ranks on one qid shuffle") {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Literal}
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    val corpus = embeddings.where(col("vec_id") < 200)
+    val qid = 7L
+    val ann = AnnIndex.knnBundle(spark, spillRoot, "ann", corpus,
+      embeddings.where(col("vec_id") === qid), k = 5, rerank = 20, nProbe = 2,
+      materialize = false)
+    assert(served(ann).size == 5)
+    // every node of the executed plan, parents before children
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec        => nodes(s.plan)
+      case r: ReusedExchangeExec    => nodes(r.child)
+      case o => o +: (o.children ++ o.subqueries).flatMap(nodes)
+    }
+    val plan = nodes(ann.queryExecution.executedPlan)
+    // the query rows were read once, before this execution: no scan here
+    // filters on the query frame's `vec_id = 7`
+    val queryScans = plan.collect { case s: FileSourceScanExec => s }
+      .filter(_.dataFilters.exists(_.find {
+        case Literal(v, _) => v == qid
+        case _             => false
+      }.isDefined))
+    assert(queryScans.isEmpty, s"the shortlist execution re-reads the query frame:\n" +
+      queryScans.mkString("\n"))
+    def keys(x: ShuffleExchangeExec): Seq[String] = x.outputPartitioning match {
+      case h: HashPartitioning => h.expressions.collect { case a: AttributeReference => a.name }
+      case _                   => Nil
+    }
+    val keyed = plan.collect { case x: ShuffleExchangeExec => keys(x) }
+    // the shortlist ranks and dedupes on ONE qid shuffle; the exact
+    // re-rank above it broadcasts the corpus and the query rows, so its
+    // window reuses that partitioning
+    assert(keyed.count(_ == Seq("qid")) == 1, s"shuffle keys: $keyed")
+    assert(!keyed.exists(_.sorted == Seq("nid", "qid")),
+      s"the shortlist shuffles on (qid, nid): $keyed")
+  }
+
+  test("spill-2 serve with duplicates at the rerank cut equals the dedupe-then-row_number reference shortlist") {
+    import graft.sources.Catalog
+    import org.apache.spark.sql.expressions.Window
+    val corpus = embeddings.where(col("vec_id") < 200)
+    val q = corpus.where(col("vec_id") < 12)
+    val (k, rerank, nProbe) = (5, 6, 2)
+    // the reference: the index's own members, scored through the same
+    // expressions, deduped and THEN ranked
+    def member(m: String) = Catalog.readBundleTable(spark, spillRoot, "ann", m)
+    val cents = member("centroids").collect()
+      .map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1).toSeq
+    val books = member("books").collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toIndexedSeq))
+      .groupBy(_._1).toIndexedSeq.sortBy(_._1)
+      .map(_._2.sortBy(_._2).map(_._3).toIndexedSeq)
+    def asDouble(c: org.apache.spark.sql.Column) = transform(c, _.cast("double"))
+    val probed = q.select(col("vec_id").as("qid"), asDouble(col("embedding")).as("qvec"))
+      .withColumn("qn", sqrt(Similarity.dot(col("qvec"), col("qvec"))))
+      .withColumn("cell", explode(slice(
+        Similarity.centroidRanksIn(spark)(col("qvec"), cents), 1, nProbe)))
+    val scored = member("codes")
+      .select(col("vec_id").as("nid"), col("cell"),
+        asDouble(Embeddings.pqDecode(col("pq"), books)).as("cvec"))
+      .withColumn("cn", sqrt(Similarity.dot(col("cvec"), col("cvec"))))
+      .join(probed, Seq("cell"))
+      .where(col("nid") =!= col("qid"))
+      .select(col("qid"), col("nid"),
+        when(col("cn") * col("qn") === 0, lit(0.0d))
+          .otherwise(Similarity.dot(col("qvec"), col("cvec"))
+            / (col("cn") * col("qn"))).as("sim"))
+    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid"))
+    def top(df: org.apache.spark.sql.DataFrame) =
+      df.withColumn("rank", row_number().over(w)).where(col("rank") <= rerank)
+        .select(col("qid"), col("nid"))
+    val shortlist = top(scored.dropDuplicates("qid", "nid"))
+    // the fixture matters: ranking BEFORE the dedupe would let a spill
+    // copy take a slot at the cut and change the shortlist
+    val naive = top(scored).distinct()
+    assert(shortlist.exceptAll(naive).count() > 0,
+      "no spill duplicate reaches the rerank cut")
+    val want = served(Similarity.rerankExact(shortlist, corpus, q, k))
+    val got = served(AnnIndex.knnBundle(spark, spillRoot, "ann", corpus, q, k = k,
+      rerank = rerank, nProbe = nProbe))
+    assert(want.size == 12 * k)
+    assert(got == want)
+  }
+
+  test("serve edge cases: a null query vector, a query row given twice, an empty query frame") {
+    val corpus = embeddings.where(col("vec_id") < 200)
+    def serve(q: org.apache.spark.sql.DataFrame) = AnnIndex.knnBundle(spark,
+      spillRoot, "ann", corpus, q, k = 3, rerank = 10, nProbe = 2)
+    val one = corpus.where(col("vec_id") === 3)
+    val single = served(serve(one))
+    assert(single.map(_._2) == Seq(84L, 156L, 53L))
+    // a null vector ranks the cells by id alone (cells 0 and 1 probed) and
+    // scores every candidate null, so its neighbours come in id order
+    val nul = corpus.where(col("vec_id") === 4)
+      .withColumn("embedding", lit(null).cast(corpus.schema("embedding").dataType))
+    assert(served(serve(one.unionByName(nul))) ==
+      single ++ Seq((4L, 0L, None, 1), (4L, 1L, None, 2), (4L, 2L, None, 3)))
+    // a query row given twice is scored twice in the exact re-rank: each
+    // neighbour fills two ranks
+    assert(served(serve(one.unionByName(one))) == single.flatMap(r => Seq(r, r))
+      .take(3).zipWithIndex.map { case (r, i) => r.copy(_4 = i + 1) })
+    val none = serve(corpus.where(col("vec_id") < 0))
+    assert(none.schema == serve(one).schema && served(none).isEmpty)
+  }
 }

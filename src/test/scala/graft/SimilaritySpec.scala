@@ -1250,7 +1250,7 @@ class SimilaritySpec extends AnyFunSuite {
       val cold = executions { first = pinned(root, pins) }
       val warm = executions { second = pinned(root, pins) }
       assert(second == first && first.size == 5)
-      // probe-cell plan, the MMR stage's one action (which runs the
+      // the query read, the MMR stage's one action (which runs the
       // retrieval inside it), the caller's collect; the BM25 stats and the
       // quantizer come from the memo
       assert(warm <= 3, s"second serve ran $warm SQL executions (first: $cold)")
