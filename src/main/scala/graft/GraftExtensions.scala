@@ -2,16 +2,20 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{
-  Divide, EqualTo, Expression, ExpressionInfo, If, Literal, Multiply, Sqrt}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import graft.functions.VectorExpressions
 
 /** Engine extensions, activated with
-  * `.config("spark.sql.extensions", "graft.GraftExtensions")` (Engine,
-  * Verify, Bench, and the test session all set it). Registers the native
-  * vector expressions so they're callable through the public
-  * `functions.call_function("vec_dot", ...)` / SQL `vec_dot(a, b)` surface.
+  * `.config("spark.sql.extensions", "graft.GraftExtensions")`
+  * (`Engine.session` and the test session set it). Registers the native
+  * vector expressions so they are callable through
+  * `functions.call_function("vec_dot", ...)` and SQL `vec_dot(a, b)`.
+  * They are the one path for the engine's vector kernels: there is no
+  * interpreted fallback, so a session without this extension fails at
+  * analysis on the unresolved routine (`vec_dot`, `vec_pq_encode`, ...).
+  * The HOF constructions they replace live in test scope as bit-identity
+  * oracles (`KernelOracles`).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -22,43 +26,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         require(args.length == 2, s"vec_dot expects 2 arguments, got ${args.length}")
         VectorExpressions.DotProduct(args(0), args(1))
       }))
-    // vec_cosine(a, b) = dot(a,b) / (|a|*|b|) — a composed Catalyst tree
-    // over the codegen'd DotProduct, not a UDF, so the whole similarity
-    // score stays inside whole-stage codegen. Mirrors `Similarity.cosine`
-    // exactly: zero-norm input → 0.0, NULL input → NULL (the If's null
-    // predicate falls through to the divide, which propagates the NULL;
-    // the divide-by-zero branch is unreachable because denom = 0 takes the
-    // true branch first).
-    ext.injectFunction((
-      FunctionIdentifier("vec_cosine"),
-      new ExpressionInfo(VectorExpressions.DotProduct.getClass.getName, "vec_cosine"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, s"vec_cosine expects 2 arguments, got ${args.length}")
-        val (a, b) = (args(0), args(1))
-        val denom = new Multiply(
-          Sqrt(VectorExpressions.DotProduct(a, a)),
-          Sqrt(VectorExpressions.DotProduct(b, b)))
-        If(EqualTo(denom, Literal(0.0)),
-          Literal(0.0),
-          new Divide(VectorExpressions.DotProduct(a, b), denom))
-      }))
-    // Spark ships BloomFilterAggregate / BloomFilterMightContain as
-    // INTERNAL expressions (the runtime-row-group-filter machinery behind
-    // spark.sql.optimizer.runtime.bloomFilter) without a public SQL
-    // surface. Registering them here gives the incremental-dedup operators
-    // a codegen'd bloom build + probe with zero UDFs: `bloom_agg(xxhash64
-    // (x), est_items, num_bits)` folds a partition-local sketch per task
-    // and ORs them at the final aggregate (one bounded binary to the
-    // driver); `bloom_contains(<binary literal>, xxhash64(x))` then
-    // evaluates map-side inside whole-stage codegen.
-    // PQ/IVF table expressions: each collapses an interpreted
-    // aggregate/array_sort fold over an m×k codeword-literal forest into
-    // one codegen'd node holding the codebook as a table reference — the
-    // per-row hot loop of every index build/train/serve pass, and the
-    // bulk of those queries' plan size (driver planning time). Bit-
-    // identical to the HOF constructions (see VectorExpressions notes;
-    // pinned by specs); the HOF paths remain the fallback for sessions
-    // without this extension.
+    // PQ/IVF table expressions: each stands for an aggregate/array_sort
+    // fold over an m×k codeword-literal forest as one codegen'd node
+    // holding the codebook as a table reference — the per-row hot loop of
+    // every index build/train/serve pass, and a plan one literal wide
+    // instead of m×k (driver planning time). Bit-identical to the HOF
+    // constructions, which are test-scope oracles now (see the
+    // VectorExpressions notes; pinned by specs).
     ext.injectFunction((
       FunctionIdentifier("vec_pq_encode"),
       new ExpressionInfo(VectorExpressions.PqEncode.getClass.getName, "vec_pq_encode"),
@@ -87,6 +61,15 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         require(args.length == 3, s"vec_ranks expects 3 arguments, got ${args.length}")
         VectorExpressions.CentroidRanks(args(0), args(1), args(2))
       }))
+    // Spark ships BloomFilterAggregate / BloomFilterMightContain as
+    // INTERNAL expressions (the runtime-row-group-filter machinery behind
+    // spark.sql.optimizer.runtime.bloomFilter) without a public SQL
+    // surface. Registering them here gives the incremental-dedup operators
+    // a codegen'd bloom build + probe with zero UDFs: `bloom_agg(xxhash64
+    // (x), est_items, num_bits)` folds a partition-local sketch per task
+    // and ORs them at the final aggregate (one bounded binary to the
+    // driver); `bloom_contains(<binary literal>, xxhash64(x))` then
+    // evaluates map-side inside whole-stage codegen.
     ext.injectFunction((
       FunctionIdentifier("bloom_agg"),
       new ExpressionInfo(

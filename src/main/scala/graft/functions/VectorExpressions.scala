@@ -22,8 +22,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   */
 object VectorExpressions {
 
-  /** `vec_dot(array<double>, array<double>) -> double`; shorter input ends
-    * the loop (mirrors `zip_with` truncation semantics). Null input → null.
+  /** `vec_dot(array<double>, array<double>) -> double`; the shorter input
+    * ends the loop (`zip_with` would pad it with nulls instead, so the HOF
+    * form matches only at equal lengths). Null input → null.
     */
   case class DotProduct(left: Expression, right: Expression)
       extends BinaryExpression with ImplicitCastInputTypes {
@@ -81,10 +82,11 @@ object VectorExpressions {
   // codegen'd node holding the codebook as a table reference: per row a
   // tight primitive loop, per plan a single literal.
   //
-  // Bit-identity with the HOF constructions they replace (pinned in
-  // SimilaritySpec/EmbeddingsSpec): same left-to-right dot accumulation
-  // order as `vec_dot` (truncating to the shorter input like zip_with),
-  // same `Σ x²` codeword-norm fold order, and the same comparison
+  // Bit-identity with the HOF constructions they replace (kept in test
+  // scope as `KernelOracles`, pinned in SimilaritySpec/EmbeddingsSpec):
+  // same left-to-right dot accumulation order as `vec_dot` (truncating to
+  // the shorter input), same `Σ x²` codeword-norm fold order, and the same
+  // comparison
   // semantics as Spark's GreaterThan on doubles — `x == y` first (so
   // -0.0 ties 0.0), then java.lang.Double.compare (NaN greatest) — with
   // first-strictly-greater-wins fold order and the HOF's null behavior

@@ -134,14 +134,13 @@ object AnnIndex {
       books: IndexedSeq[IndexedSeq[IndexedSeq[Double]]],
       centroids: Seq[(Int, Seq[Double])], spill: Int,
       idCol: String, vecCol: String): DataFrame = {
-    val spark = vectors.sparkSession
     val encoded = Embeddings.pqEncode(vectors, books, vecCol, as = "pq")
     val withCell =
       if (spill == 1) encoded.withColumn("cell",
-        Similarity.nearestCentroidIn(spark)(asDouble(col(vecCol)), centroids))
+        Similarity.nearestCentroidIn(asDouble(col(vecCol)), centroids))
       else encoded.withColumn("cell",
         explode(slice(graft.functions.Staging.pin(
-          Similarity.centroidRanksIn(spark)(asDouble(col(vecCol)), centroids)), 1, spill)))
+          Similarity.centroidRanksIn(asDouble(col(vecCol)), centroids)), 1, spill)))
     withCell.select(col(idCol), col("pq"), col("cell"))
   }
 
@@ -271,7 +270,8 @@ object AnnIndex {
     * is read once per serve. The ADC shortlist ranks and dedupes on one
     * qid shuffle, then the exact re-rank. The codes SOURCE is the only
     * thing that differs between the two stores, so their serves cannot
-    * drift.
+    * drift. A qid on two query rows, or a null query vector, fails the
+    * serve with the qid named.
     */
   private def serveCore(spark: SparkSession, qz: Quantizer,
       codesAll: DataFrame, corpus: DataFrame,
@@ -288,8 +288,16 @@ object AnnIndex {
       .select(col(idCol).as("qid"), asDouble(col(vecCol)).as("qvec"))
       .withColumn("qn", sqrt(Similarity.dot(col("qvec"), col("qvec"))))
       .withColumn("cells", slice(
-        Similarity.centroidRanksIn(spark)(col("qvec"), qz.centroids), 1, nProbe))
+        Similarity.centroidRanksIn(col("qvec"), qz.centroids), 1, nProbe))
     val rows = read.collect().toSeq
+    // loud on inputs the plan below would serve wrongly: a qid on two rows
+    // is scored twice (each neighbour fills two ranks), a null vector
+    // serves neighbours in id order with null sims
+    val dup = rows.groupBy(_.get(0)).collect { case (q, rs) if rs.size > 1 => q }
+    require(dup.isEmpty,
+      s"AnnIndex.knn: qids ${dup.mkString(", ")} have more than one query row")
+    val nul = rows.filter(_.isNullAt(1)).map(_.get(0))
+    require(nul.isEmpty, s"AnnIndex.knn: qids ${nul.mkString(", ")} have a null query vector")
     val qSchema = StructType(read.schema.fields.take(3))
     def local(rs: Seq[Row], schema: StructType) = spark.createDataFrame(rs.asJava, schema)
     val probed = local(

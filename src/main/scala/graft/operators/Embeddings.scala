@@ -97,23 +97,13 @@ object Embeddings {
     val subDim = dims / m
     var books: IndexedSeq[IndexedSeq[IndexedSeq[Double]]] =
       (0 until m).map(j => seed.map(v => v.slice(j * subDim, (j + 1) * subDim)))
-    val nativePq = hasNativePq(df)
-    val native = hasVecDot(df)
     for (_ <- 1 to iters) {
-      // assignment expression: ONE native vec_pq_encode node per iteration
-      // when the session has it (plan stays literal-table-sized; the m×k
-      // dot loop runs codegen'd) — the staged-slice HOF forest otherwise
-      // per-subspace codeword count from the BOOKS, not the declared k:
+      // assignment: ONE native vec_pq_encode node per iteration (the plan
+      // stays literal-table-sized; the m×k dot loop runs codegen'd).
+      // Per-subspace codeword count from the BOOKS, not the declared k:
       // a seed sample smaller than k yields fewer codewords per subspace
-      val staged =
-        if (nativePq) base.withColumn("__cells",
-          call_function("vec_pq_encode", col("__v"), booksLit(books),
-            lit(books.head.size)))
-        else {
-          val st = stageSubvectors(base, books, subDim)
-          st.withColumn("__cells", array((0 until m).map(j =>
-            nearestCode(col(s"__sub$j"), books(j), native)): _*))
-        }
+      val staged = base.withColumn("__cells", call_function("vec_pq_encode",
+        col("__v"), booksLit(books), lit(books.head.size)))
       val stats = staged
         .select(col("__cells"), posexplode(col("__v")).as(Seq("__pos", "__x")))
         .withColumn("__sub", (col("__pos") / subDim).cast("int"))
@@ -138,118 +128,36 @@ object Embeddings {
     } finally { base.unpersist(false); () }
   }
 
-  /** True when the active session registered the native codegen'd
-    * `vec_dot` (graft.GraftExtensions) — the PQ hot paths then score
-    * codewords through it instead of the interpreted
-    * `aggregate(zip_with(...))` fold. Bit-identical on the uniform-width
-    * vectors PQ operates on: both accumulate `Σ aᵢ·bᵢ` left-to-right in
-    * index order over the same doubles (the HOF stays the fallback and
-    * the semantics oracle, like Similarity.dotHof). Resolved ONCE per
-    * public entry point, not per codeword — m×k catalog lookups per plan
-    * would be waste.
-    */
-  private def hasVecDot(df: DataFrame): Boolean =
-    df.sparkSession.catalog.functionExists("vec_dot")
-
-  /** True when the session registered the PQ table expressions
-    * (`vec_pq_encode`/`vec_pq_decode`, graft.GraftExtensions): the whole
-    * per-subspace argmin forest then collapses into one codegen'd node
-    * whose codebook rides as a table reference — bit-identical to the
-    * staged-slice HOF construction (EmbeddingsSpec pins it), ~m×k fewer
-    * expression nodes per plan and no interpreted fold per row.
-    */
-  private def hasNativePq(df: DataFrame): Boolean =
-    df.sparkSession.catalog.functionExists("vec_pq_encode")
-
-  private def hasNativePqActive: Boolean =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .exists(_.catalog.functionExists("vec_pq_decode"))
-
   /** Codebooks flattened for the table expressions: row j·k + c = codeword
     * c of subspace j.
     */
   private def booksLit(books: IndexedSeq[IndexedSeq[IndexedSeq[Double]]]): Column =
     typedLit(books.flatten.map(_.toSeq).toSeq)
 
-  private def subDot(sub: Column, c: Seq[Double], native: Boolean): Column =
-    if (native) call_function("vec_dot", sub, typedLit(c))
-    else aggregate(zip_with(sub, typedLit(c), (a, b) => a * b), lit(0.0d), _ + _)
-
-  /** argmin_c ‖sub − c‖² as argmax_c (2·sub·c − ‖c‖²): one fold over the
-    * scored codewords (each score computed once — see the langId note on
-    * interpreted HOFs), ties to the lowest code. The k codeword dots are
-    * the per-row hot loop of every PQ encode/train pass — native
-    * codegen'd `vec_dot` when the session has it (`native`).
-    */
-  private def nearestCode(sub: Column, book: IndexedSeq[IndexedSeq[Double]],
-      native: Boolean): Column = {
-    val scored = array(book.zipWithIndex.map { case (c, i) =>
-      struct((lit(2.0d) * subDot(sub, c, native) - lit(c.map(x => x * x).sum)).as("s"),
-        lit(i).as("idx"))
-    }: _*)
-    aggregate(scored,
-      struct(lit(Double.NegativeInfinity).as("s"), lit(-1).as("idx")),
-      (acc, e) => when(e.getField("s") > acc.getField("s"), e).otherwise(acc),
-      acc => acc.getField("idx"))
-  }
-
-  /** Stage each subspace slice as its own attribute so the per-codeword
-    * dot products read attributes (interpreted HOFs re-evaluate non-cheap
-    * inputs per reference — `slice` would otherwise run k times each).
-    */
-  private def stageSubvectors(df: DataFrame,
-      books: IndexedSeq[IndexedSeq[IndexedSeq[Double]]], subDim: Int): DataFrame =
-    books.indices.foldLeft(df) { case (d, j) =>
-      d.withColumn(s"__sub$j", slice(col("__v"), j * subDim + 1, subDim))
-    }
-
   /** Encode vectors against trained codebooks: adds `as` = array<int> of m
-    * codes. A narrow map — broadcastable codebook literals, no shuffle.
+    * codes, per subspace argmin_c ‖sub − c‖² with ties to the lowest code
+    * and -1 for a null vector. A narrow map through the native
+    * `vec_pq_encode` (graft.GraftExtensions; the session must register
+    * it): one codegen'd node holding the codebook as a table reference.
+    * The staged-slice HOF construction it replaces is the test-scope
+    * oracle (`KernelOracles.pqEncodeHof`).
     */
   def pqEncode(df: DataFrame, books: IndexedSeq[IndexedSeq[IndexedSeq[Double]]],
       vecCol: String = "embedding", as: String = "pq_codes"): DataFrame = {
     require(books.nonEmpty && books.head.nonEmpty, "pqEncode: empty codebooks")
-    if (hasNativePq(df))
-      df.withColumn(as, call_function("vec_pq_encode",
-        asDouble(col(vecCol)), booksLit(books), lit(books.head.size)))
-    else pqEncodeHof(df, books, vecCol, as)
-  }
-
-  /** The staged-slice HOF construction of [[pqEncode]] — fallback for
-    * sessions without the table expressions, and the semantics oracle the
-    * native node is spec-pinned against (EmbeddingsSpec).
-    */
-  private[graft] def pqEncodeHof(df: DataFrame,
-      books: IndexedSeq[IndexedSeq[IndexedSeq[Double]]],
-      vecCol: String = "embedding", as: String = "pq_codes"): DataFrame = {
-    val subDim = books.head.head.size
-    val native = hasVecDot(df)
-    val staged = stageSubvectors(df.withColumn("__v", asDouble(col(vecCol))), books, subDim)
-    staged
-      .withColumn(as, array(books.indices.map(j =>
-        nearestCode(col(s"__sub$j"), books(j), native)): _*))
-      .drop("__v" +: books.indices.map(j => s"__sub$j"): _*)
+    df.withColumn(as, call_function("vec_pq_encode",
+      asDouble(col(vecCol)), booksLit(books), lit(books.head.size)))
   }
 
   /** Reconstruct the quantized approximation from PQ codes (codeword
     * concatenation) — the decode side of `pqEncode`, for asymmetric
-    * distance computation or error audits.
+    * distance computation or error audits. Native `vec_pq_decode`; null
+    * codes give a null vector. Test-scope oracle:
+    * `KernelOracles.pqDecodeHof`.
     */
   def pqDecode(codes: Column,
       books: IndexedSeq[IndexedSeq[IndexedSeq[Double]]]): Column =
-    if (hasNativePqActive)
-      call_function("vec_pq_decode", codes, booksLit(books), lit(books.head.size))
-    else pqDecodeHof(codes, books)
-
-  /** The element_at/flatten construction of [[pqDecode]] — fallback and
-    * spec oracle for the native node.
-    */
-  private[graft] def pqDecodeHof(codes: Column,
-      books: IndexedSeq[IndexedSeq[IndexedSeq[Double]]]): Column =
-    flatten(array(books.indices.map { j =>
-      element_at(typedLit(books(j).map(_.toSeq).toSeq),
-        element_at(codes, j + 1) + 1)
-    }: _*))
+    call_function("vec_pq_decode", codes, booksLit(books), lit(books.head.size))
 
   /** Asymmetric-distance kNN over PQ codes: queries keep their EXACT
     * vectors, candidates are scored through their compressed

@@ -15,75 +15,32 @@ import graft.functions.Num.roundz
   * LSH buckets (an IVF-style candidate cut) — candidates share a bucket,
   * then exact re-rank; recall is tunable via planes/probes.
   *
-  * Vector math runs through the native codegen'd `vec_dot` expression when
-  * the session enables `graft.GraftExtensions` (interpreted higher-order
-  * fallback otherwise) — no UDFs. The one driver-side loop is the MMR
-  * tail: one action fetches a bounded pool's vectors, and its integer
-  * cosines ([[cos4]], Spark's column arithmetic bit for bit) and greedy
-  * run on the driver.
+  * Vector math runs through the native codegen'd expressions that
+  * `graft.GraftExtensions` registers (`vec_dot`, `vec_nearest`,
+  * `vec_ranks`) — the one path, no UDFs. A session built without the
+  * extension fails at analysis on the unresolved routine. The HOF folds
+  * these expressions replace live in test scope as bit-identity oracles.
+  * The one driver-side loop is the MMR tail: one action fetches a bounded
+  * pool's vectors, and its integer cosines ([[cos4]], Spark's column
+  * arithmetic bit for bit) and greedy run on the driver.
   */
 object Similarity {
 
   /** Dot product of two array columns (double) — the native codegen'd
     * expression (graft.functions.VectorExpressions.DotProduct), resolved
-    * through the function registry so sessions must enable
-    * `spark.sql.extensions=graft.GraftExtensions` (Engine/Verify/Bench do).
+    * through the function registry: the session must enable
+    * `spark.sql.extensions=graft.GraftExtensions` (`Engine.session` does).
     */
   def dot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
 
-  /** Interpreted reference implementation of `dot` from built-in
-    * higher-order functions — semantics oracle for the native expression
-    * (see SimilaritySpec), and the fallback for sessions without the
-    * extension. ~10× slower per pair: HOFs evaluate interpreted.
-    */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (acc, x) => acc + x)
+  /** L2 norm. */
+  def norm(a: Column): Column = sqrt(dot(a, a))
 
-  /** Session-aware dot: native expression when the extension is registered
-    * in the session owning `df`, interpreted fallback otherwise — so the
-    * operators below work (slower) in vanilla sessions too.
-    */
-  private def dotFor(df: DataFrame): (Column, Column) => Column =
-    dotIn(df.sparkSession)
-
-  private def dotIn(spark: org.apache.spark.sql.SparkSession): (Column, Column) => Column =
-    if (spark.catalog.functionExists("vec_dot")) dot else dotHof
-
-  /** Session-aware dot for the ACTIVE session: native when GraftExtensions
-    * is registered there, interpreted fallback otherwise.
-    */
-  private def activeDot: (Column, Column) => Column =
-    org.apache.spark.sql.SparkSession.getActiveSession.map(dotIn)
-      .getOrElse(dotHof)
-
-  /** L2 norm — native vec_dot when the active session has GraftExtensions,
-    * interpreted fallback otherwise.
-    */
-  def norm(a: Column): Column = norm(a, activeDot)
-
-  /** L2 norm with a caller-chosen dot (pass `dotHof`, or the result of
-    * `dotFor`, for sessions without the extension).
-    */
-  def norm(a: Column, dotFn: (Column, Column) => Column): Column =
-    sqrt(dotFn(a, a))
-
-  /** Cosine similarity; 0 when either vector is all-zero. Native vec_dot
-    * when the active session has GraftExtensions, interpreted fallback
-    * otherwise.
-    */
-  def cosine(a: Column, b: Column): Column = cosine(a, b, activeDot)
-
-  /** Cosine with a caller-chosen dot, for extension-less sessions. */
-  def cosine(a: Column, b: Column, dotFn: (Column, Column) => Column): Column = {
-    val d = norm(a, dotFn) * norm(b, dotFn)
-    when(d === 0, lit(0.0d)).otherwise(dotFn(a, b) / d)
+  /** Cosine similarity; 0 when either vector is all-zero. */
+  def cosine(a: Column, b: Column): Column = {
+    val d = norm(a) * norm(b)
+    when(d === 0, lit(0.0d)).otherwise(dot(a, b) / d)
   }
-
-  /** Session-aware cosine: resolves native-vs-interpreted dot from the
-    * session owning `df`, like the kNN operators do.
-    */
-  def cosineFor(df: DataFrame)(a: Column, b: Column): Column =
-    cosine(a, b, dotFor(df))
 
   private def asDouble(c: Column): Column = transform(c, x => x.cast("double"))
 
@@ -99,16 +56,15 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     // norms are per-vector, computed once here — computing them inside the
     // pair-scoring expression would redo each one per candidate pair
-    val d = dotFor(candidates)
     val c = candidates.select(col(idCol).as("nid"), asDouble(col(vecCol)).as("cvec"))
-      .withColumn("cn", sqrt(d(col("cvec"), col("cvec"))))
+      .withColumn("cn", sqrt(dot(col("cvec"), col("cvec"))))
     val q = queries.select(col(idCol).as("qid"), asDouble(col(vecCol)).as("qvec"))
-      .withColumn("qn", sqrt(d(col("qvec"), col("qvec"))))
+      .withColumn("qn", sqrt(dot(col("qvec"), col("qvec"))))
     val scored = c.crossJoin(broadcast(q))
       .where(col("nid") =!= col("qid"))
       .select(col("qid"), col("nid"),
         when(col("cn") * col("qn") === 0, lit(0.0d))
-          .otherwise(d(col("qvec"), col("cvec")) / (col("cn") * col("qn"))).as("sim"))
+          .otherwise(dot(col("qvec"), col("cvec")) / (col("cn") * col("qn"))).as("sim"))
     val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid"))
     scored.withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
@@ -822,17 +778,16 @@ object Similarity {
     */
   def rerankExact(pairs: DataFrame, candidates: DataFrame, queries: DataFrame,
       k: Int, idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val d = dotFor(candidates)
     val c = candidates.select(col(idCol).as("nid"), asDouble(col(vecCol)).as("cvec"))
-      .withColumn("cn", sqrt(d(col("cvec"), col("cvec"))))
+      .withColumn("cn", sqrt(dot(col("cvec"), col("cvec"))))
     val q = queries.select(col(idCol).as("qid"), asDouble(col(vecCol)).as("qvec"))
-      .withColumn("qn", sqrt(d(col("qvec"), col("qvec"))))
+      .withColumn("qn", sqrt(dot(col("qvec"), col("qvec"))))
     val scored = pairs.select(col("qid"), col("nid"))
       .join(c, Seq("nid"))
       .join(broadcast(q), Seq("qid"))
       .select(col("qid"), col("nid"),
         when(col("cn") * col("qn") === 0, lit(0.0d))
-          .otherwise(d(col("qvec"), col("cvec")) / (col("cn") * col("qn"))).as("sim"))
+          .otherwise(dot(col("qvec"), col("cvec")) / (col("cn") * col("qn"))).as("sim"))
     val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid"))
     scored.withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
@@ -869,29 +824,27 @@ object Similarity {
     *
     * The matrix is outDims × dims literals broadcast inside the plan; the
     * projection is a narrow map of outDims dot products per row — no
-    * shuffle, whole-stage-codegen'd when GraftExtensions is enabled.
+    * shuffle, whole-stage codegen'd through `vec_dot`.
     */
   def randomProject(df: DataFrame, outDims: Int, idCol: String = "vec_id",
       vecCol: String = "embedding", seed: Long = 42L,
       as: String = "proj"): DataFrame = {
     require(outDims > 0, s"outDims=$outDims must be positive")
-    val d = dotFor(df)
     val dims = vecDims(df, vecCol)
     val planes = hyperplanes(dims, outDims, seed)
     val scale = 1.0 / math.sqrt(outDims.toDouble)
     val v = asDouble(col(vecCol))
     df.withColumn(as,
-      array(planes.map(p => d(v, typedLit(p)) * scale): _*))
+      array(planes.map(p => dot(v, typedLit(p)) * scale): _*))
   }
 
   /** LSH bucket id: one sign bit per hyperplane packed into a long. Vectors
     * with high cosine similarity agree on most sign bits, so they land in
     * the same bucket with probability (1 - θ/π)^planes.
     */
-  def lshBucket(vec: Column, planes: Seq[Seq[Double]],
-      dotFn: (Column, Column) => Column = dot): Column =
+  def lshBucket(vec: Column, planes: Seq[Seq[Double]]): Column =
     planes.zipWithIndex.map { case (p, i) =>
-      when(dotFn(vec, typedLit(p)) >= 0, shiftleft(lit(1L), i)).otherwise(lit(0L))
+      when(dot(vec, typedLit(p)) >= 0, shiftleft(lit(1L), i)).otherwise(lit(0L))
     }.reduce((a, b) => a.bitwiseOR(b))
 
   /** Approximate top-k: candidates restricted to the query's LSH bucket,
@@ -908,18 +861,17 @@ object Similarity {
   def lshKnnDims(candidates: DataFrame, queries: DataFrame, k: Int, dims: Int,
       numPlanes: Int, idCol: String, vecCol: String, seed: Long): DataFrame = {
     val planes = hyperplanes(dims, numPlanes, seed)
-    val d = dotFor(candidates)
     val c = candidates.select(col(idCol).as("nid"), asDouble(col(vecCol)).as("cvec"))
-      .withColumn("bucket", lshBucket(col("cvec"), planes, d))
-      .withColumn("cn", sqrt(d(col("cvec"), col("cvec"))))
+      .withColumn("bucket", lshBucket(col("cvec"), planes))
+      .withColumn("cn", sqrt(dot(col("cvec"), col("cvec"))))
     val q = queries.select(col(idCol).as("qid"), asDouble(col(vecCol)).as("qvec"))
-      .withColumn("bucket", lshBucket(col("qvec"), planes, d))
-      .withColumn("qn", sqrt(d(col("qvec"), col("qvec"))))
+      .withColumn("bucket", lshBucket(col("qvec"), planes))
+      .withColumn("qn", sqrt(dot(col("qvec"), col("qvec"))))
     val scored = c.join(q, Seq("bucket"))
       .where(col("nid") =!= col("qid"))
       .select(col("qid"), col("nid"),
         when(col("cn") * col("qn") === 0, lit(0.0d))
-          .otherwise(d(col("qvec"), col("cvec")) / (col("cn") * col("qn"))).as("sim"))
+          .otherwise(dot(col("qvec"), col("cvec")) / (col("cn") * col("qn"))).as("sim"))
     val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid"))
     scored.withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
@@ -963,7 +915,7 @@ object Similarity {
     require(cents.nonEmpty, s"kmeansCentroids: no non-empty '$vecCol' vectors")
     val v = sel.select(col("v").as("vec"))
     for (_ <- 1 to iters) {
-      val cell = nearestCentroidIn(df.sparkSession)(col("vec"),
+      val cell = nearestCentroidIn(col("vec"),
         cents.zipWithIndex.map { case (cv, i) => (i, cv) })
       val sums = v.withColumn("cell", cell)
         .select(col("cell"), posexplode(col("vec")).as(Seq("pos", "x")))
@@ -986,48 +938,15 @@ object Similarity {
     } finally { sel.unpersist(false); () }
   }
 
-  /** IVF (inverted-file) approximate top-k — the other classic ANN scale
-    * path next to sign-LSH. Coarse quantizer: `nCentroids` vectors chosen by
-    * a deterministic hash-order sample of the corpus (`trainIters = 0`,
-    * a k-medoids-style shortcut), or refined with that many spherical
-    * k-means rounds (`kmeansCentroids`) — trained cells follow the data's
-    * direction clusters, so the same nProbe recovers more true neighbors.
-    * Every candidate is assigned to its nearest centroid (one shuffle by
-    * centroid id); a query probes its `nProbe` nearest centroids and
-    * re-ranks exactly within those inverted lists.
-    *
-    * At scale: assignment is a narrow map over the corpus; the probe join
-    * touches nProbe/nCentroids of the data instead of all of it, and the
-    * centroid table (nCentroids × dims doubles) broadcasts everywhere.
-    */
-  /** Nearest-centroid ids for a vector, as a sorted-by-score idx array —
-    * max inner product ≈ nearest for same-norm centroids; deterministic
-    * tie-break on idx. Shared by `ivfKnn` and the streaming index
-    * maintenance (`VectorIngest`), so batch assignment and online
-    * assignment can never drift apart.
-    */
-  def centroidRanks(vec: Column, centroids: Seq[(Int, Seq[Double])],
-      dotFn: (Column, Column) => Column = dot): Column = {
-    val scored = array(centroids.map { case (i, cv) =>
-      struct(dotFn(vec, typedLit(cv)).as("s"), lit(i).as("idx"))
-    }: _*)
-    transform(
-      array_sort(scored, (a, b) =>
-        when(a.getField("s") > b.getField("s"), -1)
-          .when(a.getField("s") < b.getField("s"), 1)
-          .otherwise(a.getField("idx") - b.getField("idx"))),
-      x => x.getField("idx"))
-  }
-
-  /** argmax_i dot(vec, c_i) as a single fold over the scored centroids —
-    * the top-1 special case of [[centroidRanks]] with the IDENTICAL tie
-    * rule (lowest idx wins), without materializing and sorting the full
-    * score array: O(k) comparisons instead of O(k log k) struct sorts,
-    * per row. Used everywhere only the nearest cell matters (k-means
-    * assignment, spill-1 index assignment, streaming ingest).
+  /** argmax_i score(vec, c_i) as a single fold over the scored centroids,
+    * ties to the first strictly greater entry (lowest idx in array order).
+    * Only for a TRANSFORMED score (`labelConfusion` rounds the dot before
+    * the argmax), which no native expression covers; plain-dot assignment
+    * is [[nearestCentroidIn]], and this fold over plain [[dot]] is its test
+    * oracle.
     */
   def nearestCentroid(vec: Column, centroids: Seq[(Int, Seq[Double])],
-      dotFn: (Column, Column) => Column = dot): Column = {
+      dotFn: (Column, Column) => Column): Column = {
     val scored = array(centroids.map { case (i, cv) =>
       struct(dotFn(vec, typedLit(cv)).as("s"), lit(i).as("idx"))
     }: _*)
@@ -1037,34 +956,29 @@ object Similarity {
       acc => acc.getField("idx"))
   }
 
-  // Session-aware single-node variants of [[nearestCentroid]] /
-  // [[centroidRanks]]: native codegen'd table expressions (`vec_nearest` /
-  // `vec_ranks`, graft.GraftExtensions) when the session registered them,
-  // the HOF folds above otherwise. Bit-identical by construction (same
-  // truncating dot accumulation, same Spark-double compare, same
-  // first-strictly-greater / (score desc, id asc) orders, same null-vector
-  // fall-throughs — SimilaritySpec pins all of it); the native node is one
-  // expression instead of a k-codeword struct forest, so the per-row fold
-  // stops being interpreted AND the plan the driver re-optimizes per
-  // build/train action shrinks by ~k literals per reference. Only for
-  // plain-dot scoring: callers folding a TRANSFORMED score (labelConfusion
-  // rounds before the argmax) keep the explicit-dotFn fold.
+  // Nearest centroid (`vec_nearest`) and centroids ranked by score desc,
+  // id asc (`vec_ranks`): native codegen'd table expressions registered by
+  // graft.GraftExtensions, one node holding the centroids as a table
+  // reference instead of a k-codeword struct forest. Max inner product ≈
+  // nearest for same-norm centroids. Shared by `ivfKnn`, k-means, the ANN
+  // index build and serve, and streaming ingest (`VectorIngest`), so batch
+  // and online assignment cannot drift apart. A null vector yields -1 /
+  // ids ascending. The HOF folds they replace are test-scope oracles
+  // (`KernelOracles`), pinned bit for bit by SimilaritySpec.
   private def centLit(centroids: Seq[(Int, Seq[Double])]): (Column, Column) =
     (typedLit(centroids.map(_._2.toSeq).toSeq), typedLit(centroids.map(_._1).toSeq))
 
-  private[graft] def nearestCentroidIn(spark: org.apache.spark.sql.SparkSession)(
-      vec: Column, centroids: Seq[(Int, Seq[Double])]): Column =
-    if (spark.catalog.functionExists("vec_nearest")) {
-      val (cs, ids) = centLit(centroids)
-      call_function("vec_nearest", vec, cs, ids)
-    } else nearestCentroid(vec, centroids, dotIn(spark))
+  private[graft] def nearestCentroidIn(vec: Column,
+      centroids: Seq[(Int, Seq[Double])]): Column = {
+    val (cs, ids) = centLit(centroids)
+    call_function("vec_nearest", vec, cs, ids)
+  }
 
-  private[graft] def centroidRanksIn(spark: org.apache.spark.sql.SparkSession)(
-      vec: Column, centroids: Seq[(Int, Seq[Double])]): Column =
-    if (spark.catalog.functionExists("vec_ranks")) {
-      val (cs, ids) = centLit(centroids)
-      call_function("vec_ranks", vec, cs, ids)
-    } else centroidRanks(vec, centroids, dotIn(spark))
+  private[graft] def centroidRanksIn(vec: Column,
+      centroids: Seq[(Int, Seq[Double])]): Column = {
+    val (cs, ids) = centLit(centroids)
+    call_function("vec_ranks", vec, cs, ids)
+  }
 
   /** Corpus with a trained k-means `cell` column: `kmeansCentroids` fits
     * the quantizer (bounded driver state, k×dims doubles), then ONE narrow
@@ -1079,7 +993,7 @@ object Similarity {
     val cents = kmeansCentroids(df, k, iters, idCol, vecCol)
       .zipWithIndex.map { case (cv, i) => (i, cv) }
     df.withColumn("cell",
-      nearestCentroidIn(df.sparkSession)(asDouble(col(vecCol)), cents))
+      nearestCentroidIn(asDouble(col(vecCol)), cents))
   }
 
   /** Exact per-label mean embedding (unit-normalized by default), computed
@@ -1125,8 +1039,7 @@ object Similarity {
   def labelConfusion(df: DataFrame, labelCol: String = "label",
       vecCol: String = "embedding", decimals: Int = 6): DataFrame = {
     val cents = labelCentroids(df, labelCol, vecCol)
-    val d = dotFor(df)
-    val rd: (Column, Column) => Column = (a, b) => roundz(d(a, b), decimals)
+    val rd: (Column, Column) => Column = (a, b) => roundz(dot(a, b), decimals)
     df.where(col(labelCol).isNotNull)
       .select(col(labelCol).cast("int").as("label"),
         nearestCentroid(asDouble(col(vecCol)), cents, rd).as("assigned"))
@@ -1153,11 +1066,10 @@ object Similarity {
       decimals: Int = 6): DataFrame = {
     require(k >= 1, s"labelOutliers: k must be >= 1, got $k")
     val cents = labelCentroids(df, labelCol, vecCol)
-    val d = dotFor(df)
     // own-label score: one CASE over the broadcast prototypes
     val ownScore = cents.foldLeft(lit(null).cast("double")) { case (acc, (lab, cv)) =>
       when(col("label") === lab,
-        roundz(d(asDouble(col(vecCol)), typedLit(cv)), decimals)).otherwise(acc)
+        roundz(dot(asDouble(col(vecCol)), typedLit(cv)), decimals)).otherwise(acc)
     }
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("label")).orderBy(col("score").asc, col(idCol).asc)
@@ -1188,6 +1100,20 @@ object Similarity {
       .zipWithIndex
       .map { case (r, i) => (i, r.getSeq[Double](1).toIndexedSeq) }
 
+  /** IVF (inverted-file) approximate top-k — the other classic ANN scale
+    * path next to sign-LSH. Coarse quantizer: `nCentroids` vectors chosen by
+    * a deterministic hash-order sample of the corpus (`trainIters = 0`,
+    * a k-medoids-style shortcut), or refined with that many spherical
+    * k-means rounds (`kmeansCentroids`) — trained cells follow the data's
+    * direction clusters, so the same nProbe recovers more true neighbors.
+    * Every candidate is assigned to its nearest centroid (one shuffle by
+    * centroid id); a query probes its `nProbe` nearest centroids and
+    * re-ranks exactly within those inverted lists.
+    *
+    * At scale: assignment is a narrow map over the corpus; the probe join
+    * touches nProbe/nCentroids of the data instead of all of it, and the
+    * centroid table (nCentroids × dims doubles) broadcasts everywhere.
+    */
   def ivfKnn(candidates: DataFrame, queries: DataFrame, k: Int,
       nCentroids: Int = 16, nProbe: Int = 4,
       idCol: String = "vec_id", vecCol: String = "embedding",
@@ -1195,9 +1121,8 @@ object Similarity {
       precomputedCentroids: Option[Seq[(Int, Seq[Double])]] = None,
       spill: Int = 1): DataFrame = {
     require(spill >= 1, s"ivfKnn: spill=$spill must be >= 1")
-    val d = dotFor(candidates)
     val c = candidates.select(col(idCol).as("nid"), asDouble(col(vecCol)).as("cvec"))
-      .withColumn("cn", sqrt(d(col("cvec"), col("cvec"))))
+      .withColumn("cn", sqrt(dot(col("cvec"), col("cvec"))))
     // deterministic sample: smallest nCentroids ids by hash order; trained
     // centroids are unit-norm, so max-inner-product ranking = max cosine
     val centroids: Seq[(Int, Seq[Double])] = precomputedCentroids.getOrElse {
@@ -1212,25 +1137,24 @@ object Similarity {
     // the ones a single-cell IVF loses at low nProbe — stay reachable
     // from their second-closest cell too. Duplicate (qid, nid) pairs from
     // overlapping probes collapse before ranking.
-    val spark = candidates.sparkSession
     val assigned =
       if (spill == 1)
-        c.withColumn("cell", nearestCentroidIn(spark)(col("cvec"), centroids))
+        c.withColumn("cell", nearestCentroidIn(col("cvec"), centroids))
       else
         c.withColumn("cell", explode(slice(
-          graft.functions.Staging.pin(centroidRanksIn(spark)(col("cvec"), centroids)),
+          graft.functions.Staging.pin(centroidRanksIn(col("cvec"), centroids)),
           1, spill)))
     val probed = queries
       .select(col(idCol).as("qid"), asDouble(col(vecCol)).as("qvec"))
-      .withColumn("qn", sqrt(d(col("qvec"), col("qvec"))))
-      .withColumn("__ranks", centroidRanksIn(spark)(col("qvec"), centroids))
+      .withColumn("qn", sqrt(dot(col("qvec"), col("qvec"))))
+      .withColumn("__ranks", centroidRanksIn(col("qvec"), centroids))
       .withColumn("cell", explode(slice(graft.functions.Staging.pin(col("__ranks")), 1, nProbe)))
       .drop("__ranks")
     val joined = assigned.join(probed, Seq("cell"))
       .where(col("nid") =!= col("qid"))
       .select(col("qid"), col("nid"),
         when(col("cn") * col("qn") === 0, lit(0.0d))
-          .otherwise(d(col("qvec"), col("cvec")) / (col("cn") * col("qn"))).as("sim"))
+          .otherwise(dot(col("qvec"), col("cvec")) / (col("cn") * col("qn"))).as("sim"))
     val scored = if (spill == 1) joined else joined.dropDuplicates("qid", "nid")
     val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid"))
     scored.withColumn("rank", row_number().over(w))
@@ -1247,17 +1171,16 @@ object Similarity {
       numPlanes: Int = 8, idCol: String = "vec_id", vecCol: String = "embedding",
       seed: Long = 42L, maxBucketSize: Int = 10000): DataFrame = {
     val planes = hyperplanes(if (dims > 0) dims else vecDims(df, vecCol), numPlanes, seed)
-    val d = dotFor(df)
     val v = df.select(col(idCol).as("id"), asDouble(col(vecCol)).as("vec"))
-      .withColumn("bucket", lshBucket(col("vec"), planes, d))
-      .withColumn("nrm", sqrt(d(col("vec"), col("vec"))))
+      .withColumn("bucket", lshBucket(col("vec"), planes))
+      .withColumn("nrm", sqrt(dot(col("vec"), col("vec"))))
     val a = v.select(col("bucket"), col("id").as("a"), col("vec").as("va"), col("nrm").as("na"))
     val b = v.select(col("bucket"), col("id").as("b"), col("vec").as("vb"), col("nrm").as("nb"))
     a.join(b, Seq("bucket"))
       .where(col("a") < col("b"))
       .select(col("a"), col("b"),
         when(col("na") * col("nb") === 0, lit(0.0d))
-          .otherwise(d(col("va"), col("vb")) / (col("na") * col("nb"))).as("sim"))
+          .otherwise(dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("sim"))
       .where(col("sim") >= threshold)
       .select(col("a"), col("b"), roundz(col("sim"), 4).as("sim"))
       .distinct()
@@ -1275,9 +1198,8 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding",
       seed: Long = 42L): DataFrame = {
     val planes = hyperplanes(if (dims > 0) dims else vecDims(df, vecCol), numPlanes, seed)
-    val d = dotFor(df)
     df.select(col(idCol), asDouble(col(vecCol)).as("__v"))
-      .select(col(idCol), lshBucket(col("__v"), planes, d).as("bucket"))
+      .select(col(idCol), lshBucket(col("__v"), planes).as("bucket"))
   }
 
   /** Cosine near-dup matches of a new batch against a PRECOMPUTED corpus
@@ -1302,9 +1224,8 @@ object Similarity {
       numPlanes: Int = 8, idCol: String = "vec_id", vecCol: String = "embedding",
       seed: Long = 42L, maxBucketSize: Int = 10000): DataFrame = {
     val planes = hyperplanes(if (dims > 0) dims else vecDims(newDf, vecCol), numPlanes, seed)
-    val d = dotFor(newDf)
     val nb = newDf.select(col(idCol).as("new_id"), asDouble(col(vecCol)).as("__v"))
-      .select(col("new_id"), lshBucket(col("__v"), planes, d).as("bucket"))
+      .select(col("new_id"), lshBucket(col("__v"), planes).as("bucket"))
     val safeCb = corpusIndex
       .select(col(idCol).as("corpus_id"), col("bucket"))
       .withColumn("__n",
@@ -1318,13 +1239,13 @@ object Similarity {
       def pruned(side: DataFrame, keyAs: String): DataFrame =
         side.join(cands.select(col(keyAs).as(idCol)).distinct(), Seq(idCol), "left_semi")
           .select(col(idCol).as(keyAs), asDouble(col(vecCol)).as(s"__v_$keyAs"))
-          .withColumn(s"__n_$keyAs", sqrt(d(col(s"__v_$keyAs"), col(s"__v_$keyAs"))))
+          .withColumn(s"__n_$keyAs", sqrt(dot(col(s"__v_$keyAs"), col(s"__v_$keyAs"))))
       val verified = cands
         .join(pruned(newDf, "new_id"), Seq("new_id"))
         .join(pruned(corpus, "corpus_id"), Seq("corpus_id"))
         .select(col("new_id"), col("corpus_id"),
           when(col("__n_new_id") * col("__n_corpus_id") === 0, lit(0.0d))
-            .otherwise(d(col("__v_new_id"), col("__v_corpus_id")) /
+            .otherwise(dot(col("__v_new_id"), col("__v_corpus_id")) /
               (col("__n_new_id") * col("__n_corpus_id"))).as("sim"))
         .where(col("sim") >= threshold)
         .select(col("new_id"), col("corpus_id"), roundz(col("sim"), 4).as("sim"))

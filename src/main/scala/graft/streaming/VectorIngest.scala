@@ -23,7 +23,7 @@ import graft.sources.Catalog
   * the quantizer is an offline maintenance job that rewrites the index
   * table, exactly like a compaction.
   *
-  * Cell assignment reuses `Similarity.nearestCentroid` — the SAME
+  * Cell assignment reuses `Similarity.nearestCentroidIn` — the SAME
   * expression (and tie rule) `ivfKnn` uses for batch assignment, so
   * online-assigned cells and query probes can never drift apart.
   *
@@ -67,8 +67,7 @@ object VectorIngest {
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double")).as("__v"))
       .select(col("vec_id"),
-        Similarity.nearestCentroidIn(vectors.sparkSession)(col("__v"), centroids)
-          .as("cell"))
+        Similarity.nearestCentroidIn(col("__v"), centroids).as("cell"))
 
   def ingestStream(spark: SparkSession, srcDir: String, root: String,
       ref: String, nCentroids: Int = 16,

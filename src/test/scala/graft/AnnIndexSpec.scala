@@ -361,7 +361,7 @@ class AnnIndexSpec extends AnyFunSuite {
     val probed = q.select(col("vec_id").as("qid"), asDouble(col("embedding")).as("qvec"))
       .withColumn("qn", sqrt(Similarity.dot(col("qvec"), col("qvec"))))
       .withColumn("cell", explode(slice(
-        Similarity.centroidRanksIn(spark)(col("qvec"), cents), 1, nProbe)))
+        Similarity.centroidRanksIn(col("qvec"), cents), 1, nProbe)))
     val scored = member("codes")
       .select(col("vec_id").as("nid"), col("cell"),
         asDouble(Embeddings.pqDecode(col("pq"), books)).as("cvec"))
@@ -396,16 +396,14 @@ class AnnIndexSpec extends AnyFunSuite {
     val one = corpus.where(col("vec_id") === 3)
     val single = served(serve(one))
     assert(single.map(_._2) == Seq(84L, 156L, 53L))
-    // a null vector ranks the cells by id alone (cells 0 and 1 probed) and
-    // scores every candidate null, so its neighbours come in id order
+    // a null query vector and a qid on two rows fail loudly, naming the qid
     val nul = corpus.where(col("vec_id") === 4)
       .withColumn("embedding", lit(null).cast(corpus.schema("embedding").dataType))
-    assert(served(serve(one.unionByName(nul))) ==
-      single ++ Seq((4L, 0L, None, 1), (4L, 1L, None, 2), (4L, 2L, None, 3)))
-    // a query row given twice is scored twice in the exact re-rank: each
-    // neighbour fills two ranks
-    assert(served(serve(one.unionByName(one))) == single.flatMap(r => Seq(r, r))
-      .take(3).zipWithIndex.map { case (r, i) => r.copy(_4 = i + 1) })
+    val nulErr = intercept[IllegalArgumentException](served(serve(one.unionByName(nul))))
+    assert(nulErr.getMessage.contains("qids 4 have a null query vector"), nulErr.getMessage)
+    val dupErr = intercept[IllegalArgumentException](served(serve(one.unionByName(one))))
+    assert(dupErr.getMessage.contains("qids 3 have more than one query row"),
+      dupErr.getMessage)
     val none = serve(corpus.where(col("vec_id") < 0))
     assert(none.schema == serve(one).schema && served(none).isEmpty)
   }

@@ -83,7 +83,7 @@ class EmbeddingsSpec extends AnyFunSuite {
     assert(natDf.queryExecution.analyzed.toString.contains("vec_pq_encode"))
     val nat = natDf.select(col("vec_id"), col("pq_codes"))
       .collect().map(r => (r.getLong(0), r.getSeq[Int](1))).toSeq
-    val hof = Embeddings.pqEncodeHof(df, books).select(col("vec_id"), col("pq_codes"))
+    val hof = KernelOracles.pqEncodeHof(df, books).select(col("vec_id"), col("pq_codes"))
       .collect().map(r => (r.getLong(0), r.getSeq[Int](1))).toSeq
     assert(nat === hof)
     assert(nat.find(_._1 == 5L).get._2 === Seq(-1, -1)) // null vec: the HOF's -1s
@@ -92,7 +92,7 @@ class EmbeddingsSpec extends AnyFunSuite {
       .toDF("vec_id", "pq_codes")
     val dn = codes.select(col("vec_id"), Embeddings.pqDecode(col("pq_codes"), books).as("r"))
       .collect().map(r => (r.getLong(0), Option(r.getSeq[Double](1)))).toSeq
-    val dh = codes.select(col("vec_id"), Embeddings.pqDecodeHof(col("pq_codes"), books).as("r"))
+    val dh = codes.select(col("vec_id"), KernelOracles.pqDecodeHof(col("pq_codes"), books).as("r"))
       .collect().map(r => (r.getLong(0), Option(r.getSeq[Double](1)))).toSeq
     assert(dn === dh)
     assert(dn.find(_._1 == 3L).get._2.isEmpty)

@@ -4,9 +4,10 @@ import org.apache.spark.sql.functions._
 import graft.operators.{Embeddings, RelOps, Similarity}
 import graft.sources.Catalog
 
-/** Throwaway dev probe: measured x87 filtered-ANN recall at each SF, to set
-  * the oracle floor just under the observed margin. Not part of the driver
-  * contract.
+/** Dev probe: measured x87 filtered-ANN recall at each SF, to set the
+  * oracle floor just under the observed margin. Not part of the driver
+  * contract; lives in test scope. Usage:
+  * `sbt "Test/runMain graft.RecallProbe [section,...]"`.
   */
 object RecallProbe {
   private def deleteRec(f: java.io.File): Unit =

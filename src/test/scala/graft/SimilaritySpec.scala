@@ -177,12 +177,13 @@ class SimilaritySpec extends AnyFunSuite {
       .select($"vec_id", transform($"embedding", x => x.cast("double")).as("v"))
     val both = e.select($"vec_id",
       Similarity.dot($"v", $"v").as("native"),
-      Similarity.dotHof($"v", $"v").as("hof"))
+      KernelOracles.dotHof($"v", $"v").as("hof"))
       .collect()
     assert(both.nonEmpty)
     both.foreach(r => assert(r.getDouble(1) === r.getDouble(2),
       s"vec_id=${r.getLong(0)}"))
-    // null and length-mismatch semantics match zip_with truncation
+    // a length mismatch truncates to the shorter input (zip_with would
+    // pad with nulls: the HOF is an oracle at equal lengths only)
     val edge = Seq(
       (Seq(1.0, 2.0, 3.0), Seq(2.0, 3.0)),      // truncates to shorter
       (Seq.empty[Double], Seq(1.0)))             // empty → 0
@@ -208,14 +209,14 @@ class SimilaritySpec extends AnyFunSuite {
       (6L, None))                    // null → -1 / ids ascending
     val df = rows.toDF("vec_id", "v")
     val nat = df.select($"vec_id",
-      Similarity.nearestCentroidIn(spark)($"v", cents).as("n"),
-      Similarity.centroidRanksIn(spark)($"v", cents).as("r"))
-    // the native expressions must actually be in the plan (not the fallback)
+      Similarity.nearestCentroidIn($"v", cents).as("n"),
+      Similarity.centroidRanksIn($"v", cents).as("r"))
+    // the native expressions are what the plan runs
     assert(nat.queryExecution.analyzed.toString.contains("vec_nearest"))
     assert(nat.queryExecution.analyzed.toString.contains("vec_ranks"))
     val hof = df.select($"vec_id",
-      Similarity.nearestCentroid($"v", cents).as("n"),
-      Similarity.centroidRanks($"v", cents).as("r"))
+      Similarity.nearestCentroid($"v", cents, Similarity.dot).as("n"),
+      KernelOracles.centroidRanks($"v", cents).as("r"))
     assert(nat.collect().map(_.toSeq).toSeq === hof.collect().map(_.toSeq).toSeq)
     // the documented null fall-throughs, literally
     val byId = nat.collect().map(r => r.getLong(0) ->
@@ -224,25 +225,12 @@ class SimilaritySpec extends AnyFunSuite {
     assert(byId(1L) === ((5, Seq(2, 5, 9))))  // tie 1.0: fold keeps first (id 5); ranks id-asc
   }
 
-  test("SQL vec_cosine matches the Column-side cosine, incl. zero-norm -> 0.0") {
-    val e = spark.read.parquet(s"${SparkTestSession.sfDir}/embeddings.parquet")
-      .select($"vec_id", transform($"embedding", x => x.cast("double")).as("v"))
-    e.createOrReplaceTempView("vecs")
-    val sql = spark.sql(
-      "SELECT vec_id, vec_cosine(v, v) AS c FROM vecs ORDER BY vec_id LIMIT 50")
-      .collect()
-    sql.foreach(r => assert(math.abs(r.getDouble(1) - 1.0) < 1e-9,
-      s"vec_id=${r.get(0)}"))
-    // the two public surfaces agree on degenerate input: zero-norm → 0.0
-    val zero = spark.sql(
-      """SELECT vec_cosine(array(0.0d, 0.0d), array(1.0d, 2.0d)) AS c""").collect()
-    assert(zero.head.getDouble(0) === 0.0)
-    val scalaSide = Seq((Seq(0.0, 0.0), Seq(1.0, 2.0))).toDF("a", "b")
+  test("Column-side cosine on degenerate input: zero-norm -> 0.0, NULL -> NULL") {
+    val zero = Seq((Seq(0.0, 0.0), Seq(1.0, 2.0))).toDF("a", "b")
       .select(Similarity.cosine($"a", $"b").as("c")).collect()
-    assert(scalaSide.head.getDouble(0) === zero.head.getDouble(0))
-    // NULL input stays NULL on both surfaces
-    val nul = spark.sql(
-      "SELECT vec_cosine(CAST(NULL AS ARRAY<DOUBLE>), array(1.0d)) AS c").collect()
+    assert(zero.head.getDouble(0) === 0.0)
+    val nul = Seq((Option.empty[Seq[Double]], Seq(1.0))).toDF("a", "b")
+      .select(Similarity.cosine($"a", $"b").as("c")).collect()
     assert(nul.head.isNullAt(0))
   }
 

@@ -251,7 +251,6 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming vector ingest maintains the IVF index with frozen centroids") {
     import graft.streaming.VectorIngest
-    import graft.operators.Similarity
     val src = Files.createTempDirectory("graft_vec_src")
     val root = Files.createTempDirectory("graft_vec_root").toString
     val rnd = new scala.util.Random(7L)
@@ -287,7 +286,7 @@ class StreamingSpec extends AnyFunSuite {
       import org.apache.spark.sql.functions.{col, element_at, transform}
       val batchCells = Catalog.table(spark, root, "vectors")
         .select(col("vec_id"),
-          element_at(Similarity.centroidRanks(
+          element_at(KernelOracles.centroidRanks(
             transform(col("embedding"), x => x.cast("double")), cents1), 1)
             .as("cell"))
         .as[(Long, Int)].collect().toMap
