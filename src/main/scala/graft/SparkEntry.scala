@@ -62,12 +62,18 @@ object SparkEntry {
     * transactional path is also the one all internal code exercises.
     * A committed bundle from an earlier process is reused verbatim:
     * the content is a pure seeded function of the corpus, and the
-    * manifest-committed version is by construction complete.
+    * manifest-committed version is by construction complete. One whose
+    * manifest records no member schemas (written before manifests did)
+    * is unreadable, so a new version is committed over it.
     */
   private def pairTruth(s: SparkSession, dir: String): DataFrame = {
     val root = s"/tmp/graft/pairs_${storeTag(dir)}"
     pairStoreBuilt.computeIfAbsent(root, _ => {
-      if (Catalog.latestBundleVersion(s, root, "truth").isEmpty)
+      val reusable = Catalog.latestBundleVersion(s, root, "truth").exists { v =>
+        val m = Catalog.bundleManifest(s, root, "truth", Some(v))
+        m.dirs.keySet.subsetOf(m.schemas.keySet)
+      }
+      if (!reusable)
         Dedup.writePairBundle(t(s, dir, "documents"), root, "truth",
           "doc_id", "text", threshold = 0.9)
       root
@@ -1344,8 +1350,8 @@ object SparkEntry {
     // per-pair geometry stays asserted in SimilaritySpec.
     "x65_jl_project" -> ((s, dir) => {
       val p = Similarity.randomProject(t(s, dir, "embeddings"), outDims = 16)
-      val nIn = pow(Embeddings.l2(col("embedding")), 2)
-      val nOut = pow(Embeddings.l2(col("proj")), 2)
+      val nIn = pow(Similarity.norm(col("embedding")), 2)
+      val nOut = pow(Similarity.norm(col("proj")), 2)
       p.where(nIn > 0)
         .agg(count(lit(1)).as("n_vecs"), avg(nOut / nIn).as("__r"))
         .select(lit(16).as("out_dims"), col("n_vecs"),

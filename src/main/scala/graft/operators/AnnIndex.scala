@@ -227,12 +227,18 @@ object AnnIndex {
       spark.read.parquet(s"$dir/books.parquet"), None)
 
   /** The bundle index's quantizer at a committed version, memoized under
-    * that version ([[graft.sources.Catalog.memoAt]]): the serve and the
-    * append both read it here, once per version.
+    * the file sets its three members list there
+    * ([[graft.sources.Catalog.memoAtBundle]] `members`), not under the
+    * version: an append, a codes-only takedown and a restore carry
+    * `centroids`/`books`/`params` forward by reference, so the serve of
+    * the version they publish reuses the quantizer the append (or an
+    * earlier serve) collected. A reindex writes new file sets and misses.
+    * The serve and the append both read it here.
     */
   private def bundleQuantizer(spark: SparkSession, root: String, name: String,
       version: Long): Quantizer =
-    Catalog.memoAtBundle(spark, root, name, version, "annindex.quantizer") {
+    Catalog.memoAtBundle(spark, root, name, version, "annindex.quantizer",
+        members = Seq("centroids", "books", "params")) {
       def member(ref: String) = Catalog.readBundleTable(spark, root, name, ref, Some(version))
       readQuantizer(member("centroids"), member("books"), Some(member("params")))
     }

@@ -18,18 +18,12 @@ object Embeddings {
 
   private def asDouble(c: Column): Column = transform(c, _.cast("double"))
 
-  /** L2 norm without the native vec_dot dependency (works in any session;
-    * for hot ANN paths use Similarity.dot/vec_dot instead).
-    */
-  def l2(vec: Column): Column =
-    sqrt(aggregate(asDouble(vec), lit(0.0d), (acc, x) => acc + x * x))
-
   /** Unit-normalize `vecCol` in place; all-zero vectors stay all-zero.
     * The norm is staged as its own attribute so the per-element divide
     * reads it instead of re-summing the array per element.
     */
   def unitNormalize(df: DataFrame, vecCol: String): DataFrame =
-    df.withColumn("__n", l2(col(vecCol)))
+    df.withColumn("__n", Similarity.norm(col(vecCol)))
       .withColumn(vecCol,
         when(col("__n") === 0, asDouble(col(vecCol)))
           .otherwise(transform(col(vecCol), x => x.cast("double") / col("__n"))))

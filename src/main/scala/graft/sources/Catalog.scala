@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Table catalog + sources/sinks (SURVEY §2.1, §2.7).
   *
@@ -25,23 +25,33 @@ import org.apache.spark.sql.types.StructType
   *     these parallelize per-partition; nothing is collected to the driver.
   *
   * Committed-version memo ([[memoAt]]): values derived from a COMMITTED
-  * version — bundle manifests, member DataFrames (file listing + schema
-  * inference), deployment pin sets, BM25 corpus stats, ANN quantizers —
-  * are kept in one bounded, process-wide LRU. The key is (commit-marker
-  * path, the marker's modification time, artifact name), plus the session
-  * for DataFrames. Safe because the store never mutates a committed
-  * version: every commit, append, compaction, takedown or restore lands a
-  * NEW numbered directory whose marker (`_manifest` for bundles,
-  * `_SUCCESS` for versioned tables) appears with it in one rename. Each
-  * lookup stats the marker: a pruned or never-committed version has none,
-  * so the value is recomputed and fails exactly as an uncached read does;
-  * a store deleted and rebuilt at the same path writes a new marker with a
-  * new modification time, hence a new key. Resolving WHICH version to
-  * read is never cached — `_latest` pointers (bundle latest, the current
-  * deployment) are re-read on every call, so a flip or rollback is seen
-  * by the next serve. Flat index directories (`AnnIndex.knn`,
-  * `TextIndex.bm25Search`) are NOT cached: their rebuild baselines
-  * rewrite the same directory in place, with no marker to key on.
+  * version — bundle manifests, member DataFrames (file listing), deployment
+  * pin sets, BM25 corpus stats, ANN quantizers — are kept in one bounded,
+  * process-wide LRU. The key is (commit-marker path, the marker's
+  * modification time, artifact name), plus the session for DataFrames.
+  * Safe because the store never mutates a committed version: every commit,
+  * append, compaction, takedown or restore lands a NEW numbered directory
+  * whose marker (`_manifest` for bundles, `_SUCCESS` for versioned tables)
+  * appears with it in one rename. Each lookup stats the marker: a pruned or
+  * never-committed version has none, so the value is recomputed and fails
+  * exactly as an uncached read does; a store deleted and rebuilt at the
+  * same path writes a new marker with a new modification time, hence a new
+  * key. A value derived from a few members only (the ANN quantizer) is
+  * keyed by the FILE SETS those members list at the version instead, each
+  * stamped with the modification time of the manifest of the version that
+  * wrote it ([[memoAtBundle]] `members`): the versions an append, a restore
+  * or a codes-only takedown publishes carry those file sets by reference
+  * and share the entry. The requested version's marker is still stat'ed
+  * first. Resolving WHICH version to read is never cached — `_latest`
+  * pointers (bundle latest, the current deployment) are re-read on every
+  * call, so a flip or rollback is seen by the next serve. Flat index
+  * directories (`AnnIndex.knn`, `TextIndex.bm25Search`) are NOT cached:
+  * their rebuild baselines rewrite the same directory in place, with no
+  * marker to key on.
+  *
+  * Bundle reads infer nothing: each manifest records every member's data
+  * schema at commit ([[BundleManifest]]), and [[readBundleTable]] reads
+  * with it, so a member read lists files but opens no Parquet footer.
   */
 object Catalog {
 
@@ -88,16 +98,21 @@ object Catalog {
     * is `marker` (see the memo contract above). `perSession` keys the
     * value by `spark` too — required for DataFrames, which belong to
     * their session. A missing marker bypasses the memo: `compute` runs
-    * and refuses the version exactly as it does uncached. Racing callers
-    * may both compute on a miss; the values are equal by immutability.
+    * and refuses the version exactly as it does uncached. `scope`, when
+    * given, replaces the marker's (path, modification time) in the key; it
+    * runs only once the marker is found, and a file it cannot find bypasses
+    * the memo too. Racing callers may both compute on a miss; the values
+    * are equal by immutability.
     */
   private[graft] def memoAt[T](spark: SparkSession, marker: HPath,
-      artifact: String, perSession: Boolean = false)(compute: => T): T = {
-    val st = try Some(fsFor(spark, marker).getFileStatus(marker))
-      catch { case _: java.io.FileNotFoundException => None }
-    st.fold(compute) { s =>
-      val key = (s.getPath.toString, s.getModificationTime, artifact,
-        if (perSession) Some(spark) else None)
+      artifact: String, perSession: Boolean = false,
+      scope: Option[() => Any] = None)(compute: => T): T = {
+    val at = try {
+      val s = fsFor(spark, marker).getFileStatus(marker)
+      Some(scope.fold[Any]((s.getPath.toString, s.getModificationTime))(_()))
+    } catch { case _: java.io.FileNotFoundException => None }
+    at.fold(compute) { a =>
+      val key = (a, artifact, if (perSession) Some(spark) else None)
       memo.synchronized(Option(memo.get(key))) match {
         case Some(v) => v.asInstanceOf[T]
         case None =>
@@ -108,12 +123,29 @@ object Catalog {
     }
   }
 
-  /** [[memoAt]] keyed by a committed bundle version's `_manifest`. */
+  /** [[memoAt]] keyed by a committed bundle version's `_manifest` — or,
+    * when `members` is non-empty, by the file sets those members list at
+    * that version, each stamped with the modification time of the
+    * `_manifest` of the version directory holding it (see the memo
+    * contract above). The stamp changes when the store is rebuilt at the
+    * same path.
+    */
   private[graft] def memoAtBundle[T](spark: SparkSession, root: String,
       bundle: String, version: Long, artifact: String,
-      perSession: Boolean = false)(compute: => T): T =
-    memoAt(spark, new HPath(s"${bundleDir(root, bundle)}/$version/_manifest"),
-      artifact, perSession)(compute)
+      perSession: Boolean = false,
+      members: Seq[String] = Nil)(compute: => T): T = {
+    val base = bundleDir(root, bundle)
+    def fileSets(): Any = {
+      val m = bundleManifest(spark, root, bundle, Some(version))
+      val sets = members.map(r => r -> m.dirs(r))
+      val f = fsFor(spark, new HPath(base))
+      val stamps = sets.flatMap(_._2).map(_.takeWhile(_ != '/')).distinct.map(o =>
+        o -> f.getFileStatus(new HPath(s"$base/$o/_manifest")).getModificationTime)
+      (base, sets, stamps)
+    }
+    memoAt(spark, new HPath(s"$base/$version/_manifest"), artifact, perSession,
+      if (members.isEmpty) None else Some(() => fileSets()))(compute)
+  }
 
   /** Does the table exist on its filesystem? */
   def tableExists(spark: SparkSession, root: String, ref: String): Boolean = {
@@ -977,15 +1009,48 @@ object Catalog {
     s"${root.stripSuffix("/")}/${bundle}_bundle"
 
   /** Parsed bundle manifest: the ingested batch ids, per member table
-    * the base-relative data directories its rows live in, and per
-    * member its Hive partition columns (empty = flat). Partitioning is
-    * a CREATE-time layout decision recorded IN the manifest so appends
-    * and compaction can never silently flatten a directory layout a
-    * serving index prunes by.
+    * the base-relative data directories its rows live in, per member its
+    * Hive partition columns (empty = flat), and per member its data
+    * schema. Partitioning is a CREATE-time layout decision recorded IN the
+    * manifest so appends and compaction can never silently flatten a
+    * directory layout a serving index prunes by.
+    *
+    * The schema (one `#schema=<ref>\t<StructType json>` line per member)
+    * holds the data columns only: the written frame's schema minus the
+    * member's partition columns, whose types Spark infers from the
+    * directory names as before, with no job. Every commit verb records or
+    * carries it, and [[readBundleTable]] reads with it, so no member read
+    * opens a Parquet footer. Stores written before manifests recorded
+    * schemas fail on read, naming the member, and must be rebuilt.
     */
   final case class BundleManifest(batches: Seq[String],
       dirs: Map[String, Seq[String]],
-      parts: Map[String, Seq[String]] = Map.empty)
+      parts: Map[String, Seq[String]] = Map.empty,
+      schemas: Map[String, StructType] = Map.empty) {
+
+    /** The member's recorded data schema; loud when the manifest has none. */
+    def schema(ref: String): StructType = schemas.getOrElse(ref, sys.error(
+      s"bundle manifest records no schema for member '$ref' — the store " +
+        "predates schema-recording manifests; rebuild it"))
+  }
+
+  /** The data columns of a member frame: its schema minus the member's
+    * partition columns — what a manifest records as the member's schema.
+    */
+  private def dataSchema(df: DataFrame, parts: Seq[String]): StructType =
+    StructType(df.schema.filterNot(f => parts.contains(f.name)))
+
+  /** `t` with every field, element and value nullable — the form a file
+    * read returns, so recorded and offered schemas compare in it.
+    */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType),
+      valueContainsNull = true)
+    case other => other
+  }
 
   /** (Re)write a staged bundle manifest. The manifest body references
     * version-NUMBERED data directories, so the optimistic claim loop
@@ -1001,8 +1066,10 @@ object Catalog {
       else Seq("#parts=" + m.parts.toSeq.sortBy(_._1)
         .map { case (ref, cols) => s"$ref:${cols.mkString("|")}" }
         .mkString(","))
+    val schemaLines = m.schemas.toSeq.sortBy(_._1)
+      .map { case (ref, s) => s"#schema=$ref\t${s.json}" }
     val body = ((s"#batches=${m.batches.mkString(",")}" +: partsLine) ++
-      m.dirs.toSeq.sortBy(_._1).flatMap { case (ref, ds) =>
+      schemaLines ++ m.dirs.toSeq.sortBy(_._1).flatMap { case (ref, ds) =>
         ds.map(d => s"$ref\t$d")
       }).mkString("\n")
     val out = f.create(new HPath(staging, "_manifest"), true)
@@ -1033,10 +1100,14 @@ object Catalog {
           val Array(ref, cols) = e.split(":", 2)
           ref -> cols.split("\\|").toSeq
         }.toMap).getOrElse(Map.empty[String, Seq[String]])
+      val schemas = lines.filter(_.startsWith("#schema=")).map { l =>
+        val Array(ref, json) = l.stripPrefix("#schema=").split("\t", 2)
+        ref -> DataType.fromJson(json).asInstanceOf[StructType]
+      }.toMap
       val dirs = lines.filterNot(_.startsWith("#"))
         .map { l => val Array(ref, d) = l.split("\t", 2); (ref, d) }
         .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-      BundleManifest(batches, dirs, parts)
+      BundleManifest(batches, dirs, parts, schemas)
     }
   }
 
@@ -1044,10 +1115,11 @@ object Catalog {
     * columns — the single write shape [[commitBundle]] and
     * [[appendBundle]] share, so a partitioned member's directory layout
     * (the thing a serving index prunes by) is identical at create,
-    * append, and compaction.
+    * append, and compaction. Returns the member's data schema, which the
+    * manifest records.
     */
   private def writeMember(staging: HPath, ref: String, df: DataFrame,
-      parts: Map[String, Seq[String]]): Unit = {
+      parts: Map[String, Seq[String]]): StructType = {
     val cs = parts.get(ref).filter(_.nonEmpty)
     // REBALANCE before the write (optimization guide §6 "coalesce on
     // write"): a member written straight off a W-partition frame leaves up
@@ -1069,6 +1141,7 @@ object Catalog {
     val w = balanced.write.mode(SaveMode.Overwrite)
     cs.fold(w)(c => w.partitionBy(c: _*))
       .parquet(s"$staging/${tableName(ref)}.parquet")
+    dataSchema(df, cs.getOrElse(Nil))
   }
 
   /** Atomic MULTI-table commit — the cross-table consistency
@@ -1117,8 +1190,8 @@ object Catalog {
     // them as overlapped jobs (guide §2.6): each small write is
     // fixed-overhead-dominated (plan, codegen, task launch, commit), and
     // nothing below reads a member until the manifest names them all
-    graft.tools.Par.run(tables) { case (ref, df) =>
-      writeMember(staging, ref, df, partitionBy) }
+    val schemas = graft.tools.Par.run(tables) { case (ref, df) =>
+      ref -> writeMember(staging, ref, df, partitionBy) }.toMap
     f.create(new HPath(staging, s"_writer-$token"), true).close()
     // batchIds seeds the ingest ledger: a snapshot BUILT from a batch
     // (the streaming twin's first micro-batch) records that batch's id,
@@ -1138,7 +1211,7 @@ object Catalog {
       writeStagedManifest(f, st, BundleManifest(batchIds,
         tables.map { case (ref, _) =>
           ref -> Seq(s"$n/${tableName(ref)}.parquet")
-        }.toMap, partitionBy))
+        }.toMap, partitionBy, schemas))
       true
     }
     flipPointer(f, base, next, "commitBundle")
@@ -1176,6 +1249,11 @@ object Catalog {
     * quantizer decodes to wrong vectors, pairs that missed a racing
     * batch's buckets). Appends to members NOT named still interleave
     * freely.
+    *
+    * Each batch frame's data schema must equal its member's recorded one
+    * (nullability aside) — a renamed, retyped, added or dropped column
+    * fails loudly before anything is staged, since the member is read
+    * with the recorded schema and would otherwise silently null-fill.
     */
   def appendBundle(tables: Seq[(String, DataFrame)], root: String,
       bundle: String, batchId: String,
@@ -1208,7 +1286,16 @@ object Catalog {
             "superseded table (racing retrain/compaction/takedown); " +
             "re-encode against the current version and retry")
     })
+    def checkSchemas(cur: BundleManifest): Unit = tables.foreach {
+      case (ref, df) if cur.dirs.contains(ref) =>
+        val (got, want) = (dataSchema(df, cur.parts.getOrElse(ref, Nil)), cur.schema(ref))
+        if (nullable(got) != nullable(want))
+          sys.error(s"appendBundle: batch for member '$ref' has data schema " +
+            s"${got.simpleString}, the member records ${want.simpleString}")
+      case _ => // unknown members fail in the claim below
+    }
     checkPinned(pre)
+    checkSchemas(pre)
     val token = newCommitToken()
     val staging = new HPath(base, s".staging-$token")
     // independent member file sets — overlapped like commitBundle's
@@ -1224,12 +1311,13 @@ object Catalog {
         require(tables.forall { case (ref, _) => prior.dirs.contains(ref) },
           s"appendBundle: unknown member in ${tables.map(_._1)} " +
             s"(bundle has ${prior.dirs.keys})")
+        checkSchemas(prior)
         val merged = prior.dirs.map { case (ref, ds) =>
           ref -> (if (tables.exists(_._1 == ref))
             ds :+ s"$n/${tableName(ref)}.parquet" else ds)
         }
-        writeStagedManifest(f, st,
-          BundleManifest(prior.batches :+ batchId, merged, prior.parts))
+        writeStagedManifest(f, st, prior.copy(batches = prior.batches :+ batchId,
+          dirs = merged))
         true
       }
     }
@@ -1350,7 +1438,8 @@ object Catalog {
     * after a takedown when the deletion must be durable on storage).
     * Partition columns declared in the manifest apply to the rewritten
     * members, so a takedown can never flatten a serving index's
-    * pruning layout.
+    * pruning layout. The manifest records each rewritten frame's data
+    * schema; untouched members keep theirs.
     */
   def rewriteBundleMembers(spark: SparkSession, root: String,
       bundle: String,
@@ -1376,10 +1465,10 @@ object Catalog {
     // rewrites are independent per member (every fn reads at the pinned
     // version `pv`, never a staged sibling) — overlapped (guide §2.6);
     // sorted order retained only to keep result-order deterministic
-    graft.tools.Par.run(rewrite.toSeq.sortBy(_._1)) { case (ref, fn) =>
-      writeMember(staging, ref,
+    val schemas = graft.tools.Par.run(rewrite.toSeq.sortBy(_._1)) { case (ref, fn) =>
+      ref -> writeMember(staging, ref,
         fn(readBundleTable(spark, root, bundle, ref, Some(pv))), prior.parts)
-    }
+    }.toMap
     f.create(new HPath(staging, s"_writer-$token"), true).close()
     val next = claimVersionSlot(f, base, staging, token,
       p => f.exists(new HPath(p, "_manifest")), "rewriteBundleMembers") {
@@ -1395,11 +1484,11 @@ object Catalog {
             sys.error(s"rewriteBundleMembers: member '$ref' advanced " +
               s"during the rewrite (racing append) — retry the takedown")
         }
-        writeStagedManifest(f, st, BundleManifest(cur.batches,
-          cur.dirs.map { case (ref, ds) =>
+        writeStagedManifest(f, st, cur.copy(
+          dirs = cur.dirs.map { case (ref, ds) =>
             ref -> (if (rewrite.contains(ref))
               Seq(s"$n/${tableName(ref)}.parquet") else ds)
-          }, cur.parts))
+          }, schemas = cur.schemas ++ schemas))
         true
     }
     flipPointer(f, base, next, "rewriteBundleMembers")
@@ -1592,29 +1681,33 @@ object Catalog {
   }
 
   /** Read one member table at a committed bundle version (`None` =
-    * latest): the union of the manifest's file sets for that member.
-    * Refuses uncommitted versions and non-member refs loudly.
+    * latest): the union of the manifest's file sets for that member, read
+    * with the member's recorded data schema (no footer is opened; the
+    * partition columns come from the directory names). Refuses
+    * uncommitted versions, non-member refs and a manifest that records no
+    * schema for the member loudly.
     */
   def readBundleTable(spark: SparkSession, root: String, bundle: String,
       ref: String, version: Option[Long] = None): DataFrame = {
     val base = bundleDir(root, bundle)
     val v = version.orElse(latestBundleVersion(spark, root, bundle))
       .getOrElse(sys.error(s"bundleManifest: no committed versions under $base"))
-    // memoized per session: the file listing and schema inference run
-    // once per committed version, not once per serve
+    // memoized per session: the file listing runs once per committed
+    // version, not once per serve
     memoAtBundle(spark, root, bundle, v, s"member:$ref", perSession = true) {
       val m = bundleManifest(spark, root, bundle, Some(v))
       require(m.dirs.contains(ref),
         s"readBundleTable: '$ref' not in bundle (members: ${m.dirs.keys})")
       val paths = m.dirs(ref).map(d => s"$base/$d")
+      val read = spark.read.schema(m.schema(ref))
       // A partitioned member's file sets are each a partition-discovery
       // root; one multi-path read would try to relate them through their
       // version directories and fail (CONFLICTING_DIRECTORY_STRUCTURES).
       // Union per-file-set reads instead — a partition predicate still
       // prunes every branch's directory listing.
       if (m.parts.get(ref).exists(_.nonEmpty) && paths.size > 1)
-        paths.map(spark.read.parquet(_)).reduce(_ unionByName _)
-      else spark.read.parquet(paths: _*)
+        paths.map(read.parquet(_)).reduce(_ unionByName _)
+      else read.parquet(paths: _*)
     }
   }
 

@@ -187,6 +187,42 @@ class AnnIndexSpec extends AnyFunSuite {
     spark.catalog.clearCache()
   }
 
+  test("quantizer memo: keyed by the file sets it reads, so a takedown's version reuses it and a reindex misses") {
+    val root = java.nio.file.Files.createTempDirectory("graft-annqz").toString
+    val corpus = embeddings.where(col("vec_id") < 200)
+    val books = trainedBooks
+    AnnIndex.writeBundle(corpus, books, root, "ann", nCentroids = 4,
+      trainIters = 2, spill = 2, seedBatchIds = Seq("b0"))
+    val q = corpus.where(col("vec_id") < 3)
+    def serve(r: String): Seq[(Long, Long)] = {
+      val df = AnnIndex.knnBundle(spark, r, "ann", corpus, q, k = 5,
+        rerank = 60, nProbe = 2)
+      try df.orderBy(col("qid"), col("rank")).collect()
+        .map(x => (x.getLong(0), x.getLong(1))).toSeq
+      finally df.unpersist()
+    }
+    val cold = SparkCounts.of(spark)(serve(root))
+    // codes rewritten; centroids, books and params carried by reference
+    val rm = corpus.where(col("vec_id") % 10 === 3).select(col("vec_id"))
+    AnnIndex.retractBundle(spark, root, "ann", rm)
+    val taken = SparkCounts.of(spark)(serve(root))
+    assert(taken.executions == cold.executions - 1,
+      s"the takedown's serve collected the quantizer again: cold $cold, after $taken")
+    // a reindex writes new quantizer file sets: the memo misses and the
+    // serve answers what a store built from the same inputs answers
+    val remaining = corpus.join(rm, Seq("vec_id"), "left_anti")
+    AnnIndex.reindexBundle(spark, root, "ann", remaining, books, nCentroids = 8,
+      trainIters = 2, spill = 2)
+    var got = Seq.empty[(Long, Long)]
+    val reindexed = SparkCounts.of(spark) { got = serve(root) }
+    assert(reindexed.executions == cold.executions, s"cold $cold, reindexed $reindexed")
+    val other = java.nio.file.Files.createTempDirectory("graft-annqz-ref").toString
+    AnnIndex.writeBundle(remaining, books, other, "ann", nCentroids = 8,
+      trainIters = 2, spill = 2)
+    assert(got == serve(other) && got.size == 15)
+    spark.catalog.clearCache()
+  }
+
   test("version pinning: serve answers ONE committed version; append encoded against a superseded quantizer fails loudly") {
     import graft.sources.Catalog
     val root = java.nio.file.Files.createTempDirectory("graft-annpin").toString

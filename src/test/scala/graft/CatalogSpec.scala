@@ -591,6 +591,92 @@ class CatalogSpec extends AnyFunSuite {
       s"expected 1 cell directory read, got ${scan.metrics("numPartitions").value}")
   }
 
+  test("bundle member schema: read equals inferred after create, append, compaction and rewrite; drifting appends and schema-less manifests fail loudly") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.types.StructType
+    import graft.operators.{AnnIndex, Embeddings, RelOps, TextIndex}
+    val root = Files.createTempDirectory("graft-bschema").toString
+    // an int partition column, non-nullable fields, arrays, a null element
+    val codes = (ids: Seq[Long]) => ids.map(i => (i, Seq(i.toInt, 7), s"n$i", (i % 4).toInt))
+      .toDF("id", "pq", "name", "cell")
+    val meta = (ids: Seq[Long]) => ids.map(i => (s"m$i", i * 0.5, Seq(Option(s"t$i"), None)))
+      .toDF("key", "score", "tags")
+    // what an inferring read of the same file sets returns
+    def inferred(bundle: String, ref: String): StructType = {
+      val m = Catalog.bundleManifest(spark, root, bundle)
+      val paths = m.dirs(ref).map(d => s"${Catalog.bundleDir(root, bundle)}/$d")
+      (if (m.parts.contains(ref) && paths.size > 1)
+        paths.map(spark.read.parquet(_)).reduce(_ unionByName _)
+      else spark.read.parquet(paths: _*)).schema
+    }
+    def faithful(bundle: String): Unit =
+      Catalog.bundleManifest(spark, root, bundle).dirs.keys.foreach { ref =>
+        val got = Catalog.readBundleTable(spark, root, bundle, ref).schema
+        assert(got == inferred(bundle, ref),
+          s"$bundle.$ref: read ${got.treeString}inferred ${inferred(bundle, ref).treeString}")
+      }
+    Catalog.commitBundle(Seq("codes" -> codes(0L until 20L), "meta" -> meta(0L until 5L)),
+      root, "s", batchIds = Seq("b0"), partitionBy = Map("codes" -> Seq("cell")))
+    val recorded = Catalog.bundleManifest(spark, root, "s").schemas
+    assert(recorded("codes").fieldNames.toSeq == Seq("id", "pq", "name"),
+      s"the partition column is not recorded: $recorded")
+    assert(Catalog.readBundleTable(spark, root, "s", "codes").schema("cell").dataType ==
+      org.apache.spark.sql.types.IntegerType)
+    faithful("s")
+    assert(Catalog.appendBundle(Seq("codes" -> codes(100L until 110L),
+      "meta" -> meta(100L until 103L)), root, "s", "b1"))
+    faithful("s")
+    assert(Catalog.readBundleTable(spark, root, "s", "codes").count() == 30L)
+    Catalog.compactBundle(spark, root, "s")
+    faithful("s")
+    // a rewrite records the rewritten frame's schema: a new column shows
+    Catalog.rewriteBundleMembers(spark, root, "s",
+      Map("meta" -> ((d: DataFrame) => d.where(col("score") > 1).withColumn("extra", lit(1)))))
+    faithful("s")
+    assert(Catalog.readBundleTable(spark, root, "s", "meta").columns.last == "extra")
+
+    // loud failures leave the store exactly as it was
+    val base = new java.io.File(Catalog.bundleDir(root, "s"))
+    def state() = (Catalog.latestBundleVersion(spark, root, "s"), base.list.toSet)
+    val before = state()
+    val renamed = intercept[RuntimeException](Catalog.appendBundle(
+      Seq("codes" -> codes(200L until 202L).withColumnRenamed("name", "label")),
+      root, "s", "b2"))
+    assert(renamed.getMessage.contains("'codes'"), renamed.getMessage)
+    val retyped = intercept[RuntimeException](Catalog.appendBundle(
+      Seq("meta" -> meta(200L until 202L).withColumn("extra", lit(1))
+        .withColumn("score", col("score").cast("float"))), root, "s", "b2"))
+    assert(retyped.getMessage.contains("'meta'"), retyped.getMessage)
+    assert(state() == before, s"a refused append changed the store: ${state()}")
+
+    // a manifest without a member's schema line (a store written before
+    // manifests recorded schemas): reads and appends fail naming it
+    Catalog.commitBundle(Seq("m" -> (1L to 3L).toDF("id")), root, "old")
+    val mf = new java.io.File(Catalog.bundleDir(root, "old"), "1/_manifest").toPath
+    Files.write(mf, Files.readAllLines(mf).toArray.map(_.toString)
+      .filterNot(_.startsWith("#schema=")).mkString("\n").getBytes("UTF-8"))
+    Files.deleteIfExists(mf.resolveSibling("._manifest.crc")) // a hand edit: no checksum
+    val oldBase = new java.io.File(Catalog.bundleDir(root, "old"))
+    val oldBefore = oldBase.list.toSet
+    Seq(
+      intercept[RuntimeException](Catalog.readBundleTable(spark, root, "old", "m")),
+      intercept[RuntimeException](Catalog.appendBundle(
+        Seq("m" -> (4L to 5L).toDF("id")), root, "old", "b1"))
+    ).foreach(e => assert(e.getMessage.contains("no schema for member 'm'"), e.getMessage))
+    assert(oldBase.list.toSet == oldBefore && Catalog.latestBundleVersion(spark, root, "old")
+      .contains(1L))
+
+    // every member of the ANN and text index stores
+    val e = spark.read.parquet(s"${SparkTestSession.sfDir}/embeddings.parquet")
+      .where(col("vec_id") < 120)
+    AnnIndex.writeBundle(e, Embeddings.pqTrain(RelOps.hashSample(e, "vec_id", 0.5),
+      m = 8, k = 16, iters = 2), root, "ann", nCentroids = 4, trainIters = 2, spill = 2)
+    TextIndex.writeBundle(spark.read.parquet(s"${SparkTestSession.sfDir}/documents.parquet")
+      .where(col("doc_id") < 120), root, "tix")
+    Seq("ann", "tix").foreach(faithful)
+    spark.catalog.clearCache()
+  }
+
   test("prune reclaims a crashed loser's staging NESTED inside a committed version dir") {
     val root = Files.createTempDirectory("graft-nested").toString
     (1 to 2).foreach(i => Catalog.commitVersion((1L to i.toLong).toDF("id"), root, "t"))

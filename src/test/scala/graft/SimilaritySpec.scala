@@ -1246,6 +1246,28 @@ class SimilaritySpec extends AnyFunSuite {
     } finally spark.listenerManager.unregister(Counter)
   }
 
+  test("fresh-serve guard: the first threeStageServeBundle at pins an append just published runs at most 4 SQL executions and no job outside one") {
+    import graft.operators.{AnnIndex, TextIndex}
+    import graft.sources.Catalog
+    import ServeCache._
+    val root = tmp("graft-sc-fresh")
+    val batch = e.where(col("vec_id") % 7 === 6)
+    val p1 = build(root, e.where(col("vec_id") % 7 =!= 6))
+    Catalog.commitDeployment(spark, root, "serving", p1)
+    assert(pinned(root, p1).size == 5) // warm: classes compiled, p1 memoized
+    assert(TextIndex.appendBundle(spark, root, "tix", docsOf(batch), "b1"))
+    assert(AnnIndex.appendBundle(spark, root, "ann", batch, "b1"))
+    val p2 = latest(root)
+    Catalog.commitDeployment(spark, root, "serving", p2)
+    var served = Seq.empty[(Int, Long, Long)]
+    val c = SparkCounts.of(spark) { served = pinned(root, p2) }
+    assert(served.size == 5)
+    // the query read, the new version's BM25 stats, the MMR stage's one
+    // action and the caller's collect; the member reads open no footer
+    // (recorded schemas) and the quantizer the append read is reused
+    assert(c.executions <= 4 && c.jobsOutside == 0, s"fresh serve ran $c")
+  }
+
   test("codegen cache guard: a repeated threeStageServeBundle at the same pins compiles no new classes") {
     import ServeCache._
     import org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
