@@ -3235,10 +3235,11 @@ object SparkEntry {
 
     // Versioned table with time travel (x172) — the minimal
     // transactional table format every maintenance ledger names as its
-    // residual: each commit lands in a NEW immutable numbered directory
-    // (Spark's _SUCCESS marker written last) and only then does the
-    // _latest pointer flip, so a crash anywhere leaves readers on the
-    // previous version or the completed new one — never a partial table.
+    // residual, as a one-member bundle: each commit lands in a NEW
+    // immutable numbered directory that appears together with its
+    // _manifest in one rename, and only then does the _latest pointer
+    // flip, so a crash anywhere leaves readers on the previous version
+    // or the completed new one — never a partial table.
     // The declared query commits the even-doc half as v1 and the full
     // corpus as v2, then reads BOTH versions back (time travel) plus the
     // anti-join of v2 against v1 — version numbers, both counts, and the
@@ -3247,11 +3248,11 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
       val root = s"/tmp/graft/x172_vt_${storeTag(dir)}"
       deleteRecursively(new java.io.File(root))
-      val v1 = Catalog.commitVersion(docs.where(col("doc_id") % 2 === 0),
-        root, "docs")
-      val v2 = Catalog.commitVersion(docs, root, "docs")
-      val old = Catalog.readVersion(s, root, "docs", Some(v1))
-      val cur = Catalog.readVersion(s, root, "docs")
+      val v1 = Catalog.commitBundle(
+        Seq("docs" -> docs.where(col("doc_id") % 2 === 0)), root, "docs")
+      val v2 = Catalog.commitBundle(Seq("docs" -> docs), root, "docs")
+      val old = Catalog.readBundleTable(s, root, "docs", "docs", Some(v1))
+      val cur = Catalog.readBundleTable(s, root, "docs", "docs")
       cur.agg(count(lit(1)).as("n_latest"))
         .crossJoin(broadcast(old.agg(count(lit(1)).as("n_v1"))))
         .crossJoin(broadcast(
@@ -3337,14 +3338,15 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
       val root = s"/tmp/graft/x175_vd_${storeTag(dir)}"
       deleteRecursively(new java.io.File(root))
-      val r1 = Catalog.commitVersion(docs.where(col("doc_id") % 7 =!= 0),
-        root, "docs")
-      val r2 = Catalog.commitVersion(docs.where(col("doc_id") % 5 =!= 1)
+      val r1 = Catalog.commitBundle(
+        Seq("docs" -> docs.where(col("doc_id") % 7 =!= 0)), root, "docs")
+      val r2 = Catalog.commitBundle(Seq("docs" -> docs
+        .where(col("doc_id") % 5 =!= 1)
         .withColumn("text", when(col("doc_id") % 11 === 0,
-          upper(col("text"))).otherwise(col("text"))), root, "docs")
+          upper(col("text"))).otherwise(col("text")))), root, "docs")
       RelOps.snapshotDiff(
-          Catalog.readVersion(s, root, "docs", Some(r1)),
-          Catalog.readVersion(s, root, "docs", Some(r2)),
+          Catalog.readBundleTable(s, root, "docs", "docs", Some(r1)),
+          Catalog.readBundleTable(s, root, "docs", "docs", Some(r2)),
           Seq("doc_id"), Seq("text"))
         .groupBy(col("status")).agg(count(lit(1)).as("n"))
         .orderBy(col("status"))
@@ -3489,17 +3491,17 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
       val root = s"/tmp/graft/x177_se_${storeTag(dir)}"
       deleteRecursively(new java.io.File(root))
-      val r1 = Catalog.commitVersion(
+      val r1 = Catalog.commitBundle(Seq("docs" ->
         docs.select(col("doc_id"), col("text"))
-          .where(col("doc_id") % 3 =!= 0), root, "docs")
-      val r2 = Catalog.commitVersion(
+          .where(col("doc_id") % 3 =!= 0)), root, "docs")
+      val r2 = Catalog.commitBundle(Seq("docs" ->
         docs.select(col("doc_id"),
             when(col("doc_id") % 11 === 0, upper(col("text")))
               .otherwise(col("text")).as("text"),
             col("source"))
-          .where(col("doc_id") % 4 =!= 1), root, "docs")
-      val o = Catalog.readVersion(s, root, "docs", Some(r1))
-      val n = Catalog.readVersion(s, root, "docs", Some(r2))
+          .where(col("doc_id") % 4 =!= 1)), root, "docs")
+      val o = Catalog.readBundleTable(s, root, "docs", "docs", Some(r1))
+      val n = Catalog.readBundleTable(s, root, "docs", "docs", Some(r2))
       val delta = RelOps.schemaDelta(o, n)
       require(o.columns.length == 2 && n.columns.length == 3 &&
         delta == Seq("source" -> "added"),
@@ -3540,7 +3542,7 @@ object SparkEntry {
       val v3d = v2d.withColumn("bal_c", col("bal_c") +
         when(col("c_custkey") % 5 === 0, 5000L).otherwise(0L))
       val vs = Seq(base, v2d, v3d)
-        .map(d => Catalog.commitVersion(d, root, "cust"))
+        .map(d => Catalog.commitBundle(Seq("cust" -> d), root, "cust"))
       val bounds = vs.zip(Seq("2024-01-01 00:00:00", "2024-01-11 00:00:00",
           "2024-01-21 00:00:00")).toDF("version", "vfs")
         .withColumn("valid_from", to_timestamp(col("vfs"))).drop("vfs")
@@ -3549,7 +3551,7 @@ object SparkEntry {
       val ev = Catalog.events(s, dir).select(col("user_id"),
         col("event_type"), col("ts"),
         round(col("value") * 1e6, 0).cast("long").as("val6"))
-      val dim = vs.map(v => Catalog.readVersion(s, root, "cust", Some(v))
+      val dim = vs.map(v => Catalog.readBundleTable(s, root, "cust", "cust", Some(v))
           .select(lit(v).as("version"), col("c_custkey").as("user_id"),
             col("bal_c")))
         .reduce(_ unionByName _)
@@ -3694,10 +3696,10 @@ object SparkEntry {
       val v3d = v2d.withColumn("bal_c", col("bal_c") +
         when(col("c_custkey") % 5 === 0, 5000L).otherwise(0L))
       val vs = Seq(base, v2d, v3d)
-        .map(d => Catalog.commitVersion(d, root, "cust"))
+        .map(d => Catalog.commitBundle(Seq("cust" -> d), root, "cust"))
       // ingest-side, once: history → intervals (at scale this is
       // maintained incrementally by scd2Merge, never re-collapsed)
-      val hist = vs.map(v => Catalog.readVersion(s, root, "cust", Some(v))
+      val hist = vs.map(v => Catalog.readBundleTable(s, root, "cust", "cust", Some(v))
           .withColumn("version", lit(v)))
         .reduce(_ unionByName _)
       val iv = graft.Lifecycle.withMaterialized()(Temporal.scd2(
@@ -3727,35 +3729,37 @@ object SparkEntry {
     // WHAT a retention pass would reclaim (versions, ages, sizes,
     // orphaned writer garbage, and why each row lives or dies) BEFORE
     // running it. The would_reclaim decision is computed by the SAME
-    // functions the prunes execute (Catalog.versionVictims /
-    // bundleVictims / garbageVictims — one decision path, so the
-    // dry-run can never disagree with the action), and the plan EARNS
+    // functions the prunes execute (Catalog.bundleVictims /
+    // garbageVictims — one decision path, so the dry-run can never
+    // disagree with the action), and the plan EARNS
     // that: after the report, the real prunes run, and the surviving
     // rows are anti-joined both ways against the report's
     // not-reclaimed rows — a report that over- or under-predicts
-    // flips prune_matched. Fixture: 4 table commits at keep=2 (two
-    // retention victims, one keep-window, one latest), a fresh crashed
-    // staging dir (writer-grace — the 1h floor protects a live
-    // writer), and a bundle whose compaction left two unreferenced
+    // flips prune_matched. Fixture: 4 snapshot commits of a one-member
+    // versioned table at keep=2 (two retention victims, one
+    // keep-window, one latest; its rows labelled kind = 'table'), a
+    // fresh crashed staging dir (writer-grace — the 1h floor protects a
+    // live writer), and a bundle whose compaction left two unreferenced
     // versions at keep=1. age_ms/bytes are telemetry and stay out of
     // the hashed projection.
     "x185_store_health" -> ((s, dir) => {
       val root = s"/tmp/graft/x185_health_${storeTag(dir)}"
       deleteRecursively(new java.io.File(root))
       val d = t(s, dir, "documents").select(col("doc_id"), col("source"))
-      (1 to 4).foreach(i =>
-        Catalog.commitVersion(d.where(col("doc_id") % 4 < i), root, "docs"))
+      (1 to 4).foreach(i => Catalog.commitBundle(
+        Seq("docs" -> d.where(col("doc_id") % 4 < i)), root, "docs"))
       new java.io.File(
-        s"$root/docs_versions/.staging-deadbeef").mkdirs()
+        s"${Catalog.bundleDir(root, "docs")}/.staging-deadbeef").mkdirs()
       Catalog.commitBundle(Seq("m" -> d.where(col("doc_id") % 2 === 0)),
         root, "b", Seq("b0"))
       Catalog.appendBundle(Seq("m" -> d.where(col("doc_id") % 2 === 1)),
         root, "b", "b1")
       Catalog.compactBundle(s, root, "b")
-      def report() = Catalog.storeHealth(s, root, "docs", keep = 2)
+      def report() = Catalog.bundleHealth(s, root, "docs", keep = 2)
+        .withColumn("kind", lit("table"))
         .unionByName(Catalog.bundleHealth(s, root, "b", keep = 1))
       val rep = graft.Lifecycle.withMaterialized()(report())
-      Catalog.pruneVersions(s, root, "docs", keep = 2)
+      Catalog.pruneBundleVersions(s, root, "docs", keep = 2)
       Catalog.pruneBundleVersions(s, root, "b", keep = 1)
       val after = report().select(col("kind"), col("name"))
       val predicted = rep.where(!col("would_reclaim"))
@@ -3801,8 +3805,8 @@ object SparkEntry {
       val v3d = v2d.withColumn("bal_c", col("bal_c") +
         when(col("c_custkey") % 5 === 0, 5000L).otherwise(0L))
       val vs = Seq(base, v2d, v3d)
-        .map(d => Catalog.commitVersion(d, root, "cust"))
-      val hist = vs.map(v => Catalog.readVersion(s, root, "cust", Some(v))
+        .map(d => Catalog.commitBundle(Seq("cust" -> d), root, "cust"))
+      val hist = vs.map(v => Catalog.readBundleTable(s, root, "cust", "cust", Some(v))
           .withColumn("version", lit(v)))
         .reduce(_ unionByName _)
       val iv = graft.Lifecycle.withMaterialized()(Temporal.scd2(
@@ -3860,8 +3864,8 @@ object SparkEntry {
         when(col("c_custkey") % 7 === 0, 10000L).otherwise(0L) +
         when(col("c_custkey") % 5 === 0, 5000L).otherwise(0L)) // all back
       val vs = Seq(base, v2d, v3d)
-        .map(d => Catalog.commitVersion(d, root, "cust"))
-      val reads = vs.map(v => Catalog.readVersion(s, root, "cust", Some(v))
+        .map(d => Catalog.commitBundle(Seq("cust" -> d), root, "cust"))
+      val reads = vs.map(v => Catalog.readBundleTable(s, root, "cust", "cust", Some(v))
         .withColumn("version", lit(v)))
       val hist = reads.reduce(_ unionByName _)
       // presence-diff tombstones: in v_{i-1}, gone in v_i
@@ -5118,8 +5122,8 @@ object SparkEntry {
           val v3d = v2d.withColumn("bal_c", col("bal_c") +
             when(col("c_custkey") % 5 === 0, 5000L).otherwise(0L))
           val vs = Seq(base, v2d, v3d)
-            .map(d => Catalog.commitVersion(d, root, "cust"))
-          val hist = vs.map(v => Catalog.readVersion(s, root, "cust", Some(v))
+            .map(d => Catalog.commitBundle(Seq("cust" -> d), root, "cust"))
+          val hist = vs.map(v => Catalog.readBundleTable(s, root, "cust", "cust", Some(v))
               .withColumn("version", lit(v)))
             .reduce(_ unionByName _)
           Temporal.scd2(hist, Seq("c_custkey"), "version", Seq("bal_c"))

@@ -421,9 +421,8 @@ object AnnIndex {
       nCentroids: Int = 16, trainIters: Int = 0, spill: Int = 1,
       idCol: String = "vec_id", vecCol: String = "embedding"): Long = {
     import spark.implicits._
-    val pv = Catalog.latestBundleVersion(spark, root, name)
-      .getOrElse(sys.error(s"AnnIndex.reindexBundle: no committed " +
-        s"versions for '$name' under $root"))
+    val pv = Catalog.resolveVersion(spark, root, name, None,
+      "AnnIndex.reindexBundle")
     val prior = Catalog.bundleManifest(spark, root, name, Some(pv))
     // by-name `books` + overlapped quantizer training — see
     // [[writeRebuildBaseline]]
@@ -460,9 +459,8 @@ object AnnIndex {
     // (atomically, via `pinned`) that those members are STILL the
     // pinned version's at publish: codes encoded against a quantizer a
     // racing rebuild superseded must fail loudly, never commit.
-    val v = version.orElse(Catalog.latestBundleVersion(spark, root, name))
-      .getOrElse(sys.error(s"AnnIndex.appendBundle: no committed " +
-        s"versions for '$name' under $root"))
+    val v = Catalog.resolveVersion(spark, root, name, version,
+      "AnnIndex.appendBundle")
     val qz = bundleQuantizer(spark, root, name, v)
     Catalog.appendBundle(
       Seq("codes" -> encodeAssign(batch, qz.books, qz.centroids, qz.spill,
@@ -489,9 +487,8 @@ object AnnIndex {
       version: Option[Long] = None,
       withinPairs: Option[DataFrame] = None,
       materialize: Boolean = true): DataFrame = {
-    val v = version.orElse(Catalog.latestBundleVersion(spark, root, name))
-      .getOrElse(sys.error(s"AnnIndex.knnBundle: no committed versions " +
-        s"for '$name' under $root"))
+    val v = Catalog.resolveVersion(spark, root, name, version,
+      "AnnIndex.knnBundle")
     serveCore(spark, bundleQuantizer(spark, root, name, v),
       Catalog.readBundleTable(spark, root, name, "codes", Some(v)),
       corpus, queries, k, rerank, nProbe, idCol, vecCol, within,

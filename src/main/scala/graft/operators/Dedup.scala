@@ -1318,9 +1318,8 @@ object Dedup {
     // `pinned`) that no other ingest advanced the buckets in between —
     // a batch matched against superseded buckets would silently miss
     // its pairs against the racing batch's documents
-    val pv = graft.sources.Catalog.latestBundleVersion(spark, root, bundle)
-      .getOrElse(sys.error(s"ingestPairBundle: no committed versions " +
-        s"for '$bundle' under $root"))
+    val pv = graft.sources.Catalog.resolveVersion(spark, root, bundle, None,
+      "ingestPairBundle")
     if (graft.sources.Catalog.bundleManifest(spark, root, bundle, Some(pv))
         .batches.contains(batchId)) false
     else {
@@ -1365,9 +1364,8 @@ object Dedup {
     val rmA = broadcast(ids.select(col(ids.columns.head).as("__rm_a")))
     val rmB = broadcast(ids.select(col(ids.columns.head).as("__rm_b")))
     // pin the member-set probe and the rewrite to one resolved version
-    val pv = graft.sources.Catalog.latestBundleVersion(spark, root, bundle)
-      .getOrElse(sys.error(s"retractPairBundle: no committed versions " +
-        s"for '$bundle' under $root"))
+    val pv = graft.sources.Catalog.resolveVersion(spark, root, bundle, None,
+      "retractPairBundle")
     val m = graft.sources.Catalog.bundleManifest(spark, root, bundle, Some(pv))
     val base: Map[String, DataFrame => DataFrame] = Map(
       "pairs" -> ((p: DataFrame) =>

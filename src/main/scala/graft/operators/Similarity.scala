@@ -202,14 +202,10 @@ object Similarity {
       textVersion: Option[Long] = None,
       annVersion: Option[Long] = None): DataFrame = {
     require(poolK >= k, s"hybridStoredServeBundle: poolK=$poolK < k=$k")
-    val tv = textVersion
-      .orElse(Catalog.latestBundleVersion(spark, textRoot, textName))
-      .getOrElse(sys.error(s"hybridStoredServeBundle: no committed " +
-        s"versions for text index '$textName' under $textRoot"))
-    val av = annVersion
-      .orElse(Catalog.latestBundleVersion(spark, annRoot, annName))
-      .getOrElse(sys.error(s"hybridStoredServeBundle: no committed " +
-        s"versions for ANN index '$annName' under $annRoot"))
+    val tv = Catalog.resolveVersion(spark, textRoot, textName, textVersion,
+      "hybridStoredServeBundle")
+    val av = Catalog.resolveVersion(spark, annRoot, annName, annVersion,
+      "hybridStoredServeBundle")
     val lex = TextIndex.bm25SearchBundle(spark, textRoot, textName,
         queryTerms, k = poolK, within = within, version = Some(tv))
       .select(col("doc_id").as("nid"), col("rank").cast("int").as("lrank"))
@@ -562,14 +558,10 @@ object Similarity {
       withinPairs: Option[DataFrame] = None): DataFrame = {
     require(fuseK >= k && fuseK <= 256,
       s"threeStageServeBatchBundle: fuseK=$fuseK out of range for k=$k")
-    val tv = textVersion
-      .orElse(Catalog.latestBundleVersion(spark, textRoot, textName))
-      .getOrElse(sys.error(s"threeStageServeBatchBundle: no committed " +
-        s"versions for text index '$textName' under $textRoot"))
-    val av = annVersion
-      .orElse(Catalog.latestBundleVersion(spark, annRoot, annName))
-      .getOrElse(sys.error(s"threeStageServeBatchBundle: no committed " +
-        s"versions for ANN index '$annName' under $annRoot"))
+    val tv = Catalog.resolveVersion(spark, textRoot, textName, textVersion,
+      "threeStageServeBatchBundle")
+    val av = Catalog.resolveVersion(spark, annRoot, annName, annVersion,
+      "threeStageServeBatchBundle")
     val lex = TextIndex.bm25SearchBatchBundle(spark, textRoot, textName,
         queryTerms, k = poolK, within = within, version = Some(tv),
         withinPairs = withinPairs)
@@ -657,14 +649,10 @@ object Similarity {
       annVersion: Option[Long] = None): DataFrame = {
     require(fuseK >= k && fuseK <= 256,
       s"threeStageServeBundle: fuseK=$fuseK out of range for k=$k")
-    val tv = textVersion
-      .orElse(Catalog.latestBundleVersion(spark, textRoot, textName))
-      .getOrElse(sys.error(s"threeStageServeBundle: no committed " +
-        s"versions for text index '$textName' under $textRoot"))
-    val av = annVersion
-      .orElse(Catalog.latestBundleVersion(spark, annRoot, annName))
-      .getOrElse(sys.error(s"threeStageServeBundle: no committed " +
-        s"versions for ANN index '$annName' under $annRoot"))
+    val tv = Catalog.resolveVersion(spark, textRoot, textName, textVersion,
+      "threeStageServeBundle")
+    val av = Catalog.resolveVersion(spark, annRoot, annName, annVersion,
+      "threeStageServeBundle")
     val lex = TextIndex.bm25SearchBundle(spark, textRoot, textName,
         queryTerms, k = poolK, within = within, version = Some(tv))
       .select(col("doc_id").as("nid"), col("rank").cast("int").as("lrank"))

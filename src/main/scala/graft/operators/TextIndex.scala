@@ -286,14 +286,16 @@ object TextIndex {
   }
 
   /** [[bm25SearchBatch]] off the BUNDLE-backed index — postings and
-    * corpus stats resolved at ONE version ([[resolveVersion]]).
+    * corpus stats resolved at ONE version
+    * ([[graft.sources.Catalog.resolveVersion]]).
     */
   def bm25SearchBatchBundle(spark: SparkSession, root: String, name: String,
       queryTerms: Seq[(Long, Seq[String])], k: Int,
       within: Option[DataFrame] = None,
       version: Option[Long] = None,
       withinPairs: Option[DataFrame] = None): DataFrame = {
-    val v = resolveVersion(spark, root, name, version, "bm25SearchBatchBundle")
+    val v = Catalog.resolveVersion(spark, root, name, version,
+      "TextIndex.bm25SearchBatchBundle")
     val (nDocs, sumDl) = bundleStats(spark, root, name, v)
     bm25BatchCore(spark,
       Catalog.readBundleTable(spark, root, name, "postings", Some(v)),
@@ -447,7 +449,8 @@ object TextIndex {
   def reindexBundle(spark: SparkSession, root: String, name: String,
       docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): Long = {
-    val pv = resolveVersion(spark, root, name, None, "reindexBundle")
+    val pv = Catalog.resolveVersion(spark, root, name, None,
+      "TextIndex.reindexBundle")
     val prior = Catalog.bundleManifest(spark, root, name, Some(pv))
     val p = postings(docs, idCol, textCol).persist()
     p.count() // one tokenize pass before the overlapped member writes
@@ -481,24 +484,11 @@ object TextIndex {
     finally { p.unpersist(); () }
   }
 
-  /** The one version every member read of a serve resolves through:
-    * latest when the caller didn't pin one. Resolving latest PER MEMBER
-    * instead would let a commit landing between the reads pair postings
-    * at version n with stats at n−1 — idf and avgdl describing a corpus
-    * the postings aren't (wrong scores, no error) — the exact torn
-    * multi-member read the bundle protocol exists to prevent.
-    */
-  private def resolveVersion(spark: SparkSession, root: String,
-      name: String, version: Option[Long], op: String): Long =
-    version.orElse(Catalog.latestBundleVersion(spark, root, name))
-      .getOrElse(sys.error(s"TextIndex.$op: no committed versions " +
-        s"for '$name' under $root"))
-
   /** Corpus stats off the bundle AT a resolved version: the meta
     * member's delta rows summed — bounded at one row per ingested batch
     * (compaction collapses the file sets; the rows still sum
     * identically). Memoized under the version
-    * ([[graft.sources.Catalog.memoAt]]): one collect per version.
+    * ([[graft.sources.Catalog.memoAtBundle]]): one collect per version.
     */
   private def bundleStats(spark: SparkSession, root: String,
       name: String, version: Long): (Long, Long) =
@@ -512,27 +502,31 @@ object TextIndex {
 
   /** Conjunctive match off the BUNDLE-backed index — same core plan as
     * [[booleanSearch]], postings resolved through one committed
-    * manifest version ([[resolveVersion]]; a serve can never see a
-    * half-rebuilt index; the driver-planned shard predicate still
-    * prunes every committed file set's directory listing).
+    * manifest version ([[graft.sources.Catalog.resolveVersion]]; a serve
+    * can never see a half-rebuilt index; the driver-planned shard
+    * predicate still prunes every committed file set's directory
+    * listing).
     */
   def booleanSearchBundle(spark: SparkSession, root: String, name: String,
       queryTerms: Seq[String], version: Option[Long] = None): DataFrame =
     booleanCore(Catalog.readBundleTable(spark, root, name, "postings",
-      Some(resolveVersion(spark, root, name, version, "booleanSearchBundle"))),
+      Some(Catalog.resolveVersion(spark, root, name, version,
+        "TextIndex.booleanSearchBundle"))),
       queryTerms)
 
   /** BM25 top-k off the BUNDLE-backed index — same core plan as
     * [[bm25Search]] (shared [[bm25Core]]), with postings AND the meta
-    * stats resolved at ONE version ([[resolveVersion]]) so the idf /
-    * avgdl arithmetic always describes exactly the postings it scores.
+    * stats resolved at ONE version
+    * ([[graft.sources.Catalog.resolveVersion]]) so the idf / avgdl
+    * arithmetic always describes exactly the postings it scores.
     * Pass `Some(v)` for explicit time-travel serving.
     */
   def bm25SearchBundle(spark: SparkSession, root: String, name: String,
       queryTerms: Seq[String], k: Int,
       within: Option[DataFrame] = None,
       version: Option[Long] = None): DataFrame = {
-    val v = resolveVersion(spark, root, name, version, "bm25SearchBundle")
+    val v = Catalog.resolveVersion(spark, root, name, version,
+      "TextIndex.bm25SearchBundle")
     val (nDocs, sumDl) = bundleStats(spark, root, name, v)
     bm25Core(Catalog.readBundleTable(spark, root, name, "postings", Some(v)),
       nDocs, sumDl, queryTerms, k, within)
@@ -545,7 +539,8 @@ object TextIndex {
       phrase: Seq[String], version: Option[Long] = None): DataFrame =
     phraseCore(spark,
       Catalog.readBundleTable(spark, root, name, "postings",
-        Some(resolveVersion(spark, root, name, version, "phraseSearchBundle"))),
+        Some(Catalog.resolveVersion(spark, root, name, version,
+          "TextIndex.phraseSearchBundle"))),
       phrase)
 
   /** TAKEDOWN: remove a document id set from the bundle-backed index in
@@ -573,7 +568,8 @@ object TextIndex {
     // version HERE and pin both the rewrite baseline and this read to
     // it, so the negative delta always describes exactly the postings
     // being rewritten
-    val v = resolveVersion(spark, root, name, None, "retractBundle")
+    val v = Catalog.resolveVersion(spark, root, name, None,
+      "TextIndex.retractBundle")
     Catalog.rewriteBundleMembers(spark, root, name, Map(
       "postings" -> ((p: DataFrame) =>
         p.join(rm, p("doc_id") === rm("__rm_id"), "left_anti")),

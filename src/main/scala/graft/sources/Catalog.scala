@@ -24,19 +24,24 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   *   - sinks are plain `df.write` with append/overwrite — at cluster scale
   *     these parallelize per-partition; nothing is collected to the driver.
   *
-  * Committed-version memo ([[memoAt]]): values derived from a COMMITTED
-  * version — bundle manifests, member DataFrames (file listing), deployment
-  * pin sets, BM25 corpus stats, ANN quantizers — are kept in one bounded,
-  * process-wide LRU. The key is (commit-marker path, the marker's
-  * modification time, artifact name), plus the session for DataFrames.
-  * Safe because the store never mutates a committed version: every commit,
-  * append, compaction, takedown or restore lands a NEW numbered directory
-  * whose marker (`_manifest` for bundles, `_SUCCESS` for versioned tables)
-  * appears with it in one rename. Each lookup stats the marker: a pruned or
-  * never-committed version has none, so the value is recomputed and fails
-  * exactly as an uncached read does; a store deleted and rebuilt at the
-  * same path writes a new marker with a new modification time, hence a new
-  * key. A value derived from a few members only (the ANN quantizer) is
+  * One store protocol: every versioned store is a BUNDLE ([[commitBundle]])
+  * — a versioned table and a deployment pin set are bundles with one
+  * member — and a version is committed exactly when its directory holds a
+  * `_manifest`, the only commit marker.
+  *
+  * Committed-version memo ([[memoAtBundle]]): values derived from a
+  * COMMITTED version — bundle manifests, member DataFrames (file listing),
+  * deployment pin sets, BM25 corpus stats, ANN quantizers — are kept in
+  * one bounded, process-wide LRU. The key is (the version's `_manifest`
+  * path, its modification time, artifact name), plus the session for
+  * DataFrames. Safe because the store never mutates a committed version:
+  * every commit, append, compaction, takedown or restore lands a NEW
+  * numbered directory whose `_manifest` appears with it in one rename.
+  * Each lookup stats the manifest: a pruned or never-committed version has
+  * none, so the value is recomputed and fails exactly as an uncached read
+  * does; a store deleted and rebuilt at the same path writes a new
+  * manifest with a new modification time, hence a new key. A value
+  * derived from a few members only (the ANN quantizer) is
   * keyed by the FILE SETS those members list at the version instead, each
   * stamped with the modification time of the manifest of the version that
   * wrote it ([[memoAtBundle]] `members`): the versions an append, a restore
@@ -94,22 +99,32 @@ object Catalog {
       size > MemoCapacity
   }
 
-  /** `compute`, memoized under the committed version whose commit marker
-    * is `marker` (see the memo contract above). `perSession` keys the
-    * value by `spark` too — required for DataFrames, which belong to
-    * their session. A missing marker bypasses the memo: `compute` runs
-    * and refuses the version exactly as it does uncached. `scope`, when
-    * given, replaces the marker's (path, modification time) in the key; it
-    * runs only once the marker is found, and a file it cannot find bypasses
-    * the memo too. Racing callers may both compute on a miss; the values
-    * are equal by immutability.
+  /** `compute`, memoized under a committed bundle version (see the memo
+    * contract above): keyed by that version's `_manifest` — or, when
+    * `members` is non-empty, by the file sets those members list at that
+    * version, each stamped with the modification time of the `_manifest`
+    * of the version directory holding it, which changes when the store is
+    * rebuilt at the same path. `perSession` keys the value by `spark` too —
+    * required for DataFrames, which belong to their session. A missing
+    * manifest (or a file set's manifest) bypasses the memo: `compute` runs
+    * and refuses the version exactly as it does uncached. Racing callers
+    * may both compute on a miss; the values are equal by immutability.
     */
-  private[graft] def memoAt[T](spark: SparkSession, marker: HPath,
-      artifact: String, perSession: Boolean = false,
-      scope: Option[() => Any] = None)(compute: => T): T = {
+  private[graft] def memoAtBundle[T](spark: SparkSession, root: String,
+      bundle: String, version: Long, artifact: String,
+      perSession: Boolean = false,
+      members: Seq[String] = Nil)(compute: => T): T = {
+    val base = bundleDir(root, bundle)
+    val f = fsFor(spark, new HPath(base))
     val at = try {
-      val s = fsFor(spark, marker).getFileStatus(marker)
-      Some(scope.fold[Any]((s.getPath.toString, s.getModificationTime))(_()))
+      val s = f.getFileStatus(new HPath(s"$base/$version/_manifest"))
+      Some(if (members.isEmpty) (s.getPath.toString, s.getModificationTime) else {
+        val m = bundleManifest(spark, root, bundle, Some(version))
+        val sets = members.map(r => r -> m.dirs(r))
+        val stamps = sets.flatMap(_._2).map(_.takeWhile(_ != '/')).distinct.map(o =>
+          o -> f.getFileStatus(new HPath(s"$base/$o/_manifest")).getModificationTime)
+        (base, sets, stamps)
+      })
     } catch { case _: java.io.FileNotFoundException => None }
     at.fold(compute) { a =>
       val key = (a, artifact, if (perSession) Some(spark) else None)
@@ -121,30 +136,6 @@ object Catalog {
           v
       }
     }
-  }
-
-  /** [[memoAt]] keyed by a committed bundle version's `_manifest` — or,
-    * when `members` is non-empty, by the file sets those members list at
-    * that version, each stamped with the modification time of the
-    * `_manifest` of the version directory holding it (see the memo
-    * contract above). The stamp changes when the store is rebuilt at the
-    * same path.
-    */
-  private[graft] def memoAtBundle[T](spark: SparkSession, root: String,
-      bundle: String, version: Long, artifact: String,
-      perSession: Boolean = false,
-      members: Seq[String] = Nil)(compute: => T): T = {
-    val base = bundleDir(root, bundle)
-    def fileSets(): Any = {
-      val m = bundleManifest(spark, root, bundle, Some(version))
-      val sets = members.map(r => r -> m.dirs(r))
-      val f = fsFor(spark, new HPath(base))
-      val stamps = sets.flatMap(_._2).map(_.takeWhile(_ != '/')).distinct.map(o =>
-        o -> f.getFileStatus(new HPath(s"$base/$o/_manifest")).getModificationTime)
-      (base, sets, stamps)
-    }
-    memoAt(spark, new HPath(s"$base/$version/_manifest"), artifact, perSession,
-      if (members.isEmpty) None else Some(() => fileSets()))(compute)
   }
 
   /** Does the table exist on its filesystem? */
@@ -274,90 +265,7 @@ object Catalog {
     atomicSwap(f, staged, dir, "compactPartition")
   }
 
-  // ------------------------------------------------- versioned tables
-
-  /** Root directory of a versioned table: one immutable numbered
-    * directory per committed version plus a `_latest` pointer file.
-    */
-  def versionsDir(root: String, ref: String): String =
-    s"${root.stripSuffix("/")}/${tableName(ref)}_versions"
-
-  /** Commit `df` as the table's next version — the minimal transactional
-    * table format the maintenance ledgers name as their residual: data
-    * lands ONCE in a hidden staging directory, then an O(1) directory
-    * rename claims the next version slot (`<base>/<n>` appears atomically
-    * WITH its `_SUCCESS`), and only then does the `_latest` pointer flip.
-    * A crash anywhere leaves readers on the previous version, or on the
-    * new one if its rename landed — monotone, never partial, because
-    * [[latestVersion]] falls back to the highest COMMITTED (`_SUCCESS`-
-    * bearing) directory whenever the pointer is missing or stale-low.
-    * Old versions stay readable ([[readVersion]] — time travel) until
-    * pruned by retention.
-    *
-    * Concurrency: OPTIMISTIC multi-writer. Racing writers compute the
-    * same `next`; one rename wins the slot, the loser detects the loss
-    * via its ownership marker (`_writer-<token>`, an underscore-hidden
-    * empty file that rides in the staged data — local/HDFS `rename` into
-    * a directory created concurrently NESTS the source instead of
-    * failing, so success must be verified, not assumed), re-reads the
-    * latest version, and re-claims under a bumped number — the data is
-    * never rewritten, each retry is one rename ([[claimVersionSlot]]).
-    * A crashed writer leaves only an ignorable `.staging-*` directory
-    * (reclaimed by [[pruneVersions]]), never a blocked version slot.
-    *
-    * MULTI-writer claims additionally require ATOMIC directory rename
-    * (posix/HDFS). On object stores, where connectors emulate rename
-    * as copy+delete, two racers can interleave one slot (the
-    * uncommitted-target clear destroys a racer's in-flight copy) —
-    * USUALLY detected loudly via the foreign-marker check in
-    * [[claimVersionSlot]] (proven by CatalogSpec's shim), but the
-    * check is best-effort: a racer whose marker copy lands after our
-    * listing, or whose marker was destroyed mid-flight leaving only
-    * data files, interleaves undetected. Single-writer per store is
-    * the REQUIREMENT on non-atomic-rename filesystems; coordinate
-    * commits externally otherwise (the same caveat class as
-    * [[atomicSwap]]).
-    */
-  def commitVersion(df: DataFrame, root: String, ref: String,
-      expectedVersion: Option[Long] = None): Long = {
-    val spark = df.sparkSession
-    val base = new HPath(versionsDir(root, ref))
-    val f = fsFor(spark, base)
-    val token = newCommitToken()
-    val staging = new HPath(base, s".staging-$token")
-    // keyless REBALANCE before the write (guide §6): versioned snapshots
-    // are often tiny (deployment pins, SCD2 states) and a W-partition
-    // frame otherwise leaves W near-empty files per version; AQE
-    // coalesces to few size-bounded files here and splits oversized
-    // partitions at scale. Content is unchanged.
-    df.hint("rebalance").write.mode(SaveMode.Overwrite)
-      .parquet(staging.toString)
-    f.create(new HPath(staging, s"_writer-$token"), true).close()
-    // `expectedVersion` turns the optimistic both-land semantics into a
-    // COMPARE-AND-SET: the new version must land directly on top of the
-    // version the caller read (next = expected + 1), checked atomically
-    // at every claim attempt — the read-modify-write callers
-    // ([[takedownStack]], [[rollbackDeployment]]) pass the version their
-    // pins were derived from, so a concurrent flip between their read
-    // and this commit refuses LOUDLY instead of silently publishing
-    // state that discards the racer's change. `None` keeps the
-    // racing-committers-both-land semantics for independent snapshots.
-    val next = claimVersionSlot(f, base, staging, token,
-      p => f.exists(new HPath(p, "_SUCCESS")), "commitVersion") { (n, _) =>
-      expectedVersion.foreach { ev =>
-        if (n != ev + 1)
-          sys.error(s"commitVersion: compare-and-set failed for '$ref' " +
-            s"under $root — this operation read version $ev and expected " +
-            s"to land as ${ev + 1}, but the next open slot is $n: a " +
-            "concurrent writer flipped the table in between (its change " +
-            "would be silently discarded by this stale write); re-read " +
-            "and retry the whole operation")
-      }
-      true
-    }
-    flipPointer(f, base, next, "commitVersion")
-    next
-  }
+  // ------------------------------------------------- commit protocol
 
   /** Bounded retry budget for optimistic version-slot claims. Each retry
     * is a metadata rename, never a data rewrite, so losing a race is
@@ -369,11 +277,27 @@ object Catalog {
   private def newCommitToken(): String =
     java.util.UUID.randomUUID().toString.replace("-", "")
 
+  /** Committed = the numbered directory holds its `_manifest`, which
+    * appears together with the data it lists in one rename.
+    */
+  private def isCommitted(f: FileSystem, dir: HPath): Boolean =
+    f.exists(new HPath(dir, "_manifest"))
+
+  /** The committed version numbers under `base`, ascending; none when the
+    * store does not exist.
+    */
+  private def committedVersions(f: FileSystem, base: HPath): Seq[Long] =
+    if (!f.exists(base)) Nil
+    else f.listStatus(base).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.forall(_.isDigit))
+      .map(_.getPath).filter(isCommitted(f, _)).map(_.getName.toLong).sorted
+
   /** Claim the next version slot under `base` by renaming `staging` into
-    * it — the shared optimistic-commit core of [[commitVersion]],
-    * [[commitBundle]] and [[appendBundle]].
+    * it — the shared optimistic-commit core of every bundle commit verb
+    * ([[commitBundle]], [[appendBundle]], [[restoreBundleVersion]],
+    * [[rewriteBundleMembers]]).
     *
-    * Per attempt: recompute `next` off the newest `committed` directory,
+    * Per attempt: recompute `next` off the newest committed directory,
     * clear a target that exists but never committed (committed
     * directories appear ATOMICALLY via this same rename, so an
     * uncommitted numbered directory is by definition a crashed legacy
@@ -393,7 +317,7 @@ object Catalog {
     * committed the same batch id first.
     */
   private def claimVersionSlot(f: FileSystem, base: HPath, staging0: HPath,
-      token: String, committed: HPath => Boolean, op: String)
+      token: String, op: String)
       (prepare: (Long, HPath) => Boolean): Long = {
     var staging = staging0
     var attempts = 0
@@ -412,9 +336,9 @@ object Catalog {
         sys.error(s"$op: staging directory lost before claiming under " +
           s"$base (a concurrent claimer reclaimed the uncommitted slot " +
           "it was nested in) — retry the commit")
-      val next = latestIn(f, base, committed).getOrElse(0L) + 1
+      val next = latestIn(f, base).getOrElse(0L) + 1
       val target = new HPath(base, next.toString)
-      if (f.exists(target) && !committed(target)) f.delete(target, true)
+      if (f.exists(target) && !isCommitted(f, target)) f.delete(target, true)
       if (!f.exists(target)) {
         if (!prepare(next, staging)) { f.delete(staging, true); return -1L }
         if (f.rename(staging, target)) {
@@ -502,53 +426,19 @@ object Catalog {
   }
 
   /** Newest committed version under `base`: the `_latest` pointer when
-    * present, validated against (and never below) the highest numbered
-    * directory satisfying `committed`.
+    * present, validated against (and never below) the highest committed
+    * numbered directory — so a crash between the slot claim and the
+    * pointer flip still serves the committed data.
     */
-  private def latestIn(f: FileSystem, base: HPath,
-      committed: HPath => Boolean): Option[Long] = {
-    if (!f.exists(base)) return None
-    val dirs = f.listStatus(base).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.forall(_.isDigit))
-      .map(_.getPath)
-      .filter(committed)
-      .map(_.getName.toLong)
-    (dirs ++ readPointer(f, base)).reduceOption(_ max _)
-  }
-
-  /** The table's newest committed version: the `_latest` pointer when
-    * present, validated against (and never below) the highest
-    * `_SUCCESS`-bearing numbered directory — so a crash between data
-    * write and pointer flip still serves the committed data.
-    */
-  def latestVersion(spark: SparkSession, root: String,
-      ref: String): Option[Long] = {
-    val base = new HPath(versionsDir(root, ref))
-    latestIn(fsFor(spark, base), base,
-      p => fsFor(spark, base).exists(new HPath(p, "_SUCCESS")))
-  }
-
-  /** Read a committed version (`None` = latest) — the time-travel scan.
-    * Refuses uncommitted or unknown version numbers loudly.
-    */
-  def readVersion(spark: SparkSession, root: String, ref: String,
-      version: Option[Long] = None): DataFrame = {
-    val base = versionsDir(root, ref)
-    val v = version.orElse(latestVersion(spark, root, ref)).getOrElse(
-      sys.error(s"readVersion: no committed versions under $base"))
-    val dir = new HPath(s"$base/$v")
-    val f = fsFor(spark, dir)
-    require(f.exists(new HPath(dir, "_SUCCESS")),
-      s"readVersion: version $v at $base is not committed")
-    spark.read.parquet(dir.toString)
-  }
+  private def latestIn(f: FileSystem, base: HPath): Option[Long] =
+    (committedVersions(f, base) ++ readPointer(f, base)).reduceOption(_ max _)
 
   // ------------------------------------------------- deployment pins
 
   /** Atomic DEPLOYMENT PIN: the set of (artifact, version) pairs a
-    * serving tier should answer from, committed as ONE tiny versioned
-    * table ([[commitVersion]] — a handful of rows, atomic like any
-    * commit). This closes the cross-STORE consistency gap the
+    * serving tier should answer from, committed as ONE tiny bundle with
+    * one member, `pins` ([[commitBundle]] — a handful of rows, atomic
+    * like any commit). This closes the cross-STORE consistency gap the
     * per-bundle protocol cannot: each bundle's commits are atomic, but
     * a maintenance action spanning SEVERAL stores (a takedown hitting
     * the text index and the ANN index of one stack) is necessarily two
@@ -586,13 +476,14 @@ object Catalog {
     }
     import spark.implicits._
     // `expectedVersion` = the deployment version the caller's pins were
-    // DERIVED from (compare-and-set; see commitVersion): a maintenance
-    // flip computed against a stale read refuses loudly instead of
-    // silently discarding the racing operator's retractions. None = an
-    // independent forward flip (first publish, routine re-pin).
-    commitVersion(
-      pins.toSeq.sortBy(_._1).toDF("artifact", "version").repartition(1),
-      root, deploymentRef(name), expectedVersion)
+    // DERIVED from — the compare-and-set of [[commitBundle]]'s
+    // `supersedes`: a maintenance flip computed against a stale read
+    // refuses loudly instead of silently discarding the racing operator's
+    // retractions. None = an independent forward flip (first publish,
+    // routine re-pin).
+    commitBundle(Seq("pins" ->
+      pins.toSeq.sortBy(_._1).toDF("artifact", "version").repartition(1)),
+      root, deploymentRef(name), supersedes = expectedVersion)
   }
 
   /** Deployments live under a dedicated `_deployments/` namespace so
@@ -601,26 +492,24 @@ object Catalog {
     * enumerate them — the underscore prefix also hides the namespace
     * from any recursive data scan, like every other protocol file.
     *
-    * The name charset is a strict allowlist because the ref resolves
-    * through [[tableName]], which truncates at the last '.' or ':' — a
-    * name like "v1.serving" would silently commit OUTSIDE the
-    * `_deployments/` namespace, invisible to [[listDeployments]] and
-    * therefore unprotected by derived retention (and colliding with any
-    * versioned table named "serving"). Refuse loudly at the flip
-    * instead.
+    * The name charset is a strict allowlist because the name becomes a
+    * path segment: '/' or '..' would commit OUTSIDE the `_deployments/`
+    * namespace, invisible to [[listDeployments]] and therefore
+    * unprotected by derived retention, and ':' breaks Hadoop path
+    * parsing. Refuse loudly at the flip instead.
     *
-    * On-disk layout note: the namespace moved here in round 15 — a
-    * deployment persisted by pre-namespace code at
-    * `root/<name>_versions` is NOT read back (readDeployment errors,
+    * On-disk layout note: a pin-set history is the bundle
+    * `_deployments/<name>_bundle`. One persisted in an older layout
+    * (`root/<name>_versions` or `_deployments/<name>_versions`, committed
+    * under `_SUCCESS` markers) is NOT read back (readDeployment errors,
     * listDeployments omits it) and its pins lose derived-retention
-    * protection; such a store needs a one-time re-commit of its pin set
-    * under the new layout before any [[pruneBundleVersionsDeployed]]
-    * run. Harmless for this repo's rebuilt-per-run stores.
+    * protection; re-commit its pin set before any
+    * [[pruneBundleVersionsDeployed]] run.
     */
   private def deploymentRef(name: String): String = {
     require(name.matches("[A-Za-z0-9_-]+"),
-      s"deployment name must match [A-Za-z0-9_-]+, got '$name' — '.', " +
-        "':' and '/' would resolve outside the _deployments/ namespace")
+      s"deployment name must match [A-Za-z0-9_-]+, got '$name' — it is a " +
+        "path segment under the _deployments/ namespace")
     s"_deployments/$name"
   }
 
@@ -632,10 +521,11 @@ object Catalog {
     */
   def latestDeploymentVersion(spark: SparkSession, root: String,
       name: String): Option[Long] =
-    latestVersion(spark, root, deploymentRef(name))
+    latestBundleVersion(spark, root, deploymentRef(name))
 
   /** Read a deployment pin set (`None` = the current deployment) —
-    * bounded at a row per artifact; refuses duplicates loudly.
+    * bounded at a row per artifact; refuses duplicates loudly. Read with
+    * the member's recorded schema, so no Parquet footer is opened.
     */
   def readDeployment(spark: SparkSession, root: String, name: String,
       version: Option[Long] = None): Map[String, Long] = {
@@ -644,9 +534,9 @@ object Catalog {
     // the current deployment is resolved on every call (a flip or a
     // rollback shows on the next serve); only the immutable pin set of
     // the resolved version is memoized
-    val v = version.orElse(latestVersion(spark, root, ref))
-    def read(): Map[String, Long] = {
-      val rows = readVersion(spark, root, ref, v)
+    val v = resolveVersion(spark, root, ref, version, "readDeployment")
+    memoAtBundle(spark, root, ref, v, "pins") {
+      val rows = readBundleTable(spark, root, ref, "pins", Some(v))
         .select(col("artifact"), col("version"))
         .collect().map(r => r.getString(0) -> r.getLong(1))
       val m = rows.toMap
@@ -654,8 +544,6 @@ object Catalog {
         s"readDeployment: duplicate artifact rows in '$name' under $root")
       m
     }
-    v.fold(read())(n => memoAt(spark,
-      new HPath(s"${versionsDir(root, ref)}/$n/_SUCCESS"), "pins")(read()))
   }
 
   /** Every deployment name with at least one committed pin set under
@@ -667,9 +555,9 @@ object Catalog {
     val f = fsFor(spark, base)
     if (!f.exists(base)) return Seq.empty
     f.listStatus(base).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.endsWith("_versions"))
-      .map(_.getPath.getName.stripSuffix("_versions")).sorted
-      .filter(n => latestVersion(spark, root, deploymentRef(n)).isDefined)
+      .filter(st => st.isDirectory && st.getPath.getName.endsWith("_bundle"))
+      .map(_.getPath.getName.stripSuffix("_bundle")).sorted
+      .filter(n => latestDeploymentVersion(spark, root, n).isDefined)
   }
 
   /** The bundle versions some LIVE deployment under `root` currently
@@ -732,9 +620,8 @@ object Catalog {
     // maintenance flip lands before ours, that decision is stale (the
     // racer's change would vanish from the served set) and must be
     // re-taken against the new history, not silently overridden
-    val cur = latestDeploymentVersion(spark, root, name)
-      .getOrElse(sys.error(s"rollbackDeployment: no committed " +
-        s"deployment '$name' under $root"))
+    val cur = resolveVersion(spark, root, deploymentRef(name), None,
+      "rollbackDeployment")
     commitDeployment(spark, root, name,
       readDeployment(spark, root, name, Some(toVersion)),
       expectedVersion = Some(cur))
@@ -761,14 +648,11 @@ object Catalog {
     */
   def realignStack(spark: SparkSession, root: String,
       deployment: String): Map[String, Long] = {
-    val depV = latestDeploymentVersion(spark, root, deployment)
-      .getOrElse(sys.error(s"realignStack: no committed deployment " +
-        s"'$deployment' under $root"))
+    val depV = resolveVersion(spark, root, deploymentRef(deployment), None,
+      "realignStack")
     val pins = readDeployment(spark, root, deployment, Some(depV))
     val newPins = pins.toSeq.sortBy(_._1).map { case (art, pv) =>
-      val latest = latestBundleVersion(spark, root, art)
-        .getOrElse(sys.error(s"realignStack: pinned artifact '$art' " +
-          s"has no committed bundle versions under $root"))
+      val latest = resolveVersion(spark, root, art, None, "realignStack")
       art -> (if (latest == pv) pv
               else restoreBundleVersion(spark, root, art, pv))
     }.toMap
@@ -778,27 +662,26 @@ object Catalog {
     newPins
   }
 
-  /** Retention for the deployment table ITSELF — each flip is a tiny
+  /** Retention for the deployment history ITSELF — each flip is a tiny
     * committed version, but a stack that flips hourly accumulates
     * thousands, and the history IS the rollback horizon: `keep` bounds
     * how far back [[rollbackDeployment]] can reach (it reads the
     * pin-set history, not the bundles), so set it to the incident
     * window the stack needs, not 1. The current deployment is never
-    * dropped (pointer-target rule of [[pruneVersions]], which this
-    * delegates to with the namespaced ref — same `minAgeMs` reader
-    * grace, same victim arithmetic as every versioned table).
+    * dropped: this is [[pruneBundleVersions]] on the namespaced pin-set
+    * bundle — same `minAgeMs` reader grace, same victim arithmetic.
     */
   def pruneDeploymentHistory(spark: SparkSession, root: String,
       name: String, keep: Int, minAgeMs: Long = 0L): Unit =
-    pruneVersions(spark, root, deploymentRef(name), keep, minAgeMs)
+    pruneBundleVersions(spark, root, deploymentRef(name), keep, minAgeMs)
 
-  /** The dry-run matching [[pruneDeploymentHistory]] — [[storeHealth]]
-    * over the namespaced deployment table, same report-equals-action
+  /** The dry-run matching [[pruneDeploymentHistory]] — [[bundleHealth]]
+    * over the namespaced pin-set bundle, same report-equals-action
     * contract.
     */
   def deploymentHealth(spark: SparkSession, root: String, name: String,
       keep: Int, minAgeMs: Long = 0L): DataFrame =
-    storeHealth(spark, root, deploymentRef(name), keep, minAgeMs)
+    bundleHealth(spark, root, deploymentRef(name), keep, minAgeMs)
 
   /** One health report for the WHOLE deployed stack — the union
     * operating a deployment actually asks for ("is this stack safe to
@@ -873,9 +756,8 @@ object Catalog {
     // maintenance flip (another takedown, an operator rollback) landing
     // between this read and the commit refuses loudly instead of having
     // its change silently discarded by our stale pin set
-    val depV = latestDeploymentVersion(spark, root, deployment)
-      .getOrElse(sys.error(s"takedownStack: no committed deployment " +
-        s"'$deployment' under $root"))
+    val depV = resolveVersion(spark, root, deploymentRef(deployment), None,
+      "takedownStack")
     val pins = readDeployment(spark, root, deployment, Some(depV))
     require(retract.keySet == pins.keySet,
       s"takedownStack: retractions ${retract.keySet.toSeq.sorted} must " +
@@ -888,115 +770,6 @@ object Catalog {
     commitDeployment(spark, root, deployment, newPins,
       expectedVersion = Some(depV))
     newPins
-  }
-
-  /** Drop committed versions older than the newest `keep` — retention
-    * for the immutable history. The pointer target is never dropped, and
-    * `keep` counts COMMITTED versions only (a crashed writer's garbage
-    * never consumes a retention slot; it is reclaimed here instead, both
-    * uncommitted numbered directories and stale `.staging-*` leftovers).
-    *
-    * `minAgeMs` is the reader grace period: nothing whose modification
-    * time is younger than `now − minAgeMs` is deleted, regardless of the
-    * keep count — so a long-running time-travel reader on an old version
-    * keeps its files for at least that long after the version was
-    * superseded. 0 (the default) reclaims immediately.
-    */
-  def pruneVersions(spark: SparkSession, root: String, ref: String,
-      keep: Int, minAgeMs: Long = 0L): Unit = {
-    require(keep >= 1, s"pruneVersions: keep=$keep must be >= 1")
-    val base = new HPath(versionsDir(root, ref))
-    val f = fsFor(spark, base)
-    if (!f.exists(base)) return
-    val latest = latestVersion(spark, root, ref).getOrElse(return)
-    versionVictims(f, base, keep, minAgeMs,
-      p => f.exists(new HPath(p, "_SUCCESS")), latest)
-      .foreach(p => f.delete(p, true))
-    pruneGarbage(f, base, p => f.exists(new HPath(p, "_SUCCESS")), minAgeMs)
-  }
-
-  /** The version directories a [[pruneVersions]](keep, minAgeMs) call
-    * WOULD delete — the one decision function the prune and the
-    * [[storeHealth]] report share, so a dry-run can never disagree
-    * with the action it predicts.
-    */
-  private def versionVictims(f: FileSystem, base: HPath, keep: Int,
-      minAgeMs: Long, committed: HPath => Boolean,
-      latest: Long): Seq[HPath] = {
-    val old = graceFilter(f, base, minAgeMs)
-    val committedVs = f.listStatus(base).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.forall(_.isDigit))
-      .map(_.getPath)
-      .filter(committed)
-      .map(_.getName.toLong)
-    committedVs.sorted.reverse.drop(keep)
-      .filter(_ != latest).map(v => new HPath(base, v.toString))
-      .filter(old)
-  }
-
-  /** mtime-based retention grace: true iff the path is old enough to
-    * reclaim under `minAgeMs` (always true at the 0 default).
-    */
-  private def graceFilter(f: FileSystem, base: HPath,
-      minAgeMs: Long): HPath => Boolean = {
-    if (minAgeMs <= 0) _ => true
-    else {
-      val cutoff = System.currentTimeMillis() - minAgeMs
-      p => f.getFileStatus(p).getModificationTime <= cutoff
-    }
-  }
-
-  /** Minimum age before prune reclaims writer garbage, regardless of the
-    * caller's `minAgeMs`: a `.staging-*` directory (or an in-place
-    * writer's uncommitted numbered directory) younger than this may
-    * belong to a LIVE writer mid-claim, and deleting it would fail that
-    * writer's commit for no reason. One hour dwarfs any commit's
-    * staging window while still reclaiming crashed writers promptly.
-    * (Claim-time reclaim in [[claimVersionSlot]] is different: there the
-    * slot is being contended NOW, and an uncommitted occupant must yield
-    * — at worst a still-running legacy writer fails loudly and retries.)
-    */
-  private[graft] val GarbageGraceMs: Long = 60L * 60 * 1000
-
-  /** Reclaim crashed-writer leftovers under a versions/bundle base:
-    * `.staging-*` directories and numbered directories that never
-    * committed — both invisible to readers, both under
-    * `max(minAgeMs, GarbageGraceMs)` so a live writer's staging is
-    * never collected out from under it.
-    */
-  private def pruneGarbage(f: FileSystem, base: HPath,
-      committed: HPath => Boolean, minAgeMs: Long): Unit =
-    garbageVictims(f, base, committed, minAgeMs).foreach(p => f.delete(p, true))
-
-  /** The garbage paths a prune WOULD reclaim — shared by the prunes and
-    * [[storeHealth]], same dry-run-equals-action contract as
-    * [[versionVictims]].
-    */
-  private def garbageVictims(f: FileSystem, base: HPath,
-      committed: HPath => Boolean, minAgeMs: Long): Seq[HPath] =
-    garbageUnder(f, base, committed)
-      .filter(graceFilter(f, base, math.max(minAgeMs, GarbageGraceMs)))
-
-  /** Crashed-writer leftovers under a versions/bundle base: top-level
-    * `.staging-*` directories and uncommitted numbered directories, PLUS
-    * `.staging-*` stranded one level INSIDE committed numbered
-    * directories — a claim loser's rename nests its staging into the
-    * winner's dir, and if that writer crashed before adopting it the
-    * leftover is invisible to readers (dot-prefixed) but would otherwise
-    * leak disk forever, unseen by the top-level scan.
-    */
-  private def garbageUnder(f: FileSystem, base: HPath,
-      committed: HPath => Boolean): Seq[HPath] = {
-    val top = f.listStatus(base).toSeq.filter(_.isDirectory).map(_.getPath)
-    val direct = top.filter { p =>
-      val n = p.getName
-      n.startsWith(".staging-") || (n.forall(_.isDigit) && !committed(p))
-    }
-    val nested = top
-      .filter(p => p.getName.forall(_.isDigit) && committed(p))
-      .flatMap(p => f.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath)
-        .filter(_.getName.startsWith(".staging-")))
-    direct ++ nested
   }
 
   // ----------------------------------------------- versioned bundles
@@ -1080,8 +853,7 @@ object Catalog {
   def bundleManifest(spark: SparkSession, root: String, bundle: String,
       version: Option[Long] = None): BundleManifest = {
     val base = bundleDir(root, bundle)
-    val v = version.orElse(latestBundleVersion(spark, root, bundle))
-      .getOrElse(sys.error(s"bundleManifest: no committed versions under $base"))
+    val v = resolveVersion(spark, root, bundle, version, "bundleManifest")
     memoAtBundle(spark, root, bundle, v, "manifest") {
       val manifest = new HPath(s"$base/$v/_manifest")
       val f = fsFor(spark, manifest)
@@ -1144,32 +916,61 @@ object Catalog {
     dataSchema(df, cs.getOrElse(Nil))
   }
 
-  /** Atomic MULTI-table commit — the cross-table consistency
-    * [[commitVersion]]'s single-table protocol cannot give: all member
-    * tables land inside ONE new numbered version directory together
-    * with the `_manifest` file naming their data directories (the whole
-    * set published by a single staged directory rename), and only then
-    * does the bundle pointer flip. "Committed" = the manifest exists —
-    * a crash before the rename leaves only an invisible staging
-    * directory — so readers resolving every member through
-    * [[readBundleTable]] can never observe table A at version n and
-    * table B at n−1. A full-snapshot commit; it resets the batch-ingest
-    * history ([[appendBundle]] grows it).
+  /** Atomic commit of one or more member tables as the bundle's next
+    * version — the store's one commit protocol. A versioned table is a
+    * bundle with one member (`commitBundle(Seq(ref -> df), root, ref)`,
+    * read back with `readBundleTable(spark, root, ref, ref, v)`), and so
+    * is a deployment pin set ([[commitDeployment]]). Member data lands
+    * ONCE in a hidden staging directory; then an O(1) directory rename
+    * claims the next version slot, so the numbered directory appears
+    * atomically WITH the `_manifest` naming the members' data directories
+    * ([[claimVersionSlot]]), and only then does the `_latest` pointer
+    * flip. "Committed" = the manifest exists. A crash anywhere leaves
+    * readers on the previous version, or on the new one if its rename
+    * landed — monotone, never partial, because [[latestBundleVersion]]
+    * falls back to the highest committed directory whenever the pointer
+    * is missing or stale-low, and readers resolving every member through
+    * [[readBundleTable]] can never observe table A at version n and table
+    * B at n−1. Old versions stay readable (time travel) until
+    * [[pruneBundleVersions]] retention. A full-snapshot commit; it resets
+    * the batch-ingest history ([[appendBundle]] grows it).
     *
-    * Concurrency: the same optimistic staged-rename claim as
-    * [[commitVersion]] — racing committers both land, as distinct
-    * versions; each retry rewrites only the tiny manifest and costs one
-    * rename, never a data rewrite.
+    * Concurrency: OPTIMISTIC multi-writer. Racing writers compute the
+    * same `next`; one rename wins the slot, the loser detects the loss
+    * via its ownership marker (`_writer-<token>`, an underscore-hidden
+    * empty file that rides in the staged data — local/HDFS `rename` into
+    * a directory created concurrently NESTS the source instead of
+    * failing, so success must be verified, not assumed), re-reads the
+    * latest version, and re-claims under a bumped number — the data is
+    * never rewritten, each retry rewrites only the tiny manifest and is
+    * one rename. Racing committers both land, as distinct versions. A
+    * crashed writer leaves only an ignorable `.staging-*` directory
+    * (reclaimed by [[pruneBundleVersions]]), never a blocked version slot.
     *
-    * `supersedes`: a snapshot REPLACING a specific prior version (a
-    * compaction, a rebuild-from-read) passes the version its member
-    * frames were read from; the claim then verifies, atomically at
-    * every attempt, that no other commit has landed since — else it
-    * fails LOUDLY. Without it, a batch appended between the
-    * compaction's read and its commit would survive as a ledger id
-    * whose data the compacted snapshot silently dropped. `None` (the
-    * default) keeps the racing-committers-both-land semantics for
-    * independent snapshot writers.
+    * MULTI-writer claims additionally require ATOMIC directory rename
+    * (posix/HDFS). On object stores, where connectors emulate rename
+    * as copy+delete, two racers can interleave one slot (the
+    * uncommitted-target clear destroys a racer's in-flight copy) —
+    * USUALLY detected loudly via the foreign-marker check in
+    * [[claimVersionSlot]] (proven by CatalogSpec's shim), but the
+    * check is best-effort: a racer whose marker copy lands after our
+    * listing, or whose marker was destroyed mid-flight leaving only
+    * data files, interleaves undetected. Single-writer per store is
+    * the REQUIREMENT on non-atomic-rename filesystems; coordinate
+    * commits externally otherwise (the same caveat class as
+    * [[atomicSwap]]).
+    *
+    * `supersedes` turns the both-land semantics into a COMPARE-AND-SET:
+    * a snapshot REPLACING a specific prior version (a compaction, a
+    * rebuild-from-read, a deployment flip derived from the pins it read)
+    * passes that version; the claim then verifies, atomically at every
+    * attempt, that the new version lands directly on top of it — else it
+    * fails LOUDLY. Without it, a batch appended between the compaction's
+    * read and its commit would survive as a ledger id whose data the
+    * compacted snapshot silently dropped, and a maintenance flip would
+    * silently discard a racing operator's change ([[takedownStack]],
+    * [[rollbackDeployment]]). `None` (the default) keeps the
+    * racing-committers-both-land semantics for independent snapshots.
     */
   def commitBundle(tables: Seq[(String, DataFrame)], root: String,
       bundle: String, batchIds: Seq[String] = Nil,
@@ -1196,17 +997,18 @@ object Catalog {
     // batchIds seeds the ingest ledger: a snapshot BUILT from a batch
     // (the streaming twin's first micro-batch) records that batch's id,
     // so its post-crash replay is rejected by the same manifest check
-    val next = claimVersionSlot(f, base, staging, token,
-      p => f.exists(new HPath(p, "_manifest")), "commitBundle") { (n, st) =>
+    val next = claimVersionSlot(f, base, staging, token, "commitBundle") { (n, st) =>
       // next = newest committed + 1, so newest committed = n − 1: a
       // superseding snapshot that is not landing directly on top of the
       // version it was computed from would silently drop whatever landed
       // in between — refuse and let the caller re-read and retry
       supersedes.foreach { pv =>
         if (n - 1 != pv)
-          sys.error(s"commitBundle: store advanced past superseded " +
-            s"version $pv (newest committed is ${n - 1}) while this " +
-            "snapshot was being computed — re-read and retry")
+          sys.error(s"commitBundle: compare-and-set failed for '$bundle' " +
+            s"under $root — the store advanced past superseded version $pv " +
+            s"(newest committed is ${n - 1}): a concurrent writer flipped " +
+            "it while this snapshot was being computed, and landing it " +
+            "would silently discard that change; re-read and retry")
       }
       writeStagedManifest(f, st, BundleManifest(batchIds,
         tables.map { case (ref, _) =>
@@ -1230,7 +1032,7 @@ object Catalog {
     * window where data committed but the ledger entry didn't: they are
     * the same file.
     *
-    * Concurrency: optimistic, like [[commitVersion]]. The batch file
+    * Concurrency: optimistic, like [[commitBundle]]. The batch file
     * sets write ONCE into staging; each claim attempt re-reads the
     * NEWEST manifest (a racing append may have advanced it) and rebuilds
     * the merged manifest against it, so two concurrent appends of
@@ -1302,8 +1104,7 @@ object Catalog {
     graft.tools.Par.run(tables) { case (ref, df) =>
       writeMember(staging, ref, df, pre.parts) }
     f.create(new HPath(staging, s"_writer-$token"), true).close()
-    val next = claimVersionSlot(f, base, staging, token,
-      p => f.exists(new HPath(p, "_manifest")), "appendBundle") { (n, st) =>
+    val next = claimVersionSlot(f, base, staging, token, "appendBundle") { (n, st) =>
       val prior = bundleManifest(spark, root, bundle)
       if (prior.batches.contains(batchId)) false
       else {
@@ -1340,9 +1141,7 @@ object Catalog {
     // and pass it as `supersedes` so a batch that lands between this
     // read and the commit fails the compaction loudly instead of
     // having its data silently dropped from the compacted snapshot
-    val pv = latestBundleVersion(spark, root, bundle)
-      .getOrElse(sys.error(s"compactBundle: no committed versions for " +
-        s"'$bundle' under $root"))
+    val pv = resolveVersion(spark, root, bundle, None, "compactBundle")
     val prior = bundleManifest(spark, root, bundle, Some(pv))
     commitBundle(
       prior.dirs.keys.toSeq.sorted.map(ref =>
@@ -1384,9 +1183,7 @@ object Catalog {
       bundle: String, toVersion: Long): Long = {
     val base = new HPath(bundleDir(root, bundle))
     val f = fsFor(spark, base)
-    val cur = latestBundleVersion(spark, root, bundle)
-      .getOrElse(sys.error(s"restoreBundleVersion: no committed " +
-        s"versions for '$bundle' under $root"))
+    val cur = resolveVersion(spark, root, bundle, None, "restoreBundleVersion")
     val m = bundleManifest(spark, root, bundle, Some(toVersion))
     // validate at the flip (like commitDeployment's pin check): a
     // manifest can outlive file sets it references through the
@@ -1406,8 +1203,7 @@ object Catalog {
     val staging = new HPath(base, s".staging-$token")
     f.mkdirs(staging)
     f.create(new HPath(staging, s"_writer-$token"), true).close()
-    val next = claimVersionSlot(f, base, staging, token,
-      p => f.exists(new HPath(p, "_manifest")), "restoreBundleVersion") {
+    val next = claimVersionSlot(f, base, staging, token, "restoreBundleVersion") {
       (n, st) =>
         if (n - 1 != cur)
           sys.error(s"restoreBundleVersion: store advanced past version " +
@@ -1451,9 +1247,7 @@ object Catalog {
     // come from different versions, whatever commits race this call.
     // A caller whose rewrite fns themselves read OTHER members pins
     // the same version by resolving it first and passing `Some(v)`.
-    val pv = version.orElse(latestBundleVersion(spark, root, bundle))
-      .getOrElse(sys.error(s"rewriteBundleMembers: no committed " +
-        s"versions for '$bundle' under $root"))
+    val pv = resolveVersion(spark, root, bundle, version, "rewriteBundleMembers")
     val prior = bundleManifest(spark, root, bundle, Some(pv))
     require(rewrite.keySet.subsetOf(prior.dirs.keySet),
       s"rewriteBundleMembers: unknown member in ${rewrite.keys.toSeq} " +
@@ -1470,8 +1264,7 @@ object Catalog {
         fn(readBundleTable(spark, root, bundle, ref, Some(pv))), prior.parts)
     }.toMap
     f.create(new HPath(staging, s"_writer-$token"), true).close()
-    val next = claimVersionSlot(f, base, staging, token,
-      p => f.exists(new HPath(p, "_manifest")), "rewriteBundleMembers") {
+    val next = claimVersionSlot(f, base, staging, token, "rewriteBundleMembers") {
       (n, st) =>
         val cur = bundleManifest(spark, root, bundle)
         // the rewritten members were computed from `prior`'s file sets;
@@ -1495,14 +1288,24 @@ object Catalog {
     next
   }
 
-  /** Retention for bundle versions. Append manifests REFERENCE file
-    * sets living in older version directories, so this deletes only
-    * numbered directories that no kept manifest references — after a
-    * [[compactBundle]] (whose snapshot references only itself), all
-    * older directories become unreferenced and reclaimable. Same
-    * `minAgeMs` reader grace as [[pruneVersions]]: a version (or a
-    * crashed writer's staging leftover, reclaimed here too) younger
-    * than the grace survives regardless of the keep count.
+  // ------------------------------------------ retention and store health
+
+  /** Retention for bundle versions: drop committed versions older than
+    * the newest `keep`. `keep` counts COMMITTED versions only — a crashed
+    * writer's garbage never consumes a retention slot; it is reclaimed
+    * here instead, both uncommitted numbered directories and stale
+    * `.staging-*` leftovers. The latest version is never dropped. Append
+    * manifests REFERENCE file sets living in older version directories,
+    * so this deletes only numbered directories that no kept manifest
+    * references — after a [[compactBundle]] (whose snapshot references
+    * only itself), all older directories become unreferenced and
+    * reclaimable.
+    *
+    * `minAgeMs` is the reader grace period: nothing whose modification
+    * time is younger than `now − minAgeMs` is deleted, regardless of the
+    * keep count — so a long-running time-travel reader on an old version
+    * keeps its files for at least that long after the version was
+    * superseded. 0 (the default) reclaims immediately.
     */
   def pruneBundleVersions(spark: SparkSession, root: String,
       bundle: String, keep: Int, minAgeMs: Long = 0L,
@@ -1511,30 +1314,28 @@ object Catalog {
     val base = new HPath(bundleDir(root, bundle))
     val f = fsFor(spark, base)
     if (!f.exists(base)) return
-    bundleVictims(spark, f, root, bundle, base, keep, minAgeMs, pinned)
+    bundleVictims(spark, f, root, bundle, base, keep, minAgeMs, pinned)._1
       .foreach(p => f.delete(p, true))
-    pruneGarbage(f, base, p => f.exists(new HPath(p, "_manifest")), minAgeMs)
+    pruneGarbage(f, base, minAgeMs)
   }
 
   /** The version directories a [[pruneBundleVersions]](keep, minAgeMs,
-    * pinned) call WOULD delete — shared with [[bundleHealth]]; a kept
-    * manifest's file-set references protect the older directories they
-    * live in. `pinned` versions (the ones a live [[commitDeployment]]
-    * pin set names — a time-travel READER with a commitment) are kept
-    * regardless of the retention window, together with every directory
-    * their manifests reference: the retention contract x194 states,
-    * enforced by the prune's own decision path rather than left to
-    * operator arithmetic.
+    * pinned) call WOULD delete, and the versions the kept manifests
+    * reference — the one decision function the prune and
+    * [[bundleHealth]] share, so a dry-run can never disagree with the
+    * action it predicts. A kept manifest's file-set references protect
+    * the older directories they live in. `pinned` versions (the ones a
+    * live [[commitDeployment]] pin set names — a time-travel READER with
+    * a commitment) are kept regardless of the retention window, together
+    * with every directory their manifests reference: the retention
+    * contract x194 states, enforced by the prune's own decision path
+    * rather than left to operator arithmetic.
     */
   private def bundleVictims(spark: SparkSession, f: FileSystem,
       root: String, bundle: String, base: HPath, keep: Int,
-      minAgeMs: Long, pinned: Set[Long] = Set.empty): Seq[HPath] = {
+      minAgeMs: Long, pinned: Set[Long]): (Seq[HPath], Set[Long]) = {
     val old = graceFilter(f, base, minAgeMs)
-    val committed = f.listStatus(base).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.forall(_.isDigit))
-      .map(_.getPath)
-      .filter(p => f.exists(new HPath(p, "_manifest")))
-      .map(_.getName.toLong).sorted
+    val committed = committedVersions(f, base)
     // a pin naming no committed version is a stale or mistyped pin set
     // (or a pin whose version an unpinned prune already took): silently
     // dropping it would proceed with the protection lost and fail only
@@ -1551,85 +1352,104 @@ object Catalog {
       bundleManifest(spark, root, bundle, Some(v))
         .dirs.values.flatten.map(_.split("/").head.toLong)
     }.toSet ++ kept
-    committed.filterNot(referenced).map(v => new HPath(base, v.toString))
-      .filter(old)
+    (committed.filterNot(referenced).map(v => new HPath(base, v.toString))
+      .filter(old), referenced)
   }
 
-  // ------------------------------------- store health / prune dry-run
-
-  /** Store-health report over a versioned TABLE root — the dry-run an
-    * operator reads BEFORE reclaiming at 100 TB: one row per committed
-    * version and per writer-garbage leftover, with age/size telemetry
-    * and, for the given (keep, minAgeMs), whether the next
-    * [[pruneVersions]] call would reclaim it and why. The
-    * would_reclaim decision comes from the SAME functions the prune
-    * executes ([[versionVictims]] / [[garbageVictims]]), so the report
-    * can never disagree with the action it predicts (CatalogSpec pins
-    * report ≡ subsequent prune on the same fixture). Columns: kind,
-    * name (base-relative), version (−1 for garbage rows), committed,
-    * is_latest, age_ms, bytes, would_reclaim, reason — age_ms/bytes
-    * are telemetry (wall-clock/layout dependent); deterministic
-    * consumers select the rest.
+  /** mtime-based retention grace: true iff the path is old enough to
+    * reclaim under `minAgeMs` (always true at the 0 default).
     */
-  def storeHealth(spark: SparkSession, root: String, ref: String,
-      keep: Int, minAgeMs: Long = 0L): DataFrame = {
-    require(keep >= 1, s"storeHealth: keep=$keep must be >= 1")
-    val base = new HPath(versionsDir(root, ref))
-    val f = fsFor(spark, base)
-    val committedP = (p: HPath) => f.exists(new HPath(p, "_SUCCESS"))
-    val latest = latestVersion(spark, root, ref).getOrElse(-1L)
-    val victims = if (!f.exists(base)) Seq.empty[HPath]
-      else versionVictims(f, base, keep, minAgeMs, committedP, latest)
-    val garbage = if (!f.exists(base)) Seq.empty[HPath]
-      else garbageVictims(f, base, committedP, minAgeMs)
-    healthRows(spark, f, base, "table", committedP, latest, keep,
-      victims, garbage, referenced = None)
+  private def graceFilter(f: FileSystem, base: HPath,
+      minAgeMs: Long): HPath => Boolean = {
+    if (minAgeMs <= 0) _ => true
+    else {
+      val cutoff = System.currentTimeMillis() - minAgeMs
+      p => f.getFileStatus(p).getModificationTime <= cutoff
+    }
   }
 
-  /** [[storeHealth]] for a BUNDLE root, against [[pruneBundleVersions]]:
-    * additionally distinguishes versions that survive only because a
-    * kept manifest still references their file sets (`referenced`).
+  /** Minimum age before prune reclaims writer garbage, regardless of the
+    * caller's `minAgeMs`: a `.staging-*` directory (or an in-place
+    * writer's uncommitted numbered directory) younger than this may
+    * belong to a LIVE writer mid-claim, and deleting it would fail that
+    * writer's commit for no reason. One hour dwarfs any commit's
+    * staging window while still reclaiming crashed writers promptly.
+    * (Claim-time reclaim in [[claimVersionSlot]] is different: there the
+    * slot is being contended NOW, and an uncommitted occupant must yield
+    * — at worst a still-running legacy writer fails loudly and retries.)
+    */
+  private[graft] val GarbageGraceMs: Long = 60L * 60 * 1000
+
+  /** Reclaim crashed-writer leftovers under a bundle base:
+    * `.staging-*` directories and numbered directories that never
+    * committed — both invisible to readers, both under
+    * `max(minAgeMs, GarbageGraceMs)` so a live writer's staging is
+    * never collected out from under it.
+    */
+  private def pruneGarbage(f: FileSystem, base: HPath, minAgeMs: Long): Unit =
+    garbageVictims(f, base, minAgeMs).foreach(p => f.delete(p, true))
+
+  /** The garbage paths a prune WOULD reclaim — shared by the prune and
+    * [[bundleHealth]], same dry-run-equals-action contract as
+    * [[bundleVictims]].
+    */
+  private def garbageVictims(f: FileSystem, base: HPath,
+      minAgeMs: Long): Seq[HPath] =
+    garbageUnder(f, base)
+      .filter(graceFilter(f, base, math.max(minAgeMs, GarbageGraceMs)))
+
+  /** Crashed-writer leftovers under a bundle base: top-level
+    * `.staging-*` directories and uncommitted numbered directories, PLUS
+    * `.staging-*` stranded one level INSIDE committed numbered
+    * directories — a claim loser's rename nests its staging into the
+    * winner's dir, and if that writer crashed before adopting it the
+    * leftover is invisible to readers (dot-prefixed) but would otherwise
+    * leak disk forever, unseen by the top-level scan.
+    */
+  private def garbageUnder(f: FileSystem, base: HPath): Seq[HPath] = {
+    val top = f.listStatus(base).toSeq.filter(_.isDirectory).map(_.getPath)
+    val direct = top.filter { p =>
+      val n = p.getName
+      n.startsWith(".staging-") || (n.forall(_.isDigit) && !isCommitted(f, p))
+    }
+    val nested = top
+      .filter(p => p.getName.forall(_.isDigit) && isCommitted(f, p))
+      .flatMap(p => f.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath)
+        .filter(_.getName.startsWith(".staging-")))
+    direct ++ nested
+  }
+
+  /** Store-health report over a bundle root — the dry-run an operator
+    * reads BEFORE reclaiming at 100 TB: one row per committed version and
+    * per writer-garbage leftover, with age/size telemetry and, for the
+    * given (keep, minAgeMs, pinned), whether the next
+    * [[pruneBundleVersions]] call would reclaim it and why — including
+    * versions that survive only because a kept manifest still references
+    * their file sets (`referenced`). The would_reclaim decision comes
+    * from the SAME functions the prune executes ([[bundleVictims]] /
+    * [[garbageVictims]]), so the report can never disagree with the
+    * action it predicts (CatalogSpec pins report ≡ subsequent prune on
+    * the same fixture). Columns: kind (`bundle`; a caller unioning the
+    * reports of several stores relabels it), name (base-relative),
+    * version (−1 for garbage rows), committed, is_latest, age_ms, bytes,
+    * would_reclaim, reason — age_ms/bytes are telemetry (wall-clock/
+    * layout dependent); deterministic consumers select the rest.
     */
   def bundleHealth(spark: SparkSession, root: String, bundle: String,
       keep: Int, minAgeMs: Long = 0L,
       pinned: Set[Long] = Set.empty): DataFrame = {
+    import spark.implicits._
     require(keep >= 1, s"bundleHealth: keep=$keep must be >= 1")
     val base = new HPath(bundleDir(root, bundle))
     val f = fsFor(spark, base)
-    val committedP = (p: HPath) => f.exists(new HPath(p, "_manifest"))
-    val latest = latestBundleVersion(spark, root, bundle).getOrElse(-1L)
-    val committed = if (!f.exists(base)) Seq.empty[Long]
-      else f.listStatus(base).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.forall(_.isDigit))
-        .map(_.getPath).filter(committedP).map(_.getName.toLong).sorted
-    val kept = committed.takeRight(keep) ++ committed.filter(pinned.contains)
-    val referenced = kept.flatMap { v =>
-      bundleManifest(spark, root, bundle, Some(v))
-        .dirs.values.flatten.map(_.split("/").head.toLong)
-    }.toSet
-    val victims = if (!f.exists(base)) Seq.empty[HPath]
-      else bundleVictims(spark, f, root, bundle, base, keep, minAgeMs,
-        pinned)
-    val garbage = if (!f.exists(base)) Seq.empty[HPath]
-      else garbageVictims(f, base, committedP, minAgeMs)
-    healthRows(spark, f, base, "bundle", committedP, latest, keep,
-      victims, garbage, referenced = Some(referenced), pinned = pinned)
-  }
-
-  /** Assemble the health rows: committed versions first, then garbage.
-    * Reasons are presentation; the reclaim DECISION is the victim sets
-    * passed in (computed by the prune's own functions).
-    */
-  private def healthRows(spark: SparkSession, f: FileSystem, base: HPath,
-      kind: String, committedP: HPath => Boolean, latest: Long, keep: Int,
-      victims: Seq[HPath], garbage: Seq[HPath],
-      referenced: Option[Set[Long]],
-      pinned: Set[Long] = Set.empty): DataFrame = {
-    import spark.implicits._
+    val cols = Seq("kind", "name", "version", "committed", "is_latest",
+      "age_ms", "bytes", "would_reclaim", "reason")
     if (!f.exists(base))
       return Seq.empty[(String, String, Long, Boolean, Boolean, Long, Long,
-        Boolean, String)].toDF("kind", "name", "version", "committed",
-        "is_latest", "age_ms", "bytes", "would_reclaim", "reason")
+        Boolean, String)].toDF(cols: _*)
+    val latest = latestIn(f, base).getOrElse(-1L)
+    val (victims, referenced) =
+      bundleVictims(spark, f, root, bundle, base, keep, minAgeMs, pinned)
     val now = System.currentTimeMillis()
     // base-relative display name, robust to scheme/authority differences
     // between listStatus results and the caller-built base path
@@ -1638,13 +1458,13 @@ object Catalog {
       val s = HPath.getPathWithoutSchemeAndAuthority(p).toString
       if (s.startsWith(b + "/")) s.substring(b.length + 1) else p.getName
     }
+    // reasons are presentation; the reclaim DECISION is the victim sets
+    // computed by the prune's own functions
     val victimNames = victims.map(_.getName).toSet
-    val garbageNames = garbage.map(relName).toSet
-    val committedVs = f.listStatus(base).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.forall(_.isDigit))
-      .map(_.getPath).filter(committedP).map(_.getName.toLong).sorted
-    val keptWindow = committedVs.takeRight(keep).toSet
-    val vRows = committedVs.map { v =>
+    val garbageNames = garbageVictims(f, base, minAgeMs).map(relName).toSet
+    val committed = committedVersions(f, base)
+    val keptWindow = committed.takeRight(keep).toSet
+    val vRows = committed.map { v =>
       val p = new HPath(base, v.toString)
       val reclaim = victimNames.contains(v.toString)
       val reason =
@@ -1652,33 +1472,44 @@ object Catalog {
         else if (v == latest) "latest"
         else if (pinned.contains(v)) "pinned"
         else if (keptWindow.contains(v)) "keep-window"
-        else if (referenced.exists(_.contains(v))) "referenced"
+        else if (referenced.contains(v)) "referenced"
         else "reader-grace"
-      (kind, v.toString, v, true, v == latest,
+      ("bundle", v.toString, v, true, v == latest,
         now - f.getFileStatus(p).getModificationTime,
         f.getContentSummary(p).getLength, reclaim, reason)
     }
-    val gRows = garbageUnder(f, base, committedP).map { p =>
+    val gRows = garbageUnder(f, base).map { p =>
       val rel = relName(p)
       val reclaim = garbageNames.contains(rel)
-      (kind, rel, -1L, false, false,
+      ("bundle", rel, -1L, false, false,
         now - f.getFileStatus(p).getModificationTime,
         f.getContentSummary(p).getLength, reclaim,
         if (reclaim) "garbage" else "writer-grace")
     }
-    (vRows ++ gRows).toDF("kind", "name", "version", "committed",
-      "is_latest", "age_ms", "bytes", "would_reclaim", "reason")
+    (vRows ++ gRows).toDF(cols: _*)
   }
 
-  /** The bundle's newest committed version — committed = manifest
-    * present; same pointer-with-fallback contract as [[latestVersion]].
+  /** The bundle's newest committed version: the `_latest` pointer,
+    * validated against the committed directories ([[latestIn]]).
     */
   def latestBundleVersion(spark: SparkSession, root: String,
       bundle: String): Option[Long] = {
     val base = new HPath(bundleDir(root, bundle))
-    val f = fsFor(spark, base)
-    latestIn(f, base, p => f.exists(new HPath(p, "_manifest")))
+    latestIn(fsFor(spark, base), base)
   }
+
+  /** The bundle version `op` works on: `version` when given, else the
+    * newest committed one, resolved ONCE so every member read of the
+    * operation goes through the same version (resolving latest per member
+    * would let a commit landing between the reads pair one version's
+    * member with another's). Fails naming `op` when the bundle has no
+    * committed version; whether a given version is committed is checked
+    * by the read itself.
+    */
+  def resolveVersion(spark: SparkSession, root: String, bundle: String,
+      version: Option[Long], op: String): Long =
+    version.orElse(latestBundleVersion(spark, root, bundle)).getOrElse(
+      sys.error(s"$op: no committed versions of '$bundle' under $root"))
 
   /** Read one member table at a committed bundle version (`None` =
     * latest): the union of the manifest's file sets for that member, read
@@ -1690,8 +1521,7 @@ object Catalog {
   def readBundleTable(spark: SparkSession, root: String, bundle: String,
       ref: String, version: Option[Long] = None): DataFrame = {
     val base = bundleDir(root, bundle)
-    val v = version.orElse(latestBundleVersion(spark, root, bundle))
-      .getOrElse(sys.error(s"bundleManifest: no committed versions under $base"))
+    val v = resolveVersion(spark, root, bundle, version, "readBundleTable")
     // memoized per session: the file listing runs once per committed
     // version, not once per serve
     memoAtBundle(spark, root, bundle, v, s"member:$ref", perSession = true) {

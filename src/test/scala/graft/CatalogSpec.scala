@@ -11,6 +11,13 @@ class CatalogSpec extends AnyFunSuite {
   import SparkTestSession.spark
   import spark.implicits._
 
+  /** A versioned table: the one-member bundle `t` under `root`. */
+  private def commitT(root: String, n: Long): Long =
+    Catalog.commitBundle(Seq("t" -> (1L to n).toDF("id")), root, "t")
+  private def readT(root: String, v: Option[Long] = None) =
+    Catalog.readBundleTable(spark, root, "t", "t", v)
+  private def latestT(root: String) = Catalog.latestBundleVersion(spark, root, "t")
+
   test("tableName parses proj:ds.table / ds.table / bare forms") {
     assert(Catalog.tableName("proj:ds.table") === "table")
     assert(Catalog.tableName("ds.table") === "table")
@@ -367,38 +374,42 @@ class CatalogSpec extends AnyFunSuite {
 
   test("versioned table: commit/time-travel/prune; crash states never serve a partial table") {
     val root = Files.createTempDirectory("graft-vt").toString
-    val v1 = Catalog.commitVersion((1L to 10L).toDF("id"), root, "t")
-    val v2 = Catalog.commitVersion((1L to 25L).toDF("id"), root, "t")
+    // a store with no committed version refuses, naming the read
+    val none = intercept[RuntimeException](readT(root))
+    assert(none.getMessage.startsWith("readBundleTable: no committed versions"),
+      none.getMessage)
+    val v1 = commitT(root, 10L)
+    val v2 = commitT(root, 25L)
     assert(v1 == 1L && v2 == 2L)
-    assert(Catalog.latestVersion(spark, root, "t").contains(2L))
-    assert(Catalog.readVersion(spark, root, "t").count() == 25L)
-    assert(Catalog.readVersion(spark, root, "t", Some(1L)).count() == 10L)
+    assert(latestT(root).contains(2L))
+    assert(readT(root).count() == 25L)
+    assert(readT(root, Some(1L)).count() == 10L)
 
-    val base = new java.io.File(Catalog.versionsDir(root, "t"))
+    val base = new java.io.File(Catalog.bundleDir(root, "t"))
     // crash AFTER data commit, BEFORE pointer flip: simulate by deleting
     // the pointer — the committed-directory fallback still serves v2
     assert(new java.io.File(base, "_latest").delete())
-    assert(Catalog.latestVersion(spark, root, "t").contains(2L))
-    assert(Catalog.readVersion(spark, root, "t").count() == 25L)
+    assert(latestT(root).contains(2L))
+    assert(readT(root).count() == 25L)
 
-    // crash MID data write: an uncommitted directory (no _SUCCESS) is
+    // crash MID data write: an uncommitted directory (no _manifest) is
     // invisible to latest and refused by an explicit read
-    val v3 = Catalog.commitVersion((1L to 30L).toDF("id"), root, "t")
+    val v3 = commitT(root, 30L)
     assert(v3 == 3L)
     val stale = new java.io.File(base, "4")
     assert(stale.mkdir())
     java.nio.file.Files.write(new java.io.File(stale, "part-0.parquet").toPath,
       Array[Byte](0))
-    assert(Catalog.latestVersion(spark, root, "t").contains(3L))
+    assert(latestT(root).contains(3L))
     intercept[IllegalArgumentException] {
-      Catalog.readVersion(spark, root, "t", Some(4L))
+      readT(root, Some(4L))
     }
 
     // retention: prune to the newest 1 — old versions drop, latest stays
-    Catalog.pruneVersions(spark, root, "t", keep = 1)
+    Catalog.pruneBundleVersions(spark, root, "t", keep = 1)
     assert(!new java.io.File(base, "1").exists())
     assert(!new java.io.File(base, "2").exists())
-    assert(Catalog.readVersion(spark, root, "t").count() == 30L)
+    assert(readT(root).count() == 30L)
   }
 
   test("versioned bundle: multi-table commit is all-or-nothing; members resolve through one version") {
@@ -485,7 +496,7 @@ class CatalogSpec extends AnyFunSuite {
       new Thread(() => {
         for (i <- 1 to 2) {
           val n = (w * 100 + i).toLong
-          val v = Catalog.commitVersion((1L to n).toDF("id"), root, "t")
+          val v = commitT(root, n)
           results.add((v, n))
         }
       })
@@ -497,47 +508,46 @@ class CatalogSpec extends AnyFunSuite {
     assert(got.map(_._1).sorted == (1L to 6L), s"versions: ${got.map(_._1)}")
     // each version serves exactly the data its committer wrote
     got.foreach { case (v, n) =>
-      assert(Catalog.readVersion(spark, root, "t", Some(v)).count() == n,
-        s"version $v corrupted")
+      assert(readT(root, Some(v)).count() == n, s"version $v corrupted")
     }
     // pointer ends on the highest committed version
-    assert(Catalog.latestVersion(spark, root, "t").contains(6L))
+    assert(latestT(root).contains(6L))
   }
 
-  test("commitVersion reclaims a crashed writer's uncommitted slot instead of wedging") {
+  test("commit reclaims a crashed writer's uncommitted slot instead of wedging") {
     val root = Files.createTempDirectory("graft-wedge").toString
-    assert(Catalog.commitVersion((1L to 5L).toDF("id"), root, "t") == 1L)
+    assert(commitT(root, 5L) == 1L)
     // a crashed legacy in-place writer left a partial version 2: no
-    // _SUCCESS — before the staged-claim protocol this slot was
+    // _manifest — before the staged-claim protocol this slot was
     // permanently unwritable (every retry recomputed next=2 and failed)
-    val base = new java.io.File(Catalog.versionsDir(root, "t"))
+    val base = new java.io.File(Catalog.bundleDir(root, "t"))
     val stale = new java.io.File(base, "2")
     assert(stale.mkdir())
     java.nio.file.Files.write(new java.io.File(stale, "part-0.parquet").toPath,
       Array[Byte](1, 2, 3))
-    val v2 = Catalog.commitVersion((1L to 7L).toDF("id"), root, "t")
+    val v2 = commitT(root, 7L)
     assert(v2 == 2L, s"expected reclaimed slot 2, got $v2")
-    assert(Catalog.readVersion(spark, root, "t", Some(2L)).count() == 7L)
+    assert(readT(root, Some(2L)).count() == 7L)
   }
 
   test("prune grace: versions younger than minAge survive regardless of keep count") {
     val root = Files.createTempDirectory("graft-grace").toString
-    (1 to 3).foreach(i => Catalog.commitVersion((1L to i.toLong).toDF("id"), root, "t"))
+    (1 to 3).foreach(i => commitT(root, i.toLong))
     // all three versions were just written: an hour-long grace keeps them
-    Catalog.pruneVersions(spark, root, "t", keep = 1, minAgeMs = 3600L * 1000)
-    val base = new java.io.File(Catalog.versionsDir(root, "t"))
+    Catalog.pruneBundleVersions(spark, root, "t", keep = 1, minAgeMs = 3600L * 1000)
+    val base = new java.io.File(Catalog.bundleDir(root, "t"))
     def versions() = base.listFiles.filter(f =>
       f.isDirectory && f.getName.forall(_.isDigit)).map(_.getName.toLong).toSet
     assert(versions() == Set(1L, 2L, 3L), s"grace violated: ${versions()}")
     // without the grace the same call reclaims immediately
-    Catalog.pruneVersions(spark, root, "t", keep = 1)
+    Catalog.pruneBundleVersions(spark, root, "t", keep = 1)
     assert(versions() == Set(3L))
     // a fresh staging dir is NEVER collected (it may belong to a live
     // writer mid-claim): garbage reclaim has its own 1h floor even at
     // minAgeMs = 0
     val liveStaging = new java.io.File(base, ".staging-livewriter")
     assert(liveStaging.mkdir())
-    Catalog.pruneVersions(spark, root, "t", keep = 1)
+    Catalog.pruneBundleVersions(spark, root, "t", keep = 1)
     assert(liveStaging.exists(), "live writer's staging dir was collected")
 
     val v1 = Catalog.commitBundle(Seq("a" -> (1L to 4L).toDF("id")), root, "p")
@@ -679,8 +689,8 @@ class CatalogSpec extends AnyFunSuite {
 
   test("prune reclaims a crashed loser's staging NESTED inside a committed version dir") {
     val root = Files.createTempDirectory("graft-nested").toString
-    (1 to 2).foreach(i => Catalog.commitVersion((1L to i.toLong).toDF("id"), root, "t"))
-    val base = new java.io.File(Catalog.versionsDir(root, "t"))
+    (1 to 2).foreach(i => commitT(root, i.toLong))
+    val base = new java.io.File(Catalog.bundleDir(root, "t"))
     // a claim loser's rename nested its staging into the winner's v2 and
     // the loser crashed before adopting it — invisible to readers, and
     // before the nested scan invisible to retention too
@@ -689,15 +699,15 @@ class CatalogSpec extends AnyFunSuite {
     java.nio.file.Files.write(new java.io.File(nested, "_writer-crashed").toPath,
       Array.empty[Byte])
     // fresh: the 1h garbage floor protects it (could be a live writer)
-    Catalog.pruneVersions(spark, root, "t", keep = 2)
+    Catalog.pruneBundleVersions(spark, root, "t", keep = 2)
     assert(nested.exists(), "fresh nested staging must survive the grace floor")
     // age it past the floor: now it is reclaimable garbage
     val old = System.currentTimeMillis() - 2L * 3600 * 1000
     assert(nested.setLastModified(old))
-    Catalog.pruneVersions(spark, root, "t", keep = 2)
+    Catalog.pruneBundleVersions(spark, root, "t", keep = 2)
     assert(!nested.exists(), "aged nested staging leaked")
     // the committed version it was nested in still serves
-    assert(Catalog.readVersion(spark, root, "t", Some(2L)).count() == 2L)
+    assert(readT(root, Some(2L)).count() == 2L)
   }
 
   test("concurrent appendBundle: same batch id lands exactly once; distinct ids both land") {
@@ -729,10 +739,10 @@ class CatalogSpec extends AnyFunSuite {
     assert(Catalog.readBundleTable(spark, root, "q", "rows").count() == 21L)
   }
 
-  test("storeHealth/bundleHealth: dry-run equals the subsequent prune, aged garbage included") {
+  test("store health: dry-run equals the subsequent prune, aged garbage included") {
     val root = Files.createTempDirectory("graft-health").toString
-    (1 to 4).foreach(i => Catalog.commitVersion((1L to i.toLong).toDF("id"), root, "t"))
-    val base = new java.io.File(Catalog.versionsDir(root, "t"))
+    (1 to 4).foreach(i => commitT(root, i.toLong))
+    val base = new java.io.File(Catalog.bundleDir(root, "t"))
     // a crashed writer's staging, aged PAST the 1h garbage floor: the
     // report must call it reclaimable and the prune must then take it
     val dead = new java.io.File(base, ".staging-crashed")
@@ -741,7 +751,7 @@ class CatalogSpec extends AnyFunSuite {
     // and a live writer's fresh staging: reported, NOT reclaimable
     val live = new java.io.File(base, ".staging-live")
     assert(live.mkdir())
-    val rep = Catalog.storeHealth(spark, root, "t", keep = 2).collect()
+    val rep = Catalog.bundleHealth(spark, root, "t", keep = 2).collect()
       .map(r => (r.getString(1), r.getBoolean(7), r.getString(8))).toSet
     assert(rep == Set(
       ("1", true, "retention"), ("2", true, "retention"),
@@ -749,10 +759,10 @@ class CatalogSpec extends AnyFunSuite {
       (".staging-crashed", true, "garbage"),
       (".staging-live", false, "writer-grace")), s"report: $rep")
     // telemetry columns are populated (ages non-negative, sizes >= 0)
-    val tele = Catalog.storeHealth(spark, root, "t", keep = 2)
+    val tele = Catalog.bundleHealth(spark, root, "t", keep = 2)
       .where(col("age_ms") < 0 || col("bytes") < 0).count()
     assert(tele == 0)
-    Catalog.pruneVersions(spark, root, "t", keep = 2)
+    Catalog.pruneBundleVersions(spark, root, "t", keep = 2)
     val left = base.listFiles.filter(_.isDirectory).map(_.getName).toSet
     val predicted = rep.collect { case (n, false, _) => n }
     assert(left == predicted,
@@ -820,15 +830,15 @@ class CatalogSpec extends AnyFunSuite {
     // deployments there single-write or coordinate externally) — and
     // the protocol now detects that state loudly via the foreign
     // root-level writer marker instead of publishing interleaved data
-    assert(Catalog.commitVersion((1L to 3L).toDF("id"), root, "t") == 1L)
-    assert(Catalog.commitVersion((1L to 5L).toDF("id"), root, "t") == 2L)
-    assert(Catalog.readVersion(spark, root, "t", Some(1L)).count() == 3L)
-    assert(Catalog.readVersion(spark, root, "t", Some(2L)).count() == 5L)
+    assert(commitT(root, 3L) == 1L)
+    assert(commitT(root, 5L) == 2L)
+    assert(readT(root, Some(1L)).count() == 3L)
+    assert(readT(root, Some(2L)).count() == 5L)
     (3L to 8L).foreach { v =>
-      assert(Catalog.commitVersion((1L to v).toDF("id"), root, "t") == v)
-      assert(Catalog.readVersion(spark, root, "t", Some(v)).count() == v)
+      assert(commitT(root, v) == v)
+      assert(readT(root, Some(v)).count() == v)
     }
-    assert(Catalog.latestVersion(spark, root, "t").contains(8L))
+    assert(latestT(root).contains(8L))
     Catalog.commitBundle(Seq("m" -> (1L to 4L).toDF("id")), root, "b", Seq("b0"))
     assert(Catalog.appendBundle(Seq("m" -> (5L to 6L).toDF("id")), root, "b", "b1"))
     assert(!Catalog.appendBundle(Seq("m" -> (5L to 6L).toDF("id")), root, "b", "b1"),
@@ -982,7 +992,7 @@ class CatalogSpec extends AnyFunSuite {
           m.where(col("id") =!= id))))
     // operator B's ENTIRE takedown completes inside operator A's window
     // (between A's pin read and A's flip) — injected via A's first
-    // retract closure. Under commitVersion's optimistic both-land
+    // retract closure. Under the commit's optimistic both-land
     // semantics both flips would "succeed" and A's stale pin set would
     // silently discard B's retractions (removed ids serve again, no
     // error anywhere); the compare-and-set makes A the loud loser.
@@ -1410,5 +1420,21 @@ class CatalogSpec extends AnyFunSuite {
     // memoized pins (b -> 1) must not answer it
     assert(Catalog.commitDeployment(spark, root, "serving", Map("b" -> 2L)) == 1L)
     assert(Catalog.readDeployment(spark, root, "serving") == Map("b" -> 2L))
+  }
+
+  test("first read of a fresh pin-set version: at most one SQL execution and no job outside one") {
+    val root = Files.createTempDirectory("graft-pinread").toString
+    Catalog.commitBundle(Seq("m" -> (1L to 5L).toDF("id")), root, "b")
+    Catalog.commitBundle(Seq("m" -> (1L to 8L).toDF("id")), root, "b")
+    Catalog.commitDeployment(spark, root, "serving", Map("b" -> 1L))
+    assert(Catalog.readDeployment(spark, root, "serving") == Map("b" -> 1L))
+    // the pin set is a one-member bundle read with its recorded schema:
+    // the new version's first read opens no Parquet footer, so its only
+    // work is the collect's own SQL execution
+    Catalog.commitDeployment(spark, root, "serving", Map("b" -> 2L))
+    var pins = Map.empty[String, Long]
+    val c = SparkCounts.of(spark) { pins = Catalog.readDeployment(spark, root, "serving") }
+    assert(pins == Map("b" -> 2L))
+    assert(c.executions <= 1 && c.jobsOutside == 0, s"first pin-set read ran $c")
   }
 }

@@ -1065,7 +1065,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(hq(11L) == 313L && hp((12L, 11L)) == -313L, s"$hq $hp")
   }
 
-  // ---- committed-version memo: what a deployed serve may reuse (Catalog.memoAt)
+  // ---- committed-version memo: what a deployed serve may reuse (Catalog.memoAtBundle)
 
   private object ServeCache {
     import graft.operators.{AnnIndex, Embeddings, RelOps, TextIndex}
