@@ -2150,13 +2150,10 @@ object SparkEntry {
     // (deterministic: stored quantizer/books, tie-broken ranks) — same
     // contract family as x78/x87. Measured (RecallProbe): 0.875 / 0.825 /
     // 0.7 at sf0.001/0.01/0.1 — floor 0.65 sits under the weakest point.
-    // Since round 14 a thin alias of the BUNDLE-backed store (the
-    // unledgered flat build is retired from all non-test callers and
-    // kept only as the rebuild baseline inside x186/x187/x188's
-    // equivalence checks): writeBundle runs the same deterministic
-    // trainCentroids/encodeAssign, so the index bytes — and the pinned
-    // recall floors — are unchanged; the store protocol underneath is
-    // the atomic one.
+    // Since round 14 a thin alias of the BUNDLE-backed store, the only
+    // ANN index layout: writeBundle runs the deterministic
+    // trainCentroids/encodeAssign, so the pinned recall floors held
+    // across the move; the store protocol underneath is the atomic one.
     "x95_stored_ann_index" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
       val q = e.where(col("vec_id") < 8)
@@ -2187,10 +2184,9 @@ object SparkEntry {
     // corpus. Measured recall (deterministic): 0.925 / 0.875 / 0.775 at
     // sf0.001/0.01/0.1 — floor 0.7 under the weakest point.
     // Since round 14 a thin alias of the LEDGERED bundle append (x182
-    // is the canonical bundle-store query; the flat marker-less append
-    // is retired): same frozen-quantizer arithmetic (spill read back
-    // from the params member instead of trusted to the caller), same
-    // oracle and recall floors.
+    // is the canonical bundle-store query): same frozen-quantizer
+    // arithmetic (spill read back from the params member instead of
+    // trusted to the caller), same oracle and recall floors.
     "x96_stored_index_append" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
       val base = e.where(col("vec_id") % 10 =!= 0)
@@ -2463,9 +2459,9 @@ object SparkEntry {
     // size). Conjunctive serve: docs holding ALL query terms — exact set
     // semantics the oracle replays from raw text.
     // Since round 14 a thin alias of the BUNDLE-backed store (x186 is
-    // the canonical bundle-store query; the flat build is retired to a
-    // rebuild baseline): same postings pass, same shard-pruned serve
-    // core, same oracle — the store protocol underneath is atomic.
+    // the canonical bundle-store query): same postings pass, same
+    // shard-pruned serve, same oracle — the store protocol underneath is
+    // atomic.
     "x129_stored_text_index" -> ((s, dir) => {
       val root = s"/tmp/graft/x129_bnd_${storeTag(dir)}"
       deleteRecursively(new java.io.File(root))
@@ -2960,8 +2956,7 @@ object SparkEntry {
     // twice with the same batch id: the second call is a replay and
     // must be a no-op — a double-append would double every pair row
     // and flip the oracle hash. Since round 13 this key is a thin
-    // alias of the BUNDLE-backed store (the marker-file flat store is
-    // retired from all non-test callers; x174 is the canonical bundle
+    // alias of the BUNDLE-backed store (x174 is the canonical bundle
     // ingest) — the declared key stays stable, the oracle is
     // unchanged, and the store underneath is the atomic one.
     "x159_pair_store_ingest" -> ((s, dir) => {
@@ -3065,9 +3060,8 @@ object SparkEntry {
     // overlap (RecallProbe, deterministic): 0.6 / 0.8 / 0.8 at
     // sf0.001/0.01/0.1 — floor 0.5 sits under the weakest point.
     // Since round 14 the serve runs on the atomic BUNDLE stores
-    // (hybridStoredServeBundle — shared BM25/ADC cores, so ranks and
-    // the pinned overlap floors are unchanged; the flat stores are
-    // retired to rebuild baselines inside x186/x187/x188).
+    // (hybridStoredServeBundle — the same BM25/ADC arithmetic, so ranks
+    // and the pinned overlap floors held across the move).
     "x165_hybrid_stored_serve" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val e = t(s, dir, "embeddings")
@@ -3165,8 +3159,7 @@ object SparkEntry {
     // is checked end to end: doubled counts from a replay, a lost batch,
     // or a load-convention drift each flip the hash.
     // Since round 13 this key is a thin alias of the BUNDLE-backed LM
-    // store (the flat swap→marker store is retired from all non-test
-    // callers; x179 is the canonical bundle ingest with compaction) —
+    // store (x179 is the canonical bundle ingest with compaction) —
     // declared key and oracle unchanged, the store underneath atomic.
     "x169_lm_count_merge" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
@@ -3367,8 +3360,8 @@ object SparkEntry {
     // deterministic): 0.9 / 0.6 / 0.7 at sf0.001/0.01/0.1 — floor 0.5
     // sits under the weakest point.
     // Since round 14 the serve runs on the atomic BUNDLE stores
-    // (threeStageServeBundle — shared cores end to end, same floors;
-    // flat stores retired to rebuild baselines).
+    // (threeStageServeBundle — the same arithmetic end to end, same
+    // floors).
     "x176_three_stage_serve" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val e = t(s, dir, "embeddings")
@@ -3376,7 +3369,7 @@ object SparkEntry {
       val terms = Seq("join", "hash", "vector")
       val root = s"/tmp/graft/x176_bnd_${storeTag(dir)}"
       deleteRecursively(new java.io.File(root))
-      // threeStageServe's alignment contract: index only the EMBEDDED
+      // threeStageServeBundle's alignment contract: index only the EMBEDDED
       // docs (at sf0.1 the corpus has docs without vectors) — a fused
       // candidate must resolve to a vector or the MMR stage fails loudly
       // the two stores share no state and land in different bundles —
@@ -3415,7 +3408,7 @@ object SparkEntry {
     // BATCHED multi-query serve (x183) — x176's production stack run
     // for EIGHT queries in ONE plan, the offline-eval / bulk-serving
     // shape: the postings scan prunes once to the union of the
-    // queries' term shards (bm25SearchBatch), the stored ANN serve
+    // queries' term shards (bm25SearchBatchBundle), the stored ANN serve
     // carries qid natively, fusion is per-qid (rrfFuseBatch) and the
     // MMR greedy runs per qid over the collected fused pools
     // (mmrRerankPoolBatch — Σ fuseK² pair rows, explicit cap). Checks
@@ -3435,8 +3428,8 @@ object SparkEntry {
       val batch = (0 until 8).map { i =>
         i.toLong -> Seq(vocab(i), vocab((i + 3) % 8)) }
       val qvecs = e.where(col("vec_id") < 8)
-      // since round 14 on the atomic BUNDLE stores (shared batch cores,
-      // same floors; flat stores retired to rebuild baselines)
+      // since round 14 on the atomic BUNDLE stores (same batch
+      // arithmetic, same floors)
       val root = s"/tmp/graft/x183_bnd_${storeTag(dir)}"
       deleteRecursively(new java.io.File(root))
       // alignment contract (see x176): index only the embedded docs
@@ -3576,7 +3569,7 @@ object SparkEntry {
     // the oracle hash (ledger preserved — x170's discipline; the counts
     // table is Heaps-bounded, so the rewrite is sublinear in corpus),
     // and serves the LM off the merged counts. Oracle is x169's refit
-    // replay VERBATIM: bundle-ingest ≡ flat-ingest ≡ refit end to end.
+    // replay VERBATIM: bundle-ingest ≡ refit end to end.
     "x179_lm_bundle_store" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val root = s"/tmp/graft/x179_lmb_${storeTag(dir)}"
@@ -3625,8 +3618,8 @@ object SparkEntry {
       val q = e.where(col("vec_id") < 1)
       val terms = Seq("join", "hash", "vector")
       val allowed = e.where(col("label") < 5).select(col("vec_id"))
-      // since round 14 on the atomic BUNDLE stores (shared cores, same
-      // floors; flat stores retired to rebuild baselines)
+      // since round 14 on the atomic BUNDLE stores (same arithmetic,
+      // same floors)
       val root = s"/tmp/graft/x180_bnd_${storeTag(dir)}"
       deleteRecursively(new java.io.File(root))
       // alignment contract (see x176): index only the embedded docs —
@@ -3904,9 +3897,9 @@ object SparkEntry {
     // centroids, codebooks, the build's spill and the cell-partitioned
     // codes publish in ONE manifest rename, so a crash mid-rebuild can
     // never pair new centroids with old codes, and appends are LEDGERED
-    // — the plan replays an append in-plan (rejected; the flat append
-    // would double-append, and duplicate nids then occupy multiple
-    // top-k slots in the exact re-rank). Three checks under the hash:
+    // — the plan replays an append in-plan (rejected; a double append
+    // would let duplicate nids occupy multiple top-k slots in the exact
+    // re-rank). Three checks under the hash:
     // result count, compaction_stable (EARNED — the engine serves the
     // same queries before and after compactBundle and anti-joins both
     // directions on (qid, nid, rank); the rewrite losing or doubling a
@@ -3968,8 +3961,8 @@ object SparkEntry {
     // never read or rewritten, the batch ledger preserved (the plan
     // replays an ingest after the takedown: still rejected). Two
     // earned equivalences under the hash: the text index's post-
-    // takedown BM25 serve anti-joins empty both ways against a flat
-    // index REBUILT without the removed docs (the corpus-stats
+    // takedown BM25 serve anti-joins empty both ways against a one-shot
+    // index REBUILT without the removed docs at a second root (the corpus-stats
     // compensation delta must land exactly — a wrong (−n, −Σdl) row
     // shifts avgdl and every score), and the ANN index's post-takedown
     // exhaustive serve (all cells probed, corpus-wide rerank) equals
@@ -3981,9 +3974,10 @@ object SparkEntry {
       val root = s"/tmp/graft/x188_td_${storeTag(dir)}"
       deleteRecursively(new java.io.File(root))
       val rmDocs = docs.where(col("doc_id") % 10 === 3).select(col("doc_id"))
-      val flat = s"/tmp/graft/x188_flat_${storeTag(dir)}"
-      // the bundle's build→append→retract chain and the flat
-      // rebuilt-without-the-ids baseline share no state — overlapped
+      val rebuilt = s"/tmp/graft/x188_rebuild_${storeTag(dir)}"
+      deleteRecursively(new java.io.File(rebuilt))
+      // the bundle's build→append→retract chain and the one-shot
+      // rebuilt-without-the-ids reference share no state — overlapped
       // (guide §2.6); `post` resolves the bundle's latest version, so it
       // is constructed only after the chain committed the retraction
       graft.tools.Par.together(
@@ -3997,11 +3991,11 @@ object SparkEntry {
             docs.where(col("doc_id") % 2 === 1), "b1"),
             "takedown must not reopen the ledger")
         },
-        () => TextIndex.writeRebuildBaseline(
-          docs.join(rmDocs, Seq("doc_id"), "left_anti"), flat))
+        () => TextIndex.writeBundle(
+          docs.join(rmDocs, Seq("doc_id"), "left_anti"), rebuilt, "tix"))
       val terms = Seq("join", "hash", "vector")
       val post = TextIndex.bm25SearchBundle(s, root, "tix", terms, k = 10)
-      val ref = TextIndex.bm25Search(s, flat, terms, k = 10)
+      val ref = TextIndex.bm25SearchBundle(s, rebuilt, "tix", terms, k = 10)
       val tkey = Seq("doc_id", "score_x10k", "rank")
       val t1 = post.select(tkey.map(col): _*)
         .join(ref.select(tkey.map(col): _*), tkey, "left_anti")
@@ -4039,15 +4033,17 @@ object SparkEntry {
     // The production stack FULLY on the bundle protocol (x187) — the
     // round's store migrations composed: x176's three-stage serve with
     // BOTH retrieval indexes resolved through atomic bundle manifests
-    // (x186 text + x182 ANN), and the one claim worth hashing: a
-    // bundle deployment serves EXACTLY what the flat deployment serves
-    // over the same corpus. Both stacks build in-plan from the same
-    // aligned corpus and the same trained codebooks (the deterministic
-    // builds share trainCentroids/encodeAssign and the postings pass),
-    // both serve through the shared cores, and the two final ranked
-    // lists anti-join both ways on the full (rank, nid, mmr4) row —
-    // a store-protocol-induced drift anywhere in postings, stats,
-    // codes, or manifest resolution flips matches_flat.
+    // (x186 text + x182 ANN), and the one claim worth hashing: a stack
+    // whose text index GREW by a ledgered append serves EXACTLY what the
+    // stack built in one shot serves over the same corpus. Both text
+    // bundles index the same aligned corpus — one in one commit, the
+    // other as its even docs plus an appended batch of the odd ones —
+    // and both stacks serve over the one ANN bundle through the same
+    // cores. The two final ranked lists anti-join both ways on the full
+    // (rank, nid, mmr4) row: a drift anywhere in the appended postings,
+    // the summed BM25 delta stats, RRF or MMR flips matches_flat (the
+    // oracle's column name, kept from the flat-directory reference it
+    // once compared against).
     "x187_bundle_stack_serve" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val e = t(s, dir, "embeddings")
@@ -4055,41 +4051,39 @@ object SparkEntry {
       val terms = Seq("join", "hash", "vector")
       val aligned = docs.join(e.select(col("vec_id").as("doc_id")),
         Seq("doc_id"), "left_semi")
-      val tix = s"/tmp/graft/x187_tix_${storeTag(dir)}"
-      val aix = s"/tmp/graft/x187_aix_${storeTag(dir)}"
       val root = s"/tmp/graft/x187_bnd_${storeTag(dir)}"
       deleteRecursively(new java.io.File(root))
-      // text side (flat baseline + bundle) and ANN side (train once,
-      // flat baseline + bundle) are independent — overlapped (guide
-      // §2.6); `books` stays inside the ANN thunk so both its writes
-      // encode against the one trained codebook exactly as before
+      // text side (one-shot + appended bundles) and ANN side (train
+      // once) are independent — overlapped (guide §2.6)
       graft.tools.Par.together(
         () => {
-          TextIndex.writeRebuildBaseline(aligned, tix)
           TextIndex.writeBundle(aligned, root, "tix",
             seedBatchIds = Seq("b0"))
+          TextIndex.writeBundle(aligned.where(col("doc_id") % 2 === 0),
+            root, "tix_appended", seedBatchIds = Seq("b0"))
+          require(TextIndex.appendBundle(s, root, "tix_appended",
+            aligned.where(col("doc_id") % 2 === 1), "b1"), "x187: append")
         },
         () => {
           val books = Embeddings.pqTrain(
             RelOps.hashSample(e, "vec_id", 0.25), m = 8, k = 16, iters = 3)
-          AnnIndex.writeRebuildBaseline(e, books, aix, nCentroids = 16,
-            trainIters = 4, spill = 2)
           AnnIndex.writeBundle(e, books, root, "ann", nCentroids = 16,
             trainIters = 4, spill = 2, seedBatchIds = Seq("b0"))
         })
-      val flat = Similarity.threeStageServe(s, tix, aix, e, terms, q,
+      val appended = Similarity.threeStageServeBundle(s, root, "tix_appended",
+        root, "ann", e, terms, q,
         k = 10, fuseK = 30, poolK = 50, rerank = 150, nProbe = 6)
-      val bundle = Similarity.threeStageServeBundle(s, root, "tix",
+      val oneShot = Similarity.threeStageServeBundle(s, root, "tix",
         root, "ann", e, terms, q,
         k = 10, fuseK = 30, poolK = 50, rerank = 150, nProbe = 6)
       val key = Seq("rank", "nid", "mmr4")
-      val m1 = bundle.select(key.map(col): _*)
-        .join(flat.select(key.map(col): _*), key, "left_anti")
+      val m1 = oneShot.select(key.map(col): _*)
+        .join(appended.select(key.map(col): _*), key, "left_anti")
         .agg(count(lit(1)).as("__m1"))
-      val m2 = flat.select(key.map(col): _*)
-        .join(bundle.select(key.map(col): _*), key, "left_anti")
+      val m2 = appended.select(key.map(col): _*)
+        .join(oneShot.select(key.map(col): _*), key, "left_anti")
         .agg(count(lit(1)).as("__m2"))
-      bundle.agg(count(lit(1)).as("n_results"))
+      oneShot.agg(count(lit(1)).as("n_results"))
         .crossJoin(broadcast(m1)).crossJoin(broadcast(m2))
         .select(col("n_results"),
           (col("__m1") + col("__m2") === lit(0L)).as("matches_flat"))
@@ -4099,18 +4093,17 @@ object SparkEntry {
     // joins the store protocol (x182 did the ANN side), completing the
     // migration: postings (shard-partitioned, layout declared in the
     // manifest) and the batch's meta delta publish in one manifest
-    // rename, appends are LEDGERED (replayed in-plan → rejected; the
-    // flat append would double posting rows, doubling tf AND df and
+    // rename, appends are LEDGERED (replayed in-plan → rejected; a
+    // double append would double posting rows, doubling tf AND df and
     // inflating every BM25 score the doc appears in), and corpus stats
-    // ride as per-batch delta rows summed at serve — the flat path's
-    // postings-append → meta-rewrite crash gap is gone. Three checks
-    // under the hash: result count, compaction_stable (pre/post-
-    // compaction BM25 serves anti-joined both ways on the full ranked
-    // row), and matches_flat — the bundle serve over base∪batch
-    // anti-joined both ways against a flat FULL-REBUILD index over the
-    // same corpus, on BOTH the BM25 ranked list and the positional
-    // phrase serve: ledgered incremental ingest must be byte-equivalent
-    // to rebuilding from scratch.
+    // ride as per-batch delta rows summed at serve. Three checks under
+    // the hash: result count, compaction_stable (pre/post-compaction
+    // BM25 serves anti-joined both ways on the full ranked row), and
+    // matches_flat — the bundle serve over base∪batch anti-joined both
+    // ways against a one-shot writeBundle of the same corpus at a second
+    // root, on BOTH the BM25 ranked list and the positional phrase
+    // serve: ledgered incremental ingest must be byte-equivalent to
+    // rebuilding from scratch.
     "x186_text_bundle_store" -> ((s, dir) => {
       val d = t(s, dir, "documents")
       val root = s"/tmp/graft/x186_tixb_${storeTag(dir)}"
@@ -4127,16 +4120,18 @@ object SparkEntry {
       require(!TextIndex.appendBundle(s, root, "tix", batch, "b1"),
         "compaction must not reopen the ledger")
       val post = TextIndex.bm25SearchBundle(s, root, "tix", terms, k = 10)
-      val flat = s"/tmp/graft/x186_flat_${storeTag(dir)}"
-      TextIndex.writeRebuildBaseline(d, flat)
-      val ref = TextIndex.bm25Search(s, flat, terms, k = 10)
+      val rebuilt = s"/tmp/graft/x186_rebuild_${storeTag(dir)}"
+      deleteRecursively(new java.io.File(rebuilt))
+      TextIndex.writeBundle(d, rebuilt, "tix")
+      val ref = TextIndex.bm25SearchBundle(s, rebuilt, "tix", terms, k = 10)
       val key = Seq("doc_id", "score_x10k", "rank")
       def diff(a: DataFrame, b: DataFrame, as: String) =
         a.select(key.map(col): _*).join(b.select(key.map(col): _*),
           key, "left_anti").agg(count(lit(1)).as(as))
       val ph = TextIndex.phraseSearchBundle(s, root, "tix",
         Seq("table", "hash"))
-      val phRef = TextIndex.phraseSearch(s, flat, Seq("table", "hash"))
+      val phRef = TextIndex.phraseSearchBundle(s, rebuilt, "tix",
+        Seq("table", "hash"))
       val pkey = Seq("doc_id", "n_occ")
       def pdiff(a: DataFrame, b: DataFrame, as: String) =
         a.select(pkey.map(col): _*).join(b.select(pkey.map(col): _*),
@@ -4354,8 +4349,8 @@ object SparkEntry {
     // probed, corpus-wide rerank) must equal brute force — a code row
     // lost in the rebuild, or encoded/decoded through mismatched
     // codebooks, flips ann_matches_exact. The text side re-tokenizes
-    // and must match a fresh flat rebuild row-for-row
-    // (text_matches_rebuild), with its ledger equally intact.
+    // and must match a fresh one-shot writeBundle at a second root
+    // row-for-row (text_matches_rebuild), with its ledger equally intact.
     "x193_reindex_under_serve" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val e = t(s, dir, "embeddings")
@@ -4364,8 +4359,8 @@ object SparkEntry {
       deleteRecursively(new java.io.File(root))
       // The ANN lifecycle (build 3/4 → append → pre-serve → retrain →
       // reindex → pinned/post serves → exact baseline) and the text
-      // lifecycle (build half → append → reindex → serve → flat-rebuild
-      // baseline) touch DIFFERENT bundles and share no state — the two
+      // lifecycle (build half → append → reindex → serve → one-shot
+      // rebuild reference) touch DIFFERENT bundles and share no state — the two
       // proof chains run overlapped (guide §2.6, graft.tools.Par); every
       // step inside each chain keeps its exact order, so each serve
       // still observes precisely the store state the proof needs
@@ -4397,7 +4392,7 @@ object SparkEntry {
             (pre, pinned, post, Similarity.bruteForceKnn(e, q, k = 10))
           },
           () => {
-            // text: base+append, reindex (re-tokenize), flat rebuild ref
+            // text: base+append, reindex (re-tokenize), one-shot rebuild ref
             TextIndex.writeBundle(docs.where(col("doc_id") % 2 === 0), root,
               "tix", seedBatchIds = Seq("t0"))
             require(TextIndex.appendBundle(s, root, "tix",
@@ -4408,9 +4403,10 @@ object SparkEntry {
               "text reindex must not reopen the ledger")
             val terms = Seq("join", "hash", "vector")
             val tpost = TextIndex.bm25SearchBundle(s, root, "tix", terms, k = 10)
-            val flat = s"/tmp/graft/x193_flat_${storeTag(dir)}"
-            TextIndex.writeRebuildBaseline(docs, flat)
-            (tpost, TextIndex.bm25Search(s, flat, terms, k = 10))
+            val rebuilt = s"/tmp/graft/x193_rebuild_${storeTag(dir)}"
+            deleteRecursively(new java.io.File(rebuilt))
+            TextIndex.writeBundle(docs, rebuilt, "tix")
+            (tpost, TextIndex.bm25SearchBundle(s, rebuilt, "tix", terms, k = 10))
           })
       val akey = Seq("qid", "nid", "rank")
       def adiff(a: DataFrame, b: DataFrame, as: String) =
@@ -4805,7 +4801,7 @@ object SparkEntry {
     def buildHybridBundles(s: SparkSession, dir: String): Unit = {
       val e = t(s, dir, "embeddings")
       deleteRecursively(new java.io.File(hybRoot(dir)))
-      // aligned build (threeStageServe contract): only embedded docs
+      // aligned build (threeStageServeBundle contract): only embedded docs
       TextIndex.writeBundle(t(s, dir, "documents")
         .join(e.select(col("vec_id").as("doc_id")), Seq("doc_id"),
           "left_semi"), hybRoot(dir), "tix", seedBatchIds = Seq("b0"))
@@ -4874,8 +4870,8 @@ object SparkEntry {
             docs.where(col("doc_id") % 5 =!= 4), lshIdx(dir),
             "doc_id", "text", threshold = 0.9)
         })),
-      // since round 13 an alias of the bundle ingest (flat store
-      // retired) — kept so the serve trend row stays continuous;
+      // since round 13 an alias of the bundle ingest — kept so the
+      // serve trend row stays continuous;
       // expect it to track x174's number
       "x159_pair_store_ingest" -> ((
         (s: SparkSession, dir: String) => {
@@ -5073,7 +5069,7 @@ object SparkEntry {
         })),
       // the bundle-backed ANN index: built + appended once (untimed),
       // the timed number is the manifest-resolved cell-pruned serve —
-      // trend-comparable to x95's flat-directory serve beside it
+      // trend-comparable to x95's one-shot bundle serve beside it
       "x182_ann_bundle_store" -> ((
         (s: SparkSession, dir: String) => {
           val e = t(s, dir, "embeddings")
@@ -5151,10 +5147,11 @@ object SparkEntry {
             .agg(count(lit(1)).as("n"), sum(col("val6")).as("sum_val6"),
               sum(col("bal_c")).as("sum_bal_c"))
         })),
-      // the fully bundle-backed production serve — read beside x176's
-      // flat-store serve_only: the manifest resolution and per-file-set
-      // union must add ~nothing at serve time, which this row proves
-      // round over round
+      // the fully bundle-backed production serve over the aligned
+      // corpus — read beside x176's serve_only (the same
+      // threeStageServeBundle over the whole corpus): the manifest
+      // resolution and per-file-set union must add ~nothing at serve
+      // time, which this row shows round over round
       "x187_bundle_stack_serve" -> ((
         (s: SparkSession, dir: String) => {
           val e = t(s, dir, "embeddings")
@@ -5178,9 +5175,9 @@ object SparkEntry {
             e.where(col("vec_id") < 1), k = 10, fuseK = 30, poolK = 50,
             rerank = 150, nProbe = 6)
         })),
-      // the text twin of x182's serve trend: BM25 off the bundle-backed
-      // postings (manifest-resolved file sets, shard predicate pruning
-      // each committed set's listing) — should track x129's flat serve
+      // the text twin of x182's serve trend: BM25 off postings grown by
+      // an append (two manifest-resolved file sets, the shard predicate
+      // pruning each set's listing) — should track x129's one-shot serve
       "x186_text_bundle_store" -> ((
         (s: SparkSession, dir: String) => {
           val d = t(s, dir, "documents")
@@ -8425,9 +8422,9 @@ object SparkEntry {
     "x183_batched_serve" ->
       ("SELECT CAST(80 AS BIGINT) AS n_results, " +
         "CAST(8 AS BIGINT) AS n_queries, TRUE AS overlap_ok"),
-    // the flat ≡ bundle equivalence of the WHOLE serving stack is
-    // EARNED in-plan (final ranked lists anti-joined both ways on the
-    // full row); the count is literal
+    // the appended-text ≡ one-shot equivalence of the WHOLE serving
+    // stack is EARNED in-plan (final ranked lists anti-joined both ways
+    // on the full row); the count is literal
     "x187_bundle_stack_serve" ->
       "SELECT CAST(10 AS BIGINT) AS n_results, TRUE AS matches_flat",
     // both takedown equivalences are EARNED in-plan (post-takedown
@@ -8438,7 +8435,7 @@ object SparkEntry {
         "CAST(30 AS BIGINT) AS n_ann_results, " +
         "TRUE AS text_matches_rebuild, TRUE AS ann_matches_exact"),
     // shape contract like x182: compaction stability and the
-    // bundle-serve ≡ flat-full-rebuild equivalence (BM25 ranked rows AND
+    // bundle-serve ≡ one-shot-rebuild equivalence (BM25 ranked rows AND
     // positional phrase rows, anti-joined both ways) are EARNED in-plan;
     // the append replay is require()d
     "x186_text_bundle_store" ->
@@ -8486,7 +8483,7 @@ object SparkEntry {
         "TRUE AS latest_clean"),
     // all three reindex claims are EARNED in-plan (pinned re-serve ≡
     // pre-reindex both ways; exhaustive post-reindex serve ≡ brute
-    // force; re-tokenized text ≡ flat rebuild) and both ledger replays
+    // force; re-tokenized text ≡ one-shot rebuild) and both ledger replays
     // are require()d; the counts are literal
     "x193_reindex_under_serve" ->
       ("SELECT CAST(30 AS BIGINT) AS n_ann_results, " +

@@ -15,14 +15,19 @@ import graft.sources.Catalog
   * one-shot query, wrong for a serving corpus where the expensive part
   * (training + encoding 10^9+ vectors) should run ONCE and every query
   * batch after that should be training-free. This module makes the index
-  * durable in the engine's native currency, parquet tables:
+  * durable in the engine's native currency, parquet tables, as the
+  * members of one versioned bundle ([[graft.sources.Catalog.commitBundle]]
+  * — every version's `_manifest` lists the file sets of each member):
   *
-  *   dir/centroids.parquet — (cell int, centroid array<double>), the
-  *     coarse quantizer; nCentroids rows, collected/broadcast at serve;
-  *   dir/books.parquet     — (sub int, code int, centroid array<double>),
-  *     the PQ codebooks relationalized; m×k rows;
-  *   dir/codes.parquet     — (id, pq array<int>) PARTITIONED BY cell: the
-  *     inverted lists ARE the directory layout.
+  *   centroids — (cell int, centroid array<double>), the coarse
+  *     quantizer; nCentroids rows, collected/broadcast at serve;
+  *   books     — (sub int, code int, centroid array<double>), the PQ
+  *     codebooks relationalized; m×k rows;
+  *   params    — one row (spill int), the build's own setting, so an
+  *     append assigns cells exactly as the build did;
+  *   codes     — (id, pq array<int>) PARTITIONED BY cell (declared in
+  *     the manifest): the inverted lists ARE the directory layout of
+  *     every file set.
   *
   * Serving reads centroids+books (bounded: nCentroids + m×k rows), reads
   * the query rows ONCE (one collect of qid, vector, norm and probe cells:
@@ -45,60 +50,6 @@ object AnnIndex {
 
   private def asDouble(c: org.apache.spark.sql.Column) =
     transform(c, x => x.cast("double"))
-
-  /** Build + write the index tables. One pass over `candidates` computes
-    * each vector's cell (nearest stored centroid) and PQ codes; the codes
-    * land partitioned by cell so serves prune at the directory level.
-    *
-    * `trainIters > 0` trains the quantizer with that many spherical
-    * k-means rounds instead of the hash-order sample — trained cells
-    * follow the corpus's direction clusters, a per-index cost amortized
-    * over every serve. `spill > 1` writes each vector into its `spill`
-    * nearest cells (index grows spill×): boundary vectors stay reachable
-    * from their second-closest cell, which is where a single-assignment
-    * IVF loses recall at low nProbe. The serve side collapses the
-    * resulting duplicate (qid, nid) pairs.
-    *
-    * REBUILD BASELINE, not a production store: a crash mid-rebuild can
-    * leave new centroids beside old codes, and
-    * [[appendRebuildBaseline]] replays are unguarded —
-    * [[writeBundle]] publishes all members atomically with a ledgered
-    * manifest and is the ONLY production write path. This entry point
-    * exists so the bundle store's equivalence checks (x188/x193, the
-    * specs) can build the flat comparison index through the exact same
-    * encode arithmetic; nothing in a deployment should call it, and the
-    * explicit name makes a stale caller visible at review rather than
-    * as a compile warning.
-    */
-  def writeRebuildBaseline(candidates: DataFrame,
-      books: => IndexedSeq[IndexedSeq[IndexedSeq[Double]]], dir: String,
-      nCentroids: Int = 16, trainIters: Int = 0, spill: Int = 1,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    require(spill >= 1,
-      s"AnnIndex.writeRebuildBaseline: spill=$spill must be >= 1")
-    val spark = candidates.sparkSession
-    // `books` is BY-NAME so a caller writing `writeBundle(c, pqTrain(...))`
-    // gets the two independent trainings (PQ codebooks vs the coarse
-    // quantizer's k-means) overlapped (guide §2.6): both are bounded
-    // driver-loop trainings over the same corpus whose per-iteration
-    // actions leave most cores idle, they share no state, and both are
-    // deterministic — overlap changes wall clock, never a value. A caller
-    // passing an already-computed value just evaluates a val reference.
-    val (bks, centroids) = graft.tools.Par.together(
-      () => books,
-      () => trainCentroids(candidates, nCentroids, trainIters, idCol, vecCol))
-    centroidsDf(spark, centroids)
-      .write.mode("overwrite").parquet(s"$dir/centroids.parquet")
-    booksDf(spark, bks)
-      .write.mode("overwrite").parquet(s"$dir/books.parquet")
-    // rebalance on cell before the partitioned write (guide §6): one
-    // size-bounded file set per cell directory instead of one file per
-    // (writer task × cell) — same fix as the bundle store's writeMember
-    encodeAssign(candidates, bks, centroids, spill, idCol, vecCol)
-      .hint("rebalance", col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$dir/codes.parquet")
-  }
 
   /** The quantizer, trained (spherical k-means) or hash-order sampled —
     * the one step of every index build that decides the cells.
@@ -144,71 +95,25 @@ object AnnIndex {
     withCell.select(col(idCol), col("pq"), col("cell"))
   }
 
-  /** INCREMENTAL maintenance: append a vector batch to the stored index
-    * WITHOUT retraining — the steady-state ingest path of a serving
-    * corpus. The quantizer and codebooks are read back FROZEN (so every
-    * existing code stays valid and serve-side cell planning is
-    * unchanged); the batch is PQ-encoded and cell-assigned through the
-    * exact same expressions as the original build (shared `encodeAssign`,
-    * same `spill` the index was built with), and its rows land as new
-    * files inside the existing cell directories (dynamic-partition
-    * append — untouched cells gain no files). Cost is one narrow map
-    * over the BATCH: nothing rescans or rewrites the existing corpus,
-    * which is the whole point at 100 TB.
-    *
-    * File-count maintenance: many appends leave one small file per batch
-    * in each touched cell directory;
-    * `Catalog.compactPartition(spark, dir, "codes", Seq(("cell", c)))`
-    * rewrites one cell in place (atomic swap) without touching the
-    * quantizer, codebooks, or serve planning.
-    *
-    * REBUILD BASELINE, not a production path: unledgered — a replayed
-    * batch double-appends, and duplicate nids then occupy multiple
-    * top-k slots in the exact re-rank. [[appendBundle]] records the
-    * batch id in the manifest atomically with the data and is the ONLY
-    * production append. Kept (explicitly named, test-only) for flat
-    * stores laid out by [[writeRebuildBaseline]].
-    */
-  def appendRebuildBaseline(spark: SparkSession, dir: String, batch: DataFrame,
-      spill: Int = 1,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val qz = flatQuantizer(spark, dir)
-    encodeAssign(batch, qz.books, qz.centroids, spill, idCol, vecCol)
-      .hint("rebalance", col("cell"))
-      .write.mode("append").partitionBy("cell")
-      .parquet(s"$dir/codes.parquet")
-  }
-
-  /** The quantizer, read back (bounded: nCentroids rows). */
-  def readCentroids(spark: SparkSession, dir: String): Seq[(Int, Seq[Double])] =
-    flatQuantizer(spark, dir).centroids
-
-  /** The PQ codebooks, read back (bounded: m×k rows). */
-  def readBooks(spark: SparkSession,
-      dir: String): IndexedSeq[IndexedSeq[IndexedSeq[Double]]] =
-    flatQuantizer(spark, dir).books
-
   /** A stored index's frozen quantizer: the coarse centroids (cell order),
-    * the PQ codebooks (sub, then code order) and the build's `spill`
-    * (1 for a flat index, which has no params table; its append takes
-    * spill from the caller).
+    * the PQ codebooks (sub, then code order) and the build's `spill`.
     */
   private final case class Quantizer(centroids: Seq[(Int, Seq[Double])],
       books: IndexedSeq[IndexedSeq[IndexedSeq[Double]]], spill: Int)
 
-  /** The one quantizer reader: centroids, codebooks and (bundle only)
-    * params ride ONE tagged-union collect — all three are bounded
-    * (nCentroids + m×k + 1 rows), so one action replaces three, each of
-    * which is fixed planning and job overhead.
+  /** The one quantizer reader: centroids, codebooks and params ride ONE
+    * tagged-union collect — all three are bounded (nCentroids + m×k + 1
+    * rows), so one action replaces three, each of which is fixed planning
+    * and job overhead.
     */
   private def readQuantizer(centroids: DataFrame, books: DataFrame,
-      params: Option[DataFrame]): Quantizer = {
+      params: DataFrame): Quantizer = {
     val tagged = centroids
       .select(lit(0).as("t"), col("cell").as("a"), lit(0).as("b"), col("centroid").as("v"))
       .unionByName(books
         .select(lit(1).as("t"), col("sub").as("a"), col("code").as("b"), col("centroid").as("v")))
-    val rows = params.fold(tagged)(p => tagged.unionByName(p.select(lit(2).as("t"),
-        col("spill").as("a"), lit(0).as("b"), lit(null).cast("array<double>").as("v"))))
+    val rows = tagged.unionByName(params.select(lit(2).as("t"),
+        col("spill").as("a"), lit(0).as("b"), lit(null).cast("array<double>").as("v")))
       .collect()
     def tag(t: Int) = rows.filter(_.getInt(0) == t)
     Quantizer(
@@ -216,15 +121,8 @@ object AnnIndex {
       tag(1).groupBy(_.getInt(1)).toIndexedSeq.sortBy(_._1).map { case (_, rs) =>
         rs.sortBy(_.getInt(2)).map(_.getSeq[Double](3).toIndexedSeq).toIndexedSeq
       },
-      tag(2).headOption.fold(1)(_.getInt(1)))
+      tag(2).head.getInt(1))
   }
-
-  /** The flat index's quantizer — uncached: a rebuild baseline rewrites
-    * its directory in place.
-    */
-  private def flatQuantizer(spark: SparkSession, dir: String): Quantizer =
-    readQuantizer(spark.read.parquet(s"$dir/centroids.parquet"),
-      spark.read.parquet(s"$dir/books.parquet"), None)
 
   /** The bundle index's quantizer at a committed version, memoized under
     * the file sets its three members list there
@@ -240,44 +138,20 @@ object AnnIndex {
     Catalog.memoAtBundle(spark, root, name, version, "annindex.quantizer",
         members = Seq("centroids", "books", "params")) {
       def member(ref: String) = Catalog.readBundleTable(spark, root, name, ref, Some(version))
-      readQuantizer(member("centroids"), member("books"), Some(member("params")))
+      readQuantizer(member("centroids"), member("books"), member("params"))
     }
 
-  /** Training-free serve from a stored index: probe cells planned on the
-    * driver, codes read partition-pruned, ADC shortlist, exact re-rank
-    * against the corpus's raw vectors. Returns (qid, nid, sim, rank) like
-    * every kNN in the family — a persisted, materialized frame; the
-    * caller owns its one unpersist (see [[graft.Lifecycle]]).
-    *
-    * `within` (one id column, any name) restricts the CANDIDATE set —
-    * filtered vector search over the same stored index. The semi-join
-    * lands on the cell-pruned decoded codes BEFORE ADC scoring, so a
-    * selective filter shrinks the shortlist work too; the exact re-rank
-    * only ever sees filtered candidates through the shortlist.
-    */
-  def knn(spark: SparkSession, dir: String, corpus: DataFrame,
-      queries: DataFrame, k: Int, rerank: Int = 50, nProbe: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      within: Option[DataFrame] = None,
-      withinPairs: Option[DataFrame] = None,
-      materialize: Boolean = true): DataFrame =
-    serveCore(spark, flatQuantizer(spark, dir),
-      spark.read.parquet(s"$dir/codes.parquet"), corpus, queries, k,
-      rerank, nProbe, idCol, vecCol, within, withinPairs, materialize)
-
-  /** The one serve plan both the flat-directory index and the
-    * bundle-backed index ([[knnBundle]]) run. Its probe action collects
-    * the query rows (qid, vector as doubles, norm, the nProbe nearest
-    * cells; |queries| × dims doubles on the driver, serve-sized); the
-    * distinct probe list is planned on the driver and prunes `codesAll`
+  /** The serve plan of [[knnBundle]], given the version's quantizer and
+    * codes member. Its probe action collects the query rows (qid,
+    * vector as doubles, norm, the nProbe nearest cells; |queries| × dims
+    * doubles on the driver, serve-sized); the distinct probe list is
+    * planned on the driver and prunes `codesAll`
     * (a partition filter — only the probed cell directories are listed).
     * The ADC join's probe side and the exact re-rank's query side are
     * driver-local relations over those rows, so the caller's query frame
     * is read once per serve. The ADC shortlist ranks and dedupes on one
-    * qid shuffle, then the exact re-rank. The codes SOURCE is the only
-    * thing that differs between the two stores, so their serves cannot
-    * drift. A qid on two query rows, or a null query vector, fails the
-    * serve with the qid named.
+    * qid shuffle, then the exact re-rank. A qid on two query rows, or a
+    * null query vector, fails the serve with the qid named.
     */
   private def serveCore(spark: SparkSession, qz: Quantizer,
       codesAll: DataFrame, corpus: DataFrame,
@@ -286,7 +160,7 @@ object AnnIndex {
       within: Option[DataFrame],
       withinPairs: Option[DataFrame] = None,
       materialize: Boolean = true): DataFrame = {
-    require(rerank > k, s"AnnIndex.knn: rerank=$rerank must exceed k=$k")
+    require(rerank > k, s"AnnIndex.knnBundle: rerank=$rerank must exceed k=$k")
     // the ONE read of the query rows. The plan below reads them from
     // driver-local relations: no per-request literal reaches its generated
     // code, and their exact size makes them the broadcast side
@@ -301,9 +175,9 @@ object AnnIndex {
     // serves neighbours in id order with null sims
     val dup = rows.groupBy(_.get(0)).collect { case (q, rs) if rs.size > 1 => q }
     require(dup.isEmpty,
-      s"AnnIndex.knn: qids ${dup.mkString(", ")} have more than one query row")
+      s"AnnIndex.knnBundle: qids ${dup.mkString(", ")} have more than one query row")
     val nul = rows.filter(_.isNullAt(1)).map(_.get(0))
-    require(nul.isEmpty, s"AnnIndex.knn: qids ${nul.mkString(", ")} have a null query vector")
+    require(nul.isEmpty, s"AnnIndex.knnBundle: qids ${nul.mkString(", ")} have a null query vector")
     val qSchema = StructType(read.schema.fields.take(3))
     def local(rs: Seq[Row], schema: StructType) = spark.createDataFrame(rs.asJava, schema)
     val probed = local(
@@ -361,12 +235,12 @@ object AnnIndex {
     if (materialize) graft.Lifecycle.withMaterialized()(exact) else exact
   }
 
-  // ------------- bundle-backed index: the manifest IS the ledger -------------
+  // ------------- the manifest IS the ledger -------------
 
-  /** Build the index ON the atomic bundle store
-    * ([[graft.sources.Catalog.commitBundle]]) — the store-protocol
-    * migration the flat [[writeRebuildBaseline]] lacks: centroids, codebooks and codes
-    * publish in ONE staged-directory rename, so a crash mid-rebuild can
+  /** Build + commit the index. One pass over `candidates` computes each
+    * vector's cell (nearest centroid) and PQ codes; centroids, codebooks,
+    * params and codes publish in ONE staged-directory rename
+    * ([[graft.sources.Catalog.commitBundle]]), so a crash mid-rebuild can
     * never leave new centroids beside old codes (codes encoded against
     * one codebook, decoded with another — wrong distances, no error).
     * The codes member keeps its cell partitioning (declared in the
@@ -375,6 +249,15 @@ object AnnIndex {
     * reads the build's own setting instead of trusting a caller to
     * repeat it. `seedBatchIds` records the creating batch(es) in the
     * manifest's ledger, closing the create-replay window.
+    *
+    * `trainIters > 0` trains the quantizer with that many spherical
+    * k-means rounds instead of the hash-order sample — trained cells
+    * follow the corpus's direction clusters, a per-index cost amortized
+    * over every serve. `spill > 1` writes each vector into its `spill`
+    * nearest cells (index grows spill×): boundary vectors stay reachable
+    * from their second-closest cell, which is where a single-assignment
+    * IVF loses recall at low nProbe. The serve side collapses the
+    * resulting duplicate (qid, nid) pairs.
     */
   def writeBundle(candidates: DataFrame,
       books: => IndexedSeq[IndexedSeq[IndexedSeq[Double]]], root: String,
@@ -384,9 +267,13 @@ object AnnIndex {
     require(spill >= 1, s"AnnIndex.writeBundle: spill=$spill must be >= 1")
     val spark = candidates.sparkSession
     import spark.implicits._
-    // by-name `books` + overlapped quantizer training — see
-    // [[writeRebuildBaseline]]: the two trainings are independent and
-    // deterministic, so overlap is a wall-clock-only change
+    // `books` is BY-NAME so a caller writing `writeBundle(c, pqTrain(...))`
+    // gets the two independent trainings (PQ codebooks vs the coarse
+    // quantizer's k-means) overlapped (guide §2.6): both are bounded
+    // driver-loop trainings over the same corpus whose per-iteration
+    // actions leave most cores idle, they share no state, and both are
+    // deterministic — overlap changes wall clock, never a value. A caller
+    // passing an already-computed value just evaluates a val reference.
     val (bks, centroids) = graft.tools.Par.together(
       () => books,
       () => trainCentroids(candidates, nCentroids, trainIters, idCol, vecCol))
@@ -412,8 +299,7 @@ object AnnIndex {
     * the new snapshot ([[graft.sources.Catalog.commitBundle]]), and
     * (c) in-flight serves pinned at the old version keep answering it
     * until retention ([[knnBundle]] `version`). `corpus` must be the
-    * store's current logical content — the caller's contract, same as
-    * every rebuild baseline.
+    * store's current logical content — the caller's contract.
     */
   def reindexBundle(spark: SparkSession, root: String, name: String,
       corpus: DataFrame,
@@ -424,8 +310,7 @@ object AnnIndex {
     val pv = Catalog.resolveVersion(spark, root, name, None,
       "AnnIndex.reindexBundle")
     val prior = Catalog.bundleManifest(spark, root, name, Some(pv))
-    // by-name `books` + overlapped quantizer training — see
-    // [[writeRebuildBaseline]]
+    // by-name `books` + overlapped quantizer training — see writeBundle
     val (bks, centroids) = graft.tools.Par.together(
       () => books,
       () => trainCentroids(corpus, nCentroids, trainIters, idCol, vecCol))
@@ -438,15 +323,20 @@ object AnnIndex {
       supersedes = Some(pv))
   }
 
-  /** LEDGERED incremental append — [[appendRebuildBaseline]] with the at-least-once
-    * residual closed: the batch's code rows land as a new file set via
-    * [[graft.sources.Catalog.appendBundle]] with the batch id IN the
-    * manifest, so a replayed append returns false with the index
-    * untouched (the flat append double-appends, and duplicate nid
-    * candidates then occupy multiple top-k slots in the exact re-rank,
-    * silently displacing real neighbors). The quantizer, codebooks AND
-    * the build's `spill` are read back frozen from the bundle itself —
-    * batch assignment runs the exact build arithmetic by construction.
+  /** LEDGERED incremental append WITHOUT retraining — the steady-state
+    * ingest path of a serving corpus. The quantizer, codebooks AND the
+    * build's `spill` are read back frozen from the bundle itself (so
+    * every existing code stays valid and serve-side cell planning is
+    * unchanged); the batch is PQ-encoded and cell-assigned through the
+    * exact build expressions (shared `encodeAssign`). Its code rows land
+    * as a new file set via [[graft.sources.Catalog.appendBundle]] with
+    * the batch id IN the manifest, so a replayed append returns false
+    * with the index untouched — a double-append would let duplicate nid
+    * candidates occupy multiple top-k slots in the exact re-rank,
+    * silently displacing real neighbors. Cost is one narrow map over the
+    * BATCH: nothing rescans or rewrites the existing corpus;
+    * [[graft.sources.Catalog.compactBundle]] collapses the file sets
+    * many appends leave, with the ledger preserved.
     */
   def appendBundle(spark: SparkSession, root: String, name: String,
       batch: DataFrame, batchId: String,
@@ -469,9 +359,23 @@ object AnnIndex {
       pinned = Some((v, Seq("centroids", "books", "params"))))
   }
 
-  /** Training-free serve off the BUNDLE-backed index — the same plan as
-    * [[knn]] (shared [[serveCore]]), with centroids/books/codes ALL
-    * resolved through ONE committed manifest version: `version` is
+  /** Training-free serve from the stored index: probe cells planned on
+    * the driver, codes read partition-pruned, ADC shortlist, exact
+    * re-rank against the corpus's raw vectors ([[serveCore]]). Returns
+    * (qid, nid, sim, rank) like every kNN in the family — with
+    * `materialize` (the default) a persisted, materialized frame whose
+    * one unpersist the caller owns (see [[graft.Lifecycle]]).
+    *
+    * `within` (one id column, any name) restricts the CANDIDATE set —
+    * filtered vector search over the same stored index. The semi-join
+    * lands on the cell-pruned decoded codes BEFORE ADC scoring, so a
+    * selective filter shrinks the shortlist work too; the exact re-rank
+    * only ever sees filtered candidates through the shortlist.
+    * `withinPairs` ((qid, id) rows) is per-query eligibility, applied to
+    * the scored (qid, nid) pairs before the rank window.
+    *
+    * Centroids/books/codes are ALL resolved through ONE committed
+    * manifest version: `version` is
     * resolved (to latest when `None`) exactly once at entry and
     * threaded through every member read, so a commit landing between
     * the reads can never pair one version's centroids with another's

@@ -280,8 +280,8 @@ object Dedup {
       minhashCandidates(df, idCol, textCol, shingleSize, numHashes, bands))
 
   /** [[minhashPairs]] with the banding replaced by a PRECOMPUTED bucket
-    * frame — the shape [[writePairStore]]/[[writePairBundle]] need: they
-    * must both STORE the buckets and derive the pair table, and running
+    * frame — the shape [[writePairBundle]] needs: it must both STORE the
+    * buckets and derive the pair table, and running
     * `lshBuckets` twice signatured the whole corpus twice. Same
     * candidates (shared [[candidatesFromBuckets]], same skew guard), same
     * exact verify, same persisted-result contract.
@@ -1048,8 +1048,8 @@ object Dedup {
 
   /** Persist a corpus's MinHash-LSH bucket index — the near-dup family's
     * STORED form, completing the stored-index matrix next to the ANN
-    * cells ([[graft.operators.AnnIndex.writeRebuildBaseline]]), the text postings
-    * ([[graft.operators.TextIndex.writeRebuildBaseline]]) and the decontamination
+    * cells ([[graft.operators.AnnIndex.writeBundle]]), the text postings
+    * ([[graft.operators.TextIndex.writeBundle]]) and the decontamination
     * shingle set ([[writeShingleIndex]]): [[lshBuckets]]' (id, band,
     * bucket) rows land partitioned by `band`, so the store grows by
     * whole files inside a fixed set of band directories and a serve
@@ -1131,143 +1131,15 @@ object Dedup {
       dir: String): DataFrame =
     spark.read.parquet(s"$dir/pairs.parquet")
 
-  /** The complete near-dup ingest bundle, built once: the LSH bucket
-    * index ([[writeLshIndex]]) AND the exact-verified pair table
-    * ([[writePairTable]]) land as siblings under `dir`, so
-    * [[appendPairStore]] can keep BOTH current with one batch-sized
-    * pass per ingest.
-    */
-  def writePairStore(df: DataFrame, dir: String, idCol: String,
-      textCol: String, threshold: Double, shingleSize: Int = 3,
-      numHashes: Int = 48, bands: Int = 12): Unit = {
-    // a rebuild starts a fresh ingest history: markers from the previous
-    // bundle's batches must not suppress this bundle's first ingests.
-    // The ledger clears BEFORE the table rewrites — a crash between
-    // ledger-clear and table-write only risks re-ingesting inputs the
-    // restarted rebuild overwrites anyway (benign), whereas the reverse
-    // order left stale markers that silently SKIPPED the new store's
-    // first batches after a crash between table-write and ledger-clear.
-    val ledger = new org.apache.hadoop.fs.Path(pairLedgerDir(dir))
-    val fs = ledger.getFileSystem(
-      df.sparkSession.sparkContext.hadoopConfiguration)
-    if (fs.exists(ledger)) { fs.delete(ledger, true); () }
-    // ONE signature/bucket pass feeds both artifacts: the stored bucket
-    // index and the pair table's LSH candidates are the SAME bucket rows,
-    // and building them independently ([[writeLshIndex]] +
-    // [[writePairTable]]) signatured the whole corpus twice. The bucket
-    // frame is materialized once, then the index write and the
-    // verify+write run overlapped (guide §2.6) off its cache. Bucket
-    // values, candidates, verify arithmetic: identical to the standalone
-    // builders (shared cores).
-    val buckets = lshBuckets(df, idCol, textCol, shingleSize, numHashes,
-        bands)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    buckets.count()
-    try {
-      graft.tools.Par.together(
-        () => buckets.hint("rebalance", col("band"))
-          .write.mode("overwrite").partitionBy("band")
-          .parquet(s"$dir/buckets.parquet"),
-        () => {
-          val pairs = minhashPairsFromBuckets(df, idCol, textCol,
-            threshold, shingleSize, buckets)
-          try pairs.hint("rebalance")
-            .write.mode("overwrite").parquet(s"$dir/pairs.parquet")
-          finally { pairs.unpersist(); () }
-        })
-      ()
-    } finally { buckets.unpersist(); () }
-  }
-
-  /** Batch-id ledger directory of a [[writePairStore]] bundle — one empty
-    * marker file per already-ingested batch id, beside `pairs.parquet`.
-    */
-  def pairLedgerDir(dir: String): String = s"$dir/.batch_ledger"
-
-  /** DEPRECATED in favor of [[ingestPairBundle]] — new code must take
-    * the bundle path. This is [[appendPairStore]] with marker-file
-    * replay protection: an id already present in the ledger
-    * ([[pairLedgerDir]]) is skipped outright, so a replayed batch
-    * cannot double-append pair AND bucket rows. Returns true iff the
-    * batch was ingested (false = replay, store untouched).
-    *
-    * Why deprecated: the pairs+buckets+marker sequence here is not
-    * atomic — a crash between the appends and the marker write replays
-    * the batch on retry (double-append). [[ingestPairBundle]] closes
-    * exactly that window by recording the batch id IN the bundle
-    * manifest ([[graft.sources.Catalog.appendBundle]]): data and replay
-    * ledger publish in one rename, no gap. Kept only as the flat-store
-    * API for stores already laid out by [[writePairStore]]; everything
-    * internal ([[graft.SparkEntry.pairTruth]], the streaming twin's
-    * recommended path) builds on the bundle store.
-    */
-  def ingestPairBatch(batch: DataFrame, corpus: DataFrame, dir: String,
-      batchId: String, threshold: Double, idCol: String = "doc_id",
-      textCol: String = "text", shingleSize: Int = 3, numHashes: Int = 48,
-      bands: Int = 12, maxBucketSize: Int = 1000): Boolean = {
-    require(batchId.nonEmpty && !batchId.contains("/"),
-      s"ingestPairBatch: batchId must be a plain name, got '$batchId'")
-    val marker = new org.apache.hadoop.fs.Path(pairLedgerDir(dir), batchId)
-    val fs = marker.getFileSystem(
-      batch.sparkSession.sparkContext.hadoopConfiguration)
-    if (fs.exists(marker)) false
-    else {
-      appendPairStore(batch, corpus, dir, idCol, textCol, threshold,
-        shingleSize, numHashes, bands, maxBucketSize)
-      fs.create(marker, true).close()
-      true
-    }
-  }
-
-  /** Ingest one batch into a [[writePairStore]] bundle — the production
-    * 100 TB growth path for the single most re-consumed dedup artifact:
-    * the batch is signatured ONCE; its cross-corpus matches come from
-    * the stored bucket index ([[matchesAgainstLshIndex]] — the corpus
-    * is never re-signatured), its within-batch pairs from the ordinary
-    * batch-sized [[minhashPairs]], both append to the pair table
-    * (canonicalized a < b), and the batch's own buckets append to the
-    * index so the NEXT batch sees it as corpus. Append ≡ rebuild
-    * row-for-row (DedupSpec pins it): signatures are pure functions of
-    * the text, so "same bucket" is decided identically whether two docs
-    * arrived together or apart — exact as long as no bucket crosses
-    * `maxBucketSize` (the lossless regime; the guard populations differ
-    * between the incremental and one-shot shapes, so cap-crossing
-    * buckets are where the two could legitimately diverge).
-    *
-    * Caller contract: `corpus` is exactly the already-ingested
-    * document set (needed only to re-shingle semi-join-pruned verify
-    * candidates); batch ids are new.
-    */
-  def appendPairStore(batch: DataFrame, corpus: DataFrame, dir: String,
-      idCol: String, textCol: String, threshold: Double,
-      shingleSize: Int = 3, numHashes: Int = 48, bands: Int = 12,
-      maxBucketSize: Int = 1000): Unit = {
-    // the cross-corpus match (stored buckets ⋈ batch) and the
-    // within-batch pair pass share no state and each materializes its
-    // own persisted result internally — run them overlapped (guide
-    // §2.6); values are deterministic, only wall clock changes
-    val (cross, within) = graft.tools.Par.together(
-      () => matchesAgainstLshIndex(batch, corpus, dir, idCol, textCol,
-        threshold, shingleSize, numHashes, bands, maxBucketSize),
-      () => minhashPairs(batch, idCol, textCol, threshold,
-        shingleSize, numHashes, bands))
-    try {
-      cross
-        .select(least(col("new_id"), col("corpus_id")).as("a"),
-          greatest(col("new_id"), col("corpus_id")).as("b"), col("jaccard"))
-        .unionByName(within.select(col("a"), col("b"), col("jaccard")))
-        .hint("rebalance")
-        .write.mode("append").parquet(s"$dir/pairs.parquet")
-    } finally { cross.unpersist(); within.unpersist(); () }
-    appendLshIndex(batch, dir, idCol, textCol, shingleSize, numHashes, bands)
-  }
-
   // ----------------------------- pair bundle on the atomic bundle store
 
-  /** The near-dup pair bundle ON the atomic versioned-bundle store —
-    * the migration the marker-file path ([[ingestPairBatch]]) documents
-    * as its remaining step: pairs and buckets commit TOGETHER as one
-    * bundle version ([[graft.sources.Catalog.commitBundle]]), so no
+  /** The complete near-dup ingest store, built once: the LSH bucket
+    * index (the [[writeLshIndex]] rows) AND the exact-verified pair table
+    * (the [[writePairTable]] rows) as the two members of one atomic
+    * versioned bundle, so [[ingestPairBundle]] can keep BOTH current
+    * with one batch-sized pass per ingest. Pairs and buckets commit
+    * TOGETHER as one bundle version
+    * ([[graft.sources.Catalog.commitBundle]]), so no
     * reader can observe the pair table at ingest n with the bucket
     * index at n−1, and the batch LEDGER lives inside the manifest —
     * data and replay guard publish in the same rename, with no
@@ -1281,10 +1153,13 @@ object Dedup {
       shingleSize: Int = 3, numHashes: Int = 48, bands: Int = 12,
       extraMembers: Seq[(String, DataFrame)] = Nil,
       batchIds: Seq[String] = Nil): Long = {
-    // ONE signature/bucket pass feeds both members (see
-    // [[writePairStore]]): the buckets member and the pair table's LSH
-    // candidates are the same bucket rows; materialize once, commit both
-    // (commitBundle overlaps the member writes off this cache)
+    // ONE signature/bucket pass feeds both members: the buckets member
+    // and the pair table's LSH candidates are the same bucket rows, and
+    // building them independently (writeLshIndex + writePairTable) would
+    // signature the whole corpus twice. Materialize once, commit both
+    // (commitBundle overlaps the member writes off this cache); bucket
+    // values, candidates and verify arithmetic are the standalone
+    // builders' (shared cores)
     val buckets = lshBuckets(df, idCol, textCol, shingleSize, numHashes,
         bands)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1297,14 +1172,27 @@ object Dedup {
     finally { pairs.unpersist(); buckets.unpersist(); () }
   }
 
-  /** One batch ingest into a [[writePairBundle]] store — the same
-    * arithmetic as [[appendPairStore]] (cross matches off the stored
-    * buckets, within-batch pairs locally, the batch's buckets joining
-    * the index), but published ATOMICALLY: one
-    * [[graft.sources.Catalog.appendBundle]] carries both members' new
-    * file sets AND the batch id. Returns false (store untouched) on a
-    * replayed batch id — checked before any work, and again atomically
-    * at publish.
+  /** One batch ingest into a [[writePairBundle]] store — the production
+    * 100 TB growth path for the single most re-consumed dedup artifact:
+    * the batch is signatured ONCE; its cross-corpus matches come from
+    * the stored bucket index (the corpus is never re-signatured), its
+    * within-batch pairs from the ordinary batch-sized [[minhashPairs]],
+    * both join the pair table (canonicalized a < b), and the batch's
+    * own buckets join the index so the NEXT batch sees it as corpus.
+    * Published ATOMICALLY: one [[graft.sources.Catalog.appendBundle]]
+    * carries both members' new file sets AND the batch id. Returns false
+    * (store untouched) on a replayed batch id — checked before any work,
+    * and again atomically at publish.
+    *
+    * Incremental ≡ one-shot row-for-row (DedupSpec pins it): signatures
+    * are pure functions of the text, so "same bucket" is decided
+    * identically whether two docs arrived together or apart — exact as
+    * long as no bucket crosses `maxBucketSize` (the lossless regime; the
+    * guard populations differ between the incremental and one-shot
+    * shapes, so cap-crossing buckets are where the two could
+    * legitimately diverge). Caller contract: `corpus` is exactly the
+    * already-ingested document set (needed only to re-shingle
+    * semi-join-pruned verify candidates); batch ids are new.
     */
   def ingestPairBundle(batch: DataFrame, corpus: DataFrame, root: String,
       bundle: String, batchId: String, idCol: String, textCol: String,

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -13,28 +12,23 @@ import graft.sources.Catalog
   * or the frozen BPE merges, a unigram LM is fully determined by its
   * word-count table, and counts merge by ADDITION. So the store holds
   * the FULL count table (Heaps-bounded — a vanishing fraction of the
-  * corpus) and absorbs a document batch with one vocab-sized staged
-  * rewrite, never a corpus rescan; the top-K vocabulary and the add-one
+  * corpus) and absorbs a document batch as one vocab-sized count delta,
+  * never a corpus rescan; the top-K vocabulary and the add-one
   * denominator derive from the stored counts at load time under exactly
   * `unigramLm`'s convention, so a model loaded after N batch ingests is
   * bit-identical to one fitted on the concatenated corpus (spec-pinned
   * ingest ≡ refit).
   *
-  * Ingest is LEDGERED like the pair store
-  * ([[graft.operators.Dedup.ingestPairBatch]]): counts double on replay,
-  * so a batch id already in the ledger is skipped. The flat-store path
-  * ([[write]]/[[ingest]]/[[mark]]) has the marker ledgers' honest
-  * residual — the rewrite+marker sequence is not atomic, a crash
-  * between swap and marker replays the batch — and is DEPRECATED in
-  * favor of the bundle-backed variant below
-  * ([[writeBundle]]/[[ingestBundle]]/[[loadBundle]]), where the batch
-  * id rides IN the bundle manifest: data and replay ledger publish in
-  * one rename, no window at all. The bundle variant is also the better
-  * 100 TB shape — each ingest APPENDS the batch's own count delta as a
-  * new file set (LSM-style; resident counts never rewritten), the load
-  * group-sums across file sets, and
-  * [[graft.sources.Catalog.compactBundle]] collapses the deltas with
-  * the ledger preserved.
+  * The store is a versioned bundle
+  * ([[writeBundle]]/[[ingestBundle]]/[[loadBundle]]) and ingest is
+  * LEDGERED like the pair store
+  * ([[graft.operators.Dedup.ingestPairBundle]]): counts double on
+  * replay, so a batch id already in the manifest is rejected — data and
+  * replay ledger publish in one rename, no window at all. Each ingest
+  * APPENDS the batch's own count delta as a new file set (LSM-style;
+  * resident counts never rewritten), the load group-sums across file
+  * sets, and [[graft.sources.Catalog.compactBundle]] collapses the
+  * deltas with the ledger preserved.
   */
 object LmStore {
 
@@ -45,71 +39,10 @@ object LmStore {
     docs.select(explode(TextStats.tokens(lower(col(textCol)))).as("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("c"))
 
-  def ledgerDir(dir: String): String = s"$dir/.batch_ledger"
-
-  /** Build the store from an initial corpus; clears the ingest ledger
-    * (a rebuild starts a fresh history, like `writePairStore`).
-    */
-  def write(docs: DataFrame, textCol: String, dir: String): Unit = {
-    counts(docs, textCol).write.mode("overwrite")
-      .parquet(s"$dir/counts.parquet")
-    val ledger = new HPath(ledgerDir(dir))
-    val fs = ledger.getFileSystem(
-      docs.sparkSession.sparkContext.hadoopConfiguration)
-    if (fs.exists(ledger)) { fs.delete(ledger, true); () }
-  }
-
-  /** Ledgered count-merge ingest: the stored counts union the batch's
-    * counts, group-sum, land in a staging directory (the read of the old
-    * table completes before the swap), and atomically replace the store.
-    * Returns true iff the batch was ingested (false = replay, store
-    * untouched).
-    */
-  def ingest(batch: DataFrame, textCol: String, dir: String,
-      batchId: String): Boolean = {
-    require(batchId.nonEmpty && !batchId.contains("/"),
-      s"LmStore.ingest: batchId must be a plain name, got '$batchId'")
-    val spark = batch.sparkSession
-    val marker = new HPath(ledgerDir(dir), batchId)
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(marker)) false
-    else {
-      val dst = new HPath(s"$dir/counts.parquet")
-      val staged = new HPath(dst.getParent, s".${dst.getName}.merging")
-      spark.read.parquet(dst.toString)
-        .unionByName(counts(batch, textCol))
-        .groupBy(col("tok")).agg(sum(col("c")).as("c"))
-        .write.mode("overwrite").parquet(staged.toString)
-      Catalog.atomicSwap(fs, staged, dst, "LmStore.ingest")
-      fs.create(marker, true).close()
-      true
-    }
-  }
-
-  /** Record a batch id in the ledger WITHOUT ingesting — the streaming
-    * twin marks the store-CREATING batch with this ([[write]] clears the
-    * ledger, so the creating micro-batch's own id must be re-marked or
-    * its replay after a crash would double-ingest through [[ingest]]).
-    */
-  def mark(spark: SparkSession, dir: String, batchId: String): Unit = {
-    val marker = new HPath(ledgerDir(dir), batchId)
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.create(marker, true).close()
-  }
-
-  /** Load the LM off the stored counts under `unigramLm`'s exact
-    * convention: (top-`vocabSize` vocab frame `(tok, c)` with the
-    * count-desc/token-asc tiebreak, add-one denominator `n + v + 1` over
-    * the TOTAL token count). Driver traffic: one K-row collect + one
-    * 1-row sum — same as in-query fitting.
-    */
-  def load(spark: SparkSession, dir: String,
-      vocabSize: Int): (DataFrame, Double) =
-    lmFromCounts(spark, spark.read.parquet(s"$dir/counts.parquet"), vocabSize)
-
-  /** `unigramLm`'s load convention off ANY merged count frame: top-K
-    * vocab (count-desc/token-asc), add-one denominator `n + v + 1` over
-    * the total. Driver traffic: one K-row collect + one 1-row sum.
+  /** `unigramLm`'s load convention off a merged count frame: top-K
+    * vocab `(tok, c)` (count-desc/token-asc), add-one denominator
+    * `n + v + 1` over the TOTAL token count. Driver traffic: one K-row
+    * collect + one 1-row sum — same as in-query fitting.
     */
   private def lmFromCounts(spark: SparkSession, cnt: DataFrame,
       vocabSize: Int): (DataFrame, Double) = {
@@ -124,16 +57,14 @@ object LmStore {
     (vocabDf, (n + top.length + 1).toDouble)
   }
 
-  // ------------- bundle-backed store: the manifest IS the ledger -------------
-
   /** Build the count store ON the atomic bundle store
     * ([[graft.sources.Catalog.commitBundle]]). `seedBatchIds` records
-    * the creating batch(es) in the manifest itself, which closes the
-    * window [[mark]] exists to paper over: there is no moment where the
-    * counts are committed but the creating batch's ledger entry is not —
-    * they are the same rename. Replaying the CREATE is also safe: a
-    * second snapshot commit with identical content supersedes the first
-    * (readers resolve the latest committed version only).
+    * the creating batch(es) in the manifest itself: there is no moment
+    * where the counts are committed but the creating batch's ledger
+    * entry is not — they are the same rename. Replaying the CREATE is
+    * also safe: a second snapshot commit with identical content
+    * supersedes the first (readers resolve the latest committed version
+    * only).
     */
   def writeBundle(docs: DataFrame, textCol: String, root: String,
       name: String, seedBatchIds: Seq[String] = Nil): Long =
@@ -143,10 +74,9 @@ object LmStore {
   /** Ledgered ingest as an LSM-style DELTA append: the batch's own count
     * table lands as a NEW file set via
     * [[graft.sources.Catalog.appendBundle]] — resident counts are never
-    * rewritten (vs [[ingest]]'s whole-table staged rewrite), and the
-    * batch id rides in the manifest, so data and replay guard publish
-    * atomically. Returns true iff ingested (false = replay, store
-    * untouched). Counts merge by addition, so deferring the merge to
+    * rewritten, and the batch id rides in the manifest, so data and
+    * replay guard publish atomically. Returns true iff ingested (false =
+    * replay, store untouched). Counts merge by addition, so deferring the merge to
     * [[loadBundle]]'s group-sum is exact; after many batches,
     * [[graft.sources.Catalog.compactBundle]] collapses the deltas into
     * one file set with the ledger preserved.
@@ -174,8 +104,8 @@ object LmStore {
       root, name, batchId)
 
   /** Load the LM off the bundle store: group-sum the delta file sets
-    * (exact — counts are an additive monoid), then the same top-K
-    * convention as [[load]], so bundle-served ≡ flat-served ≡ refit.
+    * (exact — counts are an additive monoid), then `unigramLm`'s top-K
+    * convention ([[lmFromCounts]]), so bundle-served ≡ refit.
     * Fully-retracted tokens group-sum to c = 0 ([[retractBundle]]'s
     * negative deltas) — filtered out BEFORE the top-K, else a corpus
     * left with fewer than vocabSize live tokens would admit ghost

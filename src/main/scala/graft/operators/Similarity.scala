@@ -157,41 +157,23 @@ object Similarity {
     * serving path [[hybridRrf]] is the exact baseline for: one user
     * query arrives as a term list plus its embedding, the lexical ranks
     * come from BM25 over the stored text index
-    * ([[graft.operators.TextIndex.bm25Search]] — postings scan pruned to
-    * the query terms' shards), the vector ranks from the stored ANN
-    * index ([[graft.operators.AnnIndex.knn]] — codes scan pruned to the
-    * probed cells), and [[rrfFuse]] fuses the two pools. Nothing here
-    * touches corpus text or trains anything: both expensive passes
-    * happened once at index-build time, and the serve reads two pruned
-    * stores plus the bounded meta/quantizer tables. Single-query
-    * contract: `queryVec` is one vector (its id only excludes itself
-    * from the vector pool).
+    * ([[graft.operators.TextIndex.bm25SearchBundle]] — postings scan
+    * pruned to the query terms' shards), the vector ranks from the
+    * stored ANN index ([[graft.operators.AnnIndex.knnBundle]] — codes
+    * scan pruned to the probed cells), and [[rrfFuse]] fuses the two
+    * pools. Nothing here touches corpus text or trains anything: both
+    * expensive passes happened once at index-build time, and the serve
+    * reads two pruned stores plus the bounded meta/quantizer tables.
+    * Single-query contract: `queryVec` is one vector (its id only
+    * excludes itself from the vector pool).
     *
     * `within` (one id column, any name) is the production metadata
     * filter, applied as a candidate restriction on BOTH retrieval sides
     * before their top-k (global BM25 statistics, per
-    * [[graft.operators.TextIndex.bm25Search]]); the fused result can
-    * then only contain allowed ids.
-    */
-  def hybridStoredServe(spark: org.apache.spark.sql.SparkSession,
-      textIdx: String, annIdx: String, vecs: DataFrame,
-      queryTerms: Seq[String], queryVec: DataFrame, k: Int,
-      poolK: Int = 50, rrfK: Int = 60, rerank: Int = 150,
-      nProbe: Int = 6, within: Option[DataFrame] = None): DataFrame = {
-    require(poolK >= k, s"hybridStoredServe: poolK=$poolK < k=$k")
-    val lex = TextIndex.bm25Search(spark, textIdx, queryTerms, k = poolK,
-        within = within)
-      .select(col("doc_id").as("nid"), col("rank").cast("int").as("lrank"))
-    val vec = AnnIndex.knn(spark, annIdx, vecs, queryVec, k = poolK,
-        rerank = rerank, nProbe = nProbe, within = within)
-      .select(col("nid"), col("rank").as("vrank"))
-    rrfFuse(lex, vec, k, rrfK)
-  }
-
-  /** [[hybridStoredServe]] with both retrieval stages on the atomic
-    * BUNDLE stores — same cores, each index resolved at ONE committed
-    * manifest version (resolved once here, threaded through every
-    * member read; see [[threeStageServeBundle]] for the pinning
+    * [[graft.operators.TextIndex.bm25SearchBundle]]); the fused result
+    * can then only contain allowed ids. Each index resolves at ONE
+    * committed manifest version (resolved once here, threaded through
+    * every member read; see [[threeStageServeBundle]] for the pinning
     * contract).
     */
   def hybridStoredServeBundle(spark: org.apache.spark.sql.SparkSession,
@@ -249,8 +231,9 @@ object Similarity {
     * resolve to a `vecs` row, enforced loudly — a silent drop would
     * return fewer than k with no signal) arrives from
     * whatever retrieval stage ran before ([[bruteForceKnn]] for the
-    * exact baseline, [[hybridStoredServe]]'s fused list for the
-    * production path in [[threeStageServe]]). `queryVec` is one row.
+    * exact baseline, [[hybridStoredServeBundle]]'s fused list for the
+    * production path in [[threeStageServeBundle]]). `queryVec` is one
+    * row.
     * ONE action ([[mmrFetch]]) brings back the pool ids, their vectors
     * and the query vector; relevance is recomputed on the driver as the
     * ×10⁴-rounded integer cosine of each pool member to the query
@@ -491,61 +474,26 @@ object Similarity {
     rows.toDF("qid", "rank", "nid", "mmr4")
   }
 
-  /** [[threeStageServe]] generalized to N queries in ONE plan — the
-    * offline-eval / bulk-serving shape: each query arrives as (qid,
+  /** [[threeStageServeBundle]] generalized to N queries in ONE plan —
+    * the offline-eval / bulk-serving shape: each query arrives as (qid,
     * terms) plus its vector row, batched BM25 prunes the postings scan
     * ONCE to the union of the queries' term shards
-    * ([[TextIndex.bm25SearchBatch]]), the stored ANN serve already
-    * carries qid natively ([[AnnIndex.knn]]), fusion is per-qid
+    * ([[graft.operators.TextIndex.bm25SearchBatchBundle]]), the stored
+    * ANN serve carries qid natively
+    * ([[graft.operators.AnnIndex.knnBundle]]), fusion is per-qid
     * ([[rrfFuseBatch]]) and the greedy runs per qid over the fetched
     * fused pools ([[mmrRerankPoolBatch]] — bounded at Σ fuseK² pair
     * cosines with an explicit cap). Per-query results are EXACTLY the
-    * single-query [[threeStageServe]]'s (shared cores end to end).
-    * Returns (qid, rank, nid, mmr4).
+    * single-query [[threeStageServeBundle]]'s (shared arithmetic end to
+    * end). Each index resolves at ONE committed manifest version (see
+    * [[threeStageServeBundle]] for the pinning contract). Returns (qid,
+    * rank, nid, mmr4).
     *
     * Filtering: `within` is one allowed-id set shared by every query;
     * `withinPairs` is PER-QUERY eligibility as (qid, id) rows — the
     * per-request ACL shape of a bulk serving tier (both may be set; a
     * candidate must pass both). Per-qid semantics equal the single
     * serve with that query's own allowed set (SimilaritySpec pins it).
-    */
-  def threeStageServeBatch(spark: org.apache.spark.sql.SparkSession,
-      textIdx: String, annIdx: String, vecs: DataFrame,
-      queryTerms: Seq[(Long, Seq[String])], queryVecs: DataFrame, k: Int,
-      fuseK: Int = 30, poolK: Int = 50, rrfK: Int = 60, rerank: Int = 150,
-      nProbe: Int = 6, within: Option[DataFrame] = None,
-      withinPairs: Option[DataFrame] = None): DataFrame = {
-    require(fuseK >= k && fuseK <= 256,
-      s"threeStageServeBatch: fuseK=$fuseK out of range for k=$k")
-    val lex = TextIndex.bm25SearchBatch(spark, textIdx, queryTerms,
-        k = poolK, within = within, withinPairs = withinPairs)
-      .select(col("qid"), col("doc_id").as("nid"),
-        col("rank").cast("int").as("lrank"))
-    // materialize = false: the MMR stage below collects the fused pool
-    // within this same call, so the ANN serve's eager persist+count
-    // would be one extra action for a frame consumed exactly once
-    val vec = AnnIndex.knn(spark, annIdx, vecs, queryVecs, k = poolK,
-        rerank = rerank, nProbe = nProbe, within = within,
-        withinPairs = withinPairs, materialize = false)
-      .select(col("qid"), col("nid"), col("rank").as("vrank"))
-    val fused = rrfFuseBatch(lex, vec, fuseK, rrfK)
-    // per-query pools are rrfFuseBatch outputs cut at fuseK (<= 256,
-    // required above); the batch width is capped here, before planning
-    require(queryTerms.size.toLong * fuseK * fuseK <= MaxBatchGreedyPairRows,
-      s"threeStageServeBatch: ${queryTerms.size} queries at fuseK=$fuseK " +
-        s"exceed $MaxBatchGreedyPairRows greedy pair rows - split the batch")
-    mmrRerankPoolBatch(vecs, queryVecs,
-      fused.select(col("qid"), col("nid")), k)
-  }
-
-  /** [[threeStageServeBatch]] with both retrieval stages on the atomic
-    * BUNDLE stores — shared batch cores end to end
-    * ([[graft.operators.TextIndex.bm25SearchBatchBundle]],
-    * [[graft.operators.AnnIndex.knnBundle]] — qid rides natively,
-    * [[rrfFuseBatch]], [[mmrRerankPoolBatch]]), each index resolved at
-    * ONE committed manifest version (see [[threeStageServeBundle]] for
-    * the pinning contract). Per-query results are EXACTLY the
-    * single-query [[threeStageServeBundle]]'s.
     */
   def threeStageServeBatchBundle(spark: org.apache.spark.sql.SparkSession,
       textRoot: String, textName: String, annRoot: String, annName: String,
@@ -575,7 +523,8 @@ object Similarity {
         version = Some(av), withinPairs = withinPairs, materialize = false)
       .select(col("qid"), col("nid"), col("rank").as("vrank"))
     val fused = rrfFuseBatch(lex, vec, fuseK, rrfK)
-    // static batch cap - see threeStageServeBatch
+    // per-query pools are rrfFuseBatch outputs cut at fuseK (<= 256,
+    // required above); the batch width is capped here, before planning
     require(queryTerms.size.toLong * fuseK * fuseK <= MaxBatchGreedyPairRows,
       s"threeStageServeBatchBundle: ${queryTerms.size} queries at " +
         s"fuseK=$fuseK exceed $MaxBatchGreedyPairRows greedy pair rows - " +
@@ -586,17 +535,21 @@ object Similarity {
 
   /** The COMPOSED three-stage serving stack — the query a production
     * search deployment actually runs, as one operator: (1) retrieval
-    * off both STORED indexes (BM25 postings pruned to the query terms'
-    * shards, ANN codes pruned to the probed cells), (2) reciprocal-rank
-    * fusion of the two pools ([[rrfFuse]] — the same arithmetic as the
-    * exact baseline), (3) maximal-marginal-relevance diversification of
-    * the fused shortlist ([[mmrRerankPool]] — the greedy bounded at
-    * `fuseK`² driver-side cosines). Nothing in the composition touches
-    * corpus text or trains: both expensive passes happened once at
-    * index build, every serve-time scan is directory-pruned, and the
-    * only corpus-sized frame (`vecs`) is read solely to fetch the
-    * shortlist's own vectors through a broadcast hash join, in the
-    * same action that runs the retrieval.
+    * off both STORED indexes ([[TextIndex.bm25SearchBundle]] postings
+    * pruned to the query terms' shards, [[AnnIndex.knnBundle]] codes
+    * pruned to the probed cells), (2) reciprocal-rank fusion of the two
+    * pools ([[rrfFuse]] — the same arithmetic as the exact baseline),
+    * (3) maximal-marginal-relevance diversification of the fused
+    * shortlist ([[mmrRerankPool]] — the greedy bounded at `fuseK`²
+    * driver-side cosines). Nothing in the composition touches corpus
+    * text or trains: both expensive passes happened once at index
+    * build, every serve-time scan is directory-pruned and sees one
+    * committed manifest version of each index (never a half-rebuilt
+    * one), and the only corpus-sized frame (`vecs`) is read solely to
+    * fetch the shortlist's own vectors through a broadcast hash join,
+    * in the same action that runs the retrieval. The MMR pool is the
+    * fused shortlist, which is already filtered when `within` is set —
+    * the greedy never reintroduces candidates.
     *
     * ALIGNMENT CONTRACT: the text index must index a subset of the
     * embedded corpus (build it over the docs that have vector rows) —
@@ -606,31 +559,6 @@ object Similarity {
     * fuseK. Alignment is a BUILD-time property (one ingest-side
     * semi-join), deliberately not re-checked with a serve-time join
     * against the corpus-sized vector id set.
-    */
-  def threeStageServe(spark: org.apache.spark.sql.SparkSession,
-      textIdx: String, annIdx: String, vecs: DataFrame,
-      queryTerms: Seq[String], queryVec: DataFrame, k: Int,
-      fuseK: Int = 30, poolK: Int = 50, rrfK: Int = 60, rerank: Int = 150,
-      nProbe: Int = 6, within: Option[DataFrame] = None): DataFrame = {
-    require(fuseK >= k && fuseK <= 256,
-      s"threeStageServe: fuseK=$fuseK out of range for k=$k")
-    val fused = hybridStoredServe(spark, textIdx, annIdx, vecs, queryTerms,
-      queryVec, k = fuseK, poolK = poolK, rrfK = rrfK, rerank = rerank,
-      nProbe = nProbe, within = within)
-    // the MMR pool is the fused shortlist, which is already filtered
-    // when `within` is set — the greedy never reintroduces candidates
-    mmrRerankPool(vecs, queryVec, fused.select(col("nid")), k)
-  }
-
-  /** [[threeStageServe]] with BOTH retrieval stages resolved through
-    * atomic bundle stores ([[TextIndex.bm25SearchBundle]] +
-    * [[AnnIndex.knnBundle]]) instead of flat directories — the serve a
-    * production deployment runs once its indexes ride the ledgered
-    * store protocol: every scan sees one committed manifest version of
-    * each index (never a half-rebuilt one), and the plan is otherwise
-    * identical (shared BM25/ADC cores, same [[rrfFuse]] arithmetic,
-    * same [[mmrRerankPool]] greedy), so flat and bundle serves cannot
-    * drift.
     *
     * VERSION PINNING: each index's version resolves ONCE here (to
     * latest when not passed) and threads through every member read of

@@ -15,16 +15,20 @@ import graft.sources.Catalog
   * right for one-shot analytics, wrong for a serving corpus where the
   * expensive part (tokenize + posting-list aggregation over 10^9+ docs)
   * should run ONCE and every query after that should touch only the
-  * shards its terms live in. Layout:
+  * shards its terms live in. The index is one versioned bundle
+  * ([[graft.sources.Catalog.commitBundle]] — every version's `_manifest`
+  * lists the file sets of each member) with two members:
   *
-  *   dir/postings.parquet — (term, doc_id, tf, dl) PARTITIONED BY shard,
-  *     where shard = md5-prefix(term) % 16: a term's whole posting list
-  *     lives in exactly one shard directory, and dl (doc token length)
-  *     rides denormalized on every posting the way Lucene stores norms —
-  *     scoring never joins a corpus-sized side table;
-  *   dir/meta.parquet     — one row (n_docs, sum_dl), the corpus stats
-  *     BM25 needs, derived from the written postings so build and serve
-  *     can never disagree about the corpus.
+  *   postings — (term, doc_id, tf, dl, positions) PARTITIONED BY shard
+  *     (declared in the manifest), where shard = md5-prefix(term) % 16:
+  *     a term's whole posting list lives in one shard directory of each
+  *     file set, and dl (doc token length) rides denormalized on every
+  *     posting the way Lucene stores norms — scoring never joins a
+  *     corpus-sized side table;
+  *   meta     — one (n_docs, sum_dl) delta row per committed batch (a
+  *     takedown adds a negative one), the corpus stats BM25 needs,
+  *     derived from that batch's postings so build and serve can never
+  *     disagree about the corpus.
   *
   * Serving plans shards on the DRIVER (md5 of the query's own terms —
   * bounded by |terms|) and scans ONLY those shard directories: the
@@ -67,9 +71,9 @@ object TextIndex {
     * (term, doc) term frequency + the term's sorted token positions
     * (Lucene-style positional postings — what phrase queries replay),
     * denormalizes the doc length onto each posting, and stamps the term
-    * shard. Shared verbatim by the full [[writeRebuildBaseline]] and the incremental
-    * [[appendRebuildBaseline]], so a delta batch is indexed by EXACTLY the build's
-    * arithmetic.
+    * shard. Shared verbatim by [[writeBundle]], [[reindexBundle]] and
+    * the incremental [[appendBundle]], so a delta batch is indexed by
+    * EXACTLY the build's arithmetic.
     */
   private def postings(docs: DataFrame, idCol: String,
       textCol: String): DataFrame = {
@@ -84,85 +88,10 @@ object TextIndex {
         col("positions"), col("shard"))
   }
 
-  /** Meta derived from the WRITTEN postings (distinct doc lengths), so the
-    * stored corpus stats always describe exactly the index on disk — one
-    * definition for build and append, and the two can never disagree.
-    * Scans postings, not the corpus: the cheap side of the index.
-    */
-  private def writeMeta(spark: SparkSession, dir: String): Unit =
-    spark.read.parquet(s"$dir/postings.parquet")
-      .select(col("doc_id"), col("dl")).distinct()
-      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-      .repartition(1)
-      .write.mode("overwrite").parquet(s"$dir/meta.parquet")
-
-  /** Build + write the index: posting rows land partitioned by term shard,
-    * meta is re-derived from what landed. Zero-token docs hold no postings
-    * and can never match a term — they are absent from the index and its
-    * meta by construction.
-    *
-    * REBUILD BASELINE, not a production store: the postings-write →
-    * meta-rewrite sequence is not atomic (a crash between them serves
-    * stats for a corpus the postings aren't) — [[writeBundle]]
-    * publishes both in one manifest rename and is the ONLY production
-    * write path. This entry point exists so the bundle store's
-    * equivalence checks (x186/x187/x188/x193, the specs) can build the
-    * flat comparison index through the exact same tokenize/shard
-    * arithmetic; nothing in a deployment should call it, and the
-    * explicit name makes a stale caller visible at review rather than
-    * as a compile warning.
-    */
-  def writeRebuildBaseline(docs: DataFrame, dir: String, idCol: String = "doc_id",
-      textCol: String = "text"): Unit = {
-    // rebalance on shard before the partitioned write (guide §6): one
-    // size-bounded file set per shard directory instead of one file per
-    // (writer task × shard) — same fix as the bundle store's writeMember
-    postings(docs, idCol, textCol).hint("rebalance", col("shard"))
-      .write.mode("overwrite").partitionBy("shard")
-      .parquet(s"$dir/postings.parquet")
-    writeMeta(docs.sparkSession, dir)
-  }
-
-  /** Incremental maintenance — the text twin of the ANN index's frozen-
-    * quantizer reconcile (x96): tokenize ONLY the new batch, APPEND its
-    * posting files into the existing shard directories (base files are
-    * never rewritten — append-mode leaves them in place), and re-derive
-    * meta from the combined postings. Correct because posting rows are
-    * keyed by (term, doc): as long as a doc arrives in exactly one batch
-    * (caller's contract, same as x96's), base ∪ delta is the same row set
-    * a full rebuild would produce, and every serve (boolean / phrase /
-    * BM25, whose df counts posting rows per term) is oblivious to which
-    * batch a row came from. At 100 TB this is the difference between
-    * re-tokenizing the corpus and tokenizing the day's arrivals.
-    *
-    * File-count maintenance: after many appends a shard directory holds
-    * one small file per batch, bloating the very footer pruning the
-    * layout exists for —
-    * `Catalog.compactPartition(spark, dir, "postings", Seq(("shard", s)))`
-    * rewrites one shard in place (atomic swap, closed shards compact
-    * independently); serve results are identical pre/post (CatalogSpec).
-    *
-    * REBUILD BASELINE, not a production path: unledgered — a replayed
-    * batch doubles a term's tf AND df, inflating every BM25 score its
-    * docs appear in; and the postings-append → meta-rewrite gap
-    * replays on a crash between them. [[appendBundle]] closes both and
-    * is the ONLY production append. Kept (explicitly named, test-only)
-    * for flat stores laid out by [[writeRebuildBaseline]].
-    */
-  def appendRebuildBaseline(docs: DataFrame, dir: String, idCol: String = "doc_id",
-      textCol: String = "text"): Unit = {
-    postings(docs, idCol, textCol).hint("rebalance", col("shard"))
-      .write.mode("append").partitionBy("shard")
-      .parquet(s"$dir/postings.parquet")
-    writeMeta(docs.sparkSession, dir)
-  }
-
   /** The probe-shard postings scan every serve starts from: shards
     * planned on the driver from the query's own terms, bound as a static
-    * partition filter; the term predicate then narrows within the shard.
-    * Takes the full postings FRAME (flat directory or bundle member —
-    * the one place the two stores differ), so every serve below runs the
-    * identical plan against either store and the two can never drift.
+    * partition filter (it prunes every committed file set's directory
+    * listing); the term predicate then narrows within the shard.
     */
   private def prunedFrom(postingsAll: DataFrame,
       ts: Seq[String]): DataFrame = {
@@ -172,74 +101,16 @@ object TextIndex {
         && col("term").isin(ts: _*))
   }
 
-  private def prunedPostings(spark: SparkSession, dir: String,
-      ts: Seq[String]): DataFrame =
-    prunedFrom(spark.read.parquet(s"$dir/postings.parquet"), ts)
-
-  /** Conjunctive (every-term) match: the pruned postings of the query
-    * terms, grouped by doc, kept when the doc holds ALL of them — the
-    * core both stores serve. Returns (doc_id); ordering is the caller's.
+  /** Per-(term, doc) BM25 term scores of the pruned postings of `ts`,
+    * each rounded and scaled to an exact integer `__sx` — the arithmetic
+    * the single and the batched serve share ([[bm25SearchBundle]] gives
+    * the formula).
     */
-  private def booleanCore(postingsAll: DataFrame,
-      queryTerms: Seq[String]): DataFrame = {
-    require(queryTerms.nonEmpty, "booleanSearch: no terms")
-    val ts = queryTerms.distinct
+  private def termScores(postingsAll: DataFrame, nDocs: Long, sumDl: Long,
+      ts: Seq[String]): DataFrame = {
+    val avgdl = sumDl.toDouble / nDocs
+    val dfW = Window.partitionBy(col("term"))
     prunedFrom(postingsAll, ts)
-      .groupBy(col("doc_id"))
-      .agg(countDistinct(col("term")).as("__nt"))
-      .where(col("__nt") === ts.size)
-      .select(col("doc_id"))
-  }
-
-  /** Conjunctive (every-term) match against the stored index. */
-  def booleanSearch(spark: SparkSession, dir: String,
-      queryTerms: Seq[String]): DataFrame =
-    booleanCore(spark.read.parquet(s"$dir/postings.parquet"), queryTerms)
-
-  /** BM25 top-k over the stored index (disjunctive, the classic ranked
-    * retrieval): per-(term, doc) score
-    *
-    *   idf(t) * tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl)),
-    *   idf(t) = ln((N − df + 0.5)/(df + 0.5) + 1)
-    *
-    * with Lucene's defaults k1=1.2, b=0.75. df comes from a window over
-    * the term's own shard-resident postings (= global df, see the object
-    * doc); N/avgdl from the bounded meta row. Each term score is rounded
-    * and scaled to an exact integer (×10⁴) BEFORE the per-doc sum, so
-    * the doc score is an order-free long sum — no float-summation-order
-    * flake between engines — and the top-k is a distributed TakeOrdered
-    * on (score desc, doc_id), never a global window over the candidates.
-    * Returns (doc_id, score_x10k, rank).
-    *
-    * `within` (one id column, any name) restricts the CANDIDATE set —
-    * the production filtered-search shape (a metadata predicate
-    * resolved to allowed ids). Lucene semantics: the corpus statistics
-    * (N, avgdl, df) stay GLOBAL — a filter narrows who may be returned,
-    * not what words mean — so the semi-join applies after per-posting
-    * scoring, before the top-k; per-doc scores are identical filtered
-    * or not, ranks renumber within the filtered set.
-    */
-  def bm25Search(spark: SparkSession, dir: String, queryTerms: Seq[String],
-      k: Int, within: Option[DataFrame] = None): DataFrame = {
-    val meta = spark.read.parquet(s"$dir/meta.parquet").collect()(0)
-    bm25Core(spark.read.parquet(s"$dir/postings.parquet"),
-      meta.getLong(0), meta.getLong(1), queryTerms, k, within)
-  }
-
-  /** The BM25 plan both stores serve — corpus stats arrive as the two
-    * scalars (nDocs, sumDl) however the store keeps them (one meta row
-    * for the flat directory, summed per-batch delta rows for the
-    * bundle).
-    */
-  private def bm25Core(postingsAll: DataFrame, nDocs: Long, sumDl: Long,
-      queryTerms: Seq[String], k: Int,
-      within: Option[DataFrame]): DataFrame = {
-    require(queryTerms.nonEmpty, "bm25Search: no terms")
-    require(nDocs > 0, "bm25Search: empty index (no documents)")
-    val ts = queryTerms.distinct
-    val avgdl = sumDl.toDouble / nDocs
-    val dfW = Window.partitionBy(col("term"))
-    val scored = prunedFrom(postingsAll, ts)
       .withColumn("__df", count(lit(1)).over(dfW))
       .withColumn("__idf", round(
         log((lit(nDocs.toDouble) - col("__df") + lit(0.5))
@@ -249,156 +120,17 @@ object TextIndex {
           + lit(0.75) * (col("dl") / lit(avgdl)))))
       .withColumn("__sx",
         round(col("__idf") * col("__tfn") * lit(10000.0), 0).cast("long"))
-    val eligible = within.fold(scored) { w =>
-      val ids = w.select(col(w.columns.head).as("__within_id"))
-      scored.join(ids, scored("doc_id") === ids("__within_id"), "left_semi")
-    }
-    val top = eligible.groupBy(col("doc_id"))
-      .agg(sum(col("__sx")).as("score_x10k"))
-      .orderBy(col("score_x10k").desc, col("doc_id"))
-      .limit(k)
-    top.withColumn("rank", row_number().over(
-      Window.orderBy(col("score_x10k").desc, col("doc_id"))))
   }
 
-  /** BATCHED BM25 — N queries' top-k in ONE plan, the shape an offline
-    * eval or bulk re-embedding pipeline runs: `queryTerms` is (qid,
-    * terms) pairs; the postings scan is pruned ONCE to the union of all
-    * queries' term shards, a broadcast (qid, term) table fans each
-    * posting row out to exactly the queries that asked for its term,
-    * and per-(qid, doc) scores sum only that query's terms. Per-term
-    * arithmetic is [[bm25Search]]'s exactly (df is the term's global
-    * posting count — independent of which queries mention it), so a
-    * one-query batch replays the single serve verbatim. The top-k is a
-    * qid-partitioned window: per-partition rows are one query's
-    * candidates (bounded by its terms' document frequencies), and
-    * queries rank in parallel — never the single-partition global
-    * window the one-query path avoids with TakeOrdered. Returns
-    * (qid, doc_id, score_x10k, rank).
-    */
-  def bm25SearchBatch(spark: SparkSession, dir: String,
-      queryTerms: Seq[(Long, Seq[String])], k: Int,
-      within: Option[DataFrame] = None,
-      withinPairs: Option[DataFrame] = None): DataFrame = {
-    val meta = spark.read.parquet(s"$dir/meta.parquet").collect()(0)
-    bm25BatchCore(spark, spark.read.parquet(s"$dir/postings.parquet"),
-      meta.getLong(0), meta.getLong(1), queryTerms, k, within, withinPairs)
-  }
-
-  /** [[bm25SearchBatch]] off the BUNDLE-backed index — postings and
-    * corpus stats resolved at ONE version
-    * ([[graft.sources.Catalog.resolveVersion]]).
-    */
-  def bm25SearchBatchBundle(spark: SparkSession, root: String, name: String,
-      queryTerms: Seq[(Long, Seq[String])], k: Int,
-      within: Option[DataFrame] = None,
-      version: Option[Long] = None,
-      withinPairs: Option[DataFrame] = None): DataFrame = {
-    val v = Catalog.resolveVersion(spark, root, name, version,
-      "TextIndex.bm25SearchBatchBundle")
-    val (nDocs, sumDl) = bundleStats(spark, root, name, v)
-    bm25BatchCore(spark,
-      Catalog.readBundleTable(spark, root, name, "postings", Some(v)),
-      nDocs, sumDl, queryTerms, k, within, withinPairs)
-  }
-
-  /** `within` is ONE allowed-id set shared by every query;
-    * `withinPairs` is PER-QUERY eligibility as (qid, id) rows — the
-    * per-request ACL shape of a bulk serving tier. Both may be set;
-    * a doc must pass both. Either filter lands AFTER the broadcast qid
-    * fan-out and BEFORE the per-(qid, doc) score sum and top-k window,
-    * so global BM25 statistics are untouched (a filter narrows who may
-    * return, never what words mean) and the per-qid semantics equal
-    * the single serve with that query's own allowed set.
-    */
-  private def bm25BatchCore(spark: SparkSession, postingsAll: DataFrame,
-      nDocs: Long, sumDl: Long, queryTerms: Seq[(Long, Seq[String])],
-      k: Int, within: Option[DataFrame],
-      withinPairs: Option[DataFrame] = None): DataFrame = {
-    require(queryTerms.nonEmpty && queryTerms.forall(_._2.nonEmpty),
-      "bm25SearchBatch: every query needs terms")
-    require(queryTerms.map(_._1).distinct.size == queryTerms.size,
-      "bm25SearchBatch: duplicate qid")
-    require(nDocs > 0, "bm25SearchBatch: empty index (no documents)")
-    val allTerms = queryTerms.flatMap(_._2).distinct
-    val avgdl = sumDl.toDouble / nDocs
-    val dfW = Window.partitionBy(col("term"))
-    val scored = prunedFrom(postingsAll, allTerms)
-      .withColumn("__df", count(lit(1)).over(dfW))
-      .withColumn("__idf", round(
-        log((lit(nDocs.toDouble) - col("__df") + lit(0.5))
-          / (col("__df") + lit(0.5)) + lit(1.0)), 8))
-      .withColumn("__tfn", (col("tf") * lit(2.2))
-        / (col("tf") + lit(1.2) * (lit(0.25)
-          + lit(0.75) * (col("dl") / lit(avgdl)))))
-      .withColumn("__sx",
-        round(col("__idf") * col("__tfn") * lit(10000.0), 0).cast("long"))
-    val qt = spark.createDataFrame(
-        queryTerms.flatMap { case (q, ts) => ts.distinct.map(t => (q, t)) })
-      .toDF("qid", "term")
-    val perQ = scored.join(broadcast(qt), Seq("term"))
-    val shared = within.fold(perQ) { w =>
-      val ids = w.select(col(w.columns.head).as("__within_id"))
-      perQ.join(ids, perQ("doc_id") === ids("__within_id"), "left_semi")
-    }
-    val eligible = withinPairs.fold(shared) { wp =>
-      val cs = wp.columns
-      val pairs = wp.select(col(cs(0)).as("qid"), col(cs(1)).as("doc_id"))
-      shared.join(pairs, Seq("qid", "doc_id"), "left_semi")
-    }
-    val rw = Window.partitionBy(col("qid"))
-      .orderBy(col("score_x10k").desc, col("doc_id"))
-    eligible.groupBy(col("qid"), col("doc_id"))
-      .agg(sum(col("__sx")).as("score_x10k"))
-      .withColumn("rank", row_number().over(rw))
-      .where(col("rank") <= k)
-      .select(col("qid"), col("doc_id"), col("score_x10k"), col("rank"))
-  }
-
-  /** Exact phrase match from the positional postings — the query shape
-    * boolean AND cannot express ("table hash" as adjacent tokens, not
-    * co-occurrence). Classic positional-intersection: slot i of the
-    * phrase contributes its postings' positions shifted by −i, and a doc
-    * matches once per position common to ALL slots (a common shifted
-    * position p means tokens p..p+n−1 spell the phrase). The scan is the
-    * same driver-planned shard prune as every other serve; the slot table
-    * is |phrase| rows, broadcast. Repeated words in the phrase just bind
-    * the same posting row to two slots. Returns (doc_id, n_occ ≥ 1);
-    * ordering is the caller's.
-    */
-  def phraseSearch(spark: SparkSession, dir: String,
-      phrase: Seq[String]): DataFrame =
-    phraseCore(spark, spark.read.parquet(s"$dir/postings.parquet"), phrase)
-
-  private def phraseCore(spark: SparkSession, postingsAll: DataFrame,
-      phrase: Seq[String]): DataFrame = {
-    require(phrase.nonEmpty, "phraseSearch: empty phrase")
-    val slots = spark.createDataFrame(phrase.zipWithIndex)
-      .toDF("term", "idx")
-    val bound = prunedFrom(postingsAll, phrase.distinct)
-      .join(broadcast(slots), Seq("term"))
-      .select(col("doc_id"),
-        transform(col("positions"), p => p - col("idx")).as("__adj"))
-    bound.groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("__nslots"), collect_list(col("__adj")).as("__as"))
-      .where(col("__nslots") === phrase.size)
-      .withColumn("n_occ", size(aggregate(
-        slice(col("__as"), 2, phrase.size - 1),
-        element_at(col("__as"), 1),
-        (acc, a) => array_intersect(acc, a))).cast("long"))
-      .where(col("n_occ") > 0)
-      .select(col("doc_id"), col("n_occ"))
-  }
-
-  // ------------- bundle-backed index: the manifest IS the ledger -------------
+  // ------------- the manifest IS the ledger -------------
 
   /** One (n_docs, sum_dl) row describing a batch's postings — the
-    * bundle's meta is LSM-style: every commit/append lands one delta
-    * row, and [[bundleStats]] sums them at serve. Correct because a doc
-    * arrives in exactly one batch (the same contract [[appendRebuildBaseline]] states),
-    * so per-batch distinct doc counts add up to the corpus's. Derived
-    * from the batch's own postings frame, so the stored stats always
-    * describe exactly the postings that landed beside them.
+    * meta member is LSM-style: every commit/append lands one delta row,
+    * and [[bundleStats]] sums them at serve. Correct because a doc
+    * arrives in exactly one batch (the caller's contract for every
+    * ingest), so per-batch distinct doc counts add up to the corpus's.
+    * Derived from the batch's own postings frame, so the stored stats
+    * always describe exactly the postings that landed beside them.
     */
   private def batchMeta(batchPostings: DataFrame): DataFrame =
     batchPostings.select(col("doc_id"), col("dl")).distinct()
@@ -406,17 +138,18 @@ object TextIndex {
         coalesce(sum(col("dl").cast("long")), lit(0L)).as("sum_dl"))
       .repartition(1)
 
-  /** Build the index ON the atomic bundle store
-    * ([[graft.sources.Catalog.commitBundle]]) — the store-protocol
-    * migration the flat [[writeRebuildBaseline]] lacks, and the text twin of
-    * [[AnnIndex.writeBundle]]: postings (shard-partitioned, declared in
-    * the manifest so appends and compaction preserve the pruning
-    * layout) and the batch's meta delta publish in ONE staged-directory
-    * rename — a crash mid-rebuild can never leave postings beside stats
-    * describing a different corpus. `seedBatchIds` records the creating
-    * batch(es) in the manifest's ledger, closing the create-replay
-    * window. The postings frame is persisted across the two member
-    * writes so the corpus is tokenized once, like the flat build.
+  /** Build + commit the index ([[graft.sources.Catalog.commitBundle]]),
+    * the text twin of [[AnnIndex.writeBundle]]: postings
+    * (shard-partitioned, declared in the manifest so appends and
+    * compaction preserve the pruning layout) and the batch's meta delta
+    * publish in ONE staged-directory rename — a crash mid-rebuild can
+    * never leave postings beside stats describing a different corpus.
+    * Zero-token docs hold no postings and can never match a term — they
+    * are absent from the index and its stats by construction.
+    * `seedBatchIds` records the creating batch(es) in the manifest's
+    * ledger, closing the create-replay window. The postings frame is
+    * persisted across the two member writes so the corpus is tokenized
+    * once.
     */
   def writeBundle(docs: DataFrame, root: String, name: String,
       idCol: String = "doc_id", textCol: String = "text",
@@ -462,16 +195,22 @@ object TextIndex {
     finally { p.unpersist(); () }
   }
 
-  /** LEDGERED incremental append — [[appendRebuildBaseline]] with the at-least-once
-    * residual closed: the batch's posting rows land as a new file set
-    * via [[graft.sources.Catalog.appendBundle]] with the batch id IN
-    * the manifest, so a replayed append returns false with the index
-    * untouched. The flat append double-appends on replay: duplicate
-    * posting rows double a term's tf AND df, silently inflating every
-    * BM25 score the doc appears in. The batch's meta delta rides in the
-    * same atomic version, so corpus stats and postings can never
-    * disagree — the flat path's postings-append → meta-rewrite gap is
-    * gone.
+  /** LEDGERED incremental append — the text twin of the ANN index's
+    * frozen-quantizer append: tokenize ONLY the new batch and land its
+    * posting rows as a new file set via
+    * [[graft.sources.Catalog.appendBundle]] (resident file sets are never
+    * rewritten), with the batch id IN the manifest, so a replayed append
+    * returns false with the index untouched — duplicate posting rows
+    * would double a term's tf AND df, silently inflating every BM25
+    * score the doc appears in. The batch's meta delta rides in the same
+    * atomic version, so corpus stats and postings can never disagree.
+    * Correct because posting rows are keyed by (term, doc): as long as a
+    * doc arrives in exactly one batch (the caller's contract), the union
+    * of the file sets is the row set a one-shot build produces, and every
+    * serve (boolean / phrase / BM25, whose df counts posting rows per
+    * term) is oblivious to which batch a row came from.
+    * [[graft.sources.Catalog.compactBundle]] collapses the file sets many
+    * appends leave, with the ledger preserved.
     */
   def appendBundle(spark: SparkSession, root: String, name: String,
       docs: DataFrame, batchId: String, idCol: String = "doc_id",
@@ -500,26 +239,53 @@ object TextIndex {
       (r.getLong(0), r.getLong(1))
     }
 
-  /** Conjunctive match off the BUNDLE-backed index — same core plan as
-    * [[booleanSearch]], postings resolved through one committed
-    * manifest version ([[graft.sources.Catalog.resolveVersion]]; a serve
-    * can never see a half-rebuilt index; the driver-planned shard
-    * predicate still prunes every committed file set's directory
-    * listing).
+  /** Conjunctive (every-term) match: the pruned postings of the query
+    * terms, grouped by doc, kept when the doc holds ALL of them. Postings
+    * are resolved through one committed manifest version
+    * ([[graft.sources.Catalog.resolveVersion]]), so a serve can never see
+    * a half-rebuilt index. Returns (doc_id); ordering is the caller's.
     */
   def booleanSearchBundle(spark: SparkSession, root: String, name: String,
-      queryTerms: Seq[String], version: Option[Long] = None): DataFrame =
-    booleanCore(Catalog.readBundleTable(spark, root, name, "postings",
+      queryTerms: Seq[String], version: Option[Long] = None): DataFrame = {
+    val postingsAll = Catalog.readBundleTable(spark, root, name, "postings",
       Some(Catalog.resolveVersion(spark, root, name, version,
-        "TextIndex.booleanSearchBundle"))),
-      queryTerms)
+        "TextIndex.booleanSearchBundle")))
+    require(queryTerms.nonEmpty, "booleanSearchBundle: no terms")
+    val ts = queryTerms.distinct
+    prunedFrom(postingsAll, ts)
+      .groupBy(col("doc_id"))
+      .agg(countDistinct(col("term")).as("__nt"))
+      .where(col("__nt") === ts.size)
+      .select(col("doc_id"))
+  }
 
-  /** BM25 top-k off the BUNDLE-backed index — same core plan as
-    * [[bm25Search]] (shared [[bm25Core]]), with postings AND the meta
-    * stats resolved at ONE version
-    * ([[graft.sources.Catalog.resolveVersion]]) so the idf / avgdl
-    * arithmetic always describes exactly the postings it scores.
-    * Pass `Some(v)` for explicit time-travel serving.
+  /** BM25 top-k over the stored index (disjunctive, the classic ranked
+    * retrieval): per-(term, doc) score
+    *
+    *   idf(t) * tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl)),
+    *   idf(t) = ln((N − df + 0.5)/(df + 0.5) + 1)
+    *
+    * with Lucene's defaults k1=1.2, b=0.75. df comes from a window over
+    * the term's own shard-resident postings (= global df, see the object
+    * doc); N/avgdl from the summed meta delta rows ([[bundleStats]]).
+    * Each term score is rounded and scaled to an exact integer (×10⁴)
+    * BEFORE the per-doc sum, so the doc score is an order-free long sum —
+    * no float-summation-order flake between engines — and the top-k is a
+    * distributed TakeOrdered on (score desc, doc_id), never a global
+    * window over the candidates. Returns (doc_id, score_x10k, rank).
+    *
+    * `within` (one id column, any name) restricts the CANDIDATE set —
+    * the production filtered-search shape (a metadata predicate
+    * resolved to allowed ids). Lucene semantics: the corpus statistics
+    * (N, avgdl, df) stay GLOBAL — a filter narrows who may be returned,
+    * not what words mean — so the semi-join applies after per-posting
+    * scoring, before the top-k; per-doc scores are identical filtered
+    * or not, ranks renumber within the filtered set.
+    *
+    * Postings AND the meta stats resolve at ONE version
+    * ([[graft.sources.Catalog.resolveVersion]]), so the idf / avgdl
+    * arithmetic always describes exactly the postings it scores. Pass
+    * `Some(v)` for explicit time-travel serving.
     */
   def bm25SearchBundle(spark: SparkSession, root: String, name: String,
       queryTerms: Seq[String], k: Int,
@@ -528,20 +294,122 @@ object TextIndex {
     val v = Catalog.resolveVersion(spark, root, name, version,
       "TextIndex.bm25SearchBundle")
     val (nDocs, sumDl) = bundleStats(spark, root, name, v)
-    bm25Core(Catalog.readBundleTable(spark, root, name, "postings", Some(v)),
-      nDocs, sumDl, queryTerms, k, within)
+    require(queryTerms.nonEmpty, "bm25SearchBundle: no terms")
+    require(nDocs > 0, "bm25SearchBundle: empty index (no documents)")
+    val scored = termScores(
+      Catalog.readBundleTable(spark, root, name, "postings", Some(v)),
+      nDocs, sumDl, queryTerms.distinct)
+    val eligible = within.fold(scored) { w =>
+      val ids = w.select(col(w.columns.head).as("__within_id"))
+      scored.join(ids, scored("doc_id") === ids("__within_id"), "left_semi")
+    }
+    val top = eligible.groupBy(col("doc_id"))
+      .agg(sum(col("__sx")).as("score_x10k"))
+      .orderBy(col("score_x10k").desc, col("doc_id"))
+      .limit(k)
+    top.withColumn("rank", row_number().over(
+      Window.orderBy(col("score_x10k").desc, col("doc_id"))))
   }
 
-  /** Exact phrase match off the BUNDLE-backed index — shared
-    * [[phraseCore]], postings at one resolved version.
+  /** BATCHED BM25 — N queries' top-k in ONE plan, the shape an offline
+    * eval or bulk re-embedding pipeline runs: `queryTerms` is (qid,
+    * terms) pairs; the postings scan is pruned ONCE to the union of all
+    * queries' term shards, a broadcast (qid, term) table fans each
+    * posting row out to exactly the queries that asked for its term,
+    * and per-(qid, doc) scores sum only that query's terms. Per-term
+    * arithmetic is [[bm25SearchBundle]]'s exactly (df is the term's
+    * global posting count — independent of which queries mention it), so
+    * a one-query batch replays the single serve verbatim. The top-k is a
+    * qid-partitioned window: per-partition rows are one query's
+    * candidates (bounded by its terms' document frequencies), and
+    * queries rank in parallel — never the single-partition global
+    * window the one-query path avoids with TakeOrdered. Returns
+    * (qid, doc_id, score_x10k, rank).
+    *
+    * `within` is ONE allowed-id set shared by every query;
+    * `withinPairs` is PER-QUERY eligibility as (qid, id) rows — the
+    * per-request ACL shape of a bulk serving tier. Both may be set;
+    * a doc must pass both. Either filter lands AFTER the broadcast qid
+    * fan-out and BEFORE the per-(qid, doc) score sum and top-k window,
+    * so global BM25 statistics are untouched (a filter narrows who may
+    * return, never what words mean) and the per-qid semantics equal
+    * the single serve with that query's own allowed set.
+    *
+    * Postings and corpus stats resolve at ONE version
+    * ([[graft.sources.Catalog.resolveVersion]]).
+    */
+  def bm25SearchBatchBundle(spark: SparkSession, root: String, name: String,
+      queryTerms: Seq[(Long, Seq[String])], k: Int,
+      within: Option[DataFrame] = None,
+      version: Option[Long] = None,
+      withinPairs: Option[DataFrame] = None): DataFrame = {
+    val v = Catalog.resolveVersion(spark, root, name, version,
+      "TextIndex.bm25SearchBatchBundle")
+    val (nDocs, sumDl) = bundleStats(spark, root, name, v)
+    require(queryTerms.nonEmpty && queryTerms.forall(_._2.nonEmpty),
+      "bm25SearchBatchBundle: every query needs terms")
+    require(queryTerms.map(_._1).distinct.size == queryTerms.size,
+      "bm25SearchBatchBundle: duplicate qid")
+    require(nDocs > 0, "bm25SearchBatchBundle: empty index (no documents)")
+    val scored = termScores(
+      Catalog.readBundleTable(spark, root, name, "postings", Some(v)),
+      nDocs, sumDl, queryTerms.flatMap(_._2).distinct)
+    val qt = spark.createDataFrame(
+        queryTerms.flatMap { case (q, ts) => ts.distinct.map(t => (q, t)) })
+      .toDF("qid", "term")
+    val perQ = scored.join(broadcast(qt), Seq("term"))
+    val shared = within.fold(perQ) { w =>
+      val ids = w.select(col(w.columns.head).as("__within_id"))
+      perQ.join(ids, perQ("doc_id") === ids("__within_id"), "left_semi")
+    }
+    val eligible = withinPairs.fold(shared) { wp =>
+      val cs = wp.columns
+      val pairs = wp.select(col(cs(0)).as("qid"), col(cs(1)).as("doc_id"))
+      shared.join(pairs, Seq("qid", "doc_id"), "left_semi")
+    }
+    val rw = Window.partitionBy(col("qid"))
+      .orderBy(col("score_x10k").desc, col("doc_id"))
+    eligible.groupBy(col("qid"), col("doc_id"))
+      .agg(sum(col("__sx")).as("score_x10k"))
+      .withColumn("rank", row_number().over(rw))
+      .where(col("rank") <= k)
+      .select(col("qid"), col("doc_id"), col("score_x10k"), col("rank"))
+  }
+
+  /** Exact phrase match from the positional postings — the query shape
+    * boolean AND cannot express ("table hash" as adjacent tokens, not
+    * co-occurrence). Classic positional-intersection: slot i of the
+    * phrase contributes its postings' positions shifted by −i, and a doc
+    * matches once per position common to ALL slots (a common shifted
+    * position p means tokens p..p+n−1 spell the phrase). The scan is the
+    * same driver-planned shard prune as every other serve, over the
+    * postings at one resolved version; the slot table is |phrase| rows,
+    * broadcast. Repeated words in the phrase just bind the same posting
+    * row to two slots. Returns (doc_id, n_occ ≥ 1); ordering is the
+    * caller's.
     */
   def phraseSearchBundle(spark: SparkSession, root: String, name: String,
-      phrase: Seq[String], version: Option[Long] = None): DataFrame =
-    phraseCore(spark,
-      Catalog.readBundleTable(spark, root, name, "postings",
-        Some(Catalog.resolveVersion(spark, root, name, version,
-          "TextIndex.phraseSearchBundle"))),
-      phrase)
+      phrase: Seq[String], version: Option[Long] = None): DataFrame = {
+    val postingsAll = Catalog.readBundleTable(spark, root, name, "postings",
+      Some(Catalog.resolveVersion(spark, root, name, version,
+        "TextIndex.phraseSearchBundle")))
+    require(phrase.nonEmpty, "phraseSearchBundle: empty phrase")
+    val slots = spark.createDataFrame(phrase.zipWithIndex)
+      .toDF("term", "idx")
+    val bound = prunedFrom(postingsAll, phrase.distinct)
+      .join(broadcast(slots), Seq("term"))
+      .select(col("doc_id"),
+        transform(col("positions"), p => p - col("idx")).as("__adj"))
+    bound.groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("__nslots"), collect_list(col("__adj")).as("__as"))
+      .where(col("__nslots") === phrase.size)
+      .withColumn("n_occ", size(aggregate(
+        slice(col("__as"), 2, phrase.size - 1),
+        element_at(col("__as"), 1),
+        (acc, a) => array_intersect(acc, a))).cast("long"))
+      .where(col("n_occ") > 0)
+      .select(col("doc_id"), col("n_occ"))
+  }
 
   /** TAKEDOWN: remove a document id set from the bundle-backed index in
     * ONE atomic version (contamination removal, copyright /

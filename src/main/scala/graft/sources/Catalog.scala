@@ -49,10 +49,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * and share the entry. The requested version's marker is still stat'ed
   * first. Resolving WHICH version to read is never cached — `_latest`
   * pointers (bundle latest, the current deployment) are re-read on every
-  * call, so a flip or rollback is seen by the next serve. Flat index
-  * directories (`AnnIndex.knn`, `TextIndex.bm25Search`) are NOT cached:
-  * their rebuild baselines rewrite the same directory in place, with no
-  * marker to key on.
+  * call, so a flip or rollback is seen by the next serve.
   *
   * Bundle reads infer nothing: each manifest records every member's data
   * schema at commit ([[BundleManifest]]), and [[readBundleTable]] reads

@@ -17,9 +17,9 @@ import graft.operators.LmStore
   * manifest, so every crash window is closed — a replayed create
   * commits an identical superseding snapshot (readers resolve the
   * latest version only), and a replayed ingest is rejected by the
-  * manifest atomically. The flat swap→marker twin that used to live
-  * beside this had an unfixable write→mark replay gap and was retired
-  * in round 13 (the batch APIs remain, deprecated, for migration).
+  * manifest atomically. The bundle is the store's only layout: the
+  * flat swap→marker store, whose write→mark sequence left a replay gap,
+  * is gone together with its batch APIs.
   */
 object LmStream {
 

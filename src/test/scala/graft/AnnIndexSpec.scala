@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{AnnIndex, Embeddings, RelOps, Similarity}
+import graft.sources.Catalog
 
 class AnnIndexSpec extends AnyFunSuite {
   import SparkTestSession.{sfDir, spark}
@@ -13,12 +14,31 @@ class AnnIndexSpec extends AnyFunSuite {
   private def trainedBooks = Embeddings.pqTrain(
     RelOps.hashSample(embeddings, "vec_id", 0.5), m = 8, k = 16, iters = 2)
 
+  private def newRoot(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** The stored coarse quantizer of the latest version: (cell, centroid)
+    * in cell order.
+    */
+  private def centroids(root: String): Seq[(Int, Seq[Double])] =
+    Catalog.readBundleTable(spark, root, "ann", "centroids")
+      .select(col("cell"), col("centroid")).collect()
+      .map(r => (r.getInt(0), r.getSeq[Double](1))).toSeq.sortBy(_._1)
+
+  /** The stored PQ codebooks of the latest version, sub then code order. */
+  private def books(root: String): IndexedSeq[IndexedSeq[IndexedSeq[Double]]] =
+    Catalog.readBundleTable(spark, root, "ann", "books")
+      .select(col("sub"), col("code"), col("centroid")).collect()
+      .groupBy(_.getInt(0)).toIndexedSeq.sortBy(_._1).map { case (_, rs) =>
+        rs.sortBy(_.getInt(1)).map(_.getSeq[Double](2).toIndexedSeq).toIndexedSeq
+      }
+
   test("index tables round-trip: books and centroids read back exactly") {
-    val idx = "/tmp/graft/annindex_spec_rt"
-    val books = trainedBooks
-    AnnIndex.writeRebuildBaseline(embeddings, books, idx, nCentroids = 8)
-    assert(AnnIndex.readBooks(spark, idx) == books)
-    val cents = AnnIndex.readCentroids(spark, idx)
+    val root = newRoot("graft-ann-rt")
+    val bks = trainedBooks
+    AnnIndex.writeBundle(embeddings, bks, root, "ann", nCentroids = 8)
+    assert(books(root) == bks)
+    val cents = centroids(root)
     assert(cents.map(_._1) == (0 until 8))
     assert(cents == Similarity.sampleCentroids(embeddings, 8))
   }
@@ -27,12 +47,12 @@ class AnnIndexSpec extends AnyFunSuite {
     // with every cell probed and the rerank wider than the corpus, the
     // stored-index path degenerates to exact search — any deviation from
     // bruteForceKnn means codes/cells/decode corrupted something
-    val idx = "/tmp/graft/annindex_spec_exact"
+    val root = newRoot("graft-ann-exact")
     val corpus = embeddings.where(col("vec_id") < 200)
-    AnnIndex.writeRebuildBaseline(corpus, trainedBooks, idx, nCentroids = 4)
+    AnnIndex.writeBundle(corpus, trainedBooks, root, "ann", nCentroids = 4)
     val q = corpus.where(col("vec_id") < 3)
-    val got = AnnIndex.knn(spark, idx, corpus, q, k = 5, rerank = 300,
-        nProbe = 4)
+    val got = AnnIndex.knnBundle(spark, root, "ann", corpus, q, k = 5,
+        rerank = 300, nProbe = 4)
       .orderBy(col("qid"), col("rank")).collect()
     val want = Similarity.bruteForceKnn(corpus, q, k = 5)
       .orderBy(col("qid"), col("rank")).collect()
@@ -51,24 +71,25 @@ class AnnIndexSpec extends AnyFunSuite {
     // wide rerank) must equal brute force over the FULL corpus — i.e. the
     // appended vectors are first-class index residents, and the spill
     // duplicates collapse instead of double-counting a neighbor
-    val idx = "/tmp/graft/annindex_spec_append"
+    val root = newRoot("graft-ann-append")
     val corpus = embeddings.where(col("vec_id") < 200)
     val base = corpus.where(col("vec_id") % 10 =!= 0)
     val batch = corpus.where(col("vec_id") % 10 === 0)
-    val books = trainedBooks
-    AnnIndex.writeRebuildBaseline(base, books, idx, nCentroids = 4, trainIters = 2, spill = 2)
-    val centsBefore = AnnIndex.readCentroids(spark, idx)
-    AnnIndex.appendRebuildBaseline(spark, idx, batch, spill = 2)
-    assert(AnnIndex.readCentroids(spark, idx) == centsBefore,
+    val bks = trainedBooks
+    AnnIndex.writeBundle(base, bks, root, "ann", nCentroids = 4,
+      trainIters = 2, spill = 2)
+    val centsBefore = centroids(root)
+    assert(AnnIndex.appendBundle(spark, root, "ann", batch, "b1"))
+    assert(centroids(root) == centsBefore,
       "append must not move the stored quantizer")
-    assert(AnnIndex.readBooks(spark, idx) == books,
+    assert(books(root) == bks,
       "append must not move the stored codebooks")
-    val indexed = spark.read.parquet(s"$idx/codes.parquet")
+    val indexed = Catalog.readBundleTable(spark, root, "ann", "codes")
       .select(col("vec_id")).distinct().count()
     assert(indexed == corpus.count(), "index id set must cover the corpus")
     val q = corpus.where(col("vec_id") < 3)
-    val got = AnnIndex.knn(spark, idx, corpus, q, k = 5, rerank = 500,
-        nProbe = 4)
+    val got = AnnIndex.knnBundle(spark, root, "ann", corpus, q, k = 5,
+        rerank = 500, nProbe = 4)
       .orderBy(col("qid"), col("rank")).collect()
     val want = Similarity.bruteForceKnn(corpus, q, k = 5)
       .orderBy(col("qid"), col("rank")).collect()
@@ -81,11 +102,11 @@ class AnnIndexSpec extends AnyFunSuite {
   }
 
   test("serve scans only the probed cell partitions") {
-    val idx = "/tmp/graft/annindex_spec_prune"
-    AnnIndex.writeRebuildBaseline(embeddings, trainedBooks, idx, nCentroids = 16)
+    val root = newRoot("graft-ann-prune")
+    AnnIndex.writeBundle(embeddings, trainedBooks, root, "ann", nCentroids = 16)
     val q = embeddings.where(col("vec_id") < 2)
-    val ann = AnnIndex.knn(spark, idx, embeddings, q, k = 3, rerank = 20,
-      nProbe = 3)
+    val ann = AnnIndex.knnBundle(spark, root, "ann", embeddings, q, k = 3,
+      rerank = 20, nProbe = 3)
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -98,8 +119,11 @@ class AnnIndexSpec extends AnyFunSuite {
       case m: InMemoryTableScanExec => scans(m.relation.cachedPlan)
       case other                    => other.children.flatMap(scans)
     }
+    // match on the relation's root paths, not toString — the bundle's
+    // temp-dir path pushes the member name past simpleString truncation
     val codesScan = scans(ann.queryExecution.executedPlan)
-      .find(_.toString.contains("codes.parquet"))
+      .find(_.relation.location.rootPaths
+        .exists(_.toString.contains("codes.parquet")))
       .getOrElse(fail("no codes.parquet scan in the serve plan"))
     assert(codesScan.toString.contains("PartitionFilters"),
       "probe list must bind as a partition filter")

@@ -296,16 +296,20 @@ class CatalogSpec extends AnyFunSuite {
     assert(serve() == before && before.nonEmpty,
       "serve changed across compaction")
 
-    // text index: same maintenance path on a postings shard
+    // text index: the bundle's maintenance path folds the appended
+    // postings file sets into one
     val tix = Files.createTempDirectory("graft-tix-compact").toString
-    TextIndex.writeRebuildBaseline(docs.where(col("doc_id") % 2 === 0), tix)
-    TextIndex.appendRebuildBaseline(docs.where(col("doc_id") % 2 === 1), tix)
+    TextIndex.writeBundle(docs.where(col("doc_id") % 2 === 0), tix, "tix")
+    assert(TextIndex.appendBundle(spark, tix, "tix",
+      docs.where(col("doc_id") % 2 === 1), "b1"))
     val terms = Seq("the", "data")
-    def bm25() = TextIndex.bm25Search(spark, tix, terms, k = 10)
+    def bm25() = TextIndex.bm25SearchBundle(spark, tix, "tix", terms, k = 10)
       .collect().map(_.toSeq).toSeq
     val b0 = bm25()
-    val shard = terms.map(TextIndex.shardOf).head
-    Catalog.compactPartition(spark, tix, "postings", Seq(("shard", s"$shard")))
+    def postingSets() = Catalog.bundleManifest(spark, tix, "tix").dirs("postings").size
+    assert(postingSets() == 2, "expected the appended file set")
+    Catalog.compactBundle(spark, tix, "tix")
+    assert(postingSets() == 1, "postings not compacted")
     assert(bm25() == b0 && b0.nonEmpty, "bm25 serve changed across compaction")
   }
 
@@ -315,26 +319,29 @@ class CatalogSpec extends AnyFunSuite {
     val idx = Files.createTempDirectory("graft-ann-compact").toString
     val books = Embeddings.pqTrain(
       RelOps.hashSample(e, "vec_id", 0.5), m = 8, k = 16, iters = 2)
-    // build on a third, append twice: every cell directory accretes files
-    AnnIndex.writeRebuildBaseline(e.where(col("vec_id") % 3 === 0), books, idx,
+    // build on a third, append twice: every cell accretes a file set
+    AnnIndex.writeBundle(e.where(col("vec_id") % 3 === 0), books, idx, "ann",
       nCentroids = 4, trainIters = 2, spill = 2)
-    AnnIndex.appendRebuildBaseline(spark, idx, e.where(col("vec_id") % 3 === 1), spill = 2)
-    AnnIndex.appendRebuildBaseline(spark, idx, e.where(col("vec_id") % 3 === 2), spill = 2)
+    assert(AnnIndex.appendBundle(spark, idx, "ann", e.where(col("vec_id") % 3 === 1), "b1"))
+    assert(AnnIndex.appendBundle(spark, idx, "ann", e.where(col("vec_id") % 3 === 2), "b2"))
     val q = e.where(col("vec_id") < 2)
     // exhaustive probes: every cell (including the compacted one) feeds
     // the serve, so any compaction corruption must surface
-    def serve() = AnnIndex.knn(spark, idx, e, q, k = 5, rerank = 50,
-        nProbe = 4)
+    def serve() = AnnIndex.knnBundle(spark, idx, "ann", e, q, k = 5,
+        rerank = 50, nProbe = 4)
       .orderBy(col("qid"), col("rank")).collect().map(_.toSeq).toSeq
     val before = serve()
     spark.catalog.clearCache()
-    def leafFiles(dir: String) = new java.io.File(dir).listFiles()
-      .filter(f => f.isFile && f.getName.endsWith(".parquet")).map(_.getName).toSet
-    val cellDir = s"$idx/codes.parquet/cell=0"
-    val filesBefore = leafFiles(cellDir)
+    // the cell-0 parquet files the latest version's codes member lists
+    def cellFiles() = Catalog.bundleManifest(spark, idx, "ann").dirs("codes")
+      .flatMap(d => Option(new java.io.File(
+          s"${Catalog.bundleDir(idx, "ann")}/$d/cell=0").listFiles())
+        .getOrElse(Array.empty[java.io.File]).toSeq)
+      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
+    val filesBefore = cellFiles()
     assert(filesBefore.size >= 3, s"expected appended files, got $filesBefore")
-    Catalog.compactPartition(spark, idx, "codes", Seq(("cell", "0")))
-    assert(leafFiles(cellDir).size < filesBefore.size, "cell not compacted")
+    Catalog.compactBundle(spark, idx, "ann")
+    assert(cellFiles().size < filesBefore.size, "cell not compacted")
     assert(serve() == before && before.nonEmpty,
       "ANN serve changed across compaction")
     spark.catalog.clearCache()
@@ -345,16 +352,15 @@ class CatalogSpec extends AnyFunSuite {
     val docs = spark.read.parquet(s"${SparkTestSession.sfDir}/documents.parquet")
       .where(col("doc_id") < 300)
     val dir = Files.createTempDirectory("graft-pair-compact").toString
-    // fragment the flat table the way production does: one build plus
-    // several ledgered batch ingests, each landing whole new files
-    val corpus0 = docs.where(col("doc_id") % 4 === 0)
-    Dedup.writePairStore(corpus0, dir, "doc_id", "text", threshold = 0.9)
-    var seen = corpus0
-    for (m <- 1 to 3) {
-      val b = docs.where(col("doc_id") % 4 === m)
-      assert(Dedup.ingestPairBatch(b, seen, dir, s"batch-$m", threshold = 0.9))
-      seen = seen.unionByName(b)
-    }
+    // fragment the flat table the way an append sink does: one pair
+    // table build plus several appended batches of the corpus's pairs,
+    // each landing whole new files
+    Dedup.writePairTable(docs.where(col("doc_id") % 4 === 0), dir,
+      "doc_id", "text", threshold = 0.9)
+    val all = Dedup.minhashPairs(docs, "doc_id", "text", threshold = 0.9)
+    try for (m <- 1 to 3)
+      Catalog.writeAppend(all.where(col("a") % 4 === m).coalesce(1), dir, "pairs")
+    finally { all.unpersist(); () }
     def pairFiles() = new java.io.File(s"$dir/pairs.parquet").listFiles()
       .count(f => f.isFile && f.getName.endsWith(".parquet"))
     def pairs() = Dedup.pairTable(spark, dir)

@@ -663,31 +663,6 @@ class DedupSpec extends AnyFunSuite {
     assert(viaStore == direct)
   }
 
-  test("appendPairStore: incremental ingest equals a one-shot pair table row-for-row") {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .where(col("doc_id") < 300)
-    val p0 = docs.where(col("doc_id") % 3 === 0)
-    val p1 = docs.where(col("doc_id") % 3 === 1)
-    val p2 = docs.where(col("doc_id") % 3 === 2)
-    val inc = "/tmp/graft/dedupspec_pairstore_inc"
-    val full = "/tmp/graft/dedupspec_pairstore_full"
-    Dedup.writePairStore(p0, inc, "doc_id", "text", threshold = 0.9)
-    Dedup.appendPairStore(p1, p0, inc, "doc_id", "text", threshold = 0.9)
-    Dedup.appendPairStore(p2, p0.unionByName(p1), inc, "doc_id", "text",
-      threshold = 0.9)
-    Dedup.writePairStore(docs, full, "doc_id", "text", threshold = 0.9)
-    def rows(d: String) = Dedup.pairTable(spark, d)
-      .orderBy(col("a"), col("b")).collect().map(_.toSeq).toSeq
-    val a = rows(inc)
-    assert(a == rows(full) && a.nonEmpty)
-    // and the bucket index grew alongside: it matches a fresh rebuild too
-    def buckets(d: String) = spark.read.parquet(s"$d/buckets.parquet")
-      .select(col("doc_id"), col("band").cast("int"), col("bucket"))
-      .orderBy(col("doc_id"), col("band"), col("bucket"))
-      .collect().map(_.toSeq).toSeq
-    assert(buckets(inc) == buckets(full))
-  }
-
   test("pair bundle: atomic ingest equals a one-shot rebuild; replay rejected; members move together") {
     import graft.sources.Catalog
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -770,36 +745,6 @@ class DedupSpec extends AnyFunSuite {
       f.delete(); ()
     }
     rec(new java.io.File(p))
-  }
-
-  test("ingestPairBatch: replayed batch id is a no-op; pairs and buckets identical to a single ingest") {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .where(col("doc_id") < 300)
-    val corpus = docs.where(col("doc_id") % 3 =!= 2)
-    val b1 = docs.where(col("doc_id") % 3 === 2 && col("doc_id") % 2 === 0)
-    val b2 = docs.where(col("doc_id") % 3 === 2 && col("doc_id") % 2 === 1)
-    val dir = "/tmp/graft/dedupspec_pairstore_ledger"
-    def pairs() = Dedup.pairTable(spark, dir)
-      .orderBy(col("a"), col("b")).collect().map(_.toSeq).toSeq
-    def buckets() = spark.read.parquet(s"$dir/buckets.parquet")
-      .select(col("doc_id"), col("band").cast("int"), col("bucket"))
-      .orderBy(col("doc_id"), col("band"), col("bucket"))
-      .collect().map(_.toSeq).toSeq
-
-    Dedup.writePairStore(corpus, dir, "doc_id", "text", threshold = 0.9)
-    assert(Dedup.ingestPairBatch(b1, corpus, dir, "b1", threshold = 0.9))
-    val (p1, k1) = (pairs(), buckets())
-    // replay: same batch id → ledger skips, store row-identical
-    assert(!Dedup.ingestPairBatch(b1, corpus, dir, "b1", threshold = 0.9))
-    assert(pairs() == p1 && buckets() == k1 && p1.nonEmpty)
-    // a genuinely new batch id still ingests
-    assert(Dedup.ingestPairBatch(b2, corpus.unionByName(b1), dir, "b2",
-      threshold = 0.9))
-    assert(buckets().size > k1.size)
-    // a rebuild clears the ledger: the same ids are ingestable again
-    Dedup.writePairStore(corpus, dir, "doc_id", "text", threshold = 0.9)
-    assert(Dedup.ingestPairBatch(b1, corpus, dir, "b1", threshold = 0.9))
-    assert(pairs() == p1 && buckets() == k1)
   }
 
   test("sourceOverlap: exact jaccard/containment of per-feed shingle sets") {

@@ -53,10 +53,31 @@ class EntryContractSpec extends AnyFunSuite {
         s"stale rows: ${stale.toSeq.sorted.mkString(",")}")
   }
 
+  /** Queries whose rows carry in-plan equivalence flags (an incremental
+    * or retargeted store against a one-shot rebuild at a second root):
+    * the smoke collects their rows and requires every boolean column to
+    * be true, so a broken equivalence fails here, not only in the oracle
+    * compare.
+    */
+  private val flagged = Set("x186_text_bundle_store", "x187_bundle_stack_serve",
+    "x188_takedown", "x193_reindex_under_serve")
+
   test("all queries run and return rows at sf0.001") {
+    import org.apache.spark.sql.types.BooleanType
     val failures = SparkEntry.queries.flatMap { case (name, fn) =>
-      try { if (fn(spark, SparkTestSession.sfDir).count() > 0) None else Some(s"$name: 0 rows") }
-      catch { case e: Throwable => Some(s"$name: ${e.getMessage}") }
+      try {
+        val df = fn(spark, SparkTestSession.sfDir)
+        if (flagged(name)) {
+          val rows = df.collect()
+          val flags = df.schema.fields.filter(_.dataType == BooleanType).map(_.name)
+          val off = flags.filterNot(f => rows.forall(r => r.getAs[Boolean](f)))
+          if (rows.isEmpty) Some(s"$name: 0 rows")
+          else if (flags.isEmpty) Some(s"$name: no boolean column")
+          else if (off.nonEmpty) Some(s"$name: false ${off.mkString(", ")}")
+          else None
+        } else if (df.count() > 0) None
+        else Some(s"$name: 0 rows")
+      } catch { case e: Throwable => Some(s"$name: ${e.getMessage}") }
     }
     assert(failures.isEmpty, failures.mkString("; "))
   }

@@ -3,10 +3,11 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Dev tool (not part of the driver contract): build an sf1-equivalent
-  * dataset for the scaling bench by replicating the driver's sf0.1 tables
-  * `reps`× with disjoint key ranges, so `tools/scaling.py` can extend the
-  * steep-slope family's curves a decade past the provided SFs.
+/** Dev tool (not part of the driver contract; lives in test scope):
+  * build an sf1-equivalent dataset for the scaling bench by replicating
+  * the driver's sf0.1 tables `reps`× with disjoint key ranges, so
+  * `tools/scaling.py` can extend the steep-slope family's curves a decade
+  * past the provided SFs.
   *
   * Replication, not resynthesis, on purpose:
   *   - `lineitem` rows are replicated verbatim with the order key remapped
@@ -31,7 +32,7 @@ import org.apache.spark.sql.functions._
   *     family (x193/x195) gets its third decade on 10× the corpus it
   *     actually reads.
   *
-  * Usage: `sbt "runMain graft.MakeScaledData [srcDir outDir reps]"`;
+  * Usage: `sbt "Test/runMain graft.MakeScaledData [srcDir outDir reps]"`;
   * defaults: /root/testdata/sf0.1 → /tmp/graft/sf1, reps = 10.
   */
 object MakeScaledData {

@@ -421,6 +421,21 @@ class SimilaritySpec extends AnyFunSuite {
     assert(got.map(_._3).sliding(2).forall(p => p(0) >= p(1)))
   }
 
+  /** A fresh store root holding the serving stack's two bundles, each
+    * built in one commit: `tix` over `textDocs` and `ann` over `e` (16
+    * trained cells, spill 2).
+    */
+  private def stack(textDocs: org.apache.spark.sql.DataFrame,
+      e: org.apache.spark.sql.DataFrame, prefix: String): String = {
+    import graft.operators.{AnnIndex, Embeddings, RelOps, TextIndex}
+    val root = java.nio.file.Files.createTempDirectory(prefix).toString
+    TextIndex.writeBundle(textDocs, root, "tix")
+    AnnIndex.writeBundle(e, Embeddings.pqTrain(
+        RelOps.hashSample(e, "vec_id", 0.25), m = 8, k = 16, iters = 2),
+      root, "ann", nCentroids = 16, trainIters = 2, spill = 2)
+    root
+  }
+
   test("hybridStoredServe: wiring equals hand-fused sides; both stores scanned pruned") {
     import graft.operators.{AnnIndex, Embeddings, RelOps, TextIndex}
     spark.catalog.clearCache() // scan census below — no foreign cache substitution
@@ -428,22 +443,18 @@ class SimilaritySpec extends AnyFunSuite {
     val e = spark.read.parquet(s"${SparkTestSession.sfDir}/embeddings.parquet")
     val q = e.where(col("vec_id") < 1)
     val terms = Seq("join", "vector")
-    val tix = "/tmp/graft/simspec_hybrid_tix"
-    val aix = "/tmp/graft/simspec_hybrid_aix"
-    TextIndex.writeRebuildBaseline(docs, tix)
-    AnnIndex.writeRebuildBaseline(e, Embeddings.pqTrain(
-        RelOps.hashSample(e, "vec_id", 0.25), m = 8, k = 16, iters = 2),
-      aix, nCentroids = 16, trainIters = 2, spill = 2)
-    val served = Similarity.hybridStoredServe(spark, tix, aix, e, terms, q,
-      k = 5, poolK = 20, rerank = 60, nProbe = 3)
+    val root = stack(docs, e, "graft-simspec-hybrid")
+    val served = Similarity.hybridStoredServeBundle(spark, root, "tix", root,
+      "ann", e, terms, q, k = 5, poolK = 20, rerank = 60, nProbe = 3)
     // collect served ITSELF (not a derived frame): the scan census below
     // reads runtime metrics off this exact plan, which must have executed
     val got = served.collect().sortBy(_.getInt(2))
       .map(r => (r.getLong(0), r.getInt(2))).toSeq
     // the same fusion composed by hand from the two serves
-    val lex = TextIndex.bm25Search(spark, tix, terms, k = 20)
+    val lex = TextIndex.bm25SearchBundle(spark, root, "tix", terms, k = 20)
       .select(col("doc_id").as("nid"), col("rank").cast("int").as("lrank"))
-    val vec = AnnIndex.knn(spark, aix, e, q, k = 20, rerank = 60, nProbe = 3)
+    val vec = AnnIndex.knnBundle(spark, root, "ann", e, q, k = 20,
+        rerank = 60, nProbe = 3)
       .select(col("nid"), col("rank").as("vrank"))
     val want = Similarity.rrfFuse(lex, vec, k = 5).orderBy(col("rank"))
       .collect().map(r => (r.getLong(0), r.getInt(2))).toSeq
@@ -451,7 +462,7 @@ class SimilaritySpec extends AnyFunSuite {
 
     // the composed plan reads ONLY the pruned store directories: the
     // postings scan the query terms' shards, the codes scan the probed
-    // cells (the ANN side sits behind knn's materialized cache)
+    // cells (the ANN side sits behind knnBundle's materialized cache)
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -463,16 +474,20 @@ class SimilaritySpec extends AnyFunSuite {
       case other                    => other.children.flatMap(scans)
     }
     val all = scans(served.queryExecution.executedPlan)
-    val postings = all.find(_.toString.contains("postings.parquet"))
+    // match on the relation's root paths, not toString — the bundle's
+    // temp-dir path pushes the member name past simpleString truncation
+    def member(name: String) = all.find(_.relation.location.rootPaths
+      .exists(_.toString.contains(name)))
+    val postings = member("postings.parquet")
       .getOrElse(fail("no postings.parquet scan in the composed plan"))
     val nShards = terms.map(TextIndex.shardOf).distinct.size
-    assert(postings.toString.contains("PartitionFilters"))
+    assert(postings.partitionFilters.nonEmpty)
     val shardsRead = postings.metrics("numPartitions").value
     assert(shardsRead > 0 && shardsRead <= nShards,
       s"expected <= $nShards postings shards read, got $shardsRead")
-    val codes = all.find(_.toString.contains("codes.parquet"))
+    val codes = member("codes.parquet")
       .getOrElse(fail("no codes.parquet scan in the composed plan"))
-    assert(codes.toString.contains("PartitionFilters"))
+    assert(codes.partitionFilters.nonEmpty)
     val cellsRead = codes.metrics("numPartitions").value
     assert(cellsRead > 0 && cellsRead <= 3,
       s"expected <= 3 of 16 cell partitions read, got $cellsRead")
@@ -486,13 +501,8 @@ class SimilaritySpec extends AnyFunSuite {
     val e = spark.read.parquet(s"${SparkTestSession.sfDir}/embeddings.parquet")
     val q = e.where(col("vec_id") < 1)
     val terms = Seq("join", "vector")
-    val tix = "/tmp/graft/simspec_3stage_tix"
-    val aix = "/tmp/graft/simspec_3stage_aix"
-    TextIndex.writeRebuildBaseline(docs, tix)
-    AnnIndex.writeRebuildBaseline(e, Embeddings.pqTrain(
-        RelOps.hashSample(e, "vec_id", 0.25), m = 8, k = 16, iters = 2),
-      aix, nCentroids = 16, trainIters = 2, spill = 2)
-    val got = Similarity.threeStageServe(spark, tix, aix, e, terms, q,
+    val root = stack(docs, e, "graft-simspec-3stage")
+    val got = Similarity.threeStageServeBundle(spark, root, "tix", root, "ann", e, terms, q,
         k = 5, fuseK = 15, poolK = 20, rerank = 60, nProbe = 3)
       .orderBy(col("rank")).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
@@ -501,8 +511,8 @@ class SimilaritySpec extends AnyFunSuite {
     // stored fusion at fuseK, then the shared pool-greedy. Equality pins
     // the wiring — the composed serve cannot secretly pool from
     // anything but the fused stored-index shortlist
-    val fused = Similarity.hybridStoredServe(spark, tix, aix, e, terms, q,
-      k = 15, poolK = 20, rerank = 60, nProbe = 3)
+    val fused = Similarity.hybridStoredServeBundle(spark, root, "tix", root,
+      "ann", e, terms, q, k = 15, poolK = 20, rerank = 60, nProbe = 3)
     // collect fused ITSELF: the scan census reads runtime metrics off
     // this exact executed plan — the store-touching stage of the serve
     val fusedRows = fused.collect()
@@ -535,53 +545,50 @@ class SimilaritySpec extends AnyFunSuite {
       case other                    => other.children.flatMap(scans)
     }
     val all = scans(fused.queryExecution.executedPlan)
-    val postings = all.find(_.toString.contains("postings.parquet"))
+    // match on the relation's root paths, not toString — the bundle's
+    // temp-dir path pushes the member name past simpleString truncation
+    def member(name: String) = all.find(_.relation.location.rootPaths
+      .exists(_.toString.contains(name)))
+    val postings = member("postings.parquet")
       .getOrElse(fail("no postings.parquet scan in the fused stage"))
     val nShards = terms.map(TextIndex.shardOf).distinct.size
-    assert(postings.toString.contains("PartitionFilters"))
+    assert(postings.partitionFilters.nonEmpty)
     val shardsRead = postings.metrics("numPartitions").value
     assert(shardsRead > 0 && shardsRead <= nShards,
       s"expected <= $nShards postings shards read, got $shardsRead")
-    val codes = all.find(_.toString.contains("codes.parquet"))
+    val codes = member("codes.parquet")
       .getOrElse(fail("no codes.parquet scan in the fused stage"))
-    assert(codes.toString.contains("PartitionFilters"))
+    assert(codes.partitionFilters.nonEmpty)
     val cellsRead = codes.metrics("numPartitions").value
     assert(cellsRead > 0 && cellsRead <= 3,
       s"expected <= 3 of 16 cell partitions read, got $cellsRead")
     spark.catalog.clearCache()
   }
 
-  test("threeStageServeBundle equals the flat threeStageServe over the same stores") {
-    import graft.operators.{AnnIndex, Embeddings, RelOps, TextIndex}
+  test("threeStageServeBundle over an appended text index equals the one-shot stack") {
+    import graft.operators.TextIndex
     val docs = spark.read.parquet(s"${SparkTestSession.sfDir}/documents.parquet")
     val e = spark.read.parquet(s"${SparkTestSession.sfDir}/embeddings.parquet")
     val q = e.where(col("vec_id") < 1)
     val terms = Seq("join", "vector")
-    val tix = "/tmp/graft/simspec_b3_tix"
-    val aix = "/tmp/graft/simspec_b3_aix"
-    val root = java.nio.file.Files.createTempDirectory("graft-b3").toString
-    val books = Embeddings.pqTrain(
-      RelOps.hashSample(e, "vec_id", 0.25), m = 8, k = 16, iters = 2)
-    // the same corpus through both store protocols: the deterministic
-    // builds (shared trainCentroids/encodeAssign, shared postings pass)
-    // must produce byte-equivalent indexes, and the shared serve cores
-    // must then produce the identical three-stage result — flat and
-    // bundle deployments of the production stack cannot drift
-    TextIndex.writeRebuildBaseline(docs, tix)
-    AnnIndex.writeRebuildBaseline(e, books, aix, nCentroids = 16, trainIters = 2, spill = 2)
-    TextIndex.writeBundle(docs, root, "tix", seedBatchIds = Seq("b0"))
-    AnnIndex.writeBundle(e, books, root, "ann", nCentroids = 16,
-      trainIters = 2, spill = 2, seedBatchIds = Seq("b0"))
-    val flat = Similarity.threeStageServe(spark, tix, aix, e, terms, q,
+    val root = stack(docs, e, "graft-b3")
+    // the same corpus indexed a second time as its even docs plus a
+    // ledgered append of the odd ones: the appended postings and the
+    // summed BM25 delta stats must give the identical three-stage
+    // result over the same ANN bundle
+    TextIndex.writeBundle(docs.where(col("doc_id") % 2 === 0), root,
+      "tix_appended", seedBatchIds = Seq("b0"))
+    assert(TextIndex.appendBundle(spark, root, "tix_appended",
+      docs.where(col("doc_id") % 2 === 1), "b1"))
+    def serve(text: String) = Similarity.threeStageServeBundle(spark,
+        root, text, root, "ann", e, terms, q,
         k = 5, fuseK = 15, poolK = 20, rerank = 60, nProbe = 3)
       .orderBy(col("rank")).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
-    val bundle = Similarity.threeStageServeBundle(spark, root, "tix",
-        root, "ann", e, terms, q,
-        k = 5, fuseK = 15, poolK = 20, rerank = 60, nProbe = 3)
-      .orderBy(col("rank")).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(bundle == flat && bundle.size == 5, s"bundle $bundle flat $flat")
+    val appended = serve("tix_appended")
+    val oneShot = serve("tix")
+    assert(appended == oneShot && oneShot.size == 5,
+      s"appended $appended one-shot $oneShot")
     spark.catalog.clearCache()
   }
 
@@ -589,16 +596,11 @@ class SimilaritySpec extends AnyFunSuite {
     import graft.operators.{AnnIndex, Embeddings, RelOps, TextIndex}
     val docs = spark.read.parquet(s"${SparkTestSession.sfDir}/documents.parquet")
     val e = spark.read.parquet(s"${SparkTestSession.sfDir}/embeddings.parquet")
-    val tix = "/tmp/graft/simspec_batch_tix"
-    val aix = "/tmp/graft/simspec_batch_aix"
-    TextIndex.writeRebuildBaseline(docs, tix)
-    AnnIndex.writeRebuildBaseline(e, Embeddings.pqTrain(
-        RelOps.hashSample(e, "vec_id", 0.25), m = 8, k = 16, iters = 2),
-      aix, nCentroids = 16, trainIters = 2, spill = 2)
+    val root = stack(docs, e, "graft-simspec-batch")
     val batch = Seq(0L -> Seq("join", "vector"), 1L -> Seq("hash", "scan"),
       2L -> Seq("merge", "table"))
     val qvecs = e.where(col("vec_id") < 3)
-    val got = Similarity.threeStageServeBatch(spark, tix, aix, e, batch,
+    val got = Similarity.threeStageServeBatchBundle(spark, root, "tix", root, "ann", e, batch,
         qvecs, k = 5, fuseK = 15, poolK = 20, rerank = 60, nProbe = 3)
       .collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3)))
@@ -606,7 +608,7 @@ class SimilaritySpec extends AnyFunSuite {
       .map { case (q, rs) => q -> rs.map(t => (t._2, t._3, t._4)).sortBy(_._1).toSeq }
     assert(got.keySet == Set(0L, 1L, 2L))
     batch.foreach { case (qid, ts) =>
-      val single = Similarity.threeStageServe(spark, tix, aix, e, ts,
+      val single = Similarity.threeStageServeBundle(spark, root, "tix", root, "ann", e, ts,
           e.where(col("vec_id") === qid), k = 5, fuseK = 15, poolK = 20,
           rerank = 60, nProbe = 3)
         .orderBy(col("rank")).collect()
@@ -627,7 +629,7 @@ class SimilaritySpec extends AnyFunSuite {
     // the filtered batch: within restricts BOTH retrieval sides before
     // top-k per query, exactly as the single filtered serve does
     val allowed = e.where(col("label") < 5).select(col("vec_id"))
-    val gotF = Similarity.threeStageServeBatch(spark, tix, aix, e,
+    val gotF = Similarity.threeStageServeBatchBundle(spark, root, "tix", root, "ann", e,
         batch.take(2), e.where(col("vec_id") < 2), k = 5, fuseK = 15,
         poolK = 20, rerank = 60, nProbe = 3, within = Some(allowed))
       .collect()
@@ -636,7 +638,7 @@ class SimilaritySpec extends AnyFunSuite {
       .map { case (q, rs) => q -> rs.map(t => (t._2, t._3, t._4)).sortBy(_._1).toSeq }
     val allowedIds = allowed.collect().map(_.getLong(0)).toSet
     batch.take(2).foreach { case (qid, ts) =>
-      val single = Similarity.threeStageServe(spark, tix, aix, e, ts,
+      val single = Similarity.threeStageServeBundle(spark, root, "tix", root, "ann", e, ts,
           e.where(col("vec_id") === qid), k = 5, fuseK = 15, poolK = 20,
           rerank = 60, nProbe = 3, within = Some(allowed))
         .orderBy(col("rank")).collect()
@@ -655,14 +657,9 @@ class SimilaritySpec extends AnyFunSuite {
     val e = spark.read.parquet(s"${SparkTestSession.sfDir}/embeddings.parquet")
     val q = e.where(col("vec_id") < 1)
     val terms = Seq("join", "vector")
-    val tix = "/tmp/graft/simspec_filt_tix"
-    val aix = "/tmp/graft/simspec_filt_aix"
-    TextIndex.writeRebuildBaseline(docs, tix)
-    AnnIndex.writeRebuildBaseline(e, Embeddings.pqTrain(
-        RelOps.hashSample(e, "vec_id", 0.25), m = 8, k = 16, iters = 2),
-      aix, nCentroids = 16, trainIters = 2, spill = 2)
+    val root = stack(docs, e, "graft-simspec-filt")
     val allowed = e.where(col("label") < 5).select(col("vec_id"))
-    val got = Similarity.threeStageServe(spark, tix, aix, e, terms, q,
+    val got = Similarity.threeStageServeBundle(spark, root, "tix", root, "ann", e, terms, q,
         k = 5, fuseK = 15, poolK = 20, rerank = 60, nProbe = 3,
         within = Some(allowed))
       .orderBy(col("rank")).collect()
@@ -673,10 +670,10 @@ class SimilaritySpec extends AnyFunSuite {
     assert(got.forall(r => allowedIds.contains(r._2)),
       s"served ids outside filter: ${got.map(_._2).filterNot(allowedIds)}")
     // wiring: identical to composing the filtered stages by hand
-    val lex = TextIndex.bm25Search(spark, tix, terms, k = 20,
+    val lex = TextIndex.bm25SearchBundle(spark, root, "tix", terms, k = 20,
         within = Some(allowed))
       .select(col("doc_id").as("nid"), col("rank").cast("int").as("lrank"))
-    val vec = AnnIndex.knn(spark, aix, e, q, k = 20, rerank = 60,
+    val vec = AnnIndex.knnBundle(spark, root, "ann", e, q, k = 20, rerank = 60,
         nProbe = 3, within = Some(allowed))
       .select(col("nid"), col("rank").as("vrank"))
     val fused = Similarity.rrfFuse(lex, vec, k = 15)
@@ -688,10 +685,10 @@ class SimilaritySpec extends AnyFunSuite {
     // bm25Search keeps GLOBAL statistics under a filter: the per-doc
     // score of a doc that survives filtering is unchanged, only ranks
     // renumber within the filtered set
-    val unfiltered = TextIndex.bm25Search(spark, tix, terms, k = 200)
+    val unfiltered = TextIndex.bm25SearchBundle(spark, root, "tix", terms, k = 200)
       .select(col("doc_id"), col("score_x10k")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val filteredScores = TextIndex.bm25Search(spark, tix, terms, k = 200,
+    val filteredScores = TextIndex.bm25SearchBundle(spark, root, "tix", terms, k = 200,
         within = Some(allowed))
       .select(col("doc_id"), col("score_x10k")).collect()
       .map(r => r.getLong(0) -> r.getLong(1))
@@ -758,36 +755,29 @@ class SimilaritySpec extends AnyFunSuite {
     spark.catalog.clearCache()
   }
 
-  test("filtered batched bundle serve equals the flat filtered batch per qid") {
-    import graft.operators.{AnnIndex, Embeddings, RelOps, TextIndex}
+  test("filtered batched serve over an appended text index equals the one-shot stack per qid") {
+    import graft.operators.TextIndex
     val docs = spark.read.parquet(s"${SparkTestSession.sfDir}/documents.parquet")
     val e = spark.read.parquet(s"${SparkTestSession.sfDir}/embeddings.parquet")
-    val tix = "/tmp/graft/simspec_fbb_tix"
-    val aix = "/tmp/graft/simspec_fbb_aix"
-    val root = java.nio.file.Files.createTempDirectory("graft-fbb").toString
     val aligned = docs.join(e.select(col("vec_id").as("doc_id")),
       Seq("doc_id"), "left_semi")
-    val books = Embeddings.pqTrain(
-      RelOps.hashSample(e, "vec_id", 0.25), m = 8, k = 16, iters = 2)
-    TextIndex.writeRebuildBaseline(aligned, tix)
-    AnnIndex.writeRebuildBaseline(e, books, aix, nCentroids = 16, trainIters = 2, spill = 2)
-    TextIndex.writeBundle(aligned, root, "tix", seedBatchIds = Seq("b0"))
-    AnnIndex.writeBundle(e, books, root, "ann", nCentroids = 16,
-      trainIters = 2, spill = 2, seedBatchIds = Seq("b0"))
+    val root = stack(aligned, e, "graft-fbb")
+    TextIndex.writeBundle(aligned.where(col("doc_id") % 2 === 0), root,
+      "tix_appended", seedBatchIds = Seq("b0"))
+    assert(TextIndex.appendBundle(spark, root, "tix_appended",
+      aligned.where(col("doc_id") % 2 === 1), "b1"))
     val batch = Seq(0L -> Seq("join", "vector"), 1L -> Seq("hash", "scan"))
     val qvecs = e.where(col("vec_id") < 2)
     val allowed = e.where(col("label") < 5).select(col("vec_id"))
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy(col("qid"), col("rank")).collect().map(_.toSeq).toSeq
-    val flat = rows(Similarity.threeStageServeBatch(spark, tix, aix, e,
-      batch, qvecs, k = 5, fuseK = 15, poolK = 20, rerank = 60,
-      nProbe = 3, within = Some(allowed)))
+    def rows(text: String) = Similarity.threeStageServeBatchBundle(spark,
+        root, text, root, "ann", e, batch, qvecs, k = 5, fuseK = 15,
+        poolK = 20, rerank = 60, nProbe = 3, within = Some(allowed))
+      .orderBy(col("qid"), col("rank")).collect().map(_.toSeq).toSeq
+    val appended = rows("tix_appended")
     spark.catalog.clearCache()
-    val bundle = rows(Similarity.threeStageServeBatchBundle(spark, root,
-      "tix", root, "ann", e, batch, qvecs, k = 5, fuseK = 15, poolK = 20,
-      rerank = 60, nProbe = 3, within = Some(allowed)))
-    assert(bundle == flat && bundle.size == 10,
-      s"bundle $bundle != flat $flat")
+    val oneShot = rows("tix")
+    assert(appended == oneShot && oneShot.size == 10,
+      s"appended $appended != one-shot $oneShot")
     spark.catalog.clearCache()
   }
 
@@ -795,14 +785,9 @@ class SimilaritySpec extends AnyFunSuite {
     import graft.operators.{AnnIndex, Embeddings, RelOps, TextIndex}
     val docs = spark.read.parquet(s"${SparkTestSession.sfDir}/documents.parquet")
     val e = spark.read.parquet(s"${SparkTestSession.sfDir}/embeddings.parquet")
-    val tix = "/tmp/graft/simspec_wp_tix"
-    val aix = "/tmp/graft/simspec_wp_aix"
     val aligned = docs.join(e.select(col("vec_id").as("doc_id")),
       Seq("doc_id"), "left_semi")
-    TextIndex.writeRebuildBaseline(aligned, tix)
-    AnnIndex.writeRebuildBaseline(e, Embeddings.pqTrain(
-        RelOps.hashSample(e, "vec_id", 0.25), m = 8, k = 16, iters = 2),
-      aix, nCentroids = 16, trainIters = 2, spill = 2)
+    val root = stack(aligned, e, "graft-simspec-wp")
     val batch = Seq(0L -> Seq("join", "vector"), 1L -> Seq("hash", "scan"))
     val qvecs = e.where(col("vec_id") < 2)
     // DIFFERENT allowed set per query — the per-request ACL shape the
@@ -811,7 +796,7 @@ class SimilaritySpec extends AnyFunSuite {
     val allow1 = e.where(col("label") >= 3).select(col("vec_id"))
     val pairs = allow0.select(lit(0L).as("qid"), col("vec_id").as("id"))
       .unionByName(allow1.select(lit(1L).as("qid"), col("vec_id").as("id")))
-    val got = Similarity.threeStageServeBatch(spark, tix, aix, e, batch,
+    val got = Similarity.threeStageServeBatchBundle(spark, root, "tix", root, "ann", e, batch,
         qvecs, k = 5, fuseK = 15, poolK = 20, rerank = 60, nProbe = 3,
         withinPairs = Some(pairs))
       .collect()
@@ -821,7 +806,7 @@ class SimilaritySpec extends AnyFunSuite {
     spark.catalog.clearCache()
     val allowed = Map(0L -> allow0, 1L -> allow1)
     batch.foreach { case (qid, ts) =>
-      val single = Similarity.threeStageServe(spark, tix, aix, e, ts,
+      val single = Similarity.threeStageServeBundle(spark, root, "tix", root, "ann", e, ts,
           e.where(col("vec_id") === qid), k = 5, fuseK = 15, poolK = 20,
           rerank = 60, nProbe = 3, within = Some(allowed(qid)))
         .orderBy(col("rank")).collect()

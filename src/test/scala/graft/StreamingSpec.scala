@@ -720,13 +720,13 @@ class StreamingSpec extends AnyFunSuite {
       doc(4, "unrelated words entirely different"),
       doc(5, "vector vector vector join"))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val flat = Files.createTempDirectory("graft_tixs_flat").toString
-    TextIndex.writeRebuildBaseline(all, flat)
-    val got = TextIndex.bm25SearchBundle(spark, root, "tix",
+    val oneShot = Files.createTempDirectory("graft_tixs_oneshot").toString
+    TextIndex.writeBundle(all, oneShot, "tix")
+    def bm25(r: String) = TextIndex.bm25SearchBundle(spark, r, "tix",
         Seq("join", "vector"), k = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
-    val want = TextIndex.bm25Search(spark, flat, Seq("join", "vector"), k = 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
+    val got = bm25(root)
+    val want = bm25(oneShot)
     assert(got == want && got.nonEmpty)
     // every micro-batch id is in the manifest, including the creating
     // one; a crash-replayed micro-batch is rejected atomically

@@ -4,16 +4,24 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.TextIndex
+import graft.sources.Catalog
 
 class TextIndexSpec extends AnyFunSuite {
   import SparkTestSession.{sfDir, spark}
 
   private def docs = spark.read.parquet(s"$sfDir/documents.parquet")
 
+  /** A fresh store root holding `corpus` indexed in one commit as `tix`. */
+  private def oneShot(corpus: org.apache.spark.sql.DataFrame,
+      prefix: String): String = {
+    val root = java.nio.file.Files.createTempDirectory(prefix).toString
+    TextIndex.writeBundle(corpus, root, "tix")
+    root
+  }
+
   test("shardOf (driver) equals shardCol (build) for every indexed term") {
-    val idx = "/tmp/graft/textindex_spec_shard"
-    TextIndex.writeRebuildBaseline(docs, idx)
-    val terms = spark.read.parquet(s"$idx/postings.parquet")
+    val root = oneShot(docs, "graft-tix-shard")
+    val terms = Catalog.readBundleTable(spark, root, "tix", "postings")
       .select(col("term"), col("shard")).distinct().collect()
     assert(terms.nonEmpty)
     terms.foreach { r =>
@@ -23,11 +31,10 @@ class TextIndexSpec extends AnyFunSuite {
   }
 
   test("boolean AND search equals a from-scratch token recount") {
-    val idx = "/tmp/graft/textindex_spec_bool"
     val corpus = docs.where(col("doc_id") < 200)
-    TextIndex.writeRebuildBaseline(corpus, idx)
+    val root = oneShot(corpus, "graft-tix-bool")
     val ts = Seq("join", "hash")
-    val got = TextIndex.booleanSearch(spark, idx, ts)
+    val got = TextIndex.booleanSearchBundle(spark, root, "tix", ts)
       .orderBy(col("doc_id")).collect().map(_.getLong(0)).toSeq
     val want = corpus
       .select(col("doc_id"), explode(TextIndex.terms(col("text"))).as("t"))
@@ -40,14 +47,13 @@ class TextIndexSpec extends AnyFunSuite {
 
   test("bm25 ranks a doc saturated in the query term above a doc that mentions it once") {
     import spark.implicits._
-    val idx = "/tmp/graft/textindex_spec_rank"
     val tiny = Seq(
       (0L, "apple apple apple apple apple"),
       (1L, "apple pear plum quince fig"),
       (2L, "pear plum quince fig date"),
       (3L, "apple apple pear pear plum")).toDF("doc_id", "text")
-    TextIndex.writeRebuildBaseline(tiny, idx)
-    val got = TextIndex.bm25Search(spark, idx, Seq("apple"), k = 3)
+    val root = oneShot(tiny, "graft-tix-rank")
+    val got = TextIndex.bm25SearchBundle(spark, root, "tix", Seq("apple"), k = 3)
       .orderBy(col("rank")).collect()
     assert(got.map(_.getLong(0)).toSeq == Seq(0L, 3L, 1L))
     // every doc without the term is absent (disjunctive over query terms)
@@ -57,47 +63,21 @@ class TextIndexSpec extends AnyFunSuite {
     assert(scores == scores.sorted.reverse && scores.distinct == scores)
   }
 
-  test("serve scans only the query terms' shard partitions") {
-    val idx = "/tmp/graft/textindex_spec_prune"
-    TextIndex.writeRebuildBaseline(docs, idx)
-    val ts = Seq("join", "hash", "vector")
-    val expectShards = ts.map(TextIndex.shardOf).distinct.size
-    val res = TextIndex.bm25Search(spark, idx, ts, k = 5)
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-      case s: FileSourceScanExec    => Seq(s)
-      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-      case qs: QueryStageExec       => scans(qs.plan)
-      case other                    => other.children.flatMap(scans)
-    }
-    res.collect() // materialize so AQE finalizes the executed plan
-    val postingsScan = scans(res.queryExecution.executedPlan)
-      .find(_.toString.contains("postings.parquet"))
-      .getOrElse(fail("no postings.parquet scan in the serve plan"))
-    assert(postingsScan.toString.contains("PartitionFilters"),
-      "term shards must bind as a partition filter")
-    val read = postingsScan.metrics("numPartitions").value
-    assert(read > 0 && read <= expectShards,
-      s"expected <= $expectShards of ${TextIndex.nShards} shards read, got $read")
-  }
-
   test("phraseSearch: adjacency, multiplicity, repeated-word phrase, no co-occurrence false positive") {
     import spark.implicits._
-    val idx = "/tmp/graft/textindex_spec_phrase"
     val tiny = Seq(
       (0L, "big table hash join"),            // one occurrence
       (1L, "table hash and table hash again"),// two occurrences
       (2L, "hash first then table later"),    // both words, never adjacent
       (3L, "table alone"),                    // one word only
       (4L, "a b a c a b a")).toDF("doc_id", "text")
-    TextIndex.writeRebuildBaseline(tiny, idx)
-    val got = TextIndex.phraseSearch(spark, idx, Seq("table", "hash"))
+    val root = oneShot(tiny, "graft-tix-phrase")
+    val got = TextIndex.phraseSearchBundle(spark, root, "tix", Seq("table", "hash"))
       .orderBy(col("doc_id")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(got == Seq((0L, 1L), (1L, 2L)))
     // repeated word in the phrase binds one posting row to two slots
-    val rep = TextIndex.phraseSearch(spark, idx, Seq("a", "b", "a"))
+    val rep = TextIndex.phraseSearchBundle(spark, root, "tix", Seq("a", "b", "a"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(rep == Seq((4L, 2L)))
   }
@@ -105,48 +85,50 @@ class TextIndexSpec extends AnyFunSuite {
   test("append equals rebuild, and base posting files are never rewritten") {
     val base = docs.where(col("doc_id") % 5 =!= 0 && col("doc_id") < 300)
     val delta = docs.where(col("doc_id") % 5 === 0 && col("doc_id") < 300)
-    val incDir = "/tmp/graft/textindex_spec_inc"
-    val fullDir = "/tmp/graft/textindex_spec_full"
-    TextIndex.writeRebuildBaseline(base, incDir)
-    def files(d: String) = {
+    val inc = oneShot(base, "graft-tix-inc")
+    // every posting file the latest version's manifest lists, with its
+    // size and modification time
+    def files() = {
+      val m = Catalog.bundleManifest(spark, inc, "tix")
       def walk(f: java.io.File): Seq[java.io.File] =
         if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-      walk(new java.io.File(s"$d/postings.parquet"))
-        .filter(_.getName.endsWith(".parquet")).map(_.getPath).toSet
+      m.dirs("postings").flatMap(d =>
+          walk(new java.io.File(s"${Catalog.bundleDir(inc, "tix")}/$d")))
+        .filter(_.getName.endsWith(".parquet"))
+        .map(f => (f.getPath, f.length, f.lastModified)).toSet
     }
-    val baseFiles = files(incDir)
-    TextIndex.appendRebuildBaseline(delta, incDir)
+    val baseFiles = files()
+    assert(TextIndex.appendBundle(spark, inc, "tix", delta, "d1"))
     // file-level append: every base posting file survives untouched
-    assert(baseFiles.subsetOf(files(incDir)))
-    assert(files(incDir).size > baseFiles.size)
-    TextIndex.writeRebuildBaseline(base.unionByName(delta), fullDir)
+    assert(baseFiles.subsetOf(files()))
+    assert(files().size > baseFiles.size)
+    val full = oneShot(base.unionByName(delta), "graft-tix-full")
     val qs = Seq("scan", "merge", "vector")
-    val inc = TextIndex.bm25Search(spark, incDir, qs, k = 10)
+    def bm25(root: String) = TextIndex.bm25SearchBundle(spark, root, "tix", qs, k = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
-    val full = TextIndex.bm25Search(spark, fullDir, qs, k = 10)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
-    assert(inc == full && inc.nonEmpty)
-    // and the combined meta describes the whole corpus
-    val meta = spark.read.parquet(s"$incDir/meta.parquet").collect()(0)
+    val got = bm25(inc)
+    assert(got == bm25(full) && got.nonEmpty)
+    // and the summed meta deltas describe the whole corpus
+    val nDocs = Catalog.readBundleTable(spark, inc, "tix", "meta")
+      .agg(sum(col("n_docs"))).collect()(0).getLong(0)
     val nExpected = base.unionByName(delta)
       .where(size(TextIndex.terms(col("text"))) > 0).count()
-    assert(meta.getLong(0) == nExpected)
+    assert(nDocs == nExpected)
   }
 
   test("bm25SearchBatch: each query's rows equal its own single-query serve") {
-    val idx = "/tmp/graft/textindex_spec_batch"
-    TextIndex.writeRebuildBaseline(docs, idx)
+    val root = oneShot(docs, "graft-tix-batch")
     val batch = Seq(
       0L -> Seq("join", "hash"),
       1L -> Seq("vector", "scan", "merge"),
       2L -> Seq("join", "vector"))
-    val got = TextIndex.bm25SearchBatch(spark, idx, batch, k = 8)
+    val got = TextIndex.bm25SearchBatchBundle(spark, root, "tix", batch, k = 8)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3)))
       .groupBy(_._1)
       .map { case (q, rs) => q -> rs.map(t => (t._2, t._3, t._4)).sortBy(_._3).toSeq }
     batch.foreach { case (qid, ts) =>
-      val single = TextIndex.bm25Search(spark, idx, ts, k = 8)
+      val single = TextIndex.bm25SearchBundle(spark, root, "tix", ts, k = 8)
         .orderBy(col("rank")).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
       assert(got(qid) == single && single.nonEmpty,
@@ -154,7 +136,7 @@ class TextIndexSpec extends AnyFunSuite {
     }
     // the batched scan still prunes: union of the three term sets' shards
     val ts = batch.flatMap(_._2).distinct
-    val serve = TextIndex.bm25SearchBatch(spark, idx, batch, k = 8)
+    val serve = TextIndex.bm25SearchBatchBundle(spark, root, "tix", batch, k = 8)
     serve.collect()
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -173,7 +155,7 @@ class TextIndexSpec extends AnyFunSuite {
       <= ts.map(TextIndex.shardOf).distinct.size)
   }
 
-  test("bundle index: atomic build, ledgered append, serve equals flat rebuild across compaction") {
+  test("bundle index: atomic build, ledgered append, serve equals a one-shot rebuild across compaction") {
     val root = java.nio.file.Files.createTempDirectory("graft-tixb").toString
     val corpus = docs.where(col("doc_id") < 300)
     val base = corpus.where(col("doc_id") % 5 =!= 0)
@@ -190,28 +172,28 @@ class TextIndexSpec extends AnyFunSuite {
     assert(graft.sources.Catalog
       .readBundleTable(spark, root, "tix", "postings").count() == nPostings,
       "replay mutated the index")
-    // bundle serve over base∪delta ≡ flat full rebuild — BM25 ranked rows,
-    // boolean match set, and positional phrase rows
-    val flatDir = "/tmp/graft/textindex_spec_bundle_flat"
-    TextIndex.writeRebuildBaseline(corpus, flatDir)
+    // bundle serve over base∪delta ≡ a one-shot build of the same corpus
+    // at a second root — BM25 ranked rows, boolean match set, and
+    // positional phrase rows
+    val full = oneShot(corpus, "graft-tixb-full")
     val qs = Seq("scan", "merge", "vector")
     def bm25() = TextIndex.bm25SearchBundle(spark, root, "tix", qs, k = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
     val got = bm25()
-    val want = TextIndex.bm25Search(spark, flatDir, qs, k = 10)
+    val want = TextIndex.bm25SearchBundle(spark, full, "tix", qs, k = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
     assert(got == want && got.nonEmpty)
     val gotBool = TextIndex.booleanSearchBundle(spark, root, "tix",
         Seq("join", "hash"))
       .orderBy(col("doc_id")).collect().map(_.getLong(0)).toSeq
-    val wantBool = TextIndex.booleanSearch(spark, flatDir, Seq("join", "hash"))
+    val wantBool = TextIndex.booleanSearchBundle(spark, full, "tix", Seq("join", "hash"))
       .orderBy(col("doc_id")).collect().map(_.getLong(0)).toSeq
     assert(gotBool == wantBool && gotBool.nonEmpty)
     val gotPh = TextIndex.phraseSearchBundle(spark, root, "tix",
         Seq("table", "hash"))
       .orderBy(col("doc_id")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val wantPh = TextIndex.phraseSearch(spark, flatDir, Seq("table", "hash"))
+    val wantPh = TextIndex.phraseSearchBundle(spark, full, "tix", Seq("table", "hash"))
       .orderBy(col("doc_id")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(gotPh == wantPh)
@@ -235,26 +217,25 @@ class TextIndexSpec extends AnyFunSuite {
     assert(!TextIndex.appendBundle(spark, root, "tix",
       corpus.where(col("doc_id") % 2 === 1), "b1"),
       "takedown must not reopen the ledger")
-    val flat = "/tmp/graft/textindex_spec_rm_flat"
-    TextIndex.writeRebuildBaseline(corpus.join(rm, Seq("doc_id"), "left_anti"), flat)
+    val rebuilt = oneShot(corpus.join(rm, Seq("doc_id"), "left_anti"), "graft-tixrm-ref")
     // BM25 equivalence is the stats-compensation proof: a wrong
     // (−n_docs, −Σdl) delta shifts avgdl and every score
     val qs = Seq("scan", "merge", "vector")
     val gotB = TextIndex.bm25SearchBundle(spark, root, "tix", qs, k = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
-    val wantB = TextIndex.bm25Search(spark, flat, qs, k = 10)
+    val wantB = TextIndex.bm25SearchBundle(spark, rebuilt, "tix", qs, k = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
     assert(gotB == wantB && gotB.nonEmpty)
     val gotBool = TextIndex.booleanSearchBundle(spark, root, "tix",
         Seq("join", "hash")).orderBy(col("doc_id"))
       .collect().map(_.getLong(0)).toSeq
-    val wantBool = TextIndex.booleanSearch(spark, flat, Seq("join", "hash"))
+    val wantBool = TextIndex.booleanSearchBundle(spark, rebuilt, "tix", Seq("join", "hash"))
       .orderBy(col("doc_id")).collect().map(_.getLong(0)).toSeq
     assert(gotBool == wantBool)
     val gotPh = TextIndex.phraseSearchBundle(spark, root, "tix",
         Seq("table", "hash")).orderBy(col("doc_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val wantPh = TextIndex.phraseSearch(spark, flat, Seq("table", "hash"))
+    val wantPh = TextIndex.phraseSearchBundle(spark, rebuilt, "tix", Seq("table", "hash"))
       .orderBy(col("doc_id")).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(gotPh == wantPh)
     // no removed id survives anywhere in the postings member

@@ -442,37 +442,6 @@ class TextStatsSpec extends AnyFunSuite {
       ("B", 2L, xent(nlp6(3) + nlp6(1), 2))))
   }
 
-  test("LmStore: ledgered count-merge ingest == one-shot refit; load matches fitUnigramLm") {
-    import graft.operators.LmStore
-    val docs = spark.read
-      .parquet(s"${SparkTestSession.sfDir}/documents.parquet")
-      .where(col("doc_id") < 300)
-    val root = "/tmp/graft/textstats_lm_counts"
-    LmStore.write(docs.where(col("doc_id") % 3 === 0), "text", root)
-    assert(LmStore.ingest(docs.where(col("doc_id") % 3 === 1), "text", root, "b1"))
-    // replay: ledger skips, counts unchanged
-    def stored() = spark.read.parquet(s"$root/counts.parquet")
-      .orderBy(col("tok")).collect().map(_.toSeq).toSeq
-    val afterB1 = stored()
-    assert(!LmStore.ingest(docs.where(col("doc_id") % 3 === 1), "text", root, "b1"))
-    assert(stored() == afterB1)
-    assert(LmStore.ingest(docs.where(col("doc_id") % 3 === 2), "text", root, "b2"))
-    // merged counts == one-shot counts over the whole corpus, row for row
-    val oneShot = LmStore.counts(docs, "text")
-      .orderBy(col("tok")).collect().map(_.toSeq).toSeq
-    assert(stored() == oneShot && oneShot.nonEmpty)
-    // load replicates the in-query fitting convention exactly
-    val (voc, denom) = LmStore.load(spark, root, vocabSize = 20)
-    val (fitVoc, fitDenom) = TextStats.fitUnigramLm(docs, "text", 20)
-    assert(denom == fitDenom)
-    assert(voc.orderBy(col("tok")).collect().map(_.toSeq).toSeq
-      == fitVoc.orderBy(col("tok")).collect().map(_.toSeq).toSeq)
-    // a rebuild clears the ledger: the same batch id ingests again
-    LmStore.write(docs.where(col("doc_id") % 3 === 0), "text", root)
-    assert(LmStore.ingest(docs.where(col("doc_id") % 3 === 1), "text", root, "b1"))
-    assert(stored() == afterB1)
-  }
-
   test("LmStore bundle: delta-append ingest == refit; seed + replay rejected; compaction keeps ledger") {
     import graft.operators.LmStore
     import graft.sources.Catalog
@@ -486,14 +455,14 @@ class TextStatsSpec extends AnyFunSuite {
     assert(LmStore.ingestBundle(docs.where(col("doc_id") % 3 === 1), "text",
       root, "lm", "b1"))
     // the CREATE's own id is in the manifest: its replay is rejected
-    // with no re-mark step (the window LmStore.mark papered over)
+    // with no separate re-mark step
     assert(!LmStore.ingestBundle(docs.where(col("doc_id") % 3 === 0), "text",
       root, "lm", "b0"))
     assert(!LmStore.ingestBundle(docs.where(col("doc_id") % 3 === 1), "text",
       root, "lm", "b1"))
     assert(LmStore.ingestBundle(docs.where(col("doc_id") % 3 === 2), "text",
       root, "lm", "b2"))
-    // merged delta file sets == one-shot counts, and load == flat load
+    // merged delta file sets == one-shot counts, and load == refit
     def merged() = Catalog.readBundleTable(spark, root, "lm", "counts")
       .groupBy(col("tok")).agg(sum(col("c")).as("c"))
       .orderBy(col("tok")).collect().map(_.toSeq).toSeq

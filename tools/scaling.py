@@ -7,10 +7,11 @@ SCALE.md from the artifact — the prose is generated, so it cannot drift
 from the measurement.
 
 The steep full-rewrite family (STEEP below) additionally gets an sf1
-point: graft.MakeScaledData replicates the driver's sf0.1 tables 10×
-(disjoint key ranges, twin adjacency preserved — see its scaladoc) into
-/tmp/graft/sf1, extending those queries' curves a decade past the
-provided SFs.
+point: graft.MakeScaledData (a test-scope tool, run with
+`sbt "Test/runMain graft.MakeScaledData"`) replicates the driver's sf0.1
+tables 10× (disjoint key ranges, twin adjacency preserved — see its
+scaladoc) into /tmp/graft/sf1, extending those queries' curves a decade
+past the provided SFs.
 
 Interpretation: slope ~= d log(t) / d log(sf) over the measured range.
 Fixed per-query overhead (session jobs, planning, JIT) dominates at tiny
@@ -139,7 +140,7 @@ def bench_at(sf_dir, names):
 
 def make_sf1():
     print("[scaling] building sf1 (10x sf0.1) at " + SF1_DIR, flush=True)
-    subprocess.run(["sbt", "-batch", "runMain graft.MakeScaledData"],
+    subprocess.run(["sbt", "-batch", "Test/runMain graft.MakeScaledData"],
                    check=True, capture_output=True, text=True)
 
 
