@@ -3051,7 +3051,7 @@ object SparkEntry {
     // query (a term list plus its embedding), BM25 ranks off the stored
     // text index (postings scan pruned to the terms' shards), ANN ranks
     // off the stored ANN index (codes scan pruned to the probed cells),
-    // fused by the SAME rrf arithmetic (Similarity.rrfFuse). Nothing at
+    // fused by the SAME rrf arithmetic (Similarity.rrfFuseBatch). Nothing at
     // serve time touches corpus text or trains — both expensive passes
     // happened at index build. Contract shape is x95's: result count
     // plus an earned overlap floor of the served fusion against the
@@ -3080,11 +3080,13 @@ object SparkEntry {
       val served = Similarity.hybridStoredServeBundle(s, root, "tix",
         root, "ann", e, terms, q,
         k = 10, poolK = 50, rerank = 150, nProbe = 6).persist()
+      // the query is vec_id 0, so the brute-force side's qid is 0 too
       val lex = TextIndex.bm25SearchBundle(s, root, "tix", terms, k = 50)
-        .select(col("doc_id").as("nid"), col("rank").cast("int").as("lrank"))
+        .select(lit(0L).as("qid"), col("doc_id").as("nid"),
+          col("rank").cast("int").as("lrank"))
       val exactVec = Similarity.bruteForceKnn(e, q, k = 50)
-        .select(col("nid"), col("rank").as("vrank"))
-      val exact = Similarity.rrfFuse(lex, exactVec, k = 10)
+        .select(col("qid"), col("nid"), col("rank").as("vrank"))
+      val exact = Similarity.rrfFuseBatch(lex, exactVec, k = 10)
       val ov = served.select(col("nid"))
         .join(exact.select(col("nid")), Seq("nid"), "left_semi")
         .agg(count(lit(1)).as("__ov"))
@@ -3355,8 +3357,8 @@ object SparkEntry {
     // composed serve against the exact composition (same BM25 ranks,
     // brute-force vector ranks, same fusion and the same integer
     // greedy — the ANN side is the ONLY approximation, and the shared
-    // mmrRerankPool core means fusion/greedy cannot drift between the
-    // two sides). Measured final-list overlap (RecallProbe,
+    // rrfFuseBatch and mmrRerankPoolBatch cores mean fusion/greedy cannot
+    // drift between the two sides). Measured final-list overlap (RecallProbe,
     // deterministic): 0.9 / 0.6 / 0.7 at sf0.001/0.01/0.1 — floor 0.5
     // sits under the weakest point.
     // Since round 14 the serve runs on the atomic BUNDLE stores
@@ -3388,14 +3390,16 @@ object SparkEntry {
         root, "ann", e, terms, q,
         k = 10, fuseK = 30, poolK = 50, rerank = 150, nProbe = 6).persist()
       // the exact composition: stored BM25 ranks (not approximated),
-      // brute-force vector ranks, same rrfFuse, same mmrRerankPool
+      // brute-force vector ranks, same rrfFuseBatch, same
+      // mmrRerankPoolBatch; the query is vec_id 0, so every side's qid is 0
       val lex = TextIndex.bm25SearchBundle(s, root, "tix", terms, k = 50)
-        .select(col("doc_id").as("nid"), col("rank").cast("int").as("lrank"))
+        .select(lit(0L).as("qid"), col("doc_id").as("nid"),
+          col("rank").cast("int").as("lrank"))
       val exactVec = Similarity.bruteForceKnn(e, q, k = 50)
-        .select(col("nid"), col("rank").as("vrank"))
-      val exactPool = Similarity.rrfFuse(lex, exactVec, k = 30)
-      val exact = Similarity.mmrRerankPool(e, q, exactPool.select(col("nid")),
-        k = 10)
+        .select(col("qid"), col("nid"), col("rank").as("vrank"))
+      val exactPool = Similarity.rrfFuseBatch(lex, exactVec, k = 30)
+      val exact = Similarity.mmrRerankPoolBatch(e, q,
+        exactPool.select(col("qid"), col("nid")), k = 10)
       val ov = served.select(col("nid"))
         .join(exact.select(col("nid")), Seq("nid"), "left_semi")
         .agg(count(lit(1)).as("__ov"))
@@ -3645,15 +3649,17 @@ object SparkEntry {
       val viol = served
         .join(allowed.select(col("vec_id").as("nid")), Seq("nid"), "left_anti")
         .agg(count(lit(1)).as("__viol"))
+      // the query is vec_id 0, so every side's qid is 0
       val lex = TextIndex.bm25SearchBundle(s, root, "tix", terms, k = 50,
           within = Some(allowed))
-        .select(col("doc_id").as("nid"), col("rank").cast("int").as("lrank"))
+        .select(lit(0L).as("qid"), col("doc_id").as("nid"),
+          col("rank").cast("int").as("lrank"))
       val exactVec = Similarity.bruteForceKnn(
           e.join(allowed, Seq("vec_id"), "left_semi"), q, k = 50)
-        .select(col("nid"), col("rank").as("vrank"))
-      val exactPool = Similarity.rrfFuse(lex, exactVec, k = 30)
-      val exact = Similarity.mmrRerankPool(e, q, exactPool.select(col("nid")),
-        k = 10)
+        .select(col("qid"), col("nid"), col("rank").as("vrank"))
+      val exactPool = Similarity.rrfFuseBatch(lex, exactVec, k = 30)
+      val exact = Similarity.mmrRerankPoolBatch(e, q,
+        exactPool.select(col("qid"), col("nid")), k = 10)
       val ov = served.select(col("nid"))
         .join(exact.select(col("nid")), Seq("nid"), "left_semi")
         .agg(count(lit(1)).as("__ov"))
@@ -4817,11 +4823,10 @@ object SparkEntry {
     def annbRoot(dir: String) = s"/tmp/graft/serve_x182_${storeTag(dir)}"
     def tixbRoot(dir: String) = s"/tmp/graft/serve_x186_${storeTag(dir)}"
     def pitRoot(dir: String) = s"/tmp/graft/serve_x184_${storeTag(dir)}"
-    def bstkRoot(dir: String) = s"/tmp/graft/serve_x187_${storeTag(dir)}"
     Map(
       // bundle-backed since round 14 (the declared queries re-pointed;
-      // the serve rows stay trend-continuous — manifest resolution must
-      // add ~nothing, which x187-beside-x176 pinned in r13)
+      // the serve rows stay trend-continuous — manifest resolution adds
+      // ~nothing at serve time)
       "x95_stored_ann_index" -> ((
         (s: SparkSession, dir: String) => {
           val e = t(s, dir, "embeddings")
@@ -5146,34 +5151,6 @@ object SparkEntry {
             .groupBy(picked("version"), col("event_type"))
             .agg(count(lit(1)).as("n"), sum(col("val6")).as("sum_val6"),
               sum(col("bal_c")).as("sum_bal_c"))
-        })),
-      // the fully bundle-backed production serve over the aligned
-      // corpus — read beside x176's serve_only (the same
-      // threeStageServeBundle over the whole corpus): the manifest
-      // resolution and per-file-set union must add ~nothing at serve
-      // time, which this row shows round over round
-      "x187_bundle_stack_serve" -> ((
-        (s: SparkSession, dir: String) => {
-          val e = t(s, dir, "embeddings")
-          deleteRecursively(new java.io.File(bstkRoot(dir)))
-          val aligned = t(s, dir, "documents")
-            .join(e.select(col("vec_id").as("doc_id")), Seq("doc_id"),
-              "left_semi")
-          TextIndex.writeBundle(aligned, bstkRoot(dir), "tix",
-            seedBatchIds = Seq("b0"))
-          def books = Embeddings.pqTrain(
-            RelOps.hashSample(e, "vec_id", 0.25), m = 8, k = 16, iters = 3)
-          AnnIndex.writeBundle(e, books, bstkRoot(dir), "ann",
-            nCentroids = 16, trainIters = 4, spill = 2,
-            seedBatchIds = Seq("b0"))
-          ()
-        },
-        (s: SparkSession, dir: String) => {
-          val e = t(s, dir, "embeddings")
-          Similarity.threeStageServeBundle(s, bstkRoot(dir), "tix",
-            bstkRoot(dir), "ann", e, Seq("join", "hash", "vector"),
-            e.where(col("vec_id") < 1), k = 10, fuseK = 30, poolK = 50,
-            rerank = 150, nProbe = 6)
         })),
       // the text twin of x182's serve trend: BM25 off postings grown by
       // an append (two manifest-resolved file sets, the shard predicate

@@ -110,47 +110,40 @@ object Similarity {
     rrfFuseBatch(lex, vec, k, rrfK)
   }
 
-  /** Per-query reciprocal-rank fusion — [[rrfFuse]] generalized to N
-    * queries in one plan: `lex` (qid, nid, lrank) and `vec` (qid, nid,
-    * vrank) full-outer-join on (qid, nid), each side contributes
-    * `1/(rrfK + rank)` when present, top-k per qid. The window is
-    * qid-partitioned over at most 2·poolK rows per query — never
-    * corpus-sized, and never the single-partition global window the
-    * one-query [[rrfFuse]] is allowed. One implementation serves
-    * [[hybridRrf]] (the exact baseline) and the batched stored serve,
-    * so fusion arithmetic cannot drift between them.
+  /** Per-query reciprocal-rank fusion: `lex` (qid, nid, lrank) and `vec`
+    * (qid, nid, vrank), each id at most once per side and qid. Every
+    * candidate scores `1/(rrfK + rank)` for each side that retrieved it,
+    * and each qid keeps its top k, ties on ascending id. The two rank
+    * lists meet in ONE aggregate per qid (a map per side, zipped on the
+    * id, sorted, cut at k): a query's rows are at most two retrieval pools
+    * (≤ 2·poolK), never corpus-sized, and the fused rows stay partitioned
+    * by qid for the MMR stage's per-qid pools. A join on (qid, nid) and a
+    * qid window would shuffle three times; here one shuffle serves a
+    * batch, and a single query adds no stage to its plan. The one fusion
+    * implementation: [[hybridRrf]] (the exact baseline) and every stored
+    * serve ([[composedServe]], where a single query is qid 0) run it, so
+    * fusion arithmetic cannot drift between them.
     */
   def rrfFuseBatch(lex: DataFrame, vec: DataFrame, k: Int,
       rrfK: Int = 60): DataFrame = {
     require(k >= 1 && rrfK >= 1, s"rrfFuseBatch: k=$k rrfK=$rrfK")
-    val fw = Window.partitionBy(col("qid")).orderBy(col("rrf").desc, col("nid"))
-    lex.join(vec, Seq("qid", "nid"), "full_outer")
-      .withColumn("rrf",
-        coalesce(lit(1.0) / (lit(rrfK) + col("lrank")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(rrfK) + col("vrank")), lit(0.0)))
-      .withColumn("rank", row_number().over(fw))
-      .where(col("rank") <= k)
-      .select(col("qid"), col("nid"), col("rrf"), col("rank"))
-  }
-
-  /** Reciprocal-rank fusion of two single-query rank lists — the fusion
-    * arithmetic of [[hybridRrf]] factored out so the exact baseline
-    * (x161) and the stored-index serve (x165) share one implementation:
-    * `lex` (nid, lrank) and `vec` (nid, vrank) full-outer-join on the
-    * candidate id, each side contributes `1/(rrfK + rank)` when present,
-    * ties break on ascending id. The global window is safe: the input is
-    * at most two retrieval pools (≤ 2·poolK rows), never corpus-sized.
-    */
-  def rrfFuse(lex: DataFrame, vec: DataFrame, k: Int, rrfK: Int = 60): DataFrame = {
-    require(k >= 1 && rrfK >= 1, s"rrfFuse: k=$k rrfK=$rrfK")
-    val fw = Window.orderBy(col("rrf").desc, col("nid"))
-    lex.join(vec, Seq("nid"), "full_outer")
-      .withColumn("rrf",
-        coalesce(lit(1.0) / (lit(rrfK) + col("lrank")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(rrfK) + col("vrank")), lit(0.0)))
-      .withColumn("rank", row_number().over(fw))
-      .where(col("rank") <= k)
-      .select(col("nid"), col("rrf"), col("rank"))
+    def side(isLex: Boolean): Column = map_from_entries(collect_list(
+      when(col("lex") === isLex, struct(col("nid"), col("r")))))
+    def score(rank: Column): Column =
+      coalesce(lit(1.0) / (lit(rrfK) + rank), lit(0.0))
+    // (−rrf, nid) structs sort ascending as (rrf desc, nid asc)
+    val top = slice(sort_array(transform(map_entries(map_zip_with(
+        side(isLex = true), side(isLex = false),
+        (_, l, v) => score(l) + score(v))),
+      e => struct((-e("value")).as("neg"), e("key").as("nid")))), 1, k)
+    lex.select(col("qid"), col("nid"), col("lrank").as("r"), lit(true).as("lex"))
+      .unionByName(vec.select(col("qid"), col("nid"), col("vrank").as("r"),
+        lit(false).as("lex")))
+      .groupBy(col("qid"))
+      .agg(top.as("top"))
+      .select(col("qid"), posexplode(col("top")))
+      .select(col("qid"), col("col.nid").as("nid"), (-col("col.neg")).as("rrf"),
+        (col("pos") + 1).as("rank"))
   }
 
   /** Hybrid retrieval served off both STORED indexes — the production
@@ -160,20 +153,22 @@ object Similarity {
     * ([[graft.operators.TextIndex.bm25SearchBundle]] — postings scan
     * pruned to the query terms' shards), the vector ranks from the
     * stored ANN index ([[graft.operators.AnnIndex.knnBundle]] — codes
-    * scan pruned to the probed cells), and [[rrfFuse]] fuses the two
-    * pools. Nothing here touches corpus text or trains anything: both
-    * expensive passes happened once at index-build time, and the serve
-    * reads two pruned stores plus the bounded meta/quantizer tables.
-    * Single-query contract: `queryVec` is one vector (its id only
-    * excludes itself from the vector pool).
+    * scan pruned to the probed cells), and [[rrfFuseBatch]] fuses the
+    * two pools at qid 0: the first half of [[composedServe]], which the
+    * batched serve runs too. Nothing here touches corpus text or trains
+    * anything: both expensive passes happened once at index-build time,
+    * and the serve reads two pruned stores plus the bounded
+    * meta/quantizer tables. Single-query contract: `queryVec` is one
+    * vector (its id only excludes itself from the vector pool). Returns
+    * (nid, rrf, rank), unmaterialized.
     *
     * `within` (one id column, any name) is the production metadata
     * filter, applied as a candidate restriction on BOTH retrieval sides
     * before their top-k (global BM25 statistics, per
     * [[graft.operators.TextIndex.bm25SearchBundle]]); the fused result
     * can then only contain allowed ids. Each index resolves at ONE
-    * committed manifest version (resolved once here, threaded through
-    * every member read; see [[threeStageServeBundle]] for the pinning
+    * committed manifest version (resolved once, threaded through every
+    * member read; see [[threeStageServeBundle]] for the pinning
     * contract).
     */
   def hybridStoredServeBundle(spark: org.apache.spark.sql.SparkSession,
@@ -184,18 +179,12 @@ object Similarity {
       textVersion: Option[Long] = None,
       annVersion: Option[Long] = None): DataFrame = {
     require(poolK >= k, s"hybridStoredServeBundle: poolK=$poolK < k=$k")
-    val tv = Catalog.resolveVersion(spark, textRoot, textName, textVersion,
-      "hybridStoredServeBundle")
-    val av = Catalog.resolveVersion(spark, annRoot, annName, annVersion,
-      "hybridStoredServeBundle")
-    val lex = TextIndex.bm25SearchBundle(spark, textRoot, textName,
-        queryTerms, k = poolK, within = within, version = Some(tv))
-      .select(col("doc_id").as("nid"), col("rank").cast("int").as("lrank"))
-    val vec = AnnIndex.knnBundle(spark, annRoot, annName, vecs, queryVec,
-        k = poolK, rerank = rerank, nProbe = nProbe, within = within,
-        version = Some(av))
-      .select(col("nid"), col("rank").as("vrank"))
-    rrfFuse(lex, vec, k, rrfK)
+    composedServe(spark, "hybridStoredServeBundle", textRoot, textName,
+        annRoot, annName, vecs,
+        lexAtQid0(spark, textRoot, textName, queryTerms, poolK, within),
+        queryVec, lit(0L), None, k, poolK, rrfK, rerank, nProbe, within,
+        None, textVersion, annVersion)
+      .select(col("nid"), col("rrf"), col("rank"))
   }
 
   /** Maximal-marginal-relevance diversified re-rank (Carbonell &
@@ -225,44 +214,16 @@ object Similarity {
       bruteForceKnn(vecs, queryVec, poolK).select(col("nid")), k)
   }
 
-  /** The MMR core over an EXPLICIT candidate pool — the shape the
-    * composed serving stack needs: `pool` (one `nid` column, ≤ 256
-    * candidates — a retrieval shortlist, never the corpus; every id must
-    * resolve to a `vecs` row, enforced loudly — a silent drop would
-    * return fewer than k with no signal) arrives from
-    * whatever retrieval stage ran before ([[bruteForceKnn]] for the
-    * exact baseline, [[hybridStoredServeBundle]]'s fused list for the
-    * production path in [[threeStageServeBundle]]). `queryVec` is one
-    * row.
-    * ONE action ([[mmrFetch]]) brings back the pool ids, their vectors
-    * and the query vector; relevance is recomputed on the driver as the
-    * ×10⁴-rounded integer cosine of each pool member to the query
-    * ([[cos4]], bit-identical to [[bruteForceKnn]]'s scoring expression,
-    * so pool-from-knn replays exactly), and the λ=0.5 greedy runs over
-    * it. A pool over 256 ids fails before any vector is fetched.
+  /** The MMR stage over ONE query's EXPLICIT candidate pool: `pool` (one
+    * `nid` column, ≤ 256 candidates) and `queryVec` (one row) run
+    * [[mmrRerankPoolBatch]] as its qid-0 batch, so the checks, the fetch
+    * and the greedy are the batch's. Returns (rank, nid, mmr4).
     */
   def mmrRerankPool(vecs: DataFrame, queryVec: DataFrame, pool: DataFrame,
-      k: Int, idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    require(k >= 1, s"mmrRerankPool: k=$k")
-    val rows = mmrSelect(mmrFetchPool(vecs, queryVec, pool, idCol, vecCol),
-      k, idCol, "mmrRerankPool", batch = false)
-    import vecs.sparkSession.implicits._
-    rows.map { case (_, rank, nid, mmr4) => (rank, nid, mmr4) }
-      .toDF("rank", "nid", "mmr4")
-  }
-
-  /** [[mmrFetch]] for one query: the pool is one global aggregate under
-    * qid 0, and so is the query row.
-    */
-  private[graft] def mmrFetchPool(vecs: DataFrame, queryVec: DataFrame,
-      pool: DataFrame, idCol: String, vecCol: String): MmrFetch = {
-    val n = size(col("ids"))
-    val pools = pool.agg(collect_set(col("nid").cast("long")).as("ids"))
-      .select(array(struct(lit(0L).as("qid"), col("ids"))).as("p"),
-        n.as("mx"), (n.cast("long") * n).as("pr"))
-    mmrFetch(vecs, queryVec.select(lit(0L).as("qid"), col(vecCol)), pools,
-      idCol, vecCol)
-  }
+      k: Int, idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    mmrRerankPoolBatch(vecs, queryVec.select(lit(0L).as(idCol), col(vecCol)),
+        pool.select(lit(0L).as("qid"), col("nid")), k, idCol, vecCol)
+      .select(col("rank"), col("nid"), col("mmr4"))
 
   /** ×10⁴-rounded integer cosine of `a` and `b` given their norms — the
     * one formula behind every MMR score (relevance qsim4 and pairwise
@@ -320,25 +281,32 @@ object Similarity {
   private[graft] case class MmrFetch(pools: Map[Long, Seq[Long]],
       vectors: Map[Long, Array[Double]], queries: Seq[(Long, Array[Double])])
 
-  /** The MMR stage's ONE action. `pools` is one row: `p` (array of
-    * (qid, ids) structs), `mx` (the largest pool) and `pr` (Σ pool²);
-    * `queries` is (qid, `vecCol`). The row's keys — (0, nid) per distinct
-    * pool id, (1, qid) per pool, and (2, 0) carrying `p` — are the
-    * broadcast build side of a hash join that the vector table, the query
-    * rows and one marker row stream past as ONE tagged union: a streamed
-    * row costs one hash probe whatever the number of queries, the pool
-    * plan is referenced once (so the retrieval behind it is planned and
-    * run once, inside this job, with nothing persisted), and the pool ids
-    * come back on the marker row even when none resolves. Pools over the
-    * 256-candidate or the pair-row bound emit no (0, nid) keys, so no
-    * vector is fetched for them. The join key is the id alone: a single
-    * long key keeps the broadcast relation as small as its rows (a
-    * two-column key builds a map of one memory page), and the few rows
-    * whose id matches a key of another kind (a query's own vector id is
-    * its qid) are dropped here.
+  /** The MMR stage's ONE action, the one fetch path. `pool` is (qid, nid)
+    * per-query shortlists, folded by one groupBy(qid) and one global
+    * aggregate into a single row: `p` (array of (qid, ids) structs), `mx`
+    * (the largest pool) and `pr` (Σ pool²); `queries` is (qid, `vecCol`).
+    * That row's keys — (0, nid) per distinct pool id, (1, qid) per pool,
+    * and (2, 0) carrying `p` — are the broadcast build side of a hash join
+    * that the vector table, the query rows and one marker row stream past
+    * as ONE tagged union: a streamed row costs one hash probe whatever the
+    * number of queries, the pool plan is referenced once (so the
+    * retrieval behind it is planned and run once, inside this job, with
+    * nothing persisted), and the pool ids come back on the marker row even
+    * when none resolves. Pools over the 256-candidate or the pair-row
+    * bound emit no (0, nid) keys, so no vector is fetched for them. The
+    * join key is the id alone: a single long key keeps the broadcast
+    * relation as small as its rows (a two-column key builds a map of one
+    * memory page), and the few rows whose id matches a key of another
+    * kind (a query's own vector id is its qid) are dropped here.
     */
   private[graft] def mmrFetch(vecs: DataFrame, queries: DataFrame,
-      pools: DataFrame, idCol: String, vecCol: String): MmrFetch = {
+      pool: DataFrame, idCol: String, vecCol: String): MmrFetch = {
+    val n = size(col("ids"))
+    val pools = pool
+      .groupBy(col("qid").cast("long").as("qid"))
+      .agg(collect_set(col("nid").cast("long")).as("ids"))
+      .agg(collect_list(struct(col("qid"), col("ids"))).as("p"),
+        max(n).as("mx"), sum(n.cast("long") * n).as("pr"))
     def tagged(kind: Int): Column => Column =
       key => struct(lit(kind).as("kind"), key.as("key"))
     val fetchable = col("mx") <= 256 && col("pr") <= MaxBatchGreedyPairRows
@@ -369,18 +337,17 @@ object Similarity {
   }
 
   /** The driver half of the MMR stage: every loud check, then per qid the
-    * integer cosines ([[mmrScores]]) and the greedy ([[mmrGreedy]]).
+    * integer cosines ([[mmrScores]]) and the greedy ([[mmrGreedy]]). A qid
+    * whose pool is empty selects nothing, so an empty pool answers 0 rows.
     * Returns (qid, rank, nid, mmr4), qids ascending.
     */
-  private def mmrSelect(f: MmrFetch, k: Int, idCol: String, who: String,
-      batch: Boolean): Seq[(Long, Int, Long, Long)] = {
+  private def mmrSelect(f: MmrFetch, k: Int,
+      idCol: String): Seq[(Long, Int, Long, Long)] = {
+    val who = "mmrRerankPoolBatch"
     val sizes = f.pools.values.map(_.size.toLong)
-    require(!batch || f.pools.nonEmpty, s"$who: empty pool")
     val mx = if (sizes.isEmpty) 0L else sizes.max
-    require(mx <= 256,
-      if (batch) s"$who: a per-query pool exceeds the 256-candidate " +
-        s"driver-greedy bound (max $mx)"
-      else s"$who: pool exceeds the 256-candidate driver-greedy bound")
+    require(mx <= 256, s"$who: a per-query pool exceeds the 256-candidate " +
+      s"driver-greedy bound (max $mx)")
     val pairRows = sizes.map(n => n * n).sum
     require(pairRows <= MaxBatchGreedyPairRows,
       s"$who: ${f.pools.size} pools collect $pairRows pair " +
@@ -398,26 +365,22 @@ object Similarity {
     val posed = f.pools.filter(_._2.nonEmpty)
     val queries = f.queries.groupBy(_._1)
     val missing = posed.keySet -- queries.keySet
-    require(missing.isEmpty,
-      if (batch) s"$who: qids $missing have a pool but no '$idCol' row in " +
-        "the query-vector table — qid mismatch between the retrieval stage " +
-        "and queryVecs"
-      else s"$who: the query-vector table has no row")
+    require(missing.isEmpty, s"$who: qids $missing have a pool but no " +
+      s"'$idCol' row in the query-vector table — qid mismatch between the " +
+      "retrieval stage and queryVecs")
     val dup = queries.filter(_._2.size > 1).keySet
-    require(dup.isEmpty,
-      if (batch) s"$who: qids $dup have more than one query-vector row"
-      else s"$who: the query-vector table has more than one row")
+    require(dup.isEmpty, s"$who: qids $dup have more than one query-vector row")
     posed.keys.toSeq.sorted.flatMap { qid =>
       val (qsim, psim) = mmrScores(queries(qid).head._2, posed(qid), f.vectors)
       mmrGreedy(qsim, psim, k).map { case (rank, nid, mmr4) => (qid, rank, nid, mmr4) }
     }
   }
 
-  /** The λ=0.5 integer MMR greedy over ONE query's scored pool — the
-    * single driver-side step both [[mmrRerankPool]] and the batched
-    * [[mmrRerankPoolBatch]] run, so single and batched serves select
-    * identically by construction. Ties break (score desc, id asc);
-    * rank 1 is pure relevance.
+  /** The λ=0.5 integer MMR greedy over ONE query's scored pool, which
+    * [[mmrRerankPoolBatch]] runs per qid (a single query is its qid-0
+    * batch, so single and batched serves select identically by
+    * construction). Ties break (score desc, id asc); rank 1 is pure
+    * relevance.
     */
   private def mmrGreedy(cand: Map[Long, Long],
       psim: Map[(Long, Long), Long], k: Int): Seq[(Int, Long, Long)] = {
@@ -443,35 +406,82 @@ object Similarity {
     */
   val MaxBatchGreedyPairRows: Long = 1L << 20
 
-  /** [[mmrRerankPool]] generalized to N queries in ONE plan: `pool` is
-    * (qid, nid) per-query shortlists, `queryVecs` the matching query
-    * vectors (qid = their `idCol`), and the greedy runs per qid over the
-    * fetched pools — each query's selection is EXACTLY what
-    * [[mmrRerankPool]] would pick alone (the same [[mmrFetch]] action,
-    * [[cos4]] scores and [[mmrGreedy]]), so batching is a throughput
-    * decision, never a semantics one. The one action fetches Σ pool_q
-    * vectors, capped by the per-query 256-candidate bound and
-    * [[MaxBatchGreedyPairRows]] before any vector is fetched or any pair
-    * scored. Every (qid, nid) must resolve to a vector row and every
-    * pooled qid to one query row — loud failures, same contract as the
-    * single-query pool. Returns (qid, rank, nid, mmr4).
+  /** The MMR stage, ONE implementation for N queries in one plan: `pool`
+    * is (qid, nid) per-query shortlists (a retrieval shortlist, never the
+    * corpus), `queryVecs` the matching query vectors (qid = their
+    * `idCol`), and the greedy runs per qid over the fetched pools — the
+    * same [[mmrFetch]] action, [[cos4]] scores and [[mmrGreedy]] whether
+    * the batch holds one query ([[mmrRerankPool]], [[threeStageServeBundle]])
+    * or many, so batching is a throughput decision, never a semantics one.
+    * Relevance is recomputed on the driver as the ×10⁴-rounded integer
+    * cosine of each pool member to its query (bit-identical to
+    * [[bruteForceKnn]]'s scoring expression, so pool-from-knn replays
+    * exactly). The one action fetches Σ pool_q vectors, capped by the
+    * per-query 256-candidate bound and [[MaxBatchGreedyPairRows]] before
+    * any vector is fetched or any pair scored. Every (qid, nid) must
+    * resolve to a vector row (a silent drop would return fewer than k with
+    * no signal) and every pooled qid to one query row — loud failures. A
+    * qid with an empty pool, or none at all, answers 0 rows. Returns
+    * (qid, rank, nid, mmr4).
     */
   def mmrRerankPoolBatch(vecs: DataFrame, queryVecs: DataFrame,
       pool: DataFrame, k: Int, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
     require(k >= 1, s"mmrRerankPoolBatch: k=$k")
-    val n = size(col("ids"))
-    val pools = pool
-      .groupBy(col("qid").cast("long").as("qid"))
-      .agg(collect_set(col("nid").cast("long")).as("ids"))
-      .agg(collect_list(struct(col("qid"), col("ids"))).as("p"),
-        max(n).as("mx"), sum(n.cast("long") * n).as("pr"))
     val rows = mmrSelect(
       mmrFetch(vecs, queryVecs.select(col(idCol).as("qid"), col(vecCol)),
-        pools, idCol, vecCol),
-      k, idCol, "mmrRerankPoolBatch", batch = true)
+        pool, idCol, vecCol), k, idCol)
     import vecs.sparkSession.implicits._
     rows.toDF("qid", "rank", "nid", "mmr4")
+  }
+
+  /** One query's BM25 pool as the qid-0 lexical side of [[composedServe]].
+    * It keeps [[graft.operators.TextIndex.bm25SearchBundle]]'s
+    * distributed TakeOrdered: the batch BM25's qid window would sort the
+    * query's whole candidate set in one task.
+    */
+  private def lexAtQid0(spark: org.apache.spark.sql.SparkSession,
+      root: String, name: String, terms: Seq[String], poolK: Int,
+      within: Option[DataFrame]): Long => DataFrame = tv =>
+    TextIndex.bm25SearchBundle(spark, root, name, terms, k = poolK,
+        within = within, version = Some(tv))
+      .select(lit(0L).as("qid"), col("doc_id").as("nid"),
+        col("rank").cast("int").as("lrank"))
+
+  /** The composed serve, written once over qid-keyed inputs: `lex` gives
+    * the BM25 pool (qid, nid, lrank) at the resolved text version, the
+    * stored ANN serve answers `annQueries` and labels its pool with `qid`,
+    * [[rrfFuseBatch]] fuses per qid and cuts at `fuseK`, and `mmr` (the
+    * MMR stage's query rows with their qid as `vec_id`, and its k) runs
+    * [[mmrRerankPoolBatch]] over the fused pools; without it the serve
+    * returns the fused (qid, nid, rrf, rank). Each index's version
+    * resolves once here and threads through every member read. A single
+    * query is qid 0, but its ANN side serves under the vector's own id:
+    * the ANN serve drops a candidate equal to its qid (the query's
+    * self-match), so relabelling first would drop vector 0 instead.
+    */
+  private def composedServe(spark: org.apache.spark.sql.SparkSession,
+      who: String, textRoot: String, textName: String, annRoot: String,
+      annName: String, vecs: DataFrame, lex: Long => DataFrame,
+      annQueries: DataFrame, qid: Column, mmr: Option[(DataFrame, Int)],
+      fuseK: Int, poolK: Int, rrfK: Int, rerank: Int, nProbe: Int,
+      within: Option[DataFrame], withinPairs: Option[DataFrame],
+      textVersion: Option[Long], annVersion: Option[Long]): DataFrame = {
+    val tv = Catalog.resolveVersion(spark, textRoot, textName, textVersion, who)
+    val av = Catalog.resolveVersion(spark, annRoot, annName, annVersion, who)
+    val lexPool = lex(tv)
+    // materialize = false: the MMR stage collects the fused pool within
+    // this same call, and the fused list alone is as lazy as its BM25
+    // side, so the ANN serve's eager persist+count would be one extra
+    // action for a frame consumed once
+    val vec = AnnIndex.knnBundle(spark, annRoot, annName, vecs, annQueries,
+        k = poolK, rerank = rerank, nProbe = nProbe, within = within,
+        version = Some(av), withinPairs = withinPairs, materialize = false)
+      .select(qid.as("qid"), col("nid"), col("rank").as("vrank"))
+    val fused = rrfFuseBatch(lexPool, vec, fuseK, rrfK)
+    mmr.fold(fused) { case (queries, k) =>
+      mmrRerankPoolBatch(vecs, queries, fused.select(col("qid"), col("nid")), k)
+    }
   }
 
   /** [[threeStageServeBundle]] generalized to N queries in ONE plan —
@@ -480,14 +490,14 @@ object Similarity {
     * ONCE to the union of the queries' term shards
     * ([[graft.operators.TextIndex.bm25SearchBatchBundle]]), the stored
     * ANN serve carries qid natively
-    * ([[graft.operators.AnnIndex.knnBundle]]), fusion is per-qid
-    * ([[rrfFuseBatch]]) and the greedy runs per qid over the fetched
-    * fused pools ([[mmrRerankPoolBatch]] — bounded at Σ fuseK² pair
-    * cosines with an explicit cap). Per-query results are EXACTLY the
-    * single-query [[threeStageServeBundle]]'s (shared arithmetic end to
-    * end). Each index resolves at ONE committed manifest version (see
+    * ([[graft.operators.AnnIndex.knnBundle]]), and fusion and MMR are
+    * [[composedServe]]'s per-qid stages (the greedy bounded at Σ fuseK²
+    * pair cosines with an explicit cap). Per-query results are EXACTLY
+    * the single-query [[threeStageServeBundle]]'s (the same stages end to
+    * end; only the BM25 core differs, with the same arithmetic). Each
+    * index resolves at ONE committed manifest version (see
     * [[threeStageServeBundle]] for the pinning contract). Returns (qid,
-    * rank, nid, mmr4).
+    * rank, nid, mmr4); a query whose fused pool is empty returns no rows.
     *
     * Filtering: `within` is one allowed-id set shared by every query;
     * `withinPairs` is PER-QUERY eligibility as (qid, id) rows — the
@@ -506,31 +516,21 @@ object Similarity {
       withinPairs: Option[DataFrame] = None): DataFrame = {
     require(fuseK >= k && fuseK <= 256,
       s"threeStageServeBatchBundle: fuseK=$fuseK out of range for k=$k")
-    val tv = Catalog.resolveVersion(spark, textRoot, textName, textVersion,
-      "threeStageServeBatchBundle")
-    val av = Catalog.resolveVersion(spark, annRoot, annName, annVersion,
-      "threeStageServeBatchBundle")
-    val lex = TextIndex.bm25SearchBatchBundle(spark, textRoot, textName,
-        queryTerms, k = poolK, within = within, version = Some(tv),
-        withinPairs = withinPairs)
-      .select(col("qid"), col("doc_id").as("nid"),
-        col("rank").cast("int").as("lrank"))
-    // materialize = false: the MMR stage below collects the fused pool
-    // within this same call (before any maintenance can land), so the
-    // ANN serve's eager persist+count would be one extra action
-    val vec = AnnIndex.knnBundle(spark, annRoot, annName, vecs, queryVecs,
-        k = poolK, rerank = rerank, nProbe = nProbe, within = within,
-        version = Some(av), withinPairs = withinPairs, materialize = false)
-      .select(col("qid"), col("nid"), col("rank").as("vrank"))
-    val fused = rrfFuseBatch(lex, vec, fuseK, rrfK)
-    // per-query pools are rrfFuseBatch outputs cut at fuseK (<= 256,
-    // required above); the batch width is capped here, before planning
+    // per-query pools are cut at fuseK (<= 256, required above); the batch
+    // width is capped here, before planning
     require(queryTerms.size.toLong * fuseK * fuseK <= MaxBatchGreedyPairRows,
       s"threeStageServeBatchBundle: ${queryTerms.size} queries at " +
         s"fuseK=$fuseK exceed $MaxBatchGreedyPairRows greedy pair rows - " +
         "split the batch")
-    mmrRerankPoolBatch(vecs, queryVecs,
-      fused.select(col("qid"), col("nid")), k)
+    composedServe(spark, "threeStageServeBatchBundle", textRoot, textName,
+      annRoot, annName, vecs,
+      tv => TextIndex.bm25SearchBatchBundle(spark, textRoot, textName,
+          queryTerms, k = poolK, within = within, version = Some(tv),
+          withinPairs = withinPairs)
+        .select(col("qid"), col("doc_id").as("nid"),
+          col("rank").cast("int").as("lrank")),
+      queryVecs, col("qid"), Some(queryVecs -> k), fuseK, poolK, rrfK,
+      rerank, nProbe, within, withinPairs, textVersion, annVersion)
   }
 
   /** The COMPOSED three-stage serving stack — the query a production
@@ -538,23 +538,26 @@ object Similarity {
     * off both STORED indexes ([[TextIndex.bm25SearchBundle]] postings
     * pruned to the query terms' shards, [[AnnIndex.knnBundle]] codes
     * pruned to the probed cells), (2) reciprocal-rank fusion of the two
-    * pools ([[rrfFuse]] — the same arithmetic as the exact baseline),
-    * (3) maximal-marginal-relevance diversification of the fused
-    * shortlist ([[mmrRerankPool]] — the greedy bounded at `fuseK`²
-    * driver-side cosines). Nothing in the composition touches corpus
-    * text or trains: both expensive passes happened once at index
-    * build, every serve-time scan is directory-pruned and sees one
-    * committed manifest version of each index (never a half-rebuilt
-    * one), and the only corpus-sized frame (`vecs`) is read solely to
-    * fetch the shortlist's own vectors through a broadcast hash join,
-    * in the same action that runs the retrieval. The MMR pool is the
-    * fused shortlist, which is already filtered when `within` is set —
-    * the greedy never reintroduces candidates.
+    * pools ([[rrfFuseBatch]] — the same arithmetic as the exact
+    * baseline), (3) maximal-marginal-relevance diversification of the
+    * fused shortlist ([[mmrRerankPoolBatch]] — the greedy bounded at
+    * `fuseK`² driver-side cosines). Stages (2) and (3) are the batched
+    * serve's ([[composedServe]]) run at qid 0. Nothing in the
+    * composition touches corpus text or trains: both expensive passes
+    * happened once at index build, every serve-time scan is
+    * directory-pruned and sees one committed manifest version of each
+    * index (never a half-rebuilt one), and the only corpus-sized frame
+    * (`vecs`) is read solely to fetch the shortlist's own vectors
+    * through a broadcast hash join, in the same action that runs the
+    * retrieval. The MMR pool is the fused shortlist, which is already
+    * filtered when `within` is set — the greedy never reintroduces
+    * candidates; an empty fused pool returns no rows. Returns (rank,
+    * nid, mmr4).
     *
     * ALIGNMENT CONTRACT: the text index must index a subset of the
     * embedded corpus (build it over the docs that have vector rows) —
     * the MMR stage needs every fused candidate's vector, and a fused
-    * id with no `vecs` row fails loudly ([[mmrRerankPool]]'s
+    * id with no `vecs` row fails loudly ([[mmrRerankPoolBatch]]'s
     * resolution check) rather than silently shrinking the pool below
     * fuseK. Alignment is a BUILD-time property (one ingest-side
     * semi-join), deliberately not re-checked with a serve-time join
@@ -577,22 +580,28 @@ object Similarity {
       annVersion: Option[Long] = None): DataFrame = {
     require(fuseK >= k && fuseK <= 256,
       s"threeStageServeBundle: fuseK=$fuseK out of range for k=$k")
-    val tv = Catalog.resolveVersion(spark, textRoot, textName, textVersion,
-      "threeStageServeBundle")
-    val av = Catalog.resolveVersion(spark, annRoot, annName, annVersion,
-      "threeStageServeBundle")
-    val lex = TextIndex.bm25SearchBundle(spark, textRoot, textName,
-        queryTerms, k = poolK, within = within, version = Some(tv))
-      .select(col("doc_id").as("nid"), col("rank").cast("int").as("lrank"))
-    // materialize = false: the MMR stage below collects the fused pool
-    // within this same call (before any maintenance can land), so the
-    // ANN serve's eager persist+count would be one extra action
-    val vec = AnnIndex.knnBundle(spark, annRoot, annName, vecs, queryVec,
-        k = poolK, rerank = rerank, nProbe = nProbe, within = within,
-        version = Some(av), materialize = false)
-      .select(col("nid"), col("rank").as("vrank"))
-    val fused = rrfFuse(lex, vec, fuseK, rrfK)
-    mmrRerankPool(vecs, queryVec, fused.select(col("nid")), k)
+    composedServe(spark, "threeStageServeBundle", textRoot, textName,
+        annRoot, annName, vecs,
+        lexAtQid0(spark, textRoot, textName, queryTerms, poolK, within),
+        queryVec, lit(0L),
+        Some(queryVec.select(lit(0L).as("vec_id"), col("embedding")) -> k),
+        fuseK, poolK, rrfK, rerank, nProbe, within, None, textVersion,
+        annVersion)
+      .select(col("rank"), col("nid"), col("mmr4"))
+  }
+
+  /** The pin set of deployment `depName` as a lookup of each bundle's
+    * pinned version — a deployed serve's ONE mutable read. An artifact
+    * the deployment does not pin fails loudly.
+    */
+  private def deploymentPins(spark: org.apache.spark.sql.SparkSession,
+      depRoot: String, depName: String, deploymentVersion: Option[Long],
+      who: String): String => Option[Long] = {
+    val pins = Catalog.readDeployment(spark, depRoot, depName,
+      deploymentVersion)
+    art => Some(pins.getOrElse(art,
+      sys.error(s"$who: deployment '$depName' has no pin for artifact " +
+        s"'$art' (pins: ${pins.keys.toSeq.sorted})")))
   }
 
   /** [[threeStageServeBundle]] with BOTH index versions resolved
@@ -618,15 +627,11 @@ object Similarity {
       fuseK: Int = 30, poolK: Int = 50, rrfK: Int = 60, rerank: Int = 150,
       nProbe: Int = 6, within: Option[DataFrame] = None,
       deploymentVersion: Option[Long] = None): DataFrame = {
-    val pins = Catalog.readDeployment(spark, depRoot, depName,
-      deploymentVersion)
-    def pin(art: String): Long = pins.getOrElse(art,
-      sys.error(s"threeStageServeDeployed: deployment '$depName' has no " +
-        s"pin for artifact '$art' (pins: ${pins.keys.toSeq.sorted})"))
+    val pin = deploymentPins(spark, depRoot, depName, deploymentVersion,
+      "threeStageServeDeployed")
     threeStageServeBundle(spark, textRoot, textName, annRoot, annName,
       vecs, queryTerms, queryVec, k, fuseK, poolK, rrfK, rerank, nProbe,
-      within, textVersion = Some(pin(textName)),
-      annVersion = Some(pin(annName)))
+      within, pin(textName), pin(annName))
   }
 
   /** [[threeStageServeBatchBundle]] with both index versions resolved
@@ -650,15 +655,11 @@ object Similarity {
       nProbe: Int = 6, within: Option[DataFrame] = None,
       withinPairs: Option[DataFrame] = None,
       deploymentVersion: Option[Long] = None): DataFrame = {
-    val pins = Catalog.readDeployment(spark, depRoot, depName,
-      deploymentVersion)
-    def pin(art: String): Long = pins.getOrElse(art,
-      sys.error(s"threeStageServeBatchDeployed: deployment '$depName' " +
-        s"has no pin for artifact '$art' (pins: ${pins.keys.toSeq.sorted})"))
+    val pin = deploymentPins(spark, depRoot, depName, deploymentVersion,
+      "threeStageServeBatchDeployed")
     threeStageServeBatchBundle(spark, textRoot, textName, annRoot, annName,
       vecs, queryTerms, queryVecs, k, fuseK, poolK, rrfK, rerank, nProbe,
-      within, textVersion = Some(pin(textName)),
-      annVersion = Some(pin(annName)), withinPairs = withinPairs)
+      within, pin(textName), pin(annName), withinPairs)
   }
 
   /** Take a document set down from a DEPLOYED text+ANN serving stack —

@@ -11,13 +11,14 @@ import graft.sources.Catalog
 /** STORED inverted text index: ranked retrieval as tables, not a session
   * object — the text twin of [[AnnIndex]].
   *
-  * `tfidfTopTerms`/`tfidfCosinePairs` rebuild term statistics per call;
-  * right for one-shot analytics, wrong for a serving corpus where the
-  * expensive part (tokenize + posting-list aggregation over 10^9+ docs)
-  * should run ONCE and every query after that should touch only the
-  * shards its terms live in. The index is one versioned bundle
-  * ([[graft.sources.Catalog.commitBundle]] — every version's `_manifest`
-  * lists the file sets of each member) with two members:
+  * [[graft.functions.TextStats.tfidfCosinePairs]] rebuilds term
+  * statistics per call; right for one-shot analytics, wrong for a
+  * serving corpus where the expensive part (tokenize + posting-list
+  * aggregation over 10^9+ docs) should run ONCE and every query after
+  * that should touch only the shards its terms live in. The index is
+  * one versioned bundle ([[graft.sources.Catalog.commitBundle]] — every
+  * version's `_manifest` lists the file sets of each member) with two
+  * members:
   *
   *   postings — (term, doc_id, tf, dl, positions) PARTITIONED BY shard
   *     (declared in the manifest), where shard = md5-prefix(term) % 16:

@@ -15,6 +15,14 @@ class EntryContractSpec extends AnyFunSuite {
     assert(missing.isEmpty, s"oracle without query: $missing")
   }
 
+  test("every serveOnly key has a queries entry") {
+    // graft.Bench times these rows beside the declared queries they
+    // factor the build out of: a row named for no declared query times a
+    // serve the oracle never checks
+    val missing = SparkEntry.serveOnly.keySet -- SparkEntry.queries.keySet
+    assert(missing.isEmpty, s"serveOnly row without query: $missing")
+  }
+
   test("storeTag: distinct testdata roots map to distinct store tags") {
     // digits-only tags collided: any two roots whose paths share the same
     // digit sequence (two .../sf0.1 trees) silently shared one /tmp store

@@ -110,20 +110,22 @@ object RecallProbe {
       }
       if (only("x165") || only("x176")) {
         // shared exact sides (stored bm25 ranks + brute-force vector
-        // ranks); each section's SERVE runs only when requested, so a
-        // single-section probe no longer pays for the other's serve
+        // ranks, both at qid 0: the query is vec_id 0); each section's
+        // SERVE runs only when requested, so a single-section probe no
+        // longer pays for the other's serve
         val lex = graft.operators.TextIndex.bm25SearchBundle(spark, hyb,
             "tix", terms, k = 50)
-          .select(col("doc_id").as("nid"), col("rank").cast("int").as("lrank"))
+          .select(lit(0L).as("qid"), col("doc_id").as("nid"),
+            col("rank").cast("int").as("lrank"))
         val exactVec = Similarity.bruteForceKnn(e, q165, k = 50)
-          .select(col("nid"), col("rank").as("vrank"))
+          .select(col("qid"), col("nid"), col("rank").as("vrank"))
         if (only("x165")) {
           // x165 hybrid stored serve: fused-list overlap vs the exact
           // fusion at k=10
           val served = Similarity.hybridStoredServeBundle(spark, hyb,
             "tix", hyb, "ann", e, terms,
             q165, k = 10, poolK = 50, rerank = 150, nProbe = 6).persist()
-          val exact = Similarity.rrfFuse(lex, exactVec, k = 10).persist()
+          val exact = Similarity.rrfFuseBatch(lex, exactVec, k = 10).persist()
           val ov = served.select(col("nid"))
             .join(exact.select(col("nid")), Seq("nid"), "left_semi").count()
           val ex = exact.count()
@@ -138,9 +140,9 @@ object RecallProbe {
             "tix", hyb, "ann", e, terms,
             q165, k = 10, fuseK = 30, poolK = 50, rerank = 150, nProbe = 6)
             .persist()
-          val exactPool = Similarity.rrfFuse(lex, exactVec, k = 30)
-          val exact176 = Similarity.mmrRerankPool(e, q165,
-            exactPool.select(col("nid")), k = 10).persist()
+          val exactPool = Similarity.rrfFuseBatch(lex, exactVec, k = 30)
+          val exact176 = Similarity.mmrRerankPoolBatch(e, q165,
+            exactPool.select(col("qid"), col("nid")), k = 10).persist()
           val ov176 = served176.select(col("nid"))
             .join(exact176.select(col("nid")), Seq("nid"), "left_semi").count()
           val ex176 = exact176.count()
@@ -158,13 +160,14 @@ object RecallProbe {
           within = Some(allowed)).persist()
         val lexF = graft.operators.TextIndex.bm25SearchBundle(spark, hyb,
             "tix", terms, k = 50, within = Some(allowed))
-          .select(col("doc_id").as("nid"), col("rank").cast("int").as("lrank"))
+          .select(lit(0L).as("qid"), col("doc_id").as("nid"),
+            col("rank").cast("int").as("lrank"))
         val exactVecF = Similarity.bruteForceKnn(
             e.join(allowed, Seq("vec_id"), "left_semi"), q165, k = 50)
-          .select(col("nid"), col("rank").as("vrank"))
-        val exact180 = Similarity.mmrRerankPool(e, q165,
-          Similarity.rrfFuse(lexF, exactVecF, k = 30).select(col("nid")),
-          k = 10).persist()
+          .select(col("qid"), col("nid"), col("rank").as("vrank"))
+        val exact180 = Similarity.mmrRerankPoolBatch(e, q165,
+          Similarity.rrfFuseBatch(lexF, exactVecF, k = 30)
+            .select(col("qid"), col("nid")), k = 10).persist()
         val ov180 = served180.select(col("nid"))
           .join(exact180.select(col("nid")), Seq("nid"), "left_semi").count()
         val ex180 = exact180.count()

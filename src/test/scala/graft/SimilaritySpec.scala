@@ -374,16 +374,26 @@ class SimilaritySpec extends AnyFunSuite {
     assert(got == Seq((2L, 1), (1L, 2), (3L, 3)))
   }
 
-  test("rrfFuse: one-sided candidates score one term, both-sided two, ties break on id") {
-    val lex = Seq((10L, 1), (11L, 2)).toDF("nid", "lrank")
-    val vec = Seq((11L, 1), (12L, 2)).toDF("nid", "vrank")
-    val got = Similarity.rrfFuse(lex, vec, k = 3).orderBy(col("rank"))
-      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getInt(2))).toSeq
+  test("rrfFuseBatch: one-sided score one term, both-sided two, ties on id, per qid") {
+    // qid 7 holds the same ids with the sides swapped: fusion never
+    // crosses qids, so it ranks and cuts its own candidates
+    val lex = Seq((0L, 10L, 1), (0L, 11L, 2), (7L, 11L, 1))
+      .toDF("qid", "nid", "lrank")
+    val vec = Seq((0L, 11L, 1), (0L, 12L, 2), (7L, 10L, 1), (7L, 12L, 2))
+      .toDF("qid", "nid", "vrank")
+    val rows = Similarity.rrfFuseBatch(lex, vec, k = 2).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
+    def of(qid: Long) = rows.filter(_._1 == qid).sortBy(_._4)
+      .map(t => (t._2, t._3, t._4)).toSeq
     // 11: 1/62+1/61 = .032516..; 10: 1/61 = .016393..; 12: 1/62 = .016129..
-    assert(got.map(_._1) == Seq(11L, 10L, 12L))
-    assert(math.abs(got(0)._2 - (1.0 / 62 + 1.0 / 61)) < 1e-12)
-    assert(math.abs(got(1)._2 - 1.0 / 61) < 1e-12)
-    assert(got.map(_._3) == Seq(1, 2, 3))
+    val q0 = of(0L)
+    assert(q0.map(_._1) == Seq(11L, 10L) && q0.map(_._3) == Seq(1, 2), q0)
+    assert(math.abs(q0(0)._2 - (1.0 / 62 + 1.0 / 61)) < 1e-12)
+    assert(math.abs(q0(1)._2 - 1.0 / 61) < 1e-12)
+    // qid 7: 10 and 11 tie at 1/61 (the lower id wins), 12 is cut at k
+    val q7 = of(7L)
+    assert(q7.map(_._1) == Seq(10L, 11L) && q7.map(_._3) == Seq(1, 2), q7)
+    assert(q7.forall(t => math.abs(t._2 - 1.0 / 61) < 1e-12), q7)
   }
 
   test("mmrRerank: greedy integer MMR matches a replayed fixture; duplicates penalized") {
@@ -450,19 +460,21 @@ class SimilaritySpec extends AnyFunSuite {
     // reads runtime metrics off this exact plan, which must have executed
     val got = served.collect().sortBy(_.getInt(2))
       .map(r => (r.getLong(0), r.getInt(2))).toSeq
-    // the same fusion composed by hand from the two serves
+    // the same fusion composed by hand from the two serves (the query is
+    // vec_id 0, so both sides carry qid 0)
     val lex = TextIndex.bm25SearchBundle(spark, root, "tix", terms, k = 20)
-      .select(col("doc_id").as("nid"), col("rank").cast("int").as("lrank"))
+      .select(lit(0L).as("qid"), col("doc_id").as("nid"),
+        col("rank").cast("int").as("lrank"))
     val vec = AnnIndex.knnBundle(spark, root, "ann", e, q, k = 20,
         rerank = 60, nProbe = 3)
-      .select(col("nid"), col("rank").as("vrank"))
-    val want = Similarity.rrfFuse(lex, vec, k = 5).orderBy(col("rank"))
-      .collect().map(r => (r.getLong(0), r.getInt(2))).toSeq
+      .select(col("qid"), col("nid"), col("rank").as("vrank"))
+    val want = Similarity.rrfFuseBatch(lex, vec, k = 5).orderBy(col("rank"))
+      .collect().map(r => (r.getLong(1), r.getInt(3))).toSeq
     assert(got == want && got.size == 5)
 
     // the composed plan reads ONLY the pruned store directories: the
     // postings scan the query terms' shards, the codes scan the probed
-    // cells (the ANN side sits behind knnBundle's materialized cache)
+    // cells
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -672,11 +684,12 @@ class SimilaritySpec extends AnyFunSuite {
     // wiring: identical to composing the filtered stages by hand
     val lex = TextIndex.bm25SearchBundle(spark, root, "tix", terms, k = 20,
         within = Some(allowed))
-      .select(col("doc_id").as("nid"), col("rank").cast("int").as("lrank"))
+      .select(lit(0L).as("qid"), col("doc_id").as("nid"),
+        col("rank").cast("int").as("lrank"))
     val vec = AnnIndex.knnBundle(spark, root, "ann", e, q, k = 20, rerank = 60,
         nProbe = 3, within = Some(allowed))
-      .select(col("nid"), col("rank").as("vrank"))
-    val fused = Similarity.rrfFuse(lex, vec, k = 15)
+      .select(col("qid"), col("nid"), col("rank").as("vrank"))
+    val fused = Similarity.rrfFuseBatch(lex, vec, k = 15)
     val want = Similarity.mmrRerankPool(e, q, fused.select(col("nid")),
         k = 5)
       .orderBy(col("rank")).collect()
@@ -1309,15 +1322,46 @@ class SimilaritySpec extends AnyFunSuite {
     // fused (lexical) ids resolves
     val none = serve(e.where(col("vec_id") < 0))
     assert(""".*: (\d+) of \1 pool ids have no 'vec_id' row.*""".r.matches(none), none)
-    // over the 256-candidate bound: the one action brings back the pool
-    // and the query but no vector, and the serve fails on the bound
-    val wide = e.limit(300).select(col("vec_id").as("nid"))
-    val fetched = Similarity.mmrFetchPool(e, q, wide, "vec_id", "embedding")
+    // over the 256-candidate bound: the one fetch action brings back the
+    // pool and the query but no vector, and the MMR stage fails on the
+    // bound, for one query as for a batch
+    val wide = e.limit(300).select(lit(0L).as("qid"), col("vec_id").as("nid"))
+    val fetched = Similarity.mmrFetch(e,
+      q.select(lit(0L).as("qid"), col("embedding")), wide, "vec_id", "embedding")
     assert(fetched.pools(0L).size == 300 && fetched.queries.size == 1 &&
       fetched.vectors.isEmpty, s"${fetched.vectors.size} vectors fetched")
-    val ex = intercept[IllegalArgumentException](Similarity.mmrRerankPool(e, q, wide, 5))
-    assert(ex.getMessage.endsWith(
-      "mmrRerankPool: pool exceeds the 256-candidate driver-greedy bound"), ex.getMessage)
+    val bound = "mmrRerankPoolBatch: a per-query pool exceeds the " +
+      "256-candidate driver-greedy bound (max 300)"
+    val ex = intercept[IllegalArgumentException](
+      Similarity.mmrRerankPool(e, q, wide.select(col("nid")), 5))
+    assert(ex.getMessage.endsWith(bound), ex.getMessage)
+    val exBatch = intercept[IllegalArgumentException](
+      Similarity.mmrRerankPoolBatch(e, q, wide, 5)) // q is vec_id 0: qid 0
+    assert(exBatch.getMessage.endsWith(bound), exBatch.getMessage)
+  }
+
+  test("an empty fused pool answers 0 rows, single and batch") {
+    import ServeCache._
+    val root = tmp("graft-empty-pool")
+    val pins = build(root, e)
+    // `within` admits no id: both retrieval sides, and so every fused
+    // pool, come back empty
+    val none = e.where(col("vec_id") < 0).select(col("vec_id"))
+    try {
+      val single = Similarity.threeStageServeBundle(spark, root, "tix", root,
+        "ann", e, terms, q, k = 5, fuseK = 15, poolK = 20, rerank = 60,
+        nProbe = 3, within = Some(none), textVersion = Some(pins("tix")),
+        annVersion = Some(pins("ann")))
+      assert(single.columns.toSeq == Seq("rank", "nid", "mmr4"))
+      assert(single.collect().isEmpty)
+      val batch = Similarity.threeStageServeBatchBundle(spark, root, "tix",
+        root, "ann", e, Seq(0L -> terms, 1L -> Seq("hash", "scan")),
+        e.where(col("vec_id") < 2), k = 5, fuseK = 15, poolK = 20,
+        rerank = 60, nProbe = 3, within = Some(none),
+        textVersion = Some(pins("tix")), annVersion = Some(pins("ann")))
+      assert(batch.columns.toSeq == Seq("qid", "rank", "nid", "mmr4"))
+      assert(batch.collect().isEmpty)
+    } finally spark.catalog.clearCache()
   }
 
   test("no-cache guard: no SQL execution of a warm threeStageServeBundle reads a cached relation") {
