@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Num.roundz
@@ -29,16 +29,6 @@ object SparkEntry {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Catalog.table(s, dir, name)
 
-  /** The documents table's exact-verified near-dup pair truth (threshold
-    * 0.9), served from a stored pair table ([[Dedup.writePairTable]])
-    * built at most once per JVM: four declared analyses consume the SAME
-    * pair set (x2 pairs, x126 contagion, x136 cross-source matrix, x142
-    * triangle census), and the production posture at 100 TB is to price
-    * the LSH+verify pipeline in once at ingest and let every analysis
-    * read the table. Results are row-identical to the self-contained
-    * operators — the store IS `minhashPairs`' output (x2's oracle pins
-    * it against the exact O(n²) truth).
-    */
   /** /tmp store-path tag for a testdata root: the readable scale digits
     * PLUS an 8-hex digest of the FULL path. Digits alone collided — two
     * different roots containing the same digits (any two `.../sf0.1`
@@ -55,11 +45,16 @@ object SparkEntry {
 
   private val pairStoreBuilt =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
-  /** The shared near-dup pair truth every pair consumer reads
-    * (x2/x41/x61/x81/x82/x91/x126/x128/x136/x142) — built once per
-    * testdata root ON THE ATOMIC BUNDLE STORE
-    * ([[graft.operators.Dedup.writePairBundle]]), so the recommended
-    * transactional path is also the one all internal code exercises.
+  /** The documents table's exact-verified near-dup pair truth (threshold
+    * 0.9) every pair consumer reads (x2/x41/x61/x81/x82/x91/x126/x128/
+    * x136/x142), served from the `pairs` member of a pair bundle
+    * ([[graft.operators.Dedup.writePairBundle]]) built at most once per
+    * testdata root: the production posture at 100 TB is to price the
+    * LSH+verify pipeline in once at ingest and let every analysis read
+    * the table, and the recommended transactional store is also the one
+    * all internal code exercises. Results are row-identical to the
+    * self-contained operators — the member IS `minhashPairs`' output
+    * (x2's oracle pins it against the exact O(n²) truth).
     * A committed bundle from an earlier process is reused verbatim:
     * the content is a pure seeded function of the corpus, and the
     * manifest-committed version is by construction complete. One whose
@@ -2727,37 +2722,43 @@ object SparkEntry {
         .orderBy(col("row_id"))),
 
     // Stored decontamination index (x147) — x42's build/serve split: the
-    // benchmark's distinct 8-gram set persists ONCE (shingle strings,
-    // md5-sharded); every corpus screen after that reads the store
-    // instead of re-shingling the benchmark — the steady-state shape for
-    // screening a growing corpus against a fixed eval suite. Same
-    // result as the direct operator (the store IS the benchmark-side
-    // intermediate); the oracle replays the direct semantics.
+    // benchmark's 8-gram set persists ONCE (shingle strings, md5-sharded,
+    // in a shingle bundle); every corpus screen after that reads the
+    // store instead of re-shingling the benchmark — the steady-state
+    // shape for screening a growing corpus against a fixed eval suite.
+    // Same result as the direct operator (the store IS the
+    // benchmark-side intermediate); the oracle replays the direct
+    // semantics.
     "x147_stored_decontamination" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val idx = s"/tmp/graft/x147_index_${storeTag(dir)}"
-      Dedup.writeShingleIndex(docs.where(col("doc_id") % 10 === 0), idx,
-        "doc_id", "text", shingleSize = 8)
-      Dedup.contaminationAgainstIndex(docs, idx, "doc_id", "text",
-          shingleSize = 8)
+      val root = s"/tmp/graft/x147_shg_${storeTag(dir)}"
+      deleteRecursively(new java.io.File(root))
+      Dedup.writeShingleBundle(docs.where(col("doc_id") % 10 === 0),
+        "bm", root, "decon", "doc_id", "text", shingleSize = 8)
+      Dedup.contaminationAgainstBundle(docs, root, "decon", "doc_id",
+          "text", shingleSize = 8)
         .orderBy(col("doc_id"))
     }),
 
     // Benchmark-version append (x148) — the store grows without a
-    // rebuild, and the anti-join is the load-bearing part: the serve
-    // counts hits through a join, so a shingle stored twice (benchmarks
-    // share boilerplate) would double every doc's contamination count.
-    // Build on v1 (doc_id % 20 = 0), append v2 (% 20 = 10), serve — the
-    // oracle replays the DIRECT screen over the union benchmark.
+    // rebuild, and the serve-side distinct is the load-bearing part: the
+    // serve counts hits through a join, and the two versions' provenance
+    // rows hold every shingle they share (benchmarks share boilerplate)
+    // once EACH — counted twice, it would double those docs'
+    // contamination counts. Build on v1 (doc_id % 20 = 0), ingest v2
+    // (% 20 = 10), serve — the oracle replays the DIRECT screen over the
+    // union benchmark.
     "x148_decontamination_append" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val idx = s"/tmp/graft/x148_index_${storeTag(dir)}"
-      Dedup.writeShingleIndex(docs.where(col("doc_id") % 20 === 0), idx,
-        "doc_id", "text", shingleSize = 8)
-      Dedup.appendShingleIndex(docs.where(col("doc_id") % 20 === 10), idx,
-        "doc_id", "text", shingleSize = 8)
-      Dedup.contaminationAgainstIndex(docs, idx, "doc_id", "text",
-          shingleSize = 8)
+      val root = s"/tmp/graft/x148_shg_${storeTag(dir)}"
+      deleteRecursively(new java.io.File(root))
+      Dedup.writeShingleBundle(docs.where(col("doc_id") % 20 === 0),
+        "v1", root, "decon", "doc_id", "text", shingleSize = 8)
+      require(Dedup.ingestShingleBundle(docs.where(col("doc_id") % 20 === 10),
+        "v2", root, "decon", "v2", "doc_id", "text", shingleSize = 8),
+        "benchmark-version ingest rejected on a fresh store")
+      Dedup.contaminationAgainstBundle(docs, root, "decon", "doc_id",
+          "text", shingleSize = 8)
         .orderBy(col("doc_id"))
     }),
 
@@ -2854,21 +2855,19 @@ object SparkEntry {
     // Stored near-dup LSH index (x152) — x52's steady-state story,
     // completing the stored-index matrix (ANN x95/x96, text x129/x134,
     // decontamination x147/x148): the corpus's bucket signatures persist
-    // ONCE (band-partitioned), an ingested batch APPENDS (batch-sized
-    // signature pass — the corpus is never re-signatured), and a new
-    // batch is matched against the store. The oracle replays the exact
-    // O(batch×corpus) Jaccard truth, so serve-off-store recall is
-    // checked end-to-end exactly as in x2/x52.
+    // ONCE (a one-member `buckets` bundle), an ingested batch APPENDS
+    // (batch-sized signature pass — the corpus is never re-signatured),
+    // and a new batch is matched against the store. The oracle replays
+    // the exact O(batch×corpus) Jaccard truth, so serve-off-store recall
+    // is checked end-to-end exactly as in x2/x52.
     "x152_stored_lsh_index" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val idx = s"/tmp/graft/x152_index_${storeTag(dir)}"
-      Dedup.writeLshIndex(docs.where(col("doc_id") % 5 < 3), idx,
-        "doc_id", "text")
-      Dedup.appendLshIndex(docs.where(col("doc_id") % 5 === 3), idx,
-        "doc_id", "text")
-      Dedup.matchesAgainstLshIndex(docs.where(col("doc_id") % 5 === 4),
-          docs.where(col("doc_id") % 5 =!= 4), idx, "doc_id", "text",
-          threshold = 0.9)
+      val root = s"/tmp/graft/x152_lsh_${storeTag(dir)}"
+      bucketBundle(docs, root, col("doc_id") % 5 < 3,
+        col("doc_id") % 5 === 3)
+      Dedup.matchesAgainstBundle(docs.where(col("doc_id") % 5 === 4),
+          docs.where(col("doc_id") % 5 =!= 4), root, "lsh", "doc_id",
+          "text", threshold = 0.9)
         .orderBy(col("new_id"), col("corpus_id"))
     }),
 
@@ -2955,29 +2954,11 @@ object SparkEntry {
     // ingest goes through the LEDGERED path and is deliberately issued
     // twice with the same batch id: the second call is a replay and
     // must be a no-op — a double-append would double every pair row
-    // and flip the oracle hash. Since round 13 this key is a thin
-    // alias of the BUNDLE-backed store (x174 is the canonical bundle
-    // ingest) — the declared key stays stable, the oracle is
-    // unchanged, and the store underneath is the atomic one.
-    "x159_pair_store_ingest" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val root = s"/tmp/graft/x159_store_${storeTag(dir)}"
-      deleteRecursively(new java.io.File(root))
-      val corpus = docs.where(col("doc_id") % 5 =!= 4)
-      val batch = docs.where(col("doc_id") % 5 === 4)
-      Dedup.writePairBundle(corpus, root, "neardup", "doc_id", "text",
-        threshold = 0.9)
-      val first = Dedup.ingestPairBundle(batch, corpus, root, "neardup",
-        batchId = "day-0001", idCol = "doc_id", textCol = "text",
-        threshold = 0.9)
-      val replay = Dedup.ingestPairBundle(batch, corpus, root, "neardup",
-        batchId = "day-0001", idCol = "doc_id", textCol = "text",
-        threshold = 0.9)
-      require(first && !replay,
-        s"pair-store ledger broken: first=$first replay=$replay")
-      Catalog.readBundleTable(s, root, "neardup", "pairs")
-        .orderBy(col("a"), col("b"))
-    }),
+    // and flip the oracle hash. Since round 13 this key runs x174's
+    // bundle ingest at its own root — the declared key stays stable and
+    // the oracle is unchanged.
+    "x159_pair_store_ingest" -> ((s, dir) =>
+      pairBundleIngest(s, dir, s"/tmp/graft/x159_store_${storeTag(dir)}")),
 
     // Source overlap matrix (x160) — x136 catches whole near-dup
     // documents across feeds; this catches partial mirroring BELOW the
@@ -3185,29 +3166,24 @@ object SparkEntry {
     }),
 
     // Compaction under the ORACLE gate (x170) — the maintenance path
-    // itself becomes declared surface: the LSH bucket index is built
-    // fragmented (a build plus two appends — each band directory holds
-    // one file set per ingest), EVERY band then compacts in-query
-    // (staged rewrite + atomic swap), and the serve off the compacted
-    // store must still equal the exact O(batch×corpus) Jaccard truth.
-    // The CatalogSpec pins already check serve-identical pre/post on one
-    // shard; this puts "compaction is invisible" under the driver's
+    // itself becomes declared surface: the LSH bucket bundle is built
+    // fragmented (a commit plus two appends — the `buckets` member holds
+    // one file set per ingest), compacts in-query into one snapshot file
+    // set (a new committed version, ledger carried), and the serve off
+    // the compacted store must still equal the exact O(batch×corpus)
+    // Jaccard truth. The CatalogSpec pins already check serve-identical
+    // pre/post; this puts "compaction is invisible" under the driver's
     // correctness hash for the whole store — a row lost or doubled by
     // the rewrite flips it.
     "x170_compacted_serve" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val idx = s"/tmp/graft/x170_index_${storeTag(dir)}"
-      Dedup.writeLshIndex(docs.where(col("doc_id") % 5 < 2), idx,
-        "doc_id", "text")
-      Dedup.appendLshIndex(docs.where(col("doc_id") % 5 === 2), idx,
-        "doc_id", "text")
-      Dedup.appendLshIndex(docs.where(col("doc_id") % 5 === 3), idx,
-        "doc_id", "text")
-      for (b <- 0 until 12)
-        Catalog.compactPartition(s, idx, "buckets", Seq(("band", b.toString)))
-      Dedup.matchesAgainstLshIndex(docs.where(col("doc_id") % 5 === 4),
-          docs.where(col("doc_id") % 5 =!= 4), idx, "doc_id", "text",
-          threshold = 0.9)
+      val root = s"/tmp/graft/x170_lsh_${storeTag(dir)}"
+      bucketBundle(docs, root, col("doc_id") % 5 < 2,
+        col("doc_id") % 5 === 2, col("doc_id") % 5 === 3)
+      Catalog.compactBundle(s, root, "lsh")
+      Dedup.matchesAgainstBundle(docs.where(col("doc_id") % 5 === 4),
+          docs.where(col("doc_id") % 5 =!= 4), root, "lsh", "doc_id",
+          "text", threshold = 0.9)
         .orderBy(col("new_id"), col("corpus_id"))
     }),
 
@@ -3296,31 +3272,8 @@ object SparkEntry {
     // batch id is rejected atomically (exercised in-plan below). Same
     // 80/20 proportions and the same exact O(n²) oracle as x159:
     // incremental ≡ one-shot ≡ exact, now transactionally published.
-    "x174_pair_bundle_ingest" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val root = s"/tmp/graft/x174_pb_${storeTag(dir)}"
-      deleteRecursively(new java.io.File(root))
-      val corpus = docs.where(col("doc_id") % 5 =!= 4)
-      val batch = docs.where(col("doc_id") % 5 === 4)
-      Dedup.writePairBundle(corpus, root, "neardup", "doc_id", "text",
-        threshold = 0.9)
-      val first = Dedup.ingestPairBundle(batch, corpus, root, "neardup",
-        batchId = "day-0001", idCol = "doc_id", textCol = "text",
-        threshold = 0.9)
-      val replay = Dedup.ingestPairBundle(batch, corpus, root, "neardup",
-        batchId = "day-0001", idCol = "doc_id", textCol = "text",
-        threshold = 0.9)
-      require(first && !replay,
-        s"bundle ledger broken: first=$first replay=$replay")
-      // bundle COMPACTION stays out of this plan deliberately: it is a
-      // full-store rewrite (linear in store size by definition), and
-      // folding it in would mix a maintenance job's linear floor into
-      // the INGEST path's scaling signal. Compaction-under-the-oracle
-      // is x170's story; the bundle variant is CatalogSpec-pinned
-      // (serve-identical + ledger preserved).
-      Catalog.readBundleTable(s, root, "neardup", "pairs")
-        .orderBy(col("a"), col("b"))
-    }),
+    "x174_pair_bundle_ingest" -> ((s, dir) =>
+      pairBundleIngest(s, dir, s"/tmp/graft/x174_pb_${storeTag(dir)}")),
 
     // Version diff off the store (x175) — the audit workflow the
     // versioned table exists for ("what changed between yesterday's
@@ -4306,15 +4259,14 @@ object SparkEntry {
     // The bundle store keeps (sg, benchmark_id) PROVENANCE rows
     // (distinct per benchmark, shard-partitioned; the serve distincts
     // sg, so shared shingles still count once — DedupSpec pins serve
-    // equivalence with the flat store), retirement drops exactly one
+    // equivalence with the direct screen), retirement drops exactly one
     // benchmark's rows in one atomic version (rewriteBundleMembers —
     // ledger preserved: the replayed ingest stays rejected after the
     // retract, require()d in-plan), and a shingle any KEPT benchmark
-    // contributes survives by construction — set semantics, the
-    // reverse of x148's append anti-join. The oracle replays the
-    // DIRECT screen against the remaining benchmark from raw text —
-    // the post-retirement store must be indistinguishable from never
-    // having ingested the retired suite.
+    // contributes survives by construction — set semantics. The oracle
+    // replays the DIRECT screen against the remaining benchmark from
+    // raw text — the post-retirement store must be indistinguishable
+    // from never having ingested the retired suite.
     "x192_benchmark_retirement" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val root = s"/tmp/graft/x192_shg_${storeTag(dir)}"
@@ -4789,7 +4741,7 @@ object SparkEntry {
     * trend-watching the number production pays repeatedly: at 100 TB the
     * store is built once at ingest and served forever). Each value is
     * (build, serve): Bench runs the build once per process, then times
-    * ONLY serve reps. Serves are read-only and idempotent — x159's times
+    * ONLY serve reps. Serves are read-only and idempotent — x174's times
     * the per-batch ingest COMPUTE (batch signatures, stored-index join,
     * within-batch pairs) without the store-mutating append, so reps
     * don't grow the store under the timer (the append itself writes a
@@ -4800,7 +4752,6 @@ object SparkEntry {
     def tixIdx(dir: String) = s"/tmp/graft/serve_x129b_${storeTag(dir)}"
     def shIdx(dir: String) = s"/tmp/graft/serve_x147_${storeTag(dir)}"
     def lshIdx(dir: String) = s"/tmp/graft/serve_x152_${storeTag(dir)}"
-    def pairIdx(dir: String) = s"/tmp/graft/serve_x159_${storeTag(dir)}"
     def hybRoot(dir: String) = s"/tmp/graft/serve_x165b_${storeTag(dir)}"
     // the aligned bundle pair every composed serve builds on (x165/
     // x176/x180/x183 share it; each build fn rebuilds from scratch)
@@ -4854,56 +4805,27 @@ object SparkEntry {
           TextIndex.booleanSearchBundle(s, tixIdx(dir), "tix",
             Seq("join", "hash", "vector")))),
       "x147_stored_decontamination" -> ((
+        (s: SparkSession, dir: String) => {
+          deleteRecursively(new java.io.File(shIdx(dir)))
+          Dedup.writeShingleBundle(
+            t(s, dir, "documents").where(col("doc_id") % 10 === 0), "bm",
+            shIdx(dir), "decon", "doc_id", "text", shingleSize = 8)
+          ()
+        },
         (s: SparkSession, dir: String) =>
-          Dedup.writeShingleIndex(
-            t(s, dir, "documents").where(col("doc_id") % 10 === 0),
-            shIdx(dir), "doc_id", "text", shingleSize = 8),
-        (s: SparkSession, dir: String) =>
-          Dedup.contaminationAgainstIndex(t(s, dir, "documents"),
-            shIdx(dir), "doc_id", "text", shingleSize = 8))),
+          Dedup.contaminationAgainstBundle(t(s, dir, "documents"),
+            shIdx(dir), "decon", "doc_id", "text", shingleSize = 8))),
       "x152_stored_lsh_index" -> ((
         (s: SparkSession, dir: String) => {
           val docs = t(s, dir, "documents")
-          Dedup.writeLshIndex(docs.where(col("doc_id") % 5 < 3),
-            lshIdx(dir), "doc_id", "text")
-          Dedup.appendLshIndex(docs.where(col("doc_id") % 5 === 3),
-            lshIdx(dir), "doc_id", "text")
+          bucketBundle(docs, lshIdx(dir), col("doc_id") % 5 < 3,
+            col("doc_id") % 5 === 3)
         },
         (s: SparkSession, dir: String) => {
           val docs = t(s, dir, "documents")
-          Dedup.matchesAgainstLshIndex(docs.where(col("doc_id") % 5 === 4),
-            docs.where(col("doc_id") % 5 =!= 4), lshIdx(dir),
+          Dedup.matchesAgainstBundle(docs.where(col("doc_id") % 5 === 4),
+            docs.where(col("doc_id") % 5 =!= 4), lshIdx(dir), "lsh",
             "doc_id", "text", threshold = 0.9)
-        })),
-      // since round 13 an alias of the bundle ingest — kept so the
-      // serve trend row stays continuous;
-      // expect it to track x174's number
-      "x159_pair_store_ingest" -> ((
-        (s: SparkSession, dir: String) => {
-          deleteRecursively(new java.io.File(pairIdx(dir)))
-          Dedup.writePairBundle(
-            t(s, dir, "documents").where(col("doc_id") % 5 =!= 4),
-            pairIdx(dir), "neardup", "doc_id", "text", threshold = 0.9)
-        },
-        (s: SparkSession, dir: String) => {
-          val docs = t(s, dir, "documents")
-          val corpus = docs.where(col("doc_id") % 5 =!= 4)
-          val batch = docs.where(col("doc_id") % 5 === 4)
-          val stored = Catalog.readBundleTable(s, pairIdx(dir), "neardup",
-              "buckets")
-            .select(col("doc_id"), col("band").cast("int").as("band"),
-              col("bucket"))
-          // overlapped like the library ingest (guide §2.6): the two
-          // match passes are independent and each materializes internally
-          val (cross, within) = graft.tools.Par.together(
-            () => Dedup.incrementalMinhashMatchesWithIndex(batch,
-              corpus, stored, "doc_id", "text", threshold = 0.9),
-            () => Dedup.minhashPairs(batch, "doc_id", "text",
-              threshold = 0.9))
-          cross.select(least(col("new_id"), col("corpus_id")).as("a"),
-              greatest(col("new_id"), col("corpus_id")).as("b"),
-              col("jaccard"))
-            .unionByName(within.select(col("a"), col("b"), col("jaccard")))
         })),
       "x165_hybrid_stored_serve" -> ((
         (s: SparkSession, dir: String) => buildHybridBundles(s, dir),
@@ -4928,32 +4850,27 @@ object SparkEntry {
             "text", tv, td, sv, sd)
         })),
       // x170's REPEATED number is the serve off the already-compacted
-      // store (the fragmented build + per-band compaction is one-time
+      // store (the fragmented build + compaction is one-time
       // maintenance); without this entry a post-compaction serve
       // regression hides behind the build+rewrite cost
       "x170_compacted_serve" -> ((
         (s: SparkSession, dir: String) => {
           val docs = t(s, dir, "documents")
-          Dedup.writeLshIndex(docs.where(col("doc_id") % 5 < 2),
-            cmpIdx(dir), "doc_id", "text")
-          Dedup.appendLshIndex(docs.where(col("doc_id") % 5 === 2),
-            cmpIdx(dir), "doc_id", "text")
-          Dedup.appendLshIndex(docs.where(col("doc_id") % 5 === 3),
-            cmpIdx(dir), "doc_id", "text")
-          for (b <- 0 until 12)
-            Catalog.compactPartition(s, cmpIdx(dir), "buckets",
-              Seq(("band", b.toString)))
+          bucketBundle(docs, cmpIdx(dir), col("doc_id") % 5 < 2,
+            col("doc_id") % 5 === 2, col("doc_id") % 5 === 3)
+          Catalog.compactBundle(s, cmpIdx(dir), "lsh")
+          ()
         },
         (s: SparkSession, dir: String) => {
           val docs = t(s, dir, "documents")
-          Dedup.matchesAgainstLshIndex(docs.where(col("doc_id") % 5 === 4),
-            docs.where(col("doc_id") % 5 =!= 4), cmpIdx(dir),
+          Dedup.matchesAgainstBundle(docs.where(col("doc_id") % 5 === 4),
+            docs.where(col("doc_id") % 5 =!= 4), cmpIdx(dir), "lsh",
             "doc_id", "text", threshold = 0.9)
         })),
       // x174's repeated number is the per-batch bundle-ingest COMPUTE
       // (batch signatures, stored-bucket join, within-batch pairs) off
       // the committed bundle, without the store-mutating appendBundle —
-      // reps must not grow the store under the timer (x159's pattern)
+      // reps must not grow the store under the timer
       "x174_pair_bundle_ingest" -> ((
         (s: SparkSession, dir: String) => {
           deleteRecursively(new java.io.File(bndRoot(dir)))
@@ -4965,15 +4882,11 @@ object SparkEntry {
           val docs = t(s, dir, "documents")
           val corpus = docs.where(col("doc_id") % 5 =!= 4)
           val batch = docs.where(col("doc_id") % 5 === 4)
-          val stored = Catalog.readBundleTable(s, bndRoot(dir), "neardup",
-              "buckets")
-            .select(col("doc_id"), col("band").cast("int").as("band"),
-              col("bucket"))
           // overlapped like the library ingest (guide §2.6): the two
           // match passes are independent and each materializes internally
           val (cross, within) = graft.tools.Par.together(
-            () => Dedup.incrementalMinhashMatchesWithIndex(batch,
-              corpus, stored, "doc_id", "text", threshold = 0.9),
+            () => Dedup.matchesAgainstBundle(batch, corpus, bndRoot(dir),
+              "neardup", "doc_id", "text", threshold = 0.9),
             () => Dedup.minhashPairs(batch, "doc_id", "text",
               threshold = 0.9))
           cross.select(least(col("new_id"), col("corpus_id")).as("a"),
@@ -5172,6 +5085,52 @@ object SparkEntry {
 
   private def deleteRecursively(f: java.io.File): Unit =
     graft.tools.LocalFs.deleteRecursively(f)
+
+  /** x159/x174: a fresh pair bundle at `root` over 80% of the corpus,
+    * the 20% batch ingested twice under one batch id (the replay must be
+    * rejected), then the stored pairs. Bundle COMPACTION stays out of
+    * this plan deliberately: it is a full-store rewrite (linear in store
+    * size by definition), and folding it in would mix a maintenance
+    * job's linear floor into the INGEST path's scaling signal.
+    * Compaction-under-the-oracle is x170's story; the pair-bundle variant
+    * is CatalogSpec-pinned (serve-identical + ledger preserved).
+    */
+  private def pairBundleIngest(s: SparkSession, dir: String,
+      root: String): DataFrame = {
+    val docs = t(s, dir, "documents")
+    deleteRecursively(new java.io.File(root))
+    val corpus = docs.where(col("doc_id") % 5 =!= 4)
+    val batch = docs.where(col("doc_id") % 5 === 4)
+    Dedup.writePairBundle(corpus, root, "neardup", "doc_id", "text",
+      threshold = 0.9)
+    def ingest() = Dedup.ingestPairBundle(batch, corpus, root, "neardup",
+      batchId = "day-0001", idCol = "doc_id", textCol = "text",
+      threshold = 0.9)
+    val first = ingest()
+    val replay = ingest()
+    require(first && !replay,
+      s"pair bundle ledger broken: first=$first replay=$replay")
+    Catalog.readBundleTable(s, root, "neardup", "pairs")
+      .orderBy(col("a"), col("b"))
+  }
+
+  /** A fresh one-member `buckets` bundle "lsh" at `root`, grown the
+    * ingest way: a commit of the first slice's LSH bucket rows, then one
+    * ledgered append per further slice — one file set per ingest (x152,
+    * x170 and their serve rows).
+    */
+  private def bucketBundle(docs: DataFrame, root: String,
+      slices: Column*): Unit = {
+    deleteRecursively(new java.io.File(root))
+    def buckets(slice: Column) = Seq("buckets" -> Dedup.lshBuckets(
+      docs.where(slice), "doc_id", "text", shingleSize = 3, numHashes = 48,
+      bands = 12))
+    Catalog.commitBundle(buckets(slices.head), root, "lsh")
+    slices.tail.zipWithIndex.foreach { case (slice, i) =>
+      require(Catalog.appendBundle(buckets(slice), root, "lsh", s"b${i + 1}"),
+        s"bucket batch b${i + 1} rejected on a fresh store")
+    }
+  }
 
   /** x153's oracle, generated for a fixed round count: each BPE round is
     * one CTE trio — pair counts off the previous word table, the argmax

@@ -576,99 +576,30 @@ object Dedup {
     * the left join against the corpus spine.
     */
   def contamination(corpus: DataFrame, benchmark: DataFrame, idCol: String,
-      textCol: String, shingleSize: Int = 8): DataFrame = {
-    // pin both explodes: an un-staged Generate over the HOF-built shingle
+      textCol: String, shingleSize: Int = 8): DataFrame =
+    // pin the explode: an un-staged Generate over the HOF-built shingle
     // array re-evaluates the whole tokenize→shingle chain per OUTPUT element
     // (measured 25× on this exact operator — see Staging)
-    val benchShingles = shingled(benchmark, idCol, textCol, shingleSize)
-      .select(explode(Staging.pin(col("sh"))).as("__s")).distinct()
-      .withColumn("__hit", lit(1))
-    // ONE pass over the corpus: explode_outer keeps shingle-less docs
-    // (count(__s)=0), the broadcast left join marks benchmark hits, and one
-    // map-side-partial groupBy rebuilds per-doc counts — the corpus is
-    // never shingled twice or shuffled beyond the final id aggregation.
-    shingled(ensureParallelism(corpus), idCol, textCol, shingleSize, "__sh")
-      .select(col(idCol), explode_outer(Staging.pin(col("__sh"))).as("__s"))
-      .join(broadcast(benchShingles), Seq("__s"), "left")
-      .groupBy(col(idCol))
-      .agg(count(col("__s")).cast("int").as("n_shingles"),
-        count(col("__hit")).as("contaminated"))
-      .select(col(idCol), col("n_shingles"), col("contaminated"),
-        roundz(when(col("n_shingles") === 0, lit(0.0))
-          .otherwise(col("contaminated").cast("double") / col("n_shingles")), 4)
-          .as("contaminated_frac"))
-  }
-
-  /** Persist a benchmark's distinct shingle set — [[contamination]]'s
-    * build/serve split: the benchmark side (tokenize → shingle →
-    * global distinct) runs ONCE and lands as shingle STRINGS (membership
-    * stays collision-free and oracle-replayable, unlike stored hashes)
-    * partitioned by the same portable md5 shard as the text index. Every
-    * serve after that reads the stored set instead of re-shingling the
-    * benchmark — the steady-state decontamination shape for a growing
-    * corpus screened against a fixed eval suite.
-    */
-  def writeShingleIndex(benchmark: DataFrame, dir: String, idCol: String,
-      textCol: String, shingleSize: Int = 8): Unit = {
-    shingled(benchmark, idCol, textCol, shingleSize)
-      .select(explode(Staging.pin(col("sh"))).as("sg")).distinct()
-      .withColumn("shard", TextIndex.shardCol(col("sg")))
-      // rebalance on the partition column before the write (guide §6):
-      // one size-bounded file set per directory — see Catalog.writeMember
-      .hint("rebalance", col("shard"))
-      .write.mode("overwrite").partitionBy("shard")
-      .parquet(s"$dir/shingles.parquet")
-  }
-
-  /** Grow the stored benchmark — a new eval-suite version appends WITHOUT
-    * rebuilding: the batch's distinct shingles anti-join the stored set
-    * first, because the store's distinctness is load-bearing — the serve
-    * counts hits through a join, and a shingle stored twice would double
-    * every document's contamination count. (The text index never faced
-    * this: its posting rows are keyed by (term, doc) and disjoint doc
-    * batches can't collide; a shared shingle set CAN.) Only genuinely-new
-    * shingles land, as new files in existing shard directories.
-    */
-  def appendShingleIndex(newBench: DataFrame, dir: String, idCol: String,
-      textCol: String, shingleSize: Int = 8): Unit = {
-    val existing = newBench.sparkSession.read
-      .parquet(s"$dir/shingles.parquet").select(col("sg"))
-    shingled(newBench, idCol, textCol, shingleSize)
-      .select(explode(Staging.pin(col("sh"))).as("sg")).distinct()
-      .join(existing, Seq("sg"), "left_anti")
-      .withColumn("shard", TextIndex.shardCol(col("sg")))
-      .hint("rebalance", col("shard"))
-      .write.mode("append").partitionBy("shard")
-      .parquet(s"$dir/shingles.parquet")
-  }
-
-  /** [[contamination]] served from a [[writeShingleIndex]] store: same
-    * one-pass corpus shape (explode_outer keeps shingle-less docs, the
-    * broadcast left join marks hits, one map-side-partial groupBy
-    * rebuilds per-doc counts), with the benchmark side a bounded read of
-    * the stored distinct-shingle table — provably the same result as
-    * the direct operator, because the store IS the benchmark side's
-    * intermediate. The serve plan scans the corpus and the store; the
-    * benchmark documents are never touched (DedupSpec pins it).
-    */
-  def contaminationAgainstIndex(corpus: DataFrame, dir: String,
-      idCol: String, textCol: String, shingleSize: Int = 8): DataFrame =
     contaminationServeCore(corpus,
-      corpus.sparkSession.read.parquet(s"$dir/shingles.parquet")
-        .select(col("sg")),
+      shingled(benchmark, idCol, textCol, shingleSize)
+        .select(explode(Staging.pin(col("sh"))).as("sg")),
       idCol, textCol, shingleSize)
 
-  /** The one contamination serve both stores run (flat distinct-shingle
-    * table and provenance-carrying bundle): `benchShingles` is one `sg`
-    * column, distinct'd HERE — so a store holding (sg, benchmark) rows
-    * with a shingle shared by two benchmarks still counts it once per
-    * doc occurrence, identical to the direct [[contamination]] screen.
+  /** The one contamination screen, direct and stored: `benchShingles` is
+    * one `sg` column, distinct'd HERE — so a store holding (sg,
+    * benchmark_id) rows with a shingle shared by two benchmarks still
+    * counts it once per doc occurrence, identical to the direct
+    * [[contamination]] screen.
     */
   private def contaminationServeCore(corpus: DataFrame,
       benchShingles: DataFrame, idCol: String, textCol: String,
       shingleSize: Int): DataFrame = {
     val bs = benchShingles.select(col(benchShingles.columns.head).as("__s"))
       .distinct().withColumn("__hit", lit(1))
+    // ONE pass over the corpus: explode_outer keeps shingle-less docs
+    // (count(__s)=0), the broadcast left join marks benchmark hits, and one
+    // map-side-partial groupBy rebuilds per-doc counts — the corpus is
+    // never shingled twice or shuffled beyond the final id aggregation.
     shingled(ensureParallelism(corpus), idCol, textCol, shingleSize, "__sh")
       .select(col(idCol), explode_outer(Staging.pin(col("__sh"))).as("__s"))
       .join(broadcast(bs), Seq("__s"), "left")
@@ -694,17 +625,21 @@ object Dedup {
       .withColumn("benchmark_id", lit(benchmarkId))
       .withColumn("shard", TextIndex.shardCol(col("sg")))
 
-  /** Decontamination store ON the atomic bundle, with PER-BENCHMARK
-    * provenance — the flat [[writeShingleIndex]] stores bare distinct
-    * shingles, which makes benchmark RETIREMENT impossible: dropping a
-    * retired suite's shingles would also drop every shingle it shares
-    * with a kept suite. Here the member holds (sg, benchmark_id) rows
-    * (distinct per benchmark, shard-partitioned like the flat layout),
-    * the serve distincts `sg` (shared shingles count once —
+  /** Persist a benchmark's shingle set — [[contamination]]'s
+    * build/serve split: the benchmark side (tokenize → shingle →
+    * distinct) runs ONCE and lands as shingle STRINGS (membership stays
+    * collision-free and oracle-replayable, unlike stored hashes),
+    * partitioned by the text index's portable md5 shard; every screen
+    * after that reads the store instead of re-shingling the benchmark.
+    * The member holds PER-BENCHMARK provenance rows (sg, benchmark_id),
+    * distinct per benchmark: a bare global distinct set would make
+    * benchmark RETIREMENT impossible, since dropping a retired suite's
+    * shingles would also drop every shingle it shares with a kept suite.
+    * The serve distincts `sg` (shared shingles count once —
     * [[contaminationServeCore]]), and [[retractShingleBundle]] removes
     * exactly one benchmark's rows: a shingle any KEPT benchmark
-    * contributes survives by construction — set semantics, the reverse
-    * of x148's anti-join guard. Ledgered like every bundle store.
+    * contributes survives by construction. Ledgered like every bundle
+    * store.
     */
   def writeShingleBundle(benchmark: DataFrame, benchmarkId: String,
       root: String, bundle: String, idCol: String, textCol: String,
@@ -715,13 +650,12 @@ object Dedup {
       root, bundle, seedBatchIds,
       partitionBy = Map("shingles" -> Seq("shard")))
 
-  /** Grow the store by one benchmark, LEDGERED: the suite's provenance
-    * rows land as a new file set with the batch id in the manifest
-    * (replay → false, store untouched). Unlike the flat
-    * [[appendShingleIndex]], no cross-benchmark anti-join is needed —
-    * rows are keyed (sg, benchmark_id), so a shingle shared with a
-    * resident benchmark lands as its own provenance row and the serve's
-    * distinct collapses it.
+  /** Grow the store by one benchmark WITHOUT a rebuild, LEDGERED: the
+    * suite's provenance rows land as a new file set with the batch id in
+    * the manifest (replay → false, store untouched). No cross-benchmark
+    * anti-join is needed — rows are keyed (sg, benchmark_id), so a
+    * shingle shared with a resident benchmark lands as its own
+    * provenance row and the serve's distinct collapses it.
     */
   def ingestShingleBundle(newBench: DataFrame, benchmarkId: String,
       root: String, bundle: String, batchId: String, idCol: String,
@@ -745,8 +679,13 @@ object Dedup {
       "shingles" -> ((s: DataFrame) =>
         s.where(col("benchmark_id") =!= lit(benchmarkId)))))
 
-  /** [[contaminationAgainstIndex]] off the bundle store — shared serve
-    * core; the member resolves through one committed manifest version.
+  /** [[contamination]] served from a [[writeShingleBundle]] store: the
+    * shared screen core with the benchmark side a bounded read of the
+    * stored shingles (resolved through one committed manifest version) —
+    * the same result as the direct operator, because the store IS the
+    * benchmark side's intermediate. The serve plan scans the corpus and
+    * the store; the benchmark documents are never touched (DedupSpec
+    * pins it).
     */
   def contaminationAgainstBundle(corpus: DataFrame, root: String,
       bundle: String, idCol: String, textCol: String,
@@ -873,9 +812,9 @@ object Dedup {
   }
 
   /** [[clusters]] over an ALREADY-COMPUTED pair frame (`(a, b, …)` —
-    * e.g. a [[pairTable]] store): the whole cluster family (assembly,
-    * keep-best, canonicalization, multimodal union-CC) can run off the
-    * stored pair truth, so the LSH+verify pipeline prices in once at
+    * e.g. a [[writePairBundle]] `pairs` member): the whole cluster family
+    * (assembly, keep-best, canonicalization, multimodal union-CC) can run
+    * off the stored pair truth, so the LSH+verify pipeline prices in once at
     * ingest and clustering is a pairs-sized CC plus one id join.
     */
   def clustersFromPairs(df: DataFrame, pairs: DataFrame,
@@ -1046,98 +985,42 @@ object Dedup {
 
   // ------------------------------------------- stored near-dup LSH index
 
-  /** Persist a corpus's MinHash-LSH bucket index — the near-dup family's
-    * STORED form, completing the stored-index matrix next to the ANN
-    * cells ([[graft.operators.AnnIndex.writeBundle]]), the text postings
-    * ([[graft.operators.TextIndex.writeBundle]]) and the decontamination
-    * shingle set ([[writeShingleIndex]]): [[lshBuckets]]' (id, band,
-    * bucket) rows land partitioned by `band`, so the store grows by
-    * whole files inside a fixed set of band directories and a serve
-    * join on (band, bucket) reads index rows, never corpus text.
-    *
-    * Signatures are pure per-document functions of the text, so the
-    * bucket rows of id-disjoint document batches are disjoint — append
-    * equals rebuild row-for-row (DedupSpec pins it), with no anti-join
-    * needed (unlike the shared shingle set, whose global distinctness
-    * is load-bearing).
+  /** [[incrementalMinhashMatches]] served from a bundle's `buckets`
+    * member (a [[writePairBundle]] store, or any bundle whose `buckets`
+    * member holds [[lshBuckets]] rows) — the steady-state 100 TB ingest
+    * shape: the corpus was signatured once at ingest (and each accepted
+    * batch appended its own buckets), so matching a new batch costs one
+    * batch-sized signature pass plus an index join. The corpus TABLE is
+    * touched only to re-shingle the candidate documents for exact
+    * verification (semi-join pruned to a vanishing fraction); its
+    * signatures come from the store. Signatures are pure per-document
+    * functions of the text, so the bucket rows of id-disjoint batches
+    * are disjoint and an appended store serves exactly like a rebuilt
+    * one (DedupSpec pins both). `version` pins the member read to one
+    * committed version (`None` = latest); parameters must match the
+    * build (they define the signature space).
     */
-  def writeLshIndex(corpus: DataFrame, dir: String, idCol: String,
-      textCol: String, shingleSize: Int = 3, numHashes: Int = 48,
-      bands: Int = 12): Unit =
-    lshBuckets(corpus, idCol, textCol, shingleSize, numHashes, bands)
-      // rebalance on band before the write (guide §6) — see writeMember
-      .hint("rebalance", col("band"))
-      .write.mode("overwrite").partitionBy("band")
-      .parquet(s"$dir/buckets.parquet")
-
-  /** Grow the stored bucket index with a new document batch: one narrow
-    * signature pass over the BATCH, landing as new files in the existing
-    * band directories — the corpus is never re-signatured. Caller
-    * contract: batch ids are new (id-disjoint from what is stored);
-    * parameters must match the build (they define the signature space).
-    * File-count maintenance after many appends:
-    * `Catalog.compactPartition(spark, dir, "buckets", Seq(("band", b)))`
-    * rewrites one band directory in place (atomic swap); serve results
-    * are identical pre/post (CatalogSpec pins it).
-    */
-  def appendLshIndex(batch: DataFrame, dir: String, idCol: String,
-      textCol: String, shingleSize: Int = 3, numHashes: Int = 48,
-      bands: Int = 12): Unit =
-    lshBuckets(batch, idCol, textCol, shingleSize, numHashes, bands)
-      .hint("rebalance", col("band"))
-      .write.mode("append").partitionBy("band")
-      .parquet(s"$dir/buckets.parquet")
-
-  /** [[incrementalMinhashMatches]] served from a [[writeLshIndex]] store
-    * — the steady-state 100 TB ingest shape: the corpus was signatured
-    * once at ingest (and each accepted batch [[appendLshIndex]]ed), so
-    * matching a new batch costs one batch-sized signature pass plus an
-    * index join. The corpus TABLE is touched only to re-shingle the
-    * candidate documents for exact verification (semi-join pruned to a
-    * vanishing fraction); its signatures come from the store.
-    */
-  def matchesAgainstLshIndex(newDf: DataFrame, corpus: DataFrame,
-      dir: String, idCol: String, textCol: String, threshold: Double,
-      shingleSize: Int = 3, numHashes: Int = 48, bands: Int = 12,
-      maxBucketSize: Int = 1000): DataFrame = {
-    val stored = newDf.sparkSession.read.parquet(s"$dir/buckets.parquet")
-      .select(col(idCol), col("band").cast("int").as("band"), col("bucket"))
-    incrementalMinhashMatchesWithIndex(newDf, corpus, stored, idCol, textCol,
-      threshold, shingleSize, numHashes, bands, maxBucketSize)
-  }
-
-  /** Persist the exact-verified near-dup PAIR TRUTH — [[minhashPairs]]'
-    * output (a < b, jaccard) as a stored table. The pair set is the
-    * single most re-consumed dedup artifact: duplicate clustering,
-    * keep-best selection, cross-source duplication matrices, contagion
-    * propagation and triangle censuses all start from the same pairs,
-    * and at 100 TB the LSH+verify pipeline should price in ONCE at
-    * ingest, with every analysis reading the table. Tiny at any corpus
-    * size (ids + score only — verified duplicate pairs are a vanishing
-    * fraction of corpus²).
-    */
-  def writePairTable(df: DataFrame, dir: String, idCol: String,
-      textCol: String, threshold: Double, shingleSize: Int = 3,
-      numHashes: Int = 48, bands: Int = 12): Unit = {
-    val pairs = minhashPairs(df, idCol, textCol, threshold, shingleSize,
-      numHashes, bands)
-    try pairs.hint("rebalance")
-      .write.mode("overwrite").parquet(s"$dir/pairs.parquet")
-    finally pairs.unpersist()
-  }
-
-  /** Read back a [[writePairTable]] store: (a, b, jaccard). */
-  def pairTable(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    spark.read.parquet(s"$dir/pairs.parquet")
+  def matchesAgainstBundle(newDf: DataFrame, corpus: DataFrame,
+      root: String, bundle: String, idCol: String, textCol: String,
+      threshold: Double, version: Option[Long] = None, shingleSize: Int = 3,
+      numHashes: Int = 48, bands: Int = 12,
+      maxBucketSize: Int = 1000): DataFrame =
+    incrementalMinhashMatchesWithIndex(newDf, corpus,
+      graft.sources.Catalog.readBundleTable(newDf.sparkSession, root,
+        bundle, "buckets", version),
+      idCol, textCol, threshold, shingleSize, numHashes, bands, maxBucketSize)
 
   // ----------------------------- pair bundle on the atomic bundle store
 
   /** The complete near-dup ingest store, built once: the LSH bucket
-    * index (the [[writeLshIndex]] rows) AND the exact-verified pair table
-    * (the [[writePairTable]] rows) as the two members of one atomic
-    * versioned bundle, so [[ingestPairBundle]] can keep BOTH current
-    * with one batch-sized pass per ingest. Pairs and buckets commit
+    * index (the [[lshBuckets]] rows) AND the exact-verified PAIR TRUTH
+    * ([[minhashPairs]]' output: a < b, jaccard) as the two members of one
+    * atomic versioned bundle, so [[ingestPairBundle]] can keep BOTH
+    * current with one batch-sized pass per ingest. The pair set is the
+    * single most re-consumed dedup artifact (clustering, keep-best,
+    * cross-source matrices, contagion, triangle censuses all start from
+    * it), so the LSH+verify pipeline prices in ONCE at ingest and every
+    * analysis reads the `pairs` member. Pairs and buckets commit
     * TOGETHER as one bundle version
     * ([[graft.sources.Catalog.commitBundle]]), so no
     * reader can observe the pair table at ingest n with the bucket
@@ -1155,7 +1038,7 @@ object Dedup {
       batchIds: Seq[String] = Nil): Long = {
     // ONE signature/bucket pass feeds both members: the buckets member
     // and the pair table's LSH candidates are the same bucket rows, and
-    // building them independently (writeLshIndex + writePairTable) would
+    // building them independently (lshBuckets + minhashPairs) would
     // signature the whole corpus twice. Materialize once, commit both
     // (commitBundle overlaps the member writes off this cache); bucket
     // values, candidates and verify arithmetic are the standalone
@@ -1211,14 +1094,11 @@ object Dedup {
     if (graft.sources.Catalog.bundleManifest(spark, root, bundle, Some(pv))
         .batches.contains(batchId)) false
     else {
-      val stored = graft.sources.Catalog
-        .readBundleTable(spark, root, bundle, "buckets", Some(pv))
-        .select(col(idCol), col("band").cast("int").as("band"), col("bucket"))
       // cross-index match and within-batch pairs are independent and each
       // materializes internally — overlapped (guide §2.6), values unchanged
       val (cross, within) = graft.tools.Par.together(
-        () => incrementalMinhashMatchesWithIndex(batch, corpus, stored,
-          idCol, textCol, threshold, shingleSize, numHashes, bands,
+        () => matchesAgainstBundle(batch, corpus, root, bundle, idCol,
+          textCol, threshold, Some(pv), shingleSize, numHashes, bands,
           maxBucketSize),
         () => minhashPairs(batch, idCol, textCol, threshold,
           shingleSize, numHashes, bands))
@@ -1541,8 +1421,9 @@ object Dedup {
   }
 
   /** [[crossSourceDupShare]] over an ALREADY-COMPUTED pair frame
-    * (`(a, b, …)` — e.g. a [[pairTable]] store), so the analysis prices
-    * in only the pair-keyed source join, not a fresh LSH+verify run.
+    * (`(a, b, …)` — e.g. a [[writePairBundle]] `pairs` member), so the
+    * analysis prices in only the pair-keyed source join, not a fresh
+    * LSH+verify run.
     */
   def crossSourceDupShareFromPairs(pairs: DataFrame, df: DataFrame,
       idCol: String, srcCol: String): DataFrame = {

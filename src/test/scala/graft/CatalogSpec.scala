@@ -271,28 +271,29 @@ class CatalogSpec extends AnyFunSuite {
     assert(perFile.where($"n_rows" <= 0).count() == 0L)
   }
 
-  test("stored-index maintenance: compactPartition shrinks a shard/band, serve identical pre/post") {
+  test("stored-index maintenance: compactBundle folds appended file sets, serve identical pre/post") {
     import graft.operators.{Dedup, TextIndex}
     val docs = spark.read.parquet(s"${SparkTestSession.sfDir}/documents.parquet")
       .where(col("doc_id") < 300)
-    def leafFiles(dir: String) = new java.io.File(dir).listFiles()
-      .filter(f => f.isFile && f.getName.endsWith(".parquet")).map(_.getName).toSet
 
-    // near-dup LSH store: many appended files in each band directory
+    // near-dup LSH store: a bucket bundle holding one file set per ingest
     val idx = Files.createTempDirectory("graft-lsh-compact").toString
-    Dedup.writeLshIndex(docs.where(col("doc_id") % 3 === 0), idx, "doc_id", "text")
-    Dedup.appendLshIndex(docs.where(col("doc_id") % 3 === 1), idx, "doc_id", "text")
-    Dedup.appendLshIndex(docs.where(col("doc_id") % 3 === 2), idx, "doc_id", "text")
+    def buckets(m: Int) = Seq("buckets" -> Dedup.lshBuckets(
+      docs.where(col("doc_id") % 3 === m), "doc_id", "text", 3, 48, 12))
+    Catalog.commitBundle(buckets(0), idx, "lsh")
+    assert(Catalog.appendBundle(buckets(1), idx, "lsh", "b1"))
+    assert(Catalog.appendBundle(buckets(2), idx, "lsh", "b2"))
     val batch = docs.where(col("doc_id") % 7 === 0)
-    def serve() = Dedup.matchesAgainstLshIndex(batch, docs, idx,
+    def serve() = Dedup.matchesAgainstBundle(batch, docs, idx, "lsh",
         "doc_id", "text", threshold = 0.9)
       .orderBy(col("new_id"), col("corpus_id")).collect().map(_.toSeq).toSeq
     val before = serve()
-    val bandDir = s"$idx/buckets.parquet/band=0"
-    val filesBefore = leafFiles(bandDir)
-    assert(filesBefore.size >= 3, s"expected appended files, got $filesBefore")
-    Catalog.compactPartition(spark, idx, "buckets", Seq(("band", "0")))
-    assert(leafFiles(bandDir).size < filesBefore.size, "band not compacted")
+    def bucketSets() = Catalog.bundleManifest(spark, idx, "lsh").dirs("buckets").size
+    assert(bucketSets() == 3, "expected the appended file sets")
+    Catalog.compactBundle(spark, idx, "lsh")
+    assert(bucketSets() == 1, "buckets not compacted")
+    assert(Catalog.bundleManifest(spark, idx, "lsh").batches == Seq("b1", "b2"),
+      "compaction must preserve the ledger")
     assert(serve() == before && before.nonEmpty,
       "serve changed across compaction")
 
@@ -352,21 +353,21 @@ class CatalogSpec extends AnyFunSuite {
     val docs = spark.read.parquet(s"${SparkTestSession.sfDir}/documents.parquet")
       .where(col("doc_id") < 300)
     val dir = Files.createTempDirectory("graft-pair-compact").toString
-    // fragment the flat table the way an append sink does: one pair
-    // table build plus several appended batches of the corpus's pairs,
-    // each landing whole new files
-    Dedup.writePairTable(docs.where(col("doc_id") % 4 === 0), dir,
-      "doc_id", "text", threshold = 0.9)
+    // fragment the flat table the way an append sink does: one
+    // truncating write of the corpus's pairs plus several appended
+    // batches, each landing whole new files
     val all = Dedup.minhashPairs(docs, "doc_id", "text", threshold = 0.9)
-    try for (m <- 1 to 3)
-      Catalog.writeAppend(all.where(col("a") % 4 === m).coalesce(1), dir, "pairs")
-    finally { all.unpersist(); () }
+    try {
+      Catalog.writeTruncate(all.where(col("a") % 4 === 0), dir, "pairs")
+      for (m <- 1 to 3)
+        Catalog.writeAppend(all.where(col("a") % 4 === m).coalesce(1), dir, "pairs")
+    } finally { all.unpersist(); () }
     def pairFiles() = new java.io.File(s"$dir/pairs.parquet").listFiles()
       .count(f => f.isFile && f.getName.endsWith(".parquet"))
-    def pairs() = Dedup.pairTable(spark, dir)
+    def pairs() = Catalog.table(spark, dir, "pairs")
       .orderBy(col("a"), col("b")).collect().map(_.toSeq).toSeq
     def clusters() = Dedup.clustersFromPairs(docs,
-        Dedup.pairTable(spark, dir), "doc_id")
+        Catalog.table(spark, dir, "pairs"), "doc_id")
       .orderBy(col("doc_id")).collect().map(_.toSeq).toSeq
     val (filesBefore, pBefore, cBefore) = (pairFiles(), pairs(), clusters())
     assert(filesBefore >= 4, s"expected fragmented table, got $filesBefore files")

@@ -499,10 +499,12 @@ class DedupSpec extends AnyFunSuite {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .where(col("doc_id") < 200)
     val bench = docs.where(col("doc_id") % 10 === 0)
-    val idx = "/tmp/graft/dedupspec_shingle_idx"
-    Dedup.writeShingleIndex(bench, idx, "doc_id", "text", shingleSize = 8)
-    val served = Dedup.contaminationAgainstIndex(docs, idx, "doc_id", "text",
+    val root = "/tmp/graft/dedupspec_shingle_idx"
+    deleteDir(root)
+    Dedup.writeShingleBundle(bench, "bm", root, "decon", "doc_id", "text",
       shingleSize = 8)
+    val served = Dedup.contaminationAgainstBundle(docs, root, "decon",
+      "doc_id", "text", shingleSize = 8)
     val direct = Dedup.contamination(docs, bench, "doc_id", "text",
       shingleSize = 8)
     val a = served.orderBy(col("doc_id")).collect().map(_.toSeq).toSeq
@@ -524,33 +526,37 @@ class DedupSpec extends AnyFunSuite {
     assert(sc.exists(_.contains("shingles.parquet")))
   }
 
-  test("appendShingleIndex keeps the store distinct; append equals rebuild") {
+  /** Every data file under a bundle store, as paths. */
+  private def storeFiles(root: String, bundle: String): Set[String] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+    walk(new java.io.File(graft.sources.Catalog.bundleDir(root, bundle)))
+      .filter(_.getName.endsWith(".parquet")).map(_.getPath).toSet
+  }
+
+  test("shingle bundle append: base file set untouched; append equals rebuild") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .where(col("doc_id") < 200)
     val v1 = docs.where(col("doc_id") % 20 === 0)
     val v2 = docs.where(col("doc_id") % 20 === 10)
     val inc = "/tmp/graft/dedupspec_shingle_inc"
     val full = "/tmp/graft/dedupspec_shingle_full"
-    Dedup.writeShingleIndex(v1, inc, "doc_id", "text", shingleSize = 8)
-    def files(d: String) = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-      walk(new java.io.File(s"$d/shingles.parquet"))
-        .filter(_.getName.endsWith(".parquet")).map(_.getPath).toSet
-    }
-    val baseFiles = files(inc)
-    Dedup.appendShingleIndex(v2, inc, "doc_id", "text", shingleSize = 8)
-    assert(baseFiles.subsetOf(files(inc))) // base never rewritten
-    // distinctness is load-bearing for the hit-count join
-    val store = spark.read.parquet(s"$inc/shingles.parquet").select("sg")
-    assert(store.count() == store.distinct().count())
-    Dedup.writeShingleIndex(v1.unionByName(v2), full, "doc_id", "text",
+    deleteDir(inc); deleteDir(full)
+    Dedup.writeShingleBundle(v1, "v1", inc, "decon", "doc_id", "text",
       shingleSize = 8)
-    val a = Dedup.contaminationAgainstIndex(docs, inc, "doc_id", "text", 8)
+    val baseFiles = storeFiles(inc, "decon")
+    assert(Dedup.ingestShingleBundle(v2, "v2", inc, "decon", "v2", "doc_id",
+      "text", shingleSize = 8))
+    val after = storeFiles(inc, "decon")
+    assert(baseFiles.nonEmpty && baseFiles.subsetOf(after) &&
+      after.size > baseFiles.size) // base never rewritten; v2 landed beside it
+    Dedup.writeShingleBundle(v1.unionByName(v2), "v12", full, "decon",
+      "doc_id", "text", shingleSize = 8)
+    def serve(r: String) = Dedup.contaminationAgainstBundle(docs, r, "decon",
+        "doc_id", "text", 8)
       .orderBy(col("doc_id")).collect().map(_.toSeq).toSeq
-    val b = Dedup.contaminationAgainstIndex(docs, full, "doc_id", "text", 8)
-      .orderBy(col("doc_id")).collect().map(_.toSeq).toSeq
-    assert(a == b && a.nonEmpty)
+    val a = serve(inc)
+    assert(a == serve(full) && a.nonEmpty)
   }
 
   test("stored LSH index: serve equals self-contained match; corpus signatures come from the store") {
@@ -562,9 +568,11 @@ class DedupSpec extends AnyFunSuite {
       .where(col("doc_id") < 300)
     val corpus = docs.where(col("doc_id") % 5 =!= 4)
     val batch = docs.where(col("doc_id") % 5 === 4)
-    val idx = "/tmp/graft/dedupspec_lsh_idx"
-    Dedup.writeLshIndex(corpus, idx, "doc_id", "text")
-    val served = Dedup.matchesAgainstLshIndex(batch, corpus, idx,
+    val root = "/tmp/graft/dedupspec_lsh_idx"
+    deleteDir(root)
+    graft.sources.Catalog.commitBundle(Seq("buckets" ->
+      Dedup.lshBuckets(corpus, "doc_id", "text", 3, 48, 12)), root, "lsh")
+    val served = Dedup.matchesAgainstBundle(batch, corpus, root, "lsh",
       "doc_id", "text", threshold = 0.9)
     val direct = Dedup.incrementalMinhashMatches(batch, corpus,
       "doc_id", "text", threshold = 0.9)
@@ -578,10 +586,10 @@ class DedupSpec extends AnyFunSuite {
     // plus the two semi-join-pruned re-shingles — the self-contained
     // operator pays exactly one more (the corpus signature), the scan
     // the store exists to delete. A scan is named by its relation's root
-    // paths, never by its plan text, which also carries the text of the
-    // store scan's dynamic-pruning subquery. What runs once is censused
-    // once: a cached subtree via its cacheBuilder, and an exchange the
-    // join and that subquery share (one side reaches it as a reuse).
+    // paths, never by its plan text, which can also carry the text of a
+    // dynamic-pruning subquery. What runs once is censused once: a
+    // cached subtree via its cacheBuilder, and an exchange the join and
+    // such a subquery share (one side reaches it as a reuse).
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -613,49 +621,51 @@ class DedupSpec extends AnyFunSuite {
       s"direct documents scans:\n${dr.mkString("\n")}")
   }
 
-  test("appendLshIndex: base files untouched; append equals rebuild row-for-row") {
+  test("bucket bundle append: base file set untouched; append equals rebuild row-for-row") {
+    import graft.sources.Catalog
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .where(col("doc_id") < 300)
     val v1 = docs.where(col("doc_id") % 4 < 2)
     val v2 = docs.where(col("doc_id") % 4 === 2)
     val inc = "/tmp/graft/dedupspec_lsh_inc"
     val full = "/tmp/graft/dedupspec_lsh_full"
-    Dedup.writeLshIndex(v1, inc, "doc_id", "text")
-    def files(d: String) = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-      walk(new java.io.File(s"$d/buckets.parquet"))
-        .filter(_.getName.endsWith(".parquet")).map(_.getPath).toSet
-    }
-    val baseFiles = files(inc)
-    Dedup.appendLshIndex(v2, inc, "doc_id", "text")
-    assert(baseFiles.subsetOf(files(inc))) // append never rewrites the base
+    deleteDir(inc); deleteDir(full)
+    def buckets(d: org.apache.spark.sql.DataFrame) =
+      Seq("buckets" -> Dedup.lshBuckets(d, "doc_id", "text", 3, 48, 12))
+    Catalog.commitBundle(buckets(v1), inc, "lsh")
+    val baseFiles = storeFiles(inc, "lsh")
+    assert(Catalog.appendBundle(buckets(v2), inc, "lsh", "v2"))
+    val after = storeFiles(inc, "lsh")
+    assert(baseFiles.nonEmpty && baseFiles.subsetOf(after) &&
+      after.size > baseFiles.size) // append never rewrites the base
     // id-disjoint batches → disjoint bucket rows → append ≡ rebuild,
-    // row for row (the property that lets the store skip x148's anti-join)
-    Dedup.writeLshIndex(v1.unionByName(v2), full, "doc_id", "text")
-    def rows(d: String) = spark.read.parquet(s"$d/buckets.parquet")
-      .select(col("doc_id"), col("band").cast("int"), col("bucket"))
+    // row for row, with no anti-join at ingest
+    Catalog.commitBundle(buckets(v1.unionByName(v2)), full, "lsh")
+    def rows(r: String) = Catalog.readBundleTable(spark, r, "lsh", "buckets")
+      .select(col("doc_id"), col("band"), col("bucket"))
       .orderBy(col("doc_id"), col("band"), col("bucket"))
       .collect().map(_.toSeq).toSeq
     val ai = rows(inc)
     assert(ai == rows(full) && ai.nonEmpty)
   }
 
-  test("writePairTable: stored pair truth equals minhashPairs; consumers read it unchanged") {
+  test("pair bundle: stored pair truth equals minhashPairs; consumers read it unchanged") {
     val base = "alpha beta gamma delta epsilon zeta eta theta"
     val d = Seq(
       (1L, base, "feedA"), (2L, base, "feedB"), (3L, base, "feedA"),
       (4L, "totally different words here now", "feedC"))
       .toDF("doc_id", "text", "source")
-    val dir = "/tmp/graft/dedupspec_pair_store"
-    Dedup.writePairTable(d, dir, "doc_id", "text", threshold = 0.9)
-    val stored = Dedup.pairTable(spark, dir)
-      .orderBy(col("a"), col("b")).collect().map(_.toSeq).toSeq
+    val root = "/tmp/graft/dedupspec_pair_store"
+    deleteDir(root)
+    Dedup.writePairBundle(d, root, "nd", "doc_id", "text", threshold = 0.9)
+    def pairs = graft.sources.Catalog.readBundleTable(spark, root, "nd",
+      "pairs")
+    val stored = pairs.orderBy(col("a"), col("b")).collect().map(_.toSeq).toSeq
     val fresh = Dedup.minhashPairs(d, "doc_id", "text", threshold = 0.9)
       .orderBy(col("a"), col("b")).collect().map(_.toSeq).toSeq
     assert(stored == fresh && stored.nonEmpty)
-    val viaStore = Dedup.crossSourceDupShareFromPairs(
-        Dedup.pairTable(spark, dir), d, "doc_id", "source")
+    val viaStore = Dedup.crossSourceDupShareFromPairs(pairs, d, "doc_id",
+        "source")
       .orderBy(col("source_a"), col("source_b")).collect().map(_.toSeq).toSeq
     val direct = Dedup.crossSourceDupShare(d, "doc_id", "text", "source",
         threshold = 0.9)
@@ -782,29 +792,26 @@ class DedupSpec extends AnyFunSuite {
     assert(math.abs(got.map(_._4).sum - 1.0) < 1e-5)
   }
 
-  test("shingle bundle: serve equals flat store; retirement keeps shared shingles; ledger survives the retract") {
+  test("shingle bundle: serve equals the direct screen; retirement keeps shared shingles; ledger survives the retract") {
     val docs = spark.read
       .parquet(s"${SparkTestSession.sfDir}/documents.parquet")
       .where(col("doc_id") < 400)
     val bmA = docs.where(col("doc_id") % 10 === 0)
     val bmB = docs.where(col("doc_id") % 10 === 1)
     val root = java.nio.file.Files.createTempDirectory("graft-shgb").toString
-    val flat = s"/tmp/graft/dedupspec_shg_flat"
     Dedup.writeShingleBundle(bmA, "bmA", root, "decon", "doc_id", "text",
       shingleSize = 8, seedBatchIds = Seq("bmA"))
     assert(Dedup.ingestShingleBundle(bmB, "bmB", root, "decon", "bmB",
       "doc_id", "text", shingleSize = 8))
     assert(!Dedup.ingestShingleBundle(bmB, "bmB", root, "decon", "bmB",
       "doc_id", "text", shingleSize = 8), "replayed suite ingest landed")
-    // serve ≡ flat store over the same union benchmark (shared core;
-    // the provenance rows' distinct sg = the flat store's distinct set)
-    Dedup.writeShingleIndex(bmA.unionByName(bmB), flat, "doc_id", "text",
-      shingleSize = 8)
+    // serve ≡ the direct screen over the union benchmark (shared core;
+    // the provenance rows' distinct sg = the union's distinct shingles)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy(col("doc_id")).collect().map(_.toSeq).toSeq
     assert(rows(Dedup.contaminationAgainstBundle(docs, root, "decon",
         "doc_id", "text", shingleSize = 8)) ==
-      rows(Dedup.contaminationAgainstIndex(docs, flat, "doc_id", "text",
+      rows(Dedup.contamination(docs, bmA.unionByName(bmB), "doc_id", "text",
         shingleSize = 8)))
     spark.catalog.clearCache()
     // retire bmA: the post-retract serve equals a store never holding
@@ -818,11 +825,9 @@ class DedupSpec extends AnyFunSuite {
     assert(!Dedup.ingestShingleBundle(bmB, "bmB", root, "decon", "bmB",
       "doc_id", "text", shingleSize = 8),
       "retirement must not reopen the ledger")
-    val flatB = s"/tmp/graft/dedupspec_shg_flatb"
-    Dedup.writeShingleIndex(bmB, flatB, "doc_id", "text", shingleSize = 8)
     assert(rows(Dedup.contaminationAgainstBundle(docs, root, "decon",
         "doc_id", "text", shingleSize = 8)) ==
-      rows(Dedup.contaminationAgainstIndex(docs, flatB, "doc_id", "text",
+      rows(Dedup.contamination(docs, bmB, "doc_id", "text",
         shingleSize = 8)))
     // the survival claim is non-vacuous only if the suites truly shared
     // shingles before the retract — and they survive as bmB rows

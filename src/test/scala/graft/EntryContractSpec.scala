@@ -61,6 +61,30 @@ class EntryContractSpec extends AnyFunSuite {
         s"stale rows: ${stale.toSeq.sorted.mkString(",")}")
   }
 
+  test("SURVEY.md and SCALE.md name only live graft members") {
+    // a backticked `Object.member` whose Object is a graft object must
+    // name a method or field it declares: prose that survives a deletion
+    // or a rename otherwise keeps pointing readers at code that is gone.
+    // Names outside graft (`Dataset.pivot`) do not resolve and are skipped.
+    val pkgs = "graft" +: new java.io.File("src/main/scala/graft").listFiles()
+      .filter(_.isDirectory).map(d => s"graft.${d.getName}").toSeq.sorted
+    def objectClass(name: String): Option[Class[_]] = pkgs.iterator
+      .flatMap(p => scala.util.Try(Class.forName(s"$p.$name$$", false,
+        getClass.getClassLoader)).toOption).nextOption()
+    def declares(c: Class[_], m: String): Boolean =
+      c.getDeclaredMethods.exists(x => x.getName == m || x.getName.endsWith("$$" + m)) ||
+        c.getDeclaredFields.exists(_.getName == m)
+    val ref = "`([A-Z][A-Za-z0-9]*)\\.([a-z][A-Za-z0-9_]*)".r
+    val stale = Seq("SURVEY.md", "SCALE.md").flatMap { doc =>
+      val text = java.nio.file.Files.readString(java.nio.file.Paths.get(doc))
+      ref.findAllMatchIn(text).map(m => (m.group(1), m.group(2))).toSeq.distinct
+        .filter(_._2 != "scala") // `SparkEntry.scala` names a file
+        .flatMap { case (o, m) =>
+          objectClass(o).filterNot(declares(_, m)).map(_ => s"$doc: $o.$m") }
+    }
+    assert(stale.isEmpty, s"docs name members that do not exist: ${stale.mkString(", ")}")
+  }
+
   /** Queries whose rows carry in-plan equivalence flags (an incremental
     * or retargeted store against a one-shot rebuild at a second root):
     * the smoke collects their rows and requires every boolean column to
